@@ -248,9 +248,10 @@ def main() -> None:
     flagship_engine_cpu = best["engine_cpu_sec"]
     flagship_probe_burn = round((best["burn_pre"] + best["burn_post"]) / 2, 4)
 
-    # fused single-Arrow-pass variant (operators/fused.py) — fresh seeds so
-    # the staged reps' row memo can't serve it.  Skipped in scaling rounds
-    # (SKIP_QUERIES): the scaling ratio only needs the staged flagship.
+    # fused_correct (operators/fused.py: the default plan's single Arrow
+    # crossing without the ordering shuffle) — fresh seeds so the default
+    # reps' row memo can't serve it.  Skipped in scaling rounds
+    # (SKIP_QUERIES): the scaling ratio only needs the default flagship.
     if scaling_mode:
         _report(
             timings, sf, cpus, n_turns, flagship_reps, caps, correct_sec,

@@ -68,10 +68,9 @@ def scorer_table_from_df(df) -> dict[str, list[tuple[str, float]]]:
 def default_candidates(char: str, topn: int = DEFAULT_TOPN) -> list[tuple[str, float]]:
     """Identity-dominant default for chars absent from a scorer table (no
     correction results: identical-candidate skip at bert_corrector.py:64-65,
-    then conf < 0.05 curve rejects).  THE single definition — the framed /
-    fused / dispatched scorers all reference it, and the framed==table and
-    fused==staged equality contracts depend on every path using the same
-    values."""
+    then conf < 0.05 curve rejects).  THE single definition — the framed
+    and char-keyed scorers both reference it, and the framed==table
+    equality contract depends on every path using the same values."""
     return [(char, 0.99), ("的", 0.004), ("一", 0.003)][:topn]
 
 

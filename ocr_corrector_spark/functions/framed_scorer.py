@@ -199,7 +199,7 @@ class MaskedLMScorer:
     gather error positions → top-n softmax → the per-error
     ``[(token, prob), ...]`` lists this module already returns.  The
     per-worker lazy-singleton pattern for the session/weights is
-    operators/correct._get_framed_scorer's cache.
+    operators/correct._Corrector.batch_scorer.
     """
 
     def __init__(

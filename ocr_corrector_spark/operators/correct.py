@@ -1,119 +1,129 @@
-"""The correction operator: an Arrow-batched scalar pandas UDF.
+"""The correction operators and the one batch loop they share.
 
 Design (SURVEY.md §2b F4, §4): NO split/merge of the DataFrame — the
 reference partitions rows into correct/pass lists and re-inserts by index
 (base_corrector.py:54-94); at 10^12-turn scale that positional identity is
 replaced by the ``(conv_id, turn_idx)`` key and a single-pass
-``CASE WHEN needs_correction THEN kernel(text) ELSE text END``.  The
-``needs_correction`` flag is computed natively (operators/detect.py) and
-passed INTO the UDF so pass-through rows cost one Arrow column copy, not a
-Python kernel call.
+``CASE WHEN needs_correction THEN kernel(text) ELSE text END``.
 
-Dictionaries ride a Spark broadcast; the BK-tree is built lazily once per
-Python worker from the broadcast word list (cheap: ~100 words) and cached.
+Two operators call the same ``correct_batch`` loop:
+
+* ``with_single_pass_correction`` — the default plan's ONE Python
+  crossing: a scalar Arrow UDF over ``(text, err_prob_key, biz)`` that
+  extracts, tests eligibility and corrects, returning
+  ``struct<text, corr_mode, text_corrected>``.  The probs-threshold half
+  of detection (operators/detect.err_prob_key) stays native, so the wide
+  ``probs`` arrays and every other column stay in the JVM.
+* ``with_dispatched_correction`` — a pandas UDF over a natively computed
+  ``(text, err_pos, corr_mode)``, for callers that build their own
+  detection columns (``with_correction``, perfbench's layer ladder).
+
+Everything the output depends on besides the row is one hashable
+``CorrectionConfig``, broadcast to the workers.  Each Python worker keeps
+one ``_Corrector`` per config: the kernels (BK-tree, char similarity,
+scorer) and a row-result memo that survives across batches and tasks.
 The correction itself is embarrassingly parallel — no shuffle.
 """
 
 from __future__ import annotations
 
+import functools
+from dataclasses import dataclass
+
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from ..assets import KEYWORDS
-from ..assets.scorer_table import SCORER_TABLE
+from ..assets.scorer_table import SCORER_TABLE, default_candidates
 from ..functions.bktree import BKTree
-from ..functions.charsim import CharSim
 from ..functions.correct_kernels import (
     bert_correct_one,
     bert_correct_one_framed,
     keyword_correct_one,
 )
+from ..functions.rules import do_correct_filter_bert, do_correct_filter_keyword
+from .detect import err_prob_key
+from .extract import extract_any
 
-# per-worker kernel caches, keyed by config tuple — survives across Arrow
-# batches and tasks in the same Python worker process
-_KW_CACHE: dict = {}
-_CHAR_SIM_CACHE: dict = {}
-_FRAMED_CACHE: dict = {}
 _ROW_CACHE_MAX = 200_000
-# row-result memos per correction config — worker-global so the memo
-# survives across tasks (a closure dict would be re-deserialized fresh
-# with every task's UDF command)
-_ROW_CACHES: dict = {}
+# per-worker state, keyed by config — module-global so it survives across
+# Arrow batches AND tasks in the same Python worker process (a closure
+# dict would be re-deserialized fresh with every task's UDF command)
+_CORRECTORS: dict = {}
+
+RESULT_TYPE = StructType(
+    [
+        StructField("text", StringType()),
+        StructField("corr_mode", IntegerType()),
+        StructField("text_corrected", StringType()),
+    ]
+)
 
 
-def _get_row_cache(config_key) -> dict:
-    cache = _ROW_CACHES.get(config_key)
-    if cache is None:
-        cache = {}
-        _ROW_CACHES[config_key] = cache
-    return cache
+@dataclass(frozen=True)
+class CorrectionConfig:
+    """Correction is a pure function of ``(mode, text, err_pos)`` given
+    this config, so the config (held by value — collision-proof, no
+    stale entries) keys the per-worker kernels and memo."""
+
+    similarity_threshold: float
+    topn: int
+    keywords: tuple
+    scorer_backend: str
+    table: tuple  # sorted (char, candidates) items
+    bigrams: tuple  # sorted ((left, right), boost) items
+    lm_checkpoint: str | None
 
 
-def _get_char_sim() -> CharSim:
-    cs = _CHAR_SIM_CACHE.get("cs")
-    if cs is None:
-        from ..assets.char_meta import build_char_meta
+def correction_config(
+    similarity_threshold: float = 0.55,
+    topn: int = 3,
+    keywords=KEYWORDS,
+    scorer_backend: str = "table",
+    scorer_table: dict | None = None,
+    context_bigrams: dict | None = None,
+    lm_checkpoint: str | None = None,
+) -> CorrectionConfig:
+    """Resolves the backend defaults: the built-in table, the demo
+    context bigrams (framed only) and the committed LM checkpoint (lm
+    only)."""
+    table = SCORER_TABLE if scorer_table is None else scorer_table
+    bigrams = {}
+    if scorer_backend == "framed":
+        from ..functions.framed_scorer import DEFAULT_CONTEXT_BIGRAMS
 
-        cs = CharSim(build_char_meta())
-        _CHAR_SIM_CACHE["cs"] = cs
-    return cs
+        bigrams = DEFAULT_CONTEXT_BIGRAMS if context_bigrams is None else context_bigrams
+    if scorer_backend == "lm" and lm_checkpoint is None:
+        from ..functions.numpy_lm import DEFAULT_CHECKPOINT
 
-
-def _get_kw_kernel(words: tuple):
-    # Content-keyed on the tuple itself (cheap: ~100 short strings) — the
-    # dict hashes it and compares on collision, so unlike id(words) or
-    # hash(words) there is no stale-entry or collision failure mode.
-    hit = _KW_CACHE.get(words)
-    if hit is None:
-        tree = BKTree(words)
-        hit = (tree, frozenset(tree.words))
-        _KW_CACHE[words] = hit
-    return hit
-
-
-def _get_framed_scorer(config_key, table, bigrams, topn):
-    fs = _FRAMED_CACHE.get(config_key)
-    if fs is None:
-        from ..functions.framed_scorer import FramedTableScorer
-
-        fs = FramedTableScorer(
-            table=table, context_bigrams=bigrams, topn=topn
-        )
-        _FRAMED_CACHE[config_key] = fs
-    return fs
-
-
-def _table_signature(table: dict) -> tuple:
-    # the tuple itself (not its hash) keys the caches — collision-proof
-    return tuple(sorted((k, tuple(v)) for k, v in table.items()))
+        lm_checkpoint = DEFAULT_CHECKPOINT
+    return CorrectionConfig(
+        similarity_threshold=similarity_threshold,
+        topn=topn,
+        keywords=tuple(keywords),
+        scorer_backend=scorer_backend,
+        table=tuple(sorted((k, tuple(v)) for k, v in table.items())),
+        bigrams=tuple(sorted(bigrams.items())),
+        lm_checkpoint=lm_checkpoint,
+    )
 
 
-def _get_lm_scorer(checkpoint_path: str, topn: int):
-    """Per-worker lazy singleton for the numpy masked-LM backend — the
-    checkpoint loads ONCE per Python worker process (the reference's
-    per-session checkpoint load, masked_lm.py:386-398, as an
-    executor-side cache)."""
-    key = ("lm", checkpoint_path, topn)
-    fs = _FRAMED_CACHE.get(key)
-    if fs is None:
-        from ..functions.numpy_lm import NumpyLMScorer
+@functools.cache
+def _char_sim():
+    from ..assets.char_meta import build_char_meta
+    from ..functions.charsim import CharSim
 
-        fs = NumpyLMScorer(checkpoint_path=checkpoint_path, topn=topn)
-        _FRAMED_CACHE[key] = fs
-    return fs
+    return CharSim(build_char_meta())
 
 
-def framed_score_rows(
-    need: dict, fs, topn, char_sim, scorer
-) -> dict:
+def framed_score_rows(need: dict, fs, topn, char_sim, scorer) -> dict:
     """Score ``{row_key: (text, errs)}`` through a batch scorer ``fs``
     (FramedTableScorer or NumpyLMScorer — the tokenize → frame → batch
     score contract) with row-level fallback to the char-keyed kernel on
-    misalignment/failure.  Returns ``{row_key: corrected_text}``.  Shared
-    by the staged UDF and the fused mapInArrow stage so both plans score
-    through the identical path (the fused==staged equality contract)."""
+    misalignment/failure.  Returns ``{row_key: corrected_text}``."""
     keys = list(need)
     try:
         scored = fs.score_sentences(
@@ -134,6 +144,221 @@ def framed_score_rows(
     return out
 
 
+class _Corrector:
+    """One worker's kernels and row memo for one config."""
+
+    def __init__(self, cfg: CorrectionConfig):
+        self.cfg = cfg
+        self.char_sim = _char_sim()
+        self.tree = BKTree(cfg.keywords)
+        self.kwset = frozenset(self.tree.words)
+        self.memo: dict = {}
+        self._batch_scorer = None
+        table = dict(cfg.table)
+
+        def scorer(ch):
+            cands = table.get(ch)
+            if cands is None:
+                # identity-dominant default; NOT topn_candidates, which
+                # would leak the built-in table under a custom scorer_table
+                return default_candidates(ch, cfg.topn)
+            return cands
+
+        self.scorer = scorer
+
+    def batch_scorer(self):
+        """The framed / masked-LM batch scorer, built on first use (the LM
+        checkpoint loads once per worker — the reference's per-session
+        load, masked_lm.py:386-398, as an executor-side cache)."""
+        if self._batch_scorer is None:
+            cfg = self.cfg
+            if cfg.scorer_backend == "lm":
+                from ..functions.numpy_lm import NumpyLMScorer
+
+                self._batch_scorer = NumpyLMScorer(
+                    checkpoint_path=cfg.lm_checkpoint, topn=cfg.topn
+                )
+            else:
+                from ..functions.framed_scorer import FramedTableScorer
+
+                self._batch_scorer = FramedTableScorer(
+                    table=dict(cfg.table),
+                    context_bigrams=dict(cfg.bigrams),
+                    topn=cfg.topn,
+                )
+        return self._batch_scorer
+
+    def _remember(self, key, hit) -> None:
+        if len(self.memo) >= _ROW_CACHE_MAX:
+            self.memo.pop(next(iter(self.memo)))
+        self.memo[key] = hit
+
+    def correct_batch(self, texts: list, errs: list, modes: list) -> list:
+        """Corrected text per row; ``modes`` 0 = pass-through, 1 = keyword
+        path, 2 = bert path."""
+        cfg, memo = self.cfg, self.memo
+        # this batch's framed results, consulted BEFORE the memo: FIFO
+        # eviction under _ROW_CACHE_MAX pressure can drop keys scored
+        # earlier in the same batch, and falling through to the char-keyed
+        # kernel would silently switch which backend scored the row — the
+        # local dict makes eviction affect only reuse, never which backend
+        # answers
+        local: dict = {}
+        if cfg.scorer_backend in ("framed", "lm"):
+            # batch-score the uncached bert rows through the framing path
+            # (A1 batching + pad/de-pad inside the batch scorer), deduped
+            # by row key — repetitive boilerplate rows score once
+            need = {}
+            for t, e, m in zip(texts, errs, modes):
+                if m == 2 and t is not None:
+                    key = (2, t, tuple(e))
+                    if key not in memo and key not in need:
+                        need[key] = (t, list(e))
+            if need:
+                local = framed_score_rows(
+                    need, self.batch_scorer(), cfg.topn, self.char_sim, self.scorer
+                )
+                for key, hit in local.items():
+                    self._remember(key, hit)
+        out = []
+        for t, e, m in zip(texts, errs, modes):
+            if m not in (1, 2) or t is None:
+                out.append(t)
+                continue
+            key = (m, t, tuple(e))
+            hit = local.get(key)
+            if hit is None:
+                hit = memo.get(key)
+            if hit is None:
+                if m == 1:
+                    hit = keyword_correct_one(
+                        t, e, self.tree, self.kwset, self.char_sim,
+                        cfg.similarity_threshold,
+                    )
+                else:
+                    hit = bert_correct_one(t, e, self.char_sim, self.scorer, cfg.topn)
+                self._remember(key, hit)
+            out.append(hit)
+        return out
+
+
+def correct_batch(cfg: CorrectionConfig, texts: list, errs: list, modes: list) -> list:
+    """THE correction batch loop, through this worker's memo for ``cfg``."""
+    corrector = _CORRECTORS.get(cfg)
+    if corrector is None:
+        corrector = _CORRECTORS[cfg] = _Corrector(cfg)
+    return corrector.correct_batch(texts, errs, modes)
+
+
+def route_rows(texts: list, err_keys: list, bizes: list) -> tuple[list, list]:
+    """Eligibility + dispatch per (extracted) row: ``(modes, errs)``.
+
+    ``err_keys`` are operators/detect.err_prob_key values: the
+    sub-threshold positions, or None for null probs (every position is
+    suspect — the reference's non-prob path).  Biz ``report`` routes to
+    the keyword corrector, anything else to bert (corrector/__init__.py:
+    20-38).  A null text is never eligible."""
+    modes, errs = [], []
+    for t, k, b in zip(texts, err_keys, bizes):
+        mode, err = 0, None
+        if t is not None:
+            report = b == "report"
+            if do_correct_filter_keyword(t) if report else do_correct_filter_bert(t):
+                err = list(range(len(t))) if k is None else k
+                if err:
+                    mode = 1 if report else 2
+        modes.append(mode)
+        errs.append(err)
+    return modes, errs
+
+
+def single_pass_udf(
+    cfg: CorrectionConfig,
+    spark: SparkSession | None = None,
+    extract: bool = True,
+    row_counter=None,
+):
+    """The single-crossing scalar Arrow UDF
+    ``(text, err_prob_key, biz) → RESULT_TYPE``: extraction (when
+    ``extract``), eligibility and correction per batch, as ``pa.Array``
+    in and out with no pandas conversion.
+
+    ``row_counter``: optional Spark accumulator; the UDF adds the batch
+    size per invocation — tests use it to assert the expensive stage
+    executes exactly once per row per job (no recompute from extra
+    actions, no copy of the UDF per unpacked struct field)."""
+    spark = spark or SparkSession.getActiveSession()
+    bc_cfg = spark.sparkContext.broadcast(cfg)
+
+    @F.arrow_udf(RESULT_TYPE)
+    def correct_rows(text: pa.Array, err_key: pa.Array, biz: pa.Array) -> pa.Array:
+        if row_counter is not None:
+            row_counter.add(len(text))
+        texts = text.to_pylist()
+        if extract:
+            texts = [extract_any(t) for t in texts]
+        modes, errs = route_rows(texts, err_key.to_pylist(), biz.to_pylist())
+        corrected = correct_batch(bc_cfg.value, texts, errs, modes)
+        return pa.StructArray.from_arrays(
+            [
+                pa.array(texts, pa.string()),
+                pa.array(modes, pa.int32()),
+                pa.array(corrected, pa.string()),
+            ],
+            names=RESULT_TYPE.fieldNames(),
+        )
+
+    return correct_rows
+
+
+def unpack_result(
+    df: DataFrame, res_col: str, text_col: str = "text", out_col: str = "text_corrected"
+) -> DataFrame:
+    """Natively unpack the UDF's struct column: ``text_col`` is replaced
+    in place by the extracted text, ``corr_mode`` and ``out_col`` are
+    appended, ``res_col`` is dropped."""
+    res = F.col(res_col)
+    cols = [
+        res["text"].alias(c) if c == text_col else F.col(c)
+        for c in df.columns
+        if c != res_col
+    ]
+    return df.select(
+        *cols,
+        res["corr_mode"].alias("corr_mode"),
+        res["text_corrected"].alias(out_col),
+    )
+
+
+def with_single_pass_correction(
+    df: DataFrame,
+    cfg: CorrectionConfig,
+    spark: SparkSession | None = None,
+    biz_col: str = "tool",
+    text_col: str = "text",
+    out_col: str = "text_corrected",
+    prob_threshold: float = 0.9,
+    extract: bool = True,
+    row_counter=None,
+) -> DataFrame:
+    """Extraction, detection and correction with ONE Python crossing.
+
+    The probs-threshold half of detection runs natively
+    (operators/detect.err_prob_key); only ``(text_col, err_prob_key,
+    biz_col)`` cross into the Arrow UDF — ``probs`` and every other
+    column stay in the JVM.  Returns ``df`` with ``text_col`` rewritten
+    by extraction and ``corr_mode`` (0 pass / 1 keyword / 2 bert) and
+    ``out_col`` appended."""
+    correct_rows = single_pass_udf(cfg, spark, extract, row_counter)
+    out = df.withColumn(
+        "_corr",
+        correct_rows(
+            F.col(text_col), err_prob_key(F.col("probs"), prob_threshold), F.col(biz_col)
+        ),
+    )
+    return unpack_result(out, "_corr", text_col, out_col)
+
+
 def with_dispatched_correction(
     df: DataFrame,
     similarity_threshold: float = 0.55,
@@ -150,16 +375,12 @@ def with_dispatched_correction(
     context_bigrams: dict | None = None,
     lm_checkpoint: str | None = None,
 ) -> DataFrame:
-    """Single-pass correction with per-row corrector dispatch.
+    """Correction with per-row corrector dispatch over native detection
+    columns, as a Series→Series pandas UDF.
 
     ``mode_col``: 0 = pass-through, 1 = keyword path, 2 = bert path — the
     Spark analog of the reference's biz_type registry
-    (corrector/__init__.py:20-38) without per-row Python objects and with
-    ONE Arrow transfer for the whole table (vs one per corrector).
-
-    ``row_counter``: optional Spark accumulator; when set, the UDF adds the
-    batch size per invocation — tests use it to assert the expensive stage
-    executes exactly once per row per job (no recompute from extra actions).
+    (corrector/__init__.py:20-38) without per-row Python objects.
 
     ``scorer_backend``: ``"table"`` (char-keyed confusion table, default),
     ``"framed"`` (functions/framed_scorer.py — tokenize → frame → score
@@ -178,111 +399,21 @@ def with_dispatched_correction(
     assets/scorer_table.scorer_table_from_df).  Broadcast to workers.
     """
     spark = spark or SparkSession.getActiveSession()
-    bc_words = spark.sparkContext.broadcast(tuple(keywords))
-    table_dict = dict(SCORER_TABLE) if scorer_table is None else dict(scorer_table)
-    bc_scorer = spark.sparkContext.broadcast(table_dict)
-    batched_backend = scorer_backend in ("framed", "lm")
-    if scorer_backend == "framed":
-        from ..functions.framed_scorer import DEFAULT_CONTEXT_BIGRAMS
-
-        bigrams = (
-            dict(DEFAULT_CONTEXT_BIGRAMS)
-            if context_bigrams is None
-            else dict(context_bigrams)
+    bc_cfg = spark.sparkContext.broadcast(
+        correction_config(
+            similarity_threshold, topn, keywords, scorer_backend,
+            scorer_table, context_bigrams, lm_checkpoint,
         )
-    else:
-        bigrams = {}
-    bc_bigrams = spark.sparkContext.broadcast(bigrams)
-    if scorer_backend == "lm" and lm_checkpoint is None:
-        from ..functions.numpy_lm import DEFAULT_CHECKPOINT
-
-        lm_checkpoint = DEFAULT_CHECKPOINT
-    # Memo config signature: correction is a pure function of (mode, text,
-    # err_pos) GIVEN the dictionaries/thresholds/backend, and OCR'd
-    # transcript segments are highly repetitive (form labels, boilerplate
-    # turns) — so each Python worker memoizes row results across batches
-    # AND tasks.
-    cache_key = (
-        similarity_threshold,
-        topn,
-        tuple(keywords),
-        scorer_backend,
-        _table_signature(table_dict),
-        tuple(sorted(bigrams.items())),
-        lm_checkpoint,
     )
 
     @F.pandas_udf(StringType())
     def correct_udf(text: pd.Series, err_pos: pd.Series, mode: pd.Series) -> pd.Series:
         if row_counter is not None:
             row_counter.add(len(text))
-        char_sim = _get_char_sim()
-        tree, kwset = _get_kw_kernel(bc_words.value)
-        table = bc_scorer.value
-
-        def scorer(ch):
-            cands = table.get(ch)
-            if cands is None:
-                # identity-dominant default; NOT topn_candidates, which
-                # would leak the built-in table under a custom scorer_table
-                from ..assets.scorer_table import default_candidates
-
-                return default_candidates(ch, topn)
-            return cands
-
-        cache = _get_row_cache(cache_key)
-        rows = list(zip(text.tolist(), err_pos.tolist(), mode.tolist()))
-        # this batch's framed results, consulted BEFORE the worker-global
-        # cache: FIFO eviction under _ROW_CACHE_MAX pressure can drop keys
-        # scored earlier in the same batch, and falling through to the
-        # char-keyed kernel would silently switch which backend scored the
-        # row — the local dict makes eviction affect only reuse, never
-        # which backend answers
-        local: dict = {}
-        if batched_backend:
-            # batch-score the uncached bert rows through the framing path
-            # (A1 batching + pad/de-pad inside the batch scorer), deduped
-            # by row key — repetitive boilerplate rows score once
-            need = {}
-            for t, e, m in rows:
-                if m == 2 and t is not None:
-                    key = (2, t, tuple(e))
-                    if key not in cache and key not in need:
-                        need[key] = (t, list(e))
-            if need:
-                if scorer_backend == "lm":
-                    fs = _get_lm_scorer(lm_checkpoint, topn)
-                else:
-                    fs = _get_framed_scorer(
-                        cache_key, table, bc_bigrams.value, topn
-                    )
-                local = framed_score_rows(need, fs, topn, char_sim, scorer)
-                for key, hit in local.items():
-                    if len(cache) >= _ROW_CACHE_MAX:
-                        cache.pop(next(iter(cache)))
-                    cache[key] = hit
-        out = []
         # list iteration beats Series iteration (no per-element numpy boxing)
-        for t, e, m in rows:
-            if m not in (1, 2) or t is None:
-                out.append(t)
-                continue
-            key = (m, t, tuple(e))
-            hit = local.get(key)
-            if hit is None:
-                hit = cache.get(key)
-            if hit is None:
-                if m == 1:
-                    hit = keyword_correct_one(
-                        t, e, tree, kwset, char_sim, similarity_threshold
-                    )
-                else:
-                    hit = bert_correct_one(t, e, char_sim, scorer, topn)
-                if len(cache) >= _ROW_CACHE_MAX:
-                    cache.pop(next(iter(cache)))
-                cache[key] = hit
-            out.append(hit)
-        return pd.Series(out)
+        return pd.Series(
+            correct_batch(bc_cfg.value, text.tolist(), err_pos.tolist(), mode.tolist())
+        )
 
     return df.withColumn(
         out_col, correct_udf(F.col(text_col), F.col(err_col), F.col(mode_col))

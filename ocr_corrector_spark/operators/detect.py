@@ -1,11 +1,15 @@
 """Error detection as native Catalyst expressions (operators F1-F3).
 
 The reference runs these per row in Python (base_corrector.py:54-119);
-here they are declarative column expressions so Catalyst keeps them inside
-whole-stage codegen and can push the cheap disqualifiers ahead of the
-expensive Arrow-UDF correction stage — the same manual optimization the
-reference hard-codes (pre-filter before correct, SURVEY.md §4), but done
-by the optimizer.
+here they are declarative column expressions that Catalyst keeps inside
+whole-stage codegen.  The default pipeline computes only the
+probs-threshold half natively (``err_prob_key``), so the wide ``probs``
+array never crosses into Python; the eligibility filters F1/F2 run inside
+its single correction UDF (functions/rules.do_correct_filter_*, the
+Python twins of ``eligible_keyword`` / ``eligible_bert``), because they
+apply to the EXTRACTED text, which only exists on the Python side.
+``with_error_detection`` keeps the all-native form for callers that
+correct already-extracted text.
 """
 
 from __future__ import annotations
@@ -42,32 +46,20 @@ def eligible_bert(text: Column, max_seq_length: int = 64) -> Column:
 def err_positions(text: Column, probs: Column, prob_threshold: float = 0.9) -> Column:
     """F3 (base_corrector.py:75-86,109-119): indices with prob below
     threshold; NULL probs → the non-prob path marks every position."""
-    empty = F.array().cast("array<int>")
-    idx = F.sequence(F.lit(0), F.size(probs) - 1)
-    # guard size==0: sequence(0,-1) would produce a DESCENDING range
-    by_prob = F.when(
-        F.size(probs) > 0,
-        F.filter(idx, lambda i: F.element_at(probs, i + 1) < F.lit(prob_threshold)),
-    ).otherwise(empty)
-    all_pos = F.when(
-        F.length(text) > 0, F.sequence(F.lit(0), F.length(text) - 1)
-    ).otherwise(empty)
-    return F.when(probs.isNull(), all_pos).otherwise(by_prob)
+    return err_from_key(text, err_prob_key(probs, prob_threshold))
 
 
 def err_prob_key(probs: Column, prob_threshold: float = 0.9) -> Column:
     """The probs-only factor of ``err_positions``: the sub-threshold index
     set for non-null probs (empty for empty probs), and NULL for null
-    probs.  For every (text, probs):
-
-        err_positions(text, probs, th) == err_from_key(text, err_prob_key(probs, th))
-
-    (tests/test_dedup_correction.py pins the identity).  The key is
-    text-extraction-independent, so the dedup plan can compute it natively
-    on raw rows and use it as a join key orders of magnitude smaller than
-    the probs array itself (plans/pipeline._dedup_correct_pipeline)."""
+    probs.  The key is text-extraction-independent, so the pipeline
+    computes it natively on raw rows: it is the only detection input
+    that crosses into the correction UDF, and the dedup plan's join key
+    — orders of magnitude smaller than the probs array itself
+    (plans/pipeline.py)."""
     empty = F.array().cast("array<int>")
     idx = F.sequence(F.lit(0), F.size(probs) - 1)
+    # guard size==0: sequence(0,-1) would produce a DESCENDING range
     by_prob = F.when(
         F.size(probs) > 0,
         F.filter(idx, lambda i: F.element_at(probs, i + 1) < F.lit(prob_threshold)),

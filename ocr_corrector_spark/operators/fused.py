@@ -1,48 +1,13 @@
-"""Fused single-Arrow-pass pipeline variant.
-
-The staged plan (plans/pipeline.py) crosses the JVM↔Python boundary
-twice: once for extraction, once for correction, with detection as native
-Catalyst expressions in between — the layout that maximizes pushdown and
-lets the optimizer see the filters.  At 10^12-turn scale the two Arrow
-round-trips of the full text column are themselves a cost; this fused
-operator runs extraction → detection → dispatch → correction in ONE
-``mapInArrow`` stage (one Arrow crossing, batch-columnar inside, no
-pandas materialization — also dodges the pandas ns-timestamp overflow for
-far-future ts values), at the price of detection happening in Python
-where Catalyst cannot see it.
-
-Semantics are identical to the staged plan by construction: both call the
-same kernels (functions/correct_kernels.py, operators/extract.extract_any,
-functions/rules) — tests/test_fused.py asserts per-turn equality between
-the two plans.  Pick per workload: scan-heavy with selective pre-filters →
-staged; UDF-dominated with near-total eligibility → fused.
-"""
+"""``fused_correct``: extraction → detection → correction on an unordered
+frame, in the default plan's single Arrow crossing
+(operators/correct.with_single_pass_correction)."""
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StringType, StructField, StructType
 
 from ..assets import KEYWORDS
-from ..assets.scorer_table import SCORER_TABLE
-from ..functions.rules import (
-    do_correct_filter_bert,
-    do_correct_filter_keyword,
-    find_err_pos_by_prob,
-)
-from .correct import (
-    _get_char_sim,
-    _get_framed_scorer,
-    _get_kw_kernel,
-    _get_lm_scorer,
-    _get_row_cache,
-    _table_signature,
-    framed_score_rows,
-)
-from .extract import extract_any
+from .correct import correction_config, with_single_pass_correction
 
 
 def fused_correct(
@@ -60,157 +25,12 @@ def fused_correct(
     context_bigrams: dict | None = None,
     lm_checkpoint: str | None = None,
 ) -> DataFrame:
-    """Adds ``out_col`` (and rewrites ``text_col`` with extracted text) in
-    a single mapInArrow stage.  ``scorer_table`` overrides the built-in
-    confusion table (e.g. an offline-trained table via
-    assets/scorer_table.scorer_table_from_df).  ``scorer_backend`` selects
-    the char-keyed ``"table"`` scorer or the tokenize→frame→score
-    ``"framed"`` path — the framed batch runs through the SAME
-    framed_score_rows helper as the staged plan, so fused-framed ==
-    staged-framed per turn (tests/test_fused.py)."""
-    spark = spark or SparkSession.getActiveSession()
-    bc_words = spark.sparkContext.broadcast(tuple(keywords))
-    table_dict = dict(SCORER_TABLE) if scorer_table is None else dict(scorer_table)
-    bc_scorer = spark.sparkContext.broadcast(table_dict)
-    batched_backend = scorer_backend in ("framed", "lm")
-    if scorer_backend == "framed":
-        from ..functions.framed_scorer import DEFAULT_CONTEXT_BIGRAMS
-
-        bigrams = (
-            dict(DEFAULT_CONTEXT_BIGRAMS)
-            if context_bigrams is None
-            else dict(context_bigrams)
-        )
-    else:
-        bigrams = {}
-    bc_bigrams = spark.sparkContext.broadcast(bigrams)
-    if scorer_backend == "lm" and lm_checkpoint is None:
-        from ..functions.numpy_lm import DEFAULT_CHECKPOINT
-
-        lm_checkpoint = DEFAULT_CHECKPOINT
-    # same key shape as the staged operator, so a worker running both plans
-    # with identical config shares one row memo (identical semantics by the
-    # fused==staged contract)
-    cache_key = (
-        similarity_threshold,
-        topn,
-        tuple(keywords),
-        scorer_backend,
-        _table_signature(table_dict),
-        tuple(sorted(bigrams.items())),
-        lm_checkpoint,
+    """Adds ``out_col`` and rewrites ``text_col`` with extracted text;
+    equal per turn to ``correct_pipeline(order_output=False)``."""
+    cfg = correction_config(
+        similarity_threshold, topn, keywords, scorer_backend,
+        scorer_table, context_bigrams, lm_checkpoint,
     )
-
-    out_schema = StructType(
-        [f for f in df.schema.fields] + [StructField(out_col, StringType())]
-    )
-
-    # mapInArrow, not mapInPandas: the kernels want plain Python strings
-    # anyway, and Arrow-native batches skip the pandas ns-timestamp
-    # conversion (which overflows on dates past 2262) plus a copy each way.
-    def process(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..functions.correct_kernels import (
-            bert_correct_one,
-            keyword_correct_one,
-        )
-
-        char_sim = _get_char_sim()
-        tree, kwset = _get_kw_kernel(bc_words.value)
-        table = bc_scorer.value
-        cache = _get_row_cache(cache_key)
-
-        def scorer(ch):
-            cands = table.get(ch)
-            if cands is None:
-                # identity-dominant default (single definition — the
-                # fused==staged equality contract depends on it)
-                from ..assets.scorer_table import default_candidates
-
-                return default_candidates(ch, topn)
-            return cands
-
-        for batch in batches:
-            texts = batch.column(text_col).to_pylist()
-            probs = batch.column("probs").to_pylist()
-            bizes = batch.column(biz_col).to_pylist()
-            # pass 1: extraction + detection + dispatch per row
-            extracted, plan = [], []
-            for text, prob, biz in zip(texts, probs, bizes):
-                text = extract_any(text)
-                extracted.append(text)
-                if text is None:
-                    plan.append((None, 0, None))
-                    continue
-                is_report = biz == "report"
-                eligible = (
-                    do_correct_filter_keyword(text)
-                    if is_report
-                    else do_correct_filter_bert(text)
-                )
-                if not eligible:
-                    plan.append((text, 0, None))
-                    continue
-                if prob is None:
-                    err = list(range(len(text)))
-                else:
-                    err = find_err_pos_by_prob(list(prob), prob_threshold)
-                if not err:
-                    plan.append((text, 0, None))
-                    continue
-                plan.append((text, 1 if is_report else 2, err))
-            # framed pre-scoring of this batch's uncached bert rows (same
-            # batch-local-dict discipline as the staged UDF: eviction can
-            # never switch which backend scored a row)
-            local: dict = {}
-            if batched_backend:
-                need = {}
-                for text, mode, err in plan:
-                    if mode == 2:
-                        key = (2, text, tuple(err))
-                        if key not in cache and key not in need:
-                            need[key] = (text, list(err))
-                if need:
-                    if scorer_backend == "lm":
-                        fs = _get_lm_scorer(lm_checkpoint, topn)
-                    else:
-                        fs = _get_framed_scorer(
-                            cache_key, table, bc_bigrams.value, topn
-                        )
-                    local = framed_score_rows(need, fs, topn, char_sim, scorer)
-                    for key, hit in local.items():
-                        if len(cache) >= 200_000:
-                            cache.pop(next(iter(cache)))
-                        cache[key] = hit
-            # pass 2: assemble corrected column
-            corrected = []
-            for text, mode, err in plan:
-                if mode == 0:
-                    corrected.append(text)
-                    continue
-                key = (mode, text, tuple(err))
-                hit = local.get(key)
-                if hit is None:
-                    hit = cache.get(key)
-                if hit is None:
-                    if mode == 1:
-                        hit = keyword_correct_one(
-                            text, err, tree, kwset, char_sim, similarity_threshold
-                        )
-                    else:
-                        hit = bert_correct_one(text, err, char_sim, scorer, topn)
-                    if len(cache) >= 200_000:
-                        cache.pop(next(iter(cache)))
-                    cache[key] = hit
-                corrected.append(hit)
-            arrays, names = [], []
-            for i, field in enumerate(batch.schema):
-                names.append(field.name)
-                if field.name == text_col:
-                    arrays.append(pa.array(extracted, type=pa.string()))
-                else:
-                    arrays.append(batch.column(i))
-            names.append(out_col)
-            arrays.append(pa.array(corrected, type=pa.string()))
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    return df.mapInArrow(process, out_schema)
+    return with_single_pass_correction(
+        df, cfg, spark, biz_col, text_col, out_col, prob_threshold
+    ).drop("corr_mode")

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,10 +37,17 @@ class CheckpointedRun:
         )
 
     def committed_buckets(self, spark: SparkSession) -> set[int]:
+        """Buckets watermarked for this run.  A watermark table with no
+        data files — missing, or left empty by a crash inside the first
+        commit — means nothing is committed; any other read failure (a
+        corrupt or unreadable table) raises rather than silently
+        rerunning every bucket."""
         try:
             wm = spark.read.parquet(self.watermark_path)
-        except Exception:
-            return set()
+        except AnalysisException as exc:
+            if exc.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+                return set()
+            raise
         rows = wm.filter(F.col("run_id") == self.run_id).select("bucket").collect()
         return {r.bucket for r in rows}
 

@@ -30,6 +30,19 @@ def _java_opts(cpus: int) -> str:
     )
 
 
+def host_cpus() -> int:
+    """Cores this process may run on (the affinity mask, as ``nproc``
+    counts them — not the machine's core count)."""
+    return len(os.sched_getaffinity(0))
+
+
+def host_driver_heap() -> str:
+    """A quarter of physical memory, clamped to 1–8 GiB: room for the
+    driver JVM while leaving the rest to the Python workers."""
+    total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, min(8, total // (4 * 2**30)))}g"
+
+
 def get_spark(
     app_name: str = "ocr_corrector_spark",
     cpus: int | None = None,
@@ -38,12 +51,15 @@ def get_spark(
 ) -> SparkSession:
     """local[cpus] session with AQE + Arrow enabled.
 
-    On a real cluster the same confs apply (drop the master); AQE handles
-    runtime skew-join splitting and partition coalescing, Arrow batches
-    bound Python-worker memory for the UDF stages.
+    Defaults fit the host the job starts on: ``cpus`` from the affinity
+    mask and a driver heap of a quarter of RAM (1–8g); the
+    ``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_DRIVER_MEM`` env vars override
+    them.  On a real cluster the same confs apply (drop the master); AQE
+    handles runtime skew-join splitting and partition coalescing, Arrow
+    batches bound Python-worker memory for the UDF stage.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cpus())
     if shuffle_partitions is None:
         shuffle_partitions = max(32, cpus)
     builder = (
@@ -68,7 +84,10 @@ def get_spark(
         .config("spark.speculation", "true")
         .config("spark.speculation.multiplier", "2")
         .config("spark.speculation.quantile", "0.75")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or host_driver_heap(),
+        )
         .config("spark.driver.extraJavaOptions", _java_opts(cpus))
         .config("spark.ui.enabled", "false")
     )

@@ -2,10 +2,10 @@
 
 The reference is batch-only (SURVEY.md §2g), but a transcripts table at
 10^12-turn scale is fed continuously; this module runs the SAME operator
-graph (extraction → native detect → dispatched correction UDF) over a
-``readStream`` source.  Every stage is stateless/narrow, so the stream
-needs no state store; the optional windowed metrics stream uses a
-watermark for late turns.
+graph (native err_prob_key → the single extraction + correction Arrow
+UDF) over a ``readStream`` source.  Every stage is stateless/narrow, so
+the stream needs no state store; the optional windowed metrics stream
+uses a watermark for late turns.
 
 Typical wiring::
 

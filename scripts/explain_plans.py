@@ -1,7 +1,13 @@
 #!/usr/bin/env python3
 """Capture formatted physical plans for the headline queries into
 BENCH/PLANS.md — the scale-review artifact (pushed filters, codegen spans,
-shuffle/broadcast placement)."""
+shuffle/broadcast placement).
+
+    python scripts/explain_plans.py                       # every section
+    python scripts/explain_plans.py flagship_correct_pipeline flagship_dedup
+
+With section names, only those sections are regenerated in place; the
+rest of BENCH/PLANS.md is kept as it is."""
 
 from __future__ import annotations
 
@@ -12,6 +18,26 @@ from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+
+HEADER = (
+    "# Physical plans (explain formatted)\n\n"
+    "Review notes: native filters/projections reach the parquet scan "
+    "(PushedFilters/ReadSchema); detection expressions sit inside "
+    "WholeStageCodegen; the only wide stages are the input range "
+    "shuffle (ordering) and the agg shuffles; dictionary joins are "
+    "BroadcastHashJoin; the flagship's one Arrow UDF stage is "
+    "ArrowEvalPython.\n\n"
+    "Self-join dedup queries (simhash_neardup_pairs, "
+    "minhash_neardup_pairs, conversation_dedup): the STATIC plan "
+    "shows the signature aggregation subtree once per join side, but "
+    "AQE's ReuseExchangeAndSubquery dedupes the identical exchanges "
+    "at runtime — the executed final plan carries a ReusedExchange "
+    "node and materializes each signature shuffle once (verified on "
+    "sf0.01: isFinalPlan=true, ReusedExchange=1, 3 shuffle stages "
+    "for simhash_neardup_pairs).  The expensive explode+agg runs "
+    "once per query at any scale.\n"
+)
 
 
 def explain(df) -> str:
@@ -31,14 +57,15 @@ def main() -> None:
     spark = get_spark(app_name="explain", cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
 
+    only = set(sys.argv[1:])
     sections = {}
-    sections["flagship_correct_pipeline"] = explain(
+    sections["flagship_correct_pipeline"] = lambda: explain(
         correct_pipeline(gen_transcripts(spark, n_convs=100), spark)
     )
-    from ocr_corrector_spark.operators.fused import fused_correct
-
-    sections["flagship_fused_single_pass"] = explain(
-        fused_correct(gen_transcripts(spark, n_convs=100), spark)
+    sections["flagship_dedup"] = lambda: explain(
+        correct_pipeline(
+            gen_transcripts(spark, n_convs=100), spark, dedup_correction=True
+        )
     )
     for name in (
         "pricing_summary",
@@ -87,37 +114,29 @@ def main() -> None:
         "anchor_stats",
         "quality_classifier",
     ):
-        sections[name] = explain(getattr(sqlops, f"q_{name}")(spark, sf_dir))
+        sections[name] = lambda q=getattr(sqlops, f"q_{name}"): explain(q(spark, sf_dir))
 
     from ocr_corrector_spark.operators.multimodal import (
         q_image_ahash,
         q_image_stats,
     )
 
-    sections["image_stats"] = explain(q_image_stats(spark, sf_dir))
-    sections["image_ahash"] = explain(q_image_ahash(spark, sf_dir))
+    sections["image_stats"] = lambda: explain(q_image_stats(spark, sf_dir))
+    sections["image_ahash"] = lambda: explain(q_image_ahash(spark, sf_dir))
 
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    with open(os.path.join(REPO, "BENCH", "PLANS.md"), "w") as f:
-        f.write("# Physical plans (explain formatted)\n\n")
-        f.write(
-            "Review notes: native filters/projections reach the parquet scan "
-            "(PushedFilters/ReadSchema); detection expressions sit inside "
-            "WholeStageCodegen; the only wide stages are the input range "
-            "shuffle (ordering) and the agg shuffles; dictionary joins are "
-            "BroadcastHashJoin; the Arrow UDF stages are ArrowEvalPython.\n\n"
-            "Self-join dedup queries (simhash_neardup_pairs, "
-            "minhash_neardup_pairs, conversation_dedup): the STATIC plan "
-            "shows the signature aggregation subtree once per join side, but "
-            "AQE's ReuseExchangeAndSubquery dedupes the identical exchanges "
-            "at runtime — the executed final plan carries a ReusedExchange "
-            "node and materializes each signature shuffle once (verified on "
-            "sf0.01: isFinalPlan=true, ReusedExchange=1, 3 shuffle stages "
-            "for simhash_neardup_pairs).  The expensive explode+agg runs "
-            "once per query at any scale.\n"
-        )
-        for name, plan in sections.items():
-            f.write(f"\n## {name}\n\n```\n{plan}\n```\n")
+    path = os.path.join(REPO, "BENCH", "PLANS.md")
+    kept = {}
+    if only:
+        with open(path) as f:
+            _, *blocks = f.read().split("\n## ")
+        kept = dict(b.split("\n", 1) for b in blocks)
+    with open(path, "w") as f:
+        f.write(HEADER)
+        for name, build in sections.items():
+            if not only or name in only:
+                f.write(f"\n## {name}\n\n```\n{build()}\n```\n")
+            elif name in kept:
+                f.write(f"\n## {name}\n{kept[name]}")
     print("wrote BENCH/PLANS.md")
     spark.stop()
 

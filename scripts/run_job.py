@@ -46,13 +46,6 @@ def main() -> None:
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--n-convs", type=int, default=10000, help="synthetic scale if no --input")
     ap.add_argument(
-        "--plan",
-        choices=("staged", "fused"),
-        default="staged",
-        help="staged = Catalyst-visible pre-filters, two Arrow stages; "
-        "fused = one MapInArrow crossing (faster when UDF-dominated)",
-    )
-    ap.add_argument(
         "--scorer-table",
         default=None,
         help="parquet path of an offline-trained scorer table "
@@ -72,8 +65,6 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    from ocr_corrector_spark.operators.fused import fused_correct
-    from ocr_corrector_spark.operators.reassemble import order_turns
     from ocr_corrector_spark.plans.audit import write_audit
     from ocr_corrector_spark.plans.checkpoint import CheckpointedRun
     from ocr_corrector_spark.plans.pipeline import correct_pipeline
@@ -102,18 +93,6 @@ def main() -> None:
         scorer_table = scorer_table_from_df(spark.read.parquet(args.scorer_table))
 
     def transform(d):
-        if args.plan == "fused":
-            # Order FIRST: repartitionByRange samples its child for range
-            # boundaries, so placing it after the fused UDF would execute
-            # the mapInArrow stage an extra time per action.  mapInArrow is
-            # narrow/order-preserving, so sorted input stays sorted —
-            # matching the staged plan's layout (plans/pipeline.py).
-            return fused_correct(
-                order_turns(d),
-                spark,
-                scorer_table=scorer_table,
-                scorer_backend=args.scorer_backend,
-            )
         return correct_pipeline(
             d,
             spark,

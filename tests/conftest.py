@@ -18,7 +18,6 @@ def spark():
     wh = tempfile.mkdtemp(prefix="spark_graft_test_wh_")
     s = get_spark(
         app_name="tests",
-        cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")),
         # static conf — must be set at session creation; managed tables
         # (bucketing tests) must never land inside the repo's cwd
         extra_conf={"spark.sql.warehouse.dir": wh},

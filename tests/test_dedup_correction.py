@@ -1,7 +1,7 @@
 """dedup_correction=True must be bit-identical to the default path.
 
-The dedup plan (distinct (text, err_pos, mode) → correct once → null-safe
-hash join back → order at the end) is a pure execution-strategy change:
+The dedup plan (distinct (text, err_prob_key, biz) → the correction UDF
+once → null-safe hash join back → order at the end) is a pure execution-strategy change:
 every output row, value, and — with order_output=True — the output order
 must equal the default per-row path exactly, including null texts,
 pass-through (mode 0) rows, and duplicated texts spanning conversations.
@@ -106,3 +106,47 @@ def test_err_prob_key_identity(spark):
     ).collect()
     for r in got:
         assert r["direct"] == r["via_key"], (r["direct"], r["via_key"])
+
+
+@pytest.mark.parametrize(
+    "backend",
+    [
+        {},
+        {"scorer_backend": "framed"},
+        {"scorer_backend": "framed", "context_bigrams": {}},
+        {"scorer_backend": "lm"},
+        {"scorer_table": {"大": [("太", 0.7)]}},
+    ],
+    ids=["table", "framed", "framed-no-bigrams", "lm", "custom-table"],
+)
+def test_plans_agree_for_every_backend(spark, backend):
+    """default == dedup == fused_correct per turn, for each scorer backend,
+    including null text with low probs and a context-bigram row."""
+    import datetime as dt
+
+    from ocr_corrector_spark.operators.fused import fused_correct
+
+    t = dt.datetime(2026, 1, 1)
+    extra = spark.createDataFrame(
+        [
+            ("x", 0, "user", None, "doc", t, [0.5, 0.5, 0.5]),
+            ("x", 1, "user", "大阳高照呀", "doc", t, [0.5, 1.0, 1.0, 1.0, 1.0]),
+            ("x", 2, "user", "大安门广场", "doc", t, None),
+        ],
+        "conv_id string, turn_idx int, role string, text string, tool string, "
+        "ts timestamp, probs array<double>",
+    )
+    df = gen_transcripts(spark, n_convs=40, seed=5).unionByName(extra)
+
+    def rows(out):
+        return sorted(
+            tuple(r) for r in out.select("conv_id", "turn_idx", "text", "text_corrected").collect()
+        )
+
+    default = rows(correct_pipeline(df, spark, order_output=False, **backend))
+    dedup = rows(
+        correct_pipeline(df, spark, order_output=False, dedup_correction=True, **backend)
+    )
+    fused = rows(fused_correct(df, spark, **backend))
+    assert default == dedup == fused
+    assert any(r[2] != r[3] for r in default)  # some row was corrected

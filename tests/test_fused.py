@@ -1,5 +1,6 @@
-"""Fused single-Arrow-pass plan must equal the staged plan per turn
-(operators/fused.py vs plans/pipeline.py)."""
+"""``fused_correct`` (the single-crossing operator on an unordered frame)
+must equal ``correct_pipeline`` per turn (operators/fused.py vs
+plans/pipeline.py)."""
 
 from __future__ import annotations
 
@@ -30,8 +31,8 @@ def _edge_rows(spark):
             ("edge", 3, "user", "%PDF-1.4 junk", "doc", t, [0.5]),
             # malformed layout passthrough
             ("edge", 4, "user", "%LAYOUT v1\nP0 bad", "report", t, [0.5]),
-            # far-future ts (past pandas ns ceiling) — mapInArrow must not
-            # overflow where mapInPandas did
+            # far-future ts (past the pandas ns ceiling): ts never crosses
+            # into Python, so it cannot overflow there
             ("edge", 5, "user", "宋还本全", "report", dt.datetime(2600, 1, 1), None),
         ],
         schema,
@@ -70,9 +71,9 @@ def test_fused_corrects_and_extracts(spark):
 
 
 def test_fused_framed_equals_staged_framed(spark):
-    """--plan fused --scorer-backend framed (VERDICT r02 #3): the fused
-    mapInArrow stage scores through the same framed_score_rows helper as
-    the staged plan, so per-turn output must be identical — including rows
+    """fused_correct with the framed backend (VERDICT r02 #3) scores
+    through the same correct_batch loop as the pipeline, so per-turn
+    output must be identical — including rows
     where the context bigram re-ranks candidates away from the char-keyed
     table result (大阳 → 太阳 via the (太, 阳) bigram)."""
     import datetime as dt

@@ -46,23 +46,46 @@ def test_dictionary_join_broadcasts(spark):
     assert "Broadcast" in plan
 
 
-def test_detection_is_native_codegen(spark):
-    # the pipeline's detect stage (F1-F3) must stay in native expressions:
-    # the plan before the correction UDF carries codegen and NO Python
-    # eval other than the extraction/correction Arrow stages
+def _udf_args(plan: str) -> list[str]:
+    """Top-level arguments of the one Python UDF call in ``plan``'s
+    ArrowEvalPython node."""
+    line = next(l for l in plan.splitlines() if "ArrowEvalPython" in l)
+    call = line[line.index("correct_rows(") + len("correct_rows(") :]
+    args, depth, cur = [], 0, ""
+    for ch in call:
+        if ch in "([":
+            depth += 1
+        elif ch in ")]":
+            if depth == 0:
+                break
+            depth -= 1
+        if ch == "," and depth == 0:
+            args.append(cur.strip())
+            cur = ""
+        else:
+            cur += ch
+    return args + [cur.strip()]
+
+
+def test_default_plan_crosses_into_python_once(spark):
+    # the default pipeline crosses the JVM<->Python boundary ONCE per row:
+    # extraction, eligibility and correction share one scalar Arrow UDF,
+    # while the probs-threshold half of detection stays native
     from ocr_corrector_spark.plans.pipeline import correct_pipeline
     from ocr_corrector_spark.sources.transcripts import gen_transcripts
 
     df = correct_pipeline(gen_transcripts(spark, n_convs=20), spark)
     plan = _plan(df)
-    # exactly two Python stages: extraction (ArrowEvalPython/MapInPandas)
-    # and the dispatched correction UDF — detection adds NO third stage
-    n_py = plan.count("ArrowEvalPython") + plan.count("MapInPandas")
-    assert n_py == 2, plan
-    # and the detect expressions run as native Catalyst inside the plan
-    # (the F2 regex and the prob-threshold array filter are visible as
-    # JVM expressions, not hidden inside a Python UDF)
-    assert "RLIKE" in plan and "filter(sequence(" in plan, plan
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "MapInArrow" not in plan and "MapInPandas" not in plan, plan
+    # the prob-threshold array filter is a visible JVM expression
+    assert "filter(sequence(" in plan, plan
+    # the UDF's inputs are text, the native err_prob_key and the biz
+    # column; the probs array itself is not one of them
+    text, err_key, biz = _udf_args(plan)
+    assert text.startswith("text#") and biz.startswith("tool#"), plan
+    assert "filter(sequence(" in err_key, err_key
+    assert not any(a.startswith("probs#") for a in (text, err_key, biz))
 
 
 def test_image_stats_scan_reads_only_doc_id(spark):
@@ -151,7 +174,7 @@ def test_repetition_score_is_scan_local(spark):
 def test_dedup_correction_plan_shape(spark):
     # the dedup plan's 100TB contract: the join back is a SHUFFLED HASH
     # join (no wide-key sort-merge, no driver-serializing broadcast of the
-    # uniq table), the Python stages (ArrowEvalPython) sit on the build
+    # uniq table), the Python stage (ArrowEvalPython) sits on the build
     # side only, and the probs arrays never enter the join keys (the
     # err_prob_key factorization)
     from ocr_corrector_spark.plans.pipeline import correct_pipeline
@@ -164,5 +187,7 @@ def test_dedup_correction_plan_shape(spark):
     assert "SortMergeJoin" not in plan, plan[:2000]
     # dedup aggregation present (the distinct)
     assert "HashAggregate" in plan
-    # python stages exist (extraction + correction on the uniq side)
-    assert plan.count("ArrowEvalPython") >= 2
+    # one Python stage (extraction + eligibility + correction) on the
+    # uniq side
+    assert plan.count("ArrowEvalPython") == 1, plan[:2000]
+    assert "MapInArrow" not in plan and "MapInPandas" not in plan

@@ -1,5 +1,7 @@
 """Audit lineage, checkpoint/resume idempotence, and salted reassembly."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -99,37 +101,107 @@ def test_checkpoint_resume_idempotent(spark, tmp_path):
     assert run.run(spark, df, transform) == 0
 
 
-def test_correction_executes_once_per_row_with_audit(spark, tmp_path):
-    """The audit hook must not re-execute the correction UDF: the wave's
-    frame is persisted across the output write and both audit actions
-    (VERDICT r01 'What's wrong' #1 — the 3x recompute bill)."""
-    df = gen_transcripts(spark, n_convs=20)
-    n_rows = df.count()
+def _run_counted(spark, tmp_path, df, run_id, **kw):
+    """CheckpointedRun + write_audit over ``df`` (4 buckets, one per
+    wave), counting the rows the correction UDF sees."""
     acc = spark.sparkContext.accumulator(0)
 
     def transform(d):
         return correct_pipeline(
-            d, spark, order_output=False, keep_mode_col=True, row_counter=acc
+            d, spark, order_output=False, keep_mode_col=True, row_counter=acc, **kw
         )
 
     run = CheckpointedRun(
-        "acc1", str(tmp_path / "out_a"), str(tmp_path / "wm_a"), n_buckets=4
+        run_id, str(tmp_path / "out"), str(tmp_path / "wm"), n_buckets=4
     )
-    audit_path = str(tmp_path / "audit_a")
+    audit_path = str(tmp_path / "audit")
     done = run.run(
         spark,
         df,
         transform,
-        post_write=lambda out, wave: write_audit(out, "acc1", audit_path, wave=wave),
+        post_write=lambda out, wave: write_audit(out, run_id, audit_path, wave=wave),
     )
     assert done == 4
-    # output write + lineage action + biz-rollup action, but the UDF saw
-    # each row exactly once
-    assert acc.value == n_rows
+    n_rows = df.count()
     audit = spark.read.parquet(audit_path)
     assert audit.agg(F.sum("n_rows")).collect()[0][0] == n_rows
-    out_rows = spark.read.parquet(run.output_path).count()
-    assert out_rows == n_rows
+    assert spark.read.parquet(run.output_path).count() == n_rows
+    return run, acc.value
+
+
+def test_correction_executes_once_per_row_with_audit(spark, tmp_path):
+    """The audit hook must not re-execute the correction UDF: the wave's
+    frame is persisted across the output write and both audit actions
+    (VERDICT r01 'What's wrong' #1 — the 3x recompute bill).  The UDF's
+    struct result is unpacked into three columns without Catalyst copying
+    the UDF into each field reference."""
+    df = gen_transcripts(spark, n_convs=20)
+    _, seen = _run_counted(spark, tmp_path, df, "acc1")
+    # output write + lineage action + biz-rollup action, but the UDF saw
+    # each row exactly once
+    assert seen == df.count()
+
+
+def test_dedup_correction_executes_once_per_distinct_triple_with_audit(spark, tmp_path):
+    """The dedup plan through the same checkpoint + audit path: the UDF
+    sees each distinct (text, err_prob_key, biz) triple of a wave once."""
+    from ocr_corrector_spark.operators.detect import err_prob_key
+
+    df = gen_transcripts(spark, n_convs=20)
+    run, seen = _run_counted(spark, tmp_path, df, "acc2", dedup_correction=True)
+    # one bucket per wave, so a wave's distinct triples are its bucket's
+    triples = (
+        run.with_bucket(df)
+        .select("bucket", "text", err_prob_key(F.col("probs")), "tool")
+        .distinct()
+        .count()
+    )
+    assert triples < df.count()  # the input is duplicate-heavy
+    assert seen == triples
+
+
+@pytest.mark.parametrize("dedup", [False, True])
+def test_null_text_is_never_eligible(spark, tmp_path, dedup):
+    """A NULL text with low-prob probs is not eligible: corr_mode 0, and
+    the audit does not count it in n_eligible."""
+    rows = [
+        ("c1", 0, "user", "report", None, [0.5, 0.5]),
+        ("c1", 1, "user", "doc", None, [0.5, 0.5, 0.5]),
+        ("c1", 2, "user", "doc", None, None),
+        ("c1", 3, "user", "report", "宋还本全", [0.5, 0.99, 0.99, 0.5]),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx int, role string, tool string, "
+        "text string, probs array<double>",
+    ).withColumn("ts", F.current_timestamp())
+    out = correct_pipeline(
+        df, spark, order_output=True, keep_mode_col=True, dedup_correction=dedup
+    )
+    got = [(r.turn_idx, r.corr_mode, r.text_corrected) for r in out.collect()]
+    assert got == [(0, 0, None), (1, 0, None), (2, 0, None), (3, 1, "未还本金")]
+    audit_path = str(tmp_path / "audit")
+    write_audit(out, "nulls", audit_path)
+    audit = spark.read.parquet(audit_path)
+    assert audit.agg(F.sum("n_eligible")).collect()[0][0] == 1
+
+
+def test_corrupt_watermarks_raise(spark, tmp_path):
+    """An unreadable watermark table must fail the run, not silently
+    rerun every bucket; a missing one, or one a crash inside the first
+    commit left without data files, means nothing is committed."""
+    run = CheckpointedRun(
+        "wm", str(tmp_path / "out"), str(tmp_path / "wm"), n_buckets=4
+    )
+    assert run.committed_buckets(spark) == set()
+    os.makedirs(os.path.join(run.watermark_path, "_temporary"))
+    assert run.committed_buckets(spark) == set()
+    with open(os.path.join(run.watermark_path, "part-00000.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception):
+        run.committed_buckets(spark)
+    with pytest.raises(Exception):
+        run.run(spark, gen_transcripts(spark, n_convs=4), lambda d: d)
 
 
 def test_audit_wave_replay_idempotent(spark, tmp_path):
