@@ -18,7 +18,7 @@ def _java_opts(cpus: int) -> str:
     of the TASK width (not the machine width) keeps collection cost
     proportional to the work.  On a real cluster each executor JVM is
     narrow and per-node G1 defaults are fine; this knob matters only for
-    the single-JVM local[4N] protocol.  Override with SPARK_GRAFT_JAVA_OPTS.
+    a single wide local[] JVM.  Override with SPARK_GRAFT_JAVA_OPTS.
     """
     override = os.environ.get("SPARK_GRAFT_JAVA_OPTS")
     if override is not None:

@@ -3,7 +3,8 @@
 
 Runs the REAL job path (CheckpointedRun waves + dynamic partition
 overwrite + audit post_write hook) over a generator-synthesized transcript
-table much larger than the bench inputs, on local[32], and records:
+table much larger than the bench inputs, on local[$SPARK_GRAFT_CPUS]
+(default: the cores in the affinity mask), and records:
 
 * corrected-turns/sec for the whole job (all waves, writes included);
 * the memory-boundedness signals (no driver collect of data rows; input
@@ -31,7 +32,6 @@ sys.path.insert(0, REPO)
 
 def main() -> None:
     n_convs = int(os.environ.get("SMOKE_N_CONVS", "2000000"))
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     buckets = int(os.environ.get("SMOKE_BUCKETS", "64"))
     wave_size = int(os.environ.get("SMOKE_WAVE_SIZE", "32"))
 
@@ -43,8 +43,9 @@ def main() -> None:
     from ocr_corrector_spark.session import get_spark
     from ocr_corrector_spark.sources.transcripts import gen_transcripts
 
-    spark = get_spark(app_name="scale-smoke", cpus=cpus, shuffle_partitions=128)
+    spark = get_spark(app_name="scale-smoke", shuffle_partitions=128)
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
 
     work = tempfile.mkdtemp(prefix="scale_smoke_")
     in_dir = os.path.join(work, "input")

@@ -74,7 +74,7 @@ def main() -> None:
     import __spark_entry__ as entry_mod
     from ocr_corrector_spark.session import get_spark
 
-    spark = get_spark(app_name="self-correctness", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "16")))
+    spark = get_spark(app_name="self-correctness")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:
@@ -119,6 +119,7 @@ def main() -> None:
     out = {
         "generated_utc": datetime.now(timezone.utc).isoformat(timespec="seconds"),
         "sf_dir": sf_dir,
+        "cpus": spark.sparkContext.defaultParallelism,
         "n_queries": len(report),
         "n_hash_pass": ok,
         "queries": report,

@@ -66,18 +66,36 @@ def test_null_and_passthrough_rows(spark):
     assert by_key[("c1", 2)] == by_key[("c2", 0)]
 
 
-def test_udf_runs_once_per_distinct_triple(spark, frame):
-    # the whole point: correction compute is per-UNIQUE row in dedup mode
+@pytest.mark.parametrize("width", [2, 16], ids=["w2", "w16"])
+def test_udf_runs_once_per_distinct_triple(spark, frame, width):
+    """Python work is exact and width-invariant: at 2 and at 16 partitions
+    the dedup plan sends each distinct (text, err_prob_key, tool) triple
+    into the correction UDF exactly once, and the default plan each row
+    exactly once.  The counter adds the Arrow rows entering the UDF, not
+    kernel evaluations: the per-worker memo outlives a job in a reused
+    worker, so kernel counts would depend on test order."""
+    from ocr_corrector_spark.operators.detect import err_prob_key
+
     n_rows = frame.count()
-    n_uniq = frame.select("text", "probs", "tool").distinct().count()
+    n_uniq = (
+        frame.select("text", err_prob_key(F.col("probs")), "tool").distinct().count()
+    )
     assert n_uniq < n_rows  # the fixture is duplicate-heavy, else no test
-    counter = spark.sparkContext.accumulator(0)
-    correct_pipeline(
-        frame, spark, order_output=False, dedup_correction=True,
-        row_counter=counter,
-    ).agg(F.count(F.lit(1))).collect()
-    # distinct (text, err_pos, mode) triples <= distinct (text, probs, tool)
-    assert counter.value <= n_uniq
+    df = frame.repartition(width)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(width))
+    try:
+        seen = {}
+        for dedup in (True, False):
+            counter = spark.sparkContext.accumulator(0)
+            # aggregate the UDF's output: a bare count() prunes the UDF
+            correct_pipeline(
+                df, spark, dedup_correction=dedup, row_counter=counter
+            ).agg(F.sum(F.length("text_corrected"))).collect()
+            seen[dedup] = counter.value
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert seen == {True: n_uniq, False: n_rows}
 
 
 def test_err_prob_key_identity(spark):
