@@ -88,6 +88,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from ocr_corrector_spark.operators import sqlops
+    from ocr_corrector_spark.operators.correct import correction_config
     from ocr_corrector_spark.operators.fused import fused_correct
     from ocr_corrector_spark.operators.multimodal import (
         q_image_ahash,
@@ -125,8 +126,8 @@ def main() -> None:
         # forces extraction + correction (+ the ordering shuffle)
         df.agg(F.sum(F.length("text_corrected")), F.count(F.lit(1))).collect()
 
-    def pipeline(**kw):
-        return lambda fr: checksum(correct_pipeline(fr, spark, order_output=True, **kw))
+    def pipeline(cfg=None, **kw):
+        return lambda fr: checksum(correct_pipeline(fr, spark, cfg, order_output=True, **kw))
 
     # Warm-up: the FIRST execution of each UDF in a session pays a one-time
     # per-Python-worker ramp (closure unpickle + module imports in every
@@ -151,10 +152,10 @@ def main() -> None:
         pipeline(dedup_correction=True), frames(range(241, 243))
     )
     timings["flagship_framed"] = _min_time(
-        pipeline(scorer_backend="framed"), frames(range(81, 83))
+        pipeline(correction_config(scorer_backend="framed")), frames(range(81, 83))
     )
     timings["flagship_lm"] = _min_time(
-        pipeline(scorer_backend="lm"), frames(range(161, 163))
+        pipeline(correction_config(scorer_backend="lm")), frames(range(161, 163))
     )
 
     # --- SQL-analog operators: warm once (IO + codegen), min of 5 ---------

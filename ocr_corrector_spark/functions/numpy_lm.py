@@ -37,8 +37,7 @@ import os
 
 import numpy as np
 
-from .rules import translate_digits
-from .tokenizer import frame_sentence, tokenize
+from .framed_scorer import FramedBatchScorer
 
 DEFAULT_CHECKPOINT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -47,6 +46,15 @@ DEFAULT_CHECKPOINT = os.path.join(
 )
 
 _WINDOW = (-2, -1, 1, 2)  # context offsets around the masked position
+
+
+def _rows_matmul(x: np.ndarray, w: np.ndarray) -> np.ndarray:
+    """``x @ w`` with a per-row result that does not depend on how many
+    rows share the call: BLAS picks its kernel by matrix shape, so a row's
+    last bits (and, at a tie, its top-k order) would depend on the rest of
+    its batch; as a stack of (1, k) @ (k, m) products every row takes the
+    same kernel at any n."""
+    return (x[:, None, :] @ w)[:, 0, :]
 
 
 class NumpyMaskedLM:
@@ -84,12 +92,12 @@ class NumpyMaskedLM:
         (n, V) softmax probabilities."""
         p = self.p
         x = p["E"][windows].reshape(windows.shape[0], -1)  # (n, 4d)
-        h = np.tanh(x @ p["W1"] + p["b1"])  # (n, H)
-        t = h @ p["W2"] + p["b2"]  # (n, d)
+        h = np.tanh(_rows_matmul(x, p["W1"]) + p["b1"])  # (n, H)
+        t = _rows_matmul(h, p["W2"]) + p["b2"]  # (n, d)
         mu = t.mean(axis=1, keepdims=True)
         sd = t.std(axis=1, keepdims=True) + 1e-6
         t = p["gamma"] * (t - mu) / sd + p["beta"]  # layer-norm
-        logits = t @ p["E"].T + p["b_out"]  # tied output embedding
+        logits = _rows_matmul(t, p["E"].T) + p["b_out"]  # tied output embedding
         logits -= logits.max(axis=1, keepdims=True)
         e = np.exp(logits)
         return e / e.sum(axis=1, keepdims=True)
@@ -106,82 +114,34 @@ class NumpyMaskedLM:
         ]
 
 
-class NumpyLMScorer:
+class NumpyLMScorer(FramedBatchScorer):
     """CandidateScorer backend over the committed numpy masked LM — the
-    SAME ``score_sentences(texts, err_positions)`` contract as
-    FramedTableScorer (per sentence: per-error top-n ``(candidate,
-    confidence)`` lists, or ``None`` → char-keyed fallback), through the
-    same T11/T12 framing path, so the reference batch contract
-    (masked_lm.py:251-302 framing, :309-356 batching, :400-447 pad/de-pad
-    reassembly) is executed with a real forward pass at the masked
-    positions."""
+    SAME ``score_sentences(texts, err_positions)`` contract and batch loop
+    as FramedTableScorer (functions/framed_scorer.FramedBatchScorer:
+    masked_lm.py:251-302 framing, :309-356 batching, :400-447 per-error
+    top-n), with ONE dense forward pass per batch over every masked
+    position's context window (the reference's dense-tensor batching)."""
 
     def __init__(
         self,
         checkpoint_path: str = DEFAULT_CHECKPOINT,
         model: NumpyMaskedLM | None = None,
-        topn: int = 3,
-        max_seq_length: int = 64,
-        batch_size: int = 16,
-        max_mask_per_sentence: int = 3,
+        **framing,
     ):
+        super().__init__(**framing)
         self.model = model if model is not None else NumpyMaskedLM.load(checkpoint_path)
         self.vocab_set = set(self.model.tokens)
-        self.topn = topn
-        self.max_seq_length = max_seq_length
-        self.batch_size = batch_size
-        self.max_mask = max_mask_per_sentence
 
-    def score_sentences(self, texts, err_positions):
-        out = []
-        for b0 in range(0, len(texts), self.batch_size):  # A1 batching
-            batch = list(
-                zip(texts[b0 : b0 + self.batch_size],
-                    err_positions[b0 : b0 + self.batch_size])
-            )
-            numfree = [translate_digits(t or "") for t, _ in batch]
-            pad_width = max((len(e) for _, e in batch), default=0)
-            # gather every (sentence, error) window of the batch, run ONE
-            # dense forward pass (the reference's dense-tensor batching),
-            # then de-pad per sentence
-            windows: list = []
-            padded_rows: list = []
-            for (text, errs), nf in zip(batch, numfree):
-                errs = list(errs)
-                try:
-                    tokens = tokenize(nf, self.vocab_set)
-                    if len(tokens) != len(nf):
-                        padded_rows.append(None)  # misalignment → fallback
-                        continue
-                    framed, _mask, shifted = frame_sentence(
-                        tokens, errs, self.max_seq_length, self.max_mask
-                    )
-                    row_slots = []
-                    for p in shifted:
-                        if 0 <= p < min(len(framed), self.max_seq_length):
-                            win = [
-                                framed[p + o]
-                                if 0 <= p + o < len(framed)
-                                else "[PAD]"
-                                for o in _WINDOW
-                            ]
-                        else:
-                            # truncated out of the model window: no context
-                            # (production F2 rejects texts > max_seq-2)
-                            win = ["[PAD]"] * 4
-                        row_slots.append(len(windows))
-                        windows.append(self.model.ids(win))
-                    padded_rows.append(row_slots + [None] * (pad_width - len(row_slots)))
-                except Exception:
-                    padded_rows.append(None)  # per-sentence isolation
-            scored = (
-                self.model.topn(np.asarray(windows, dtype=np.int64), self.topn)
-                if windows
-                else []
-            )
-            for (text, errs), row in zip(batch, padded_rows):
-                if row is None:
-                    out.append(None)
-                else:
-                    out.append([scored[s] for s in row[: len(list(errs))]])
-        return out
+    def _vocab(self, numfree_texts):
+        return self.vocab_set
+
+    def _score(self, slots):
+        windows = [
+            # truncated out of the model window: no context
+            ["[PAD]"] * len(_WINDOW)
+            if p is None
+            else [framed[p + o] if 0 <= p + o < len(framed) else "[PAD]" for o in _WINDOW]
+            for _nf, _e, framed, p in slots
+        ]
+        ids = np.asarray([self.model.ids(w) for w in windows], dtype=np.int64)
+        return self.model.topn(ids, self.topn)

@@ -1,11 +1,7 @@
-from .detect import with_error_detection
-from .correct import with_correction
 from .extract import with_extraction, extract_main_content
 from .reassemble import reassemble_conversations, order_turns
 
 __all__ = [
-    "with_error_detection",
-    "with_correction",
     "with_extraction",
     "extract_main_content",
     "reassemble_conversations",

@@ -16,10 +16,11 @@ Two operators call the same ``correct_batch`` loop:
   ``probs`` arrays and every other column stay in the JVM.
 * ``with_dispatched_correction`` — a pandas UDF over a natively computed
   ``(text, err_pos, corr_mode)``, for callers that build their own
-  detection columns (``with_correction``, perfbench's layer ladder).
+  detection columns (perfbench's layer ladder).
 
 Everything the output depends on besides the row is one hashable
-``CorrectionConfig``, broadcast to the workers.  Each Python worker keeps
+``CorrectionConfig`` (``correction_config``), broadcast to the workers;
+every entry point takes it as one ``cfg`` argument.  Each Python worker keeps
 one ``_Corrector`` per config: the kernels (BK-tree, char similarity,
 scorer) and a row-result memo that survives across batches and tasks.
 The correction itself is embarrassingly parallel — no shuffle.
@@ -48,6 +49,7 @@ from ..functions.rules import do_correct_filter_bert, do_correct_filter_keyword
 from .detect import err_prob_key
 from .extract import extract_any
 
+SCORER_BACKENDS = ("table", "framed", "lm")
 _ROW_CACHE_MAX = 200_000
 # per-worker state, keyed by config — module-global so it survives across
 # Arrow batches AND tasks in the same Python worker process (a closure
@@ -87,9 +89,31 @@ def correction_config(
     context_bigrams: dict | None = None,
     lm_checkpoint: str | None = None,
 ) -> CorrectionConfig:
-    """Resolves the backend defaults: the built-in table, the demo
-    context bigrams (framed only) and the committed LM checkpoint (lm
-    only)."""
+    """The correction config every entry point takes as ``cfg``.
+
+    ``similarity_threshold``: the keyword path's shape-similarity cut-off.
+
+    ``scorer_backend`` (one of ``SCORER_BACKENDS``; anything else raises
+    ``ValueError``): ``"table"`` (char-keyed confusion table, default),
+    ``"framed"`` (functions/framed_scorer.py — tokenize → frame → score
+    through the reference's batch contract, context-bigram aware), or
+    ``"lm"`` (functions/numpy_lm.py — the committed pure-numpy masked LM:
+    real checkpoint load + forward pass + top-k at the masked positions).
+    All are deterministic; framed with an empty bigram table equals table
+    by construction (tests/test_framed_scorer.py).
+
+    ``scorer_table``: override the built-in SCORER_TABLE with a plain dict
+    ``char -> [(candidate, confidence), ...]`` — e.g. the output of the
+    offline training loop (operators/confusion.scorer_table_from_stats via
+    assets/scorer_table.scorer_table_from_df).
+
+    ``context_bigrams``: the framed backend's bigram boosts (default: the
+    demo DEFAULT_CONTEXT_BIGRAMS).  ``lm_checkpoint``: ``.npz`` path for
+    the lm backend (default: the committed assets/numpy_lm.npz)."""
+    if scorer_backend not in SCORER_BACKENDS:
+        raise ValueError(
+            f"scorer_backend must be one of {SCORER_BACKENDS}, got {scorer_backend!r}"
+        )
     table = SCORER_TABLE if scorer_table is None else scorer_table
     bigrams = {}
     if scorer_backend == "framed":
@@ -121,8 +145,8 @@ def _char_sim():
 
 def framed_score_rows(need: dict, fs, topn, char_sim, scorer) -> dict:
     """Score ``{row_key: (text, errs)}`` through a batch scorer ``fs``
-    (FramedTableScorer or NumpyLMScorer — the tokenize → frame → batch
-    score contract) with row-level fallback to the char-keyed kernel on
+    (a functions/framed_scorer.FramedBatchScorer — the tokenize → frame →
+    batch score contract) with row-level fallback to the char-keyed kernel on
     misalignment/failure.  Returns ``{row_key: corrected_text}``."""
     keys = list(need)
     try:
@@ -153,7 +177,6 @@ class _Corrector:
         self.tree = BKTree(cfg.keywords)
         self.kwset = frozenset(self.tree.words)
         self.memo: dict = {}
-        self._batch_scorer = None
         table = dict(cfg.table)
 
         def scorer(ch):
@@ -166,27 +189,21 @@ class _Corrector:
 
         self.scorer = scorer
 
+    @functools.cached_property
     def batch_scorer(self):
         """The framed / masked-LM batch scorer, built on first use (the LM
         checkpoint loads once per worker — the reference's per-session
         load, masked_lm.py:386-398, as an executor-side cache)."""
-        if self._batch_scorer is None:
-            cfg = self.cfg
-            if cfg.scorer_backend == "lm":
-                from ..functions.numpy_lm import NumpyLMScorer
+        cfg = self.cfg
+        if cfg.scorer_backend == "lm":
+            from ..functions.numpy_lm import NumpyLMScorer
 
-                self._batch_scorer = NumpyLMScorer(
-                    checkpoint_path=cfg.lm_checkpoint, topn=cfg.topn
-                )
-            else:
-                from ..functions.framed_scorer import FramedTableScorer
+            return NumpyLMScorer(checkpoint_path=cfg.lm_checkpoint, topn=cfg.topn)
+        from ..functions.framed_scorer import FramedTableScorer
 
-                self._batch_scorer = FramedTableScorer(
-                    table=dict(cfg.table),
-                    context_bigrams=dict(cfg.bigrams),
-                    topn=cfg.topn,
-                )
-        return self._batch_scorer
+        return FramedTableScorer(
+            table=dict(cfg.table), context_bigrams=dict(cfg.bigrams), topn=cfg.topn
+        )
 
     def _remember(self, key, hit) -> None:
         if len(self.memo) >= _ROW_CACHE_MAX:
@@ -206,7 +223,7 @@ class _Corrector:
         local: dict = {}
         if cfg.scorer_backend in ("framed", "lm"):
             # batch-score the uncached bert rows through the framing path
-            # (A1 batching + pad/de-pad inside the batch scorer), deduped
+            # (A1 batching inside the batch scorer), deduped
             # by row key — repetitive boilerplate rows score once
             need = {}
             for t, e, m in zip(texts, errs, modes):
@@ -216,7 +233,7 @@ class _Corrector:
                         need[key] = (t, list(e))
             if need:
                 local = framed_score_rows(
-                    need, self.batch_scorer(), cfg.topn, self.char_sim, self.scorer
+                    need, self.batch_scorer, cfg.topn, self.char_sim, self.scorer
                 )
                 for key, hit in local.items():
                     self._remember(key, hit)
@@ -273,15 +290,12 @@ def route_rows(texts: list, err_keys: list, bizes: list) -> tuple[list, list]:
 
 
 def single_pass_udf(
-    cfg: CorrectionConfig,
-    spark: SparkSession | None = None,
-    extract: bool = True,
-    row_counter=None,
+    cfg: CorrectionConfig, spark: SparkSession | None = None, row_counter=None
 ):
     """The single-crossing scalar Arrow UDF
-    ``(text, err_prob_key, biz) → RESULT_TYPE``: extraction (when
-    ``extract``), eligibility and correction per batch, as ``pa.Array``
-    in and out with no pandas conversion.
+    ``(text, err_prob_key, biz) → RESULT_TYPE``: extraction, eligibility
+    and correction per batch, as ``pa.Array`` in and out with no pandas
+    conversion.
 
     ``row_counter``: optional Spark accumulator; the UDF adds the batch
     size per invocation — tests use it to assert the expensive stage
@@ -294,9 +308,7 @@ def single_pass_udf(
     def correct_rows(text: pa.Array, err_key: pa.Array, biz: pa.Array) -> pa.Array:
         if row_counter is not None:
             row_counter.add(len(text))
-        texts = text.to_pylist()
-        if extract:
-            texts = [extract_any(t) for t in texts]
+        texts = [extract_any(t) for t in text.to_pylist()]
         modes, errs = route_rows(texts, err_key.to_pylist(), biz.to_pylist())
         corrected = correct_batch(bc_cfg.value, texts, errs, modes)
         return pa.StructArray.from_arrays(
@@ -311,100 +323,61 @@ def single_pass_udf(
     return correct_rows
 
 
-def unpack_result(
-    df: DataFrame, res_col: str, text_col: str = "text", out_col: str = "text_corrected"
-) -> DataFrame:
-    """Natively unpack the UDF's struct column: ``text_col`` is replaced
-    in place by the extracted text, ``corr_mode`` and ``out_col`` are
+def unpack_result(df: DataFrame, res_col: str) -> DataFrame:
+    """Natively unpack the UDF's struct column: ``text`` is replaced in
+    place by the extracted text, ``corr_mode`` and ``text_corrected`` are
     appended, ``res_col`` is dropped."""
     res = F.col(res_col)
     cols = [
-        res["text"].alias(c) if c == text_col else F.col(c)
+        res["text"].alias(c) if c == "text" else F.col(c)
         for c in df.columns
         if c != res_col
     ]
     return df.select(
         *cols,
         res["corr_mode"].alias("corr_mode"),
-        res["text_corrected"].alias(out_col),
+        res["text_corrected"].alias("text_corrected"),
     )
 
 
 def with_single_pass_correction(
     df: DataFrame,
-    cfg: CorrectionConfig,
+    cfg: CorrectionConfig | None = None,
     spark: SparkSession | None = None,
-    biz_col: str = "tool",
-    text_col: str = "text",
-    out_col: str = "text_corrected",
-    prob_threshold: float = 0.9,
-    extract: bool = True,
     row_counter=None,
 ) -> DataFrame:
     """Extraction, detection and correction with ONE Python crossing.
 
     The probs-threshold half of detection runs natively
-    (operators/detect.err_prob_key); only ``(text_col, err_prob_key,
-    biz_col)`` cross into the Arrow UDF — ``probs`` and every other
-    column stay in the JVM.  Returns ``df`` with ``text_col`` rewritten
-    by extraction and ``corr_mode`` (0 pass / 1 keyword / 2 bert) and
-    ``out_col`` appended."""
-    correct_rows = single_pass_udf(cfg, spark, extract, row_counter)
+    (operators/detect.err_prob_key); only ``(text, err_prob_key, tool)``
+    cross into the Arrow UDF — ``probs`` and every other column stay in
+    the JVM.  Returns ``df`` with ``text`` rewritten by extraction and
+    ``corr_mode`` (0 pass / 1 keyword / 2 bert) and ``text_corrected``
+    appended.  ``cfg=None`` is ``correction_config()``."""
+    correct_rows = single_pass_udf(cfg or correction_config(), spark, row_counter)
     out = df.withColumn(
         "_corr",
-        correct_rows(
-            F.col(text_col), err_prob_key(F.col("probs"), prob_threshold), F.col(biz_col)
-        ),
+        correct_rows(F.col("text"), err_prob_key(F.col("probs")), F.col("tool")),
     )
-    return unpack_result(out, "_corr", text_col, out_col)
+    return unpack_result(out, "_corr")
 
 
 def with_dispatched_correction(
     df: DataFrame,
-    similarity_threshold: float = 0.55,
-    topn: int = 3,
-    keywords=KEYWORDS,
+    cfg: CorrectionConfig | None = None,
     spark: SparkSession | None = None,
-    text_col: str = "text",
-    mode_col: str = "corr_mode",
-    err_col: str = "err_pos",
-    out_col: str = "text_corrected",
     row_counter=None,
-    scorer_backend: str = "table",
-    scorer_table: dict | None = None,
-    context_bigrams: dict | None = None,
-    lm_checkpoint: str | None = None,
 ) -> DataFrame:
     """Correction with per-row corrector dispatch over native detection
-    columns, as a Series→Series pandas UDF.
+    columns, as a Series→Series pandas UDF: adds ``text_corrected`` from
+    ``(text, err_pos, corr_mode)``.
 
-    ``mode_col``: 0 = pass-through, 1 = keyword path, 2 = bert path — the
+    ``corr_mode``: 0 = pass-through, 1 = keyword path, 2 = bert path — the
     Spark analog of the reference's biz_type registry
     (corrector/__init__.py:20-38) without per-row Python objects.
-
-    ``scorer_backend``: ``"table"`` (char-keyed confusion table, default),
-    ``"framed"`` (functions/framed_scorer.py — tokenize → frame → score
-    through the reference's batch contract, context-bigram aware), or
-    ``"lm"`` (functions/numpy_lm.py — the committed pure-numpy masked LM:
-    real checkpoint load + forward pass + top-k at the masked positions).
-    All are deterministic; framed with an empty bigram table equals table
-    by construction (tests/test_framed_scorer.py).
-
-    ``lm_checkpoint``: ``.npz`` path for the ``lm`` backend (default: the
-    committed assets/numpy_lm.npz).
-
-    ``scorer_table``: override the built-in SCORER_TABLE with a plain dict
-    ``char -> [(candidate, confidence), ...]`` — e.g. the output of the
-    offline training loop (operators/confusion.scorer_table_from_stats via
-    assets/scorer_table.scorer_table_from_df).  Broadcast to workers.
-    """
+    ``cfg=None`` is ``correction_config()``."""
     spark = spark or SparkSession.getActiveSession()
-    bc_cfg = spark.sparkContext.broadcast(
-        correction_config(
-            similarity_threshold, topn, keywords, scorer_backend,
-            scorer_table, context_bigrams, lm_checkpoint,
-        )
-    )
+    bc_cfg = spark.sparkContext.broadcast(cfg or correction_config())
 
     @F.pandas_udf(StringType())
     def correct_udf(text: pd.Series, err_pos: pd.Series, mode: pd.Series) -> pd.Series:
@@ -416,38 +389,6 @@ def with_dispatched_correction(
         )
 
     return df.withColumn(
-        out_col, correct_udf(F.col(text_col), F.col(err_col), F.col(mode_col))
+        "text_corrected",
+        correct_udf(F.col("text"), F.col("err_pos"), F.col("corr_mode")),
     )
-
-
-def with_correction(
-    df: DataFrame,
-    corrector: str = "keyword",
-    similarity_threshold: float = 0.55,
-    topn: int = 3,
-    keywords=KEYWORDS,
-    spark: SparkSession | None = None,
-    text_col: str = "text",
-    out_col: str = "text_corrected",
-) -> DataFrame:
-    """Single-corrector form (one biz route for the whole table).  Adds
-    ``text_corrected``; requires ``err_pos`` + ``needs_correction`` from
-    error detection.  Delegates to the dispatched operator with a
-    constant-route mode column — same kernels, same memo, no duplicated
-    UDF body."""
-    mode = 1 if corrector == "keyword" else 2
-    tmp = df.withColumn(
-        "_corr_mode",
-        F.when(F.col("needs_correction"), F.lit(mode)).otherwise(F.lit(0)),
-    )
-    out = with_dispatched_correction(
-        tmp,
-        similarity_threshold=similarity_threshold,
-        topn=topn,
-        keywords=keywords,
-        spark=spark,
-        text_col=text_col,
-        mode_col="_corr_mode",
-        out_col=out_col,
-    )
-    return out.drop("_corr_mode")

@@ -8,13 +8,13 @@ array never crosses into Python; the eligibility filters F1/F2 run inside
 its single correction UDF (functions/rules.do_correct_filter_*, the
 Python twins of ``eligible_keyword`` / ``eligible_bert``), because they
 apply to the EXTRACTED text, which only exists on the Python side.
-``with_error_detection`` keeps the all-native form for callers that
-correct already-extracted text.
+``eligible_keyword`` / ``eligible_bert`` / ``err_positions`` stay as the
+all-native form for callers that build their own detection columns.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # base_corrector.py:125 — CJK block used by the correctability filters
@@ -76,31 +76,3 @@ def err_from_key(text: Column, key: Column) -> Column:
     ).otherwise(empty)
     return F.when(key.isNull(), all_pos).otherwise(key)
 
-
-def with_error_detection(
-    df: DataFrame,
-    corrector: str = "keyword",
-    prob_threshold: float = 0.9,
-    max_seq_length: int = 64,
-    text_col: str = "text",
-    probs_col: str = "probs",
-) -> DataFrame:
-    """Adds ``eligible`` (correctability pre-filter), ``err_pos``
-    (array<int> of low-confidence positions) and ``needs_correction``."""
-    text = F.col(text_col)
-    probs = F.col(probs_col)
-    elig = (
-        eligible_keyword(text)
-        if corrector == "keyword"
-        else eligible_bert(text, max_seq_length)
-    )
-    df = df.withColumn("eligible", elig)
-    df = df.withColumn(
-        "err_pos",
-        F.when(F.col("eligible"), err_positions(text, probs, prob_threshold)).otherwise(
-            F.array().cast("array<int>")
-        ),
-    )
-    return df.withColumn(
-        "needs_correction", F.col("eligible") & (F.size("err_pos") > 0)
-    )

@@ -2,18 +2,20 @@
 
 A 100TB training-data pipeline carries media alongside text; this module
 provides the Spark-side plumbing — schema, Arrow batch shape, partition
--friendly UDF signatures — with the codec step STUBBED (image/audio
-libraries are not in this container):
+-friendly UDF signatures:
 
 * ``media_schema()``: binary payload + typed metadata struct;
 * ``with_media_metadata``: real, tested: parses a compact deterministic
   header from the binary payload (magic, width, height, n_frames) with a
   vectorized ``mapInPandas`` — the exact batch shape a real decoder UDF
   has;
-* ``decode_image`` / ``extract_audio_features`` / ``sample_video_frames``:
-  clearly-marked stubs that raise NotImplementedError unless the optional
-  library import succeeds; their signatures, return schemas and batching
-  are final.
+* ``decode_images``: the real image decode path, for the library-free
+  PPM/BMP formats (functions/imagecodec.py, pure numpy);
+* ``sample_video_frames``: which frame indices a decoder would extract.
+
+Compressed image codecs (JPEG/PNG) and audio decoding are excluded: no
+codec library is installed, so the module offers no entry points for
+them.
 
 The synthetic header format (tests/test_multimodal.py): 16 bytes =
 4s magic ('IMG0'/'AUD0'/'VID0') + uint32 width + uint32 height +
@@ -100,13 +102,6 @@ def with_media_metadata(df: DataFrame, content_col: str = "content") -> DataFram
             yield pdf
 
     return df.mapInPandas(parse, out_schema)
-
-
-def _try_import(name: str):
-    try:
-        return __import__(name)
-    except ImportError:
-        return None
 
 
 IMAGE_DECODE_SCHEMA = StructType(
@@ -360,34 +355,12 @@ def q_image_ahash(spark, sf_dir: str) -> DataFrame:
     )
 
 
-def decode_image(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """Compressed-format decode (JPEG/PNG) requires Pillow — env-gated
-    stub; ``decode_images`` above is the REAL path for library-free
-    formats."""
-    if _try_import("PIL") is None:
-        raise NotImplementedError(
-            "JPEG/PNG decoding requires Pillow, not present in this "
-            "container; use decode_images (PPM/BMP, pure numpy) or install "
-            "a codec library"
-        )
-    raise NotImplementedError("wire PIL.Image.open over the Arrow binary batches")
-
-
-def extract_audio_features(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """STUB: real impl computes MFCC-style features via an audio lib."""
-    if _try_import("soundfile") is None and _try_import("librosa") is None:
-        raise NotImplementedError(
-            "audio feature extraction requires soundfile/librosa, not present"
-        )
-    raise NotImplementedError("wire the audio decoder over the Arrow binary batches")
-
-
 def sample_video_frames(
     df: DataFrame, every_n: int = 10, content_col: str = "content"
 ) -> DataFrame:
     """Deterministic frame sampling over the synthetic header metadata —
-    REAL plumbing (which frame indices a decoder would extract), decode
-    itself stubbed."""
+    REAL plumbing (which frame indices a decoder would extract); video
+    decoding itself is excluded with the other compressed codecs."""
     with_meta = with_media_metadata(df, content_col)
     return with_meta.withColumn(
         "sampled_frames",

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.correct import (
+    CorrectionConfig,
     correction_config,
     single_pass_udf,
     unpack_result,
@@ -42,29 +43,20 @@ from ..operators.reassemble import order_turns
 def correct_pipeline(
     df: DataFrame,
     spark: SparkSession,
-    biz_col: str = "tool",
-    extract_html: bool = True,
-    prob_threshold: float = 0.9,
-    keyword_similarity_threshold: float = 0.55,
+    cfg: CorrectionConfig | None = None,
     order_output: bool = True,
     keep_mode_col: bool = False,
     row_counter=None,
-    scorer_backend: str = "table",
-    scorer_table: dict | None = None,
-    context_bigrams: dict | None = None,
-    lm_checkpoint: str | None = None,
     dedup_correction: bool = False,
 ) -> DataFrame:
     """Adds ``text_corrected`` (+ ``text`` rewritten by extraction, and
     ``corr_mode`` 0 pass / 1 keyword / 2 bert with ``keep_mode_col``).
 
-    ``scorer_backend``/``scorer_table``/``context_bigrams``/
-    ``lm_checkpoint`` select the masked-LM backend
-    (operators/correct.with_dispatched_correction documents them): the
-    char-keyed table (default), an offline-trained table
-    (assets/scorer_table.scorer_table_from_df), the context-aware framed
-    path (functions/framed_scorer.py), or the committed pure-numpy masked
-    LM (functions/numpy_lm.py).
+    ``cfg``: the operators/correct.correction_config value (``None`` is
+    ``correction_config()``); it selects the masked-LM backend — the
+    char-keyed table (default), an offline-trained table, the
+    context-aware framed path or the committed pure-numpy masked LM — and
+    its docstring documents each option.
 
     ``row_counter``: optional accumulator counting the rows the Python
     UDF sees (once per row; once per distinct triple with dedup).
@@ -85,37 +77,22 @@ def correct_pipeline(
     the JVM join merge, never the Python stage, which lives on the build
     side behind the shuffle).  Rows and values are bit-identical to the
     default path (tests/test_dedup_correction.py)."""
-    cfg = correction_config(
-        keyword_similarity_threshold,
-        scorer_backend=scorer_backend,
-        scorer_table=scorer_table,
-        context_bigrams=context_bigrams,
-        lm_checkpoint=lm_checkpoint,
-    )
+    cfg = cfg or correction_config()
     if dedup_correction:
-        udf = single_pass_udf(cfg, spark, extract_html, row_counter)
-        out = _dedup_join(df, biz_col, prob_threshold, udf)
+        out = _dedup_join(df, single_pass_udf(cfg, spark, row_counter))
         if order_output:
             out = order_turns(out)
     else:
         if order_output:
             df = order_turns(df)
-        out = with_single_pass_correction(
-            df,
-            cfg,
-            spark,
-            biz_col=biz_col,
-            prob_threshold=prob_threshold,
-            extract=extract_html,
-            row_counter=row_counter,
-        )
+        out = with_single_pass_correction(df, cfg, spark, row_counter)
     return out if keep_mode_col else out.drop("corr_mode")
 
 
-def _dedup_join(df: DataFrame, biz_col: str, prob_threshold: float, udf) -> DataFrame:
+def _dedup_join(df: DataFrame, udf) -> DataFrame:
     """correct_pipeline's dedup_correction=True body — see its docstring.
 
-    The dedup key is ``(text, err_prob_key(probs), biz)`` — NOT the raw
+    The dedup key is ``(text, err_prob_key(probs), tool)`` — NOT the raw
     probs array: detection depends on probs only through its
     sub-threshold index set plus the null flag (the identity pinned in
     operators/detect.err_prob_key), so the key is exact while staying a
@@ -123,17 +100,17 @@ def _dedup_join(df: DataFrame, biz_col: str, prob_threshold: float, udf) -> Data
     never enter the distinct, the shuffle, or the join hash tables.  The
     UDF's struct result rides the join as one column and is unpacked
     after it."""
-    df = df.withColumn("_errk", err_prob_key(F.col("probs"), prob_threshold))
+    df = df.withColumn("_errk", err_prob_key(F.col("probs")))
     uniq = df.select(
         F.col("text").alias("_u_text"),
         F.col("_errk").alias("_u_errk"),
-        F.col(biz_col).alias("_u_biz"),
+        F.col("tool").alias("_u_biz"),
     ).distinct()
     uniq = uniq.withColumn("_u", udf("_u_text", "_u_errk", "_u_biz"))
     cond = (
         F.col("text").eqNullSafe(F.col("_u_text"))
         & F.col("_errk").eqNullSafe(F.col("_u_errk"))
-        & F.col(biz_col).eqNullSafe(F.col("_u_biz"))
+        & F.col("tool").eqNullSafe(F.col("_u_biz"))
     )
     out = df.join(uniq.hint("SHUFFLE_HASH"), cond, "left").drop(
         "_errk", "_u_text", "_u_errk", "_u_biz"

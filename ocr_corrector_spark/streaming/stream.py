@@ -27,9 +27,9 @@ def streaming_correct(stream_df: DataFrame, spark: SparkSession, **pipeline_kwar
     """The batch plan applied to a streaming DataFrame.  ``order_output``
     is off (global sort is undefined on an unbounded stream — downstream
     sinks cluster by (conv_id, turn_idx) per micro-batch instead).
-    ``pipeline_kwargs`` pass through to correct_pipeline — the scorer
-    options (scorer_backend / scorer_table / context_bigrams) work on
-    streams exactly as in batch (the correction stage is stateless)."""
+    ``pipeline_kwargs`` pass through to correct_pipeline — a
+    ``cfg=correction_config(scorer_backend=...)`` works on streams exactly
+    as in batch (the correction stage is stateless)."""
     return correct_pipeline(
         stream_df, spark, order_output=False, **pipeline_kwargs
     )

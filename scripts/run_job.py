@@ -28,6 +28,8 @@ import os
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from ocr_corrector_spark.operators.correct import SCORER_BACKENDS  # noqa: E402
+
 
 def main() -> None:
     ap = argparse.ArgumentParser()
@@ -54,7 +56,7 @@ def main() -> None:
     )
     ap.add_argument(
         "--scorer-backend",
-        choices=("table", "framed", "lm"),
+        choices=SCORER_BACKENDS,
         default="table",
         help="masked-LM backend: char-keyed table, the tokenize→frame→"
         "score context-aware path (functions/framed_scorer.py), or the "
@@ -65,6 +67,7 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from ocr_corrector_spark.operators.correct import correction_config
     from ocr_corrector_spark.plans.audit import write_audit
     from ocr_corrector_spark.plans.checkpoint import CheckpointedRun
     from ocr_corrector_spark.plans.pipeline import correct_pipeline
@@ -92,14 +95,10 @@ def main() -> None:
 
         scorer_table = scorer_table_from_df(spark.read.parquet(args.scorer_table))
 
+    cfg = correction_config(scorer_backend=args.scorer_backend, scorer_table=scorer_table)
+
     def transform(d):
-        return correct_pipeline(
-            d,
-            spark,
-            keep_mode_col=True,
-            scorer_backend=args.scorer_backend,
-            scorer_table=scorer_table,
-        )
+        return correct_pipeline(d, spark, cfg, keep_mode_col=True)
 
     # Audit as a post-write hook: the wave's frame is persisted across the
     # output write and both audit actions, so the correction UDF runs once

@@ -142,6 +142,7 @@ def test_plans_agree_for_every_backend(spark, backend):
     including null text with low probs and a context-bigram row."""
     import datetime as dt
 
+    from ocr_corrector_spark.operators.correct import correction_config
     from ocr_corrector_spark.operators.fused import fused_correct
 
     t = dt.datetime(2026, 1, 1)
@@ -161,10 +162,9 @@ def test_plans_agree_for_every_backend(spark, backend):
             tuple(r) for r in out.select("conv_id", "turn_idx", "text", "text_corrected").collect()
         )
 
-    default = rows(correct_pipeline(df, spark, order_output=False, **backend))
-    dedup = rows(
-        correct_pipeline(df, spark, order_output=False, dedup_correction=True, **backend)
-    )
-    fused = rows(fused_correct(df, spark, **backend))
+    cfg = correction_config(**backend)
+    default = rows(correct_pipeline(df, spark, cfg, order_output=False))
+    dedup = rows(correct_pipeline(df, spark, cfg, order_output=False, dedup_correction=True))
+    fused = rows(fused_correct(df, spark, cfg))
     assert default == dedup == fused
     assert any(r[2] != r[3] for r in default)  # some row was corrected

@@ -117,9 +117,9 @@ def test_more_than_max_mask_errors_keep_chars():
 
 
 def test_batching_pad_depad_roundtrip(char_sim):
-    # batch_size 4 with ragged error counts: the per-batch pad width is the
-    # max error count (masked_lm.py:233-234) and de-padding restores each
-    # sentence's own count (masked_lm.py:400-447)
+    # batch_size 4 with ragged error counts: every sentence gets back
+    # exactly its own number of per-error candidate lists
+    # (masked_lm.py:400-447)
     texts = ["我爱北京大安门"] * 10
     errs = [[4], [4, 5], [], [0, 2, 4], [4], [1], [4, 5, 6], [], [4], [0]]
     fs = FramedTableScorer(batch_size=4, context_bigrams={})
@@ -176,15 +176,6 @@ def test_tokenize_through_loaded_vocab(tmp_path):
     p.write_text("\n".join(["[UNK]", "大", "安", "门"]) + "\n", encoding="utf-8")
     vocab = load_vocab(str(p))
     assert tokenize("大安门X", set(vocab)) == ["大", "安", "门", "[UNK]"]
-
-
-def test_masked_lm_scorer_is_env_gated():
-    # the real-model slot raises with the documented integration contract
-    # when no TF runtime exists (this sandbox)
-    from ocr_corrector_spark.functions.framed_scorer import MaskedLMScorer
-
-    with pytest.raises(NotImplementedError, match="FramedTableScorer"):
-        MaskedLMScorer("/nonexistent/ckpt", "/nonexistent/vocab.txt")
 
 
 # --- committed real-vocab WordPiece fixture (VERDICT r02 #9) -------------------

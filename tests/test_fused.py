@@ -8,6 +8,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
+from ocr_corrector_spark.operators.correct import correction_config
 from ocr_corrector_spark.operators.fused import fused_correct
 from ocr_corrector_spark.plans.pipeline import correct_pipeline
 from ocr_corrector_spark.sources.transcripts import gen_transcripts
@@ -93,13 +94,14 @@ def test_fused_framed_equals_staged_framed(spark):
         schema,
     )
     df = gen_transcripts(spark, n_convs=120).unionByName(ctx_rows)
+    cfg = correction_config(scorer_backend="framed")
     staged = (
-        correct_pipeline(df, spark, order_output=False, scorer_backend="framed")
+        correct_pipeline(df, spark, cfg, order_output=False)
         .select("conv_id", "turn_idx", "text", "text_corrected")
         .collect()
     )
     fused = (
-        fused_correct(df, spark, scorer_backend="framed")
+        fused_correct(df, spark, cfg)
         .select("conv_id", "turn_idx", "text", "text_corrected")
         .collect()
     )

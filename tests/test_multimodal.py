@@ -1,10 +1,9 @@
-"""Multimodal plumbing: binary columns + typed metadata + frame sampling
-(decode stubbed — libs absent by design)."""
+"""Multimodal plumbing: binary columns + typed metadata + frame sampling,
+and the library-free PPM/BMP decode path."""
 
 import pytest
 
 from ocr_corrector_spark.operators.multimodal import (
-    decode_image,
     media_schema,
     pack_header,
     sample_video_frames,
@@ -36,11 +35,6 @@ def test_video_frame_sampling(spark, media_df):
     out = {r.media_id: r for r in sample_video_frames(media_df, every_n=10).collect()}
     assert list(out[3].sampled_frames) == list(range(0, 95, 10))
     assert list(out[1].sampled_frames) == []
-
-
-def test_decode_is_stubbed(spark, media_df):
-    with pytest.raises(NotImplementedError):
-        decode_image(media_df)
 
 
 # --- real library-free image decode (functions/imagecodec.py) -----------------

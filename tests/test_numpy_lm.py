@@ -94,8 +94,8 @@ def test_lm_misalignment_returns_none(model):
 
 
 def test_lm_batch_pad_depad(model):
-    # batch with differing error counts: pad width = max in batch, pad
-    # slots dropped on reassembly (masked_lm.py:233-234, :400-447)
+    # batch with differing error counts: every sentence gets back exactly
+    # its own number of per-error candidate lists (masked_lm.py:400-447)
     scorer = NumpyLMScorer(model=model, batch_size=2)
     texts = [g[0] for g in GOLDENS[:3]]
     errs = [g[1] for g in GOLDENS[:3]]
@@ -110,11 +110,14 @@ def test_pipeline_lm_backend_end_to_end(spark):
     hold."""
     from pyspark.sql import functions as F
 
+    from ocr_corrector_spark.operators.correct import correction_config
     from ocr_corrector_spark.plans.pipeline import correct_pipeline
     from ocr_corrector_spark.sources.transcripts import gen_transcripts
 
     df = gen_transcripts(spark, n_convs=80, keep_oracle_cols=True)
-    out = correct_pipeline(df, spark, order_output=False, scorer_backend="lm")
+    out = correct_pipeline(
+        df, spark, correction_config(scorer_backend="lm"), order_output=False
+    )
     doc_wrong = out.filter(
         (F.col("tool") == "doc") & (F.col("text_corrected") != F.col("text_clean"))
     )

@@ -208,7 +208,8 @@ def test_audit_wave_replay_idempotent(spark, tmp_path):
     """Crash between the audit write and the watermark commit (ADVICE r02):
     the resumed wave re-runs write_audit for the SAME wave — the wave-keyed
     dynamic partition overwrite must replace, not append, so the invariant
-    out_rows == audit sum(n_rows) survives crash/replay."""
+    out_rows == audit sum(n_rows) survives crash/replay, and the resumed
+    output equals a clean single run row for row."""
     df = gen_transcripts(spark, n_convs=20)
     n_rows = df.count()
 
@@ -249,6 +250,9 @@ def test_audit_wave_replay_idempotent(spark, tmp_path):
     audit = spark.read.parquet(audit_path)
     out_rows = spark.read.parquet(run.output_path).count()
     assert out_rows == n_rows
+    key = ["conv_id", "turn_idx", "text", "text_corrected"]
+    resumed = sorted(spark.read.parquet(run.output_path).select(*key).collect())
+    assert resumed == sorted(transform(df).select(*key).collect())
     # no double-counted wave: the replayed wave overwrote its partition
     assert audit.agg(F.sum("n_rows")).collect()[0][0] == n_rows
     biz = spark.read.parquet(audit_path + "_biz")

@@ -1,6 +1,7 @@
 """Property-based kernel tests (hypothesis) — the invariants SURVEY.md §5
 calls for, checked over generated inputs rather than fixtures only."""
 
+import functools
 import string
 
 from hypothesis import given, settings
@@ -153,3 +154,43 @@ def test_framed_scorer_equals_table_scorer(text, errs):
         framed_out = bert_correct_one_framed(text, errs, _char_sim, per_err)
     table_out = bert_correct_one(text, errs, _char_sim, topn_candidates)
     assert framed_out == table_out
+
+
+@functools.cache
+def _lm():
+    from ocr_corrector_spark.functions.numpy_lm import NumpyMaskedLM
+
+    return NumpyMaskedLM.load()
+
+
+@given(
+    st.lists(
+        st.tuples(
+            st.text(alphabet=CJK + "abcXYZ0123456789\U00020000", max_size=70),
+            st.lists(st.integers(0, 80), max_size=5).map(lambda e: sorted(set(e))),
+        ),
+        max_size=12,
+    ),
+    st.integers(1, 5),
+)
+@settings(max_examples=100, deadline=None)
+def test_framed_batch_loop_is_row_independent(rows, batch_size):
+    """The one batch loop both framed backends share: every sentence gets
+    None or exactly one candidate list per error position (positions past
+    the text included), and a batch scores each row exactly as a call on
+    that row alone — batch size and neighbours never change a row."""
+    from ocr_corrector_spark.functions.framed_scorer import FramedTableScorer
+    from ocr_corrector_spark.functions.numpy_lm import NumpyLMScorer
+
+    texts = [t for t, _ in rows]
+    errs = [e for _, e in rows]
+    for scorer in (
+        FramedTableScorer(context_bigrams={}, batch_size=batch_size),
+        NumpyLMScorer(model=_lm(), batch_size=batch_size),
+    ):
+        scored = scorer.score_sentences(texts, errs)
+        assert len(scored) == len(texts)
+        for per_err, e in zip(scored, errs):
+            assert per_err is None or len(per_err) == len(e)
+        alone = [scorer.score_sentences([t], [e])[0] for t, e in rows]
+        assert scored == alone

@@ -6,12 +6,12 @@ broadcast into the correction UDF)."""
 import datetime
 
 import pytest
-from pyspark.sql import functions as F
 
 from ocr_corrector_spark.assets.scorer_table import (
     SCORER_TABLE,
     scorer_table_from_df,
 )
+from ocr_corrector_spark.operators.correct import correction_config
 from ocr_corrector_spark.plans.pipeline import correct_pipeline
 from ocr_corrector_spark.sources.transcripts import gen_transcripts
 
@@ -41,9 +41,8 @@ def test_framed_backend_equals_table_backend(spark, small):
         correct_pipeline(
             small,
             spark,
+            correction_config(scorer_backend="framed", context_bigrams={}),
             order_output=False,
-            scorer_backend="framed",
-            context_bigrams={},
         )
     )
     assert framed == base
@@ -65,8 +64,7 @@ def test_framed_backend_context_bigram_end_to_end(spark):
     out = {
         r.turn_idx: r.text_corrected
         for r in correct_pipeline(
-            df, spark, order_output=False, extract_html=False,
-            scorer_backend="framed",
+            df, spark, correction_config(scorer_backend="framed"), order_output=False
         ).collect()
     }
     assert out[0] == "我爱太阳升起"
@@ -74,9 +72,7 @@ def test_framed_backend_context_bigram_end_to_end(spark):
     # the char-keyed backend cannot see the context: both become 天
     base = {
         r.turn_idx: r.text_corrected
-        for r in correct_pipeline(
-            df, spark, order_output=False, extract_html=False
-        ).collect()
+        for r in correct_pipeline(df, spark, order_output=False).collect()
     }
     assert base[0] == "我爱天阳升起"
     assert base[1] == "我爱北京天安门"
@@ -102,11 +98,16 @@ def test_trained_scorer_table_round_trip_and_equality(spark, small, tmp_path):
     base = _collect(correct_pipeline(small, spark, order_output=False))
     dict_run = _collect(
         correct_pipeline(
-            small, spark, order_output=False, scorer_table=dict(SCORER_TABLE)
+            small,
+            spark,
+            correction_config(scorer_table=dict(SCORER_TABLE)),
+            order_output=False,
         )
     )
     table_run = _collect(
-        correct_pipeline(small, spark, order_output=False, scorer_table=table)
+        correct_pipeline(
+            small, spark, correction_config(scorer_table=table), order_output=False
+        )
     )
     assert table_run == dict_run == base
 
@@ -122,25 +123,16 @@ def test_custom_scorer_table_fully_replaces_builtin(spark):
     ]
     df = spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
     out = correct_pipeline(
-        df, spark, order_output=False, extract_html=False,
-        scorer_table={"大": [("天", 0.7)]},
+        df, spark, correction_config(scorer_table={"大": [("天", 0.7)]}),
+        order_output=False,
     ).collect()[0]
     assert out.text_corrected == out.text  # 白 not corrected
 
 
-def test_with_correction_single_route_delegates(spark):
-    """with_correction (single-corrector form) must equal the dispatched
-    operator on a constant route."""
-    from ocr_corrector_spark.operators.correct import with_correction
-    from ocr_corrector_spark.operators.detect import with_error_detection
 
-    df = with_error_detection(
-        gen_transcripts(spark, n_convs=10).filter(F.col("tool") == "report"),
-        corrector="keyword",
-    )
-    out = with_correction(df, corrector="keyword")
-    rows = out.select("text", "text_corrected", "needs_correction").collect()
-    assert rows
-    assert all(r.text == r.text_corrected for r in rows if not r.needs_correction)
-    assert any(r.text != r.text_corrected for r in rows if r.needs_correction)
-    assert "_corr_mode" not in out.columns
+@pytest.mark.parametrize("backend", ["bert", "Framed", ""])
+def test_unknown_scorer_backend_is_rejected(backend):
+    """An unknown backend name must fail at config time, not silently run
+    the table backend."""
+    with pytest.raises(ValueError, match="scorer_backend"):
+        correction_config(scorer_backend=backend)

@@ -4,6 +4,7 @@ file stream with availableNow trigger; windowed metrics with watermark."""
 import pytest
 from pyspark.sql import functions as F
 
+from ocr_corrector_spark.operators.correct import correction_config
 from ocr_corrector_spark.plans.pipeline import correct_pipeline
 from ocr_corrector_spark.sources.transcripts import gen_transcripts
 from ocr_corrector_spark.streaming import streaming_correct, streaming_metrics
@@ -76,7 +77,7 @@ def test_streaming_lm_backend_matches_batch_lm(spark, stream_input, tmp_path):
     src = spark.readStream.schema(schema).parquet(in_dir)
     out_dir = str(tmp_path / "out_lm")
     q = (
-        streaming_correct(src, spark, scorer_backend="lm")
+        streaming_correct(src, spark, cfg=correction_config(scorer_backend="lm"))
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", str(tmp_path / "ckpt_lm"))
@@ -92,7 +93,7 @@ def test_streaming_lm_backend_matches_batch_lm(spark, stream_input, tmp_path):
     batch = sorted(
         correct_pipeline(
             spark.read.parquet(in_dir), spark,
-            order_output=False, scorer_backend="lm",
+            correction_config(scorer_backend="lm"), order_output=False,
         )
         .select("conv_id", "turn_idx", "text_corrected")
         .collect()
