@@ -29,6 +29,7 @@ The correction itself is embarrassingly parallel — no shuffle.
 from __future__ import annotations
 
 import functools
+from collections import OrderedDict
 from dataclasses import dataclass
 
 import pandas as pd
@@ -176,7 +177,7 @@ class _Corrector:
         self.char_sim = _char_sim()
         self.tree = BKTree(cfg.keywords)
         self.kwset = frozenset(self.tree.words)
-        self.memo: dict = {}
+        self.memo: OrderedDict = OrderedDict()
         table = dict(cfg.table)
 
         def scorer(ch):
@@ -206,8 +207,10 @@ class _Corrector:
         )
 
     def _remember(self, key, hit) -> None:
+        # FIFO in O(1); on a plain dict next(iter(d)) walks past every hole
+        # that earlier pops left at the front of its entry table
         if len(self.memo) >= _ROW_CACHE_MAX:
-            self.memo.pop(next(iter(self.memo)))
+            self.memo.popitem(last=False)
         self.memo[key] = hit
 
     def correct_batch(self, texts: list, errs: list, modes: list) -> list:

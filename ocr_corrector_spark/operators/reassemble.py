@@ -28,18 +28,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def order_turns(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def order_turns(df: DataFrame) -> DataFrame:
     keys = [F.col("conv_id"), F.col("turn_idx")]
-    if num_partitions is None:
-        # Explicit partition count: downstream of this exchange run the
-        # Arrow-UDF correction stages, whose cost is per-ROW (Python), not
-        # per-byte — AQE's byte-based partition coalescing would collapse a
-        # small-but-expensive stage onto a handful of cores.  An explicit
-        # count opts this exchange out of coalescing; size it to the
-        # session's shuffle parallelism.
-        spark = df.sparkSession
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    df = df.repartitionByRange(num_partitions, *keys)
+    # One range partition per task slot (the session's shuffle width):
+    # downstream runs the Arrow-UDF correction stage, and every Python task
+    # pays a fixed worker cost whatever its row count, so more partitions
+    # than slots only add that cost.  The explicit count also opts this
+    # exchange out of AQE's byte-based coalescing, which would collapse a
+    # small-but-expensive Python stage onto a handful of cores.
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    df = df.repartitionByRange(n, *keys)
     return df.sortWithinPartitions(*keys)
 
 

@@ -57,11 +57,19 @@ def get_spark(
     them.  On a real cluster the same confs apply (drop the master); AQE
     handles runtime skew-join splitting and partition coalescing, Arrow
     batches bound Python-worker memory for the UDF stage.
+
+    ``shuffle_partitions`` defaults to one partition per core: the
+    ordering shuffle sets the task count of the Python UDF stage, and
+    every Python task pays a fixed worker cost independent of its rows
+    (PySpark's per-task ``importlib.invalidate_caches()`` makes each
+    zipimporter re-read ``pyspark.zip``'s directory, ~135 ms of CPU).
+    Range partitioning already balances the rows, so tasks beyond the
+    task slots add that cost and no parallelism.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cpus())
     if shuffle_partitions is None:
-        shuffle_partitions = max(32, cpus)
+        shuffle_partitions = cpus
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -69,14 +77,9 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # cap Arrow batch size so Python correction workers stay memory-bound
-        # regardless of input partition size (SURVEY.md §4); overridable for
-        # width-tuning experiments (smaller batches trade per-batch overhead
-        # for cache residency at high local[] width)
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_BATCH", "10000"),
-        )
+        # cap Arrow batch size so Python-worker memory stays bounded
+        # regardless of input partition size
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # stragglers: occasional tasks blocked on environment flakiness get
         # speculatively re-launched — the standard cluster answer, effective

@@ -2,7 +2,11 @@
 
 import os
 
+from pyspark.sql import functions as F
+
+from ocr_corrector_spark.plans.pipeline import correct_pipeline
 from ocr_corrector_spark.session import host_cpus, host_driver_heap
+from ocr_corrector_spark.sources.transcripts import gen_transcripts
 
 
 def test_cpus_follow_the_affinity_mask():
@@ -16,3 +20,18 @@ def test_driver_heap_is_a_clamped_quarter_of_ram():
     gib = int(heap[:-1])
     assert 1 <= gib <= 8
     assert gib <= max(1, total_gib / 4)
+
+
+def test_python_stage_runs_one_task_per_slot(spark):
+    # each Python task pays a fixed worker cost, so the default shuffle
+    # width — and with it the correction UDF stage — is the task slots
+    slots = spark.sparkContext.defaultParallelism
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == slots
+    out = correct_pipeline(gen_transcripts(spark, n_convs=60, seed=3), spark)
+    # aggregate the UDF's output so Catalyst cannot prune the UDF
+    parts = (
+        out.groupBy(F.spark_partition_id().alias("p"))
+        .agg(F.sum(F.length("text_corrected")))
+        .collect()
+    )
+    assert len(parts) == slots
