@@ -4,7 +4,7 @@ citations are ``file:line`` into /root/reference.
 
 from .editdist import edit_distance
 from .charsim import CharSim, safe_encode_string
-from .bktree import BKTree
+from .bktree import BKTree, FilteredIndex
 from .rules import (
     regulation,
     curve_02,
@@ -22,6 +22,7 @@ __all__ = [
     "CharSim",
     "safe_encode_string",
     "BKTree",
+    "FilteredIndex",
     "regulation",
     "curve_02",
     "find_err_pos_by_prob",

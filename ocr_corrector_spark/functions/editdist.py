@@ -15,8 +15,6 @@ is kept for completeness — nothing in the reference's main path calls it.
 
 from __future__ import annotations
 
-from functools import lru_cache
-
 try:  # C implementation used by the reference's BK-tree (BKtree.py:15)
     from Levenshtein import distance as _c_distance  # type: ignore
 except ImportError:  # pragma: no cover
@@ -118,10 +116,3 @@ def _py_levenshtein_seq(a: list, b: list) -> int:
         prev = cur
     return prev[-1]
 
-
-@lru_cache(maxsize=65536)
-def cached_edit_distance(a: str, b: str) -> int:
-    """LRU-cached variant for the hot per-candidate-pair loop inside UDF
-    batches (the candidate vocabulary is tiny, so the cache hit-rate at
-    scale approaches 1)."""
-    return edit_distance(a, b)

@@ -21,8 +21,15 @@ Two operators call the same ``correct_batch`` loop:
 Everything the output depends on besides the row is one hashable
 ``CorrectionConfig`` (``correction_config``), broadcast to the workers;
 every entry point takes it as one ``cfg`` argument.  Each Python worker keeps
-one ``_Corrector`` per config: the kernels (BK-tree, char similarity,
-scorer) and a row-result memo that survives across batches and tasks.
+one ``_Corrector`` per config and state that survives across batches and
+tasks:
+
+* the keyword search index (functions/bktree.FilteredIndex — the
+  BK-tree's search as a filtered scan with exact bounds);
+* the char similarity with a bounded memo on ``shape_similarity``
+  (``_char_sim``, shared by every config);
+* the candidate scorer;
+* a row-result memo.
 The correction itself is embarrassingly parallel — no shuffle.
 """
 
@@ -40,7 +47,7 @@ from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from ..assets import KEYWORDS
 from ..assets.scorer_table import SCORER_TABLE, default_candidates
-from ..functions.bktree import BKTree
+from ..functions.bktree import BKTree, FilteredIndex
 from ..functions.correct_kernels import (
     bert_correct_one,
     bert_correct_one_framed,
@@ -52,6 +59,7 @@ from .extract import extract_any
 
 SCORER_BACKENDS = ("table", "framed", "lm")
 _ROW_CACHE_MAX = 200_000
+_SIM_CACHE_MAX = 65_536
 # per-worker state, keyed by config — module-global so it survives across
 # Arrow batches AND tasks in the same Python worker process (a closure
 # dict would be re-deserialized fresh with every task's UDF command)
@@ -141,7 +149,16 @@ def _char_sim():
     from ..assets.char_meta import build_char_meta
     from ..functions.charsim import CharSim
 
-    return CharSim(build_char_meta())
+    char_sim = CharSim(build_char_meta())
+    # one 48k-row unique_text input makes ~170k shape_similarity calls over
+    # ~10k distinct pairs.  lru_cache stores no call that raises, so an
+    # unknown pair still raises ZeroDivisionError and its row still passes
+    # through.  The oracle builds its own uncached CharSim, so comparisons
+    # against it stay differential.
+    char_sim.shape_similarity = functools.lru_cache(maxsize=_SIM_CACHE_MAX)(
+        char_sim.shape_similarity
+    )
+    return char_sim
 
 
 def framed_score_rows(need: dict, fs, topn, char_sim, scorer) -> dict:
@@ -175,7 +192,7 @@ class _Corrector:
     def __init__(self, cfg: CorrectionConfig):
         self.cfg = cfg
         self.char_sim = _char_sim()
-        self.tree = BKTree(cfg.keywords)
+        self.tree = FilteredIndex(BKTree(cfg.keywords))
         self.kwset = frozenset(self.tree.words)
         self.memo: OrderedDict = OrderedDict()
         table = dict(cfg.table)

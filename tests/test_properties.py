@@ -8,7 +8,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from ocr_corrector_spark.assets import KEYWORDS, build_char_meta
-from ocr_corrector_spark.functions import BKTree, CharSim, edit_distance
+from ocr_corrector_spark.functions import BKTree, CharSim, FilteredIndex, edit_distance
 from ocr_corrector_spark.functions.correct_kernels import (
     bert_correct_one,
     keyword_correct_one,
@@ -41,6 +41,46 @@ def test_bktree_equals_bruteforce(word, d):
     got = sorted(_tree.search(word, d))
     brute = sorted(w for w in _tree.words if edit_distance(w, word) <= d)
     assert got == brute
+
+
+# keyword lists: the shipped one, or random words over CJK, regex
+# metacharacters and the shipped keywords' own characters
+_KW_CHARS = CJK + "组合不含保证信用免担/()[].*+?^$|\\ "
+_keywords_st = st.one_of(
+    st.just(KEYWORDS),
+    st.lists(st.text(alphabet=_KW_CHARS, max_size=10), max_size=40).map(
+        lambda ws: ws + ["组合(不含保证)"]
+    ),
+)
+
+
+@given(_keywords_st, st.data())
+@settings(max_examples=300, deadline=None)
+def test_filtered_index_equals_bktree_search_in_order(keywords, data):
+    # the worker's filtered scan returns the tree search's exact list,
+    # order included (test_bktree_equals_bruteforce compares sorted lists)
+    tree = BKTree(keywords)
+    edits = st.lists(st.tuples(st.integers(0, 12), st.text(_KW_CHARS + "龘a", max_size=2)))
+    query = data.draw(
+        st.one_of(
+            # shares characters with the keywords
+            st.text(alphabet="".join(tree.words), max_size=12),
+            # a keyword with a few characters replaced, inserted or dropped
+            st.tuples(st.sampled_from(tree.words), edits).map(lambda we: _edit(*we)),
+            # characters no keyword uses
+            st.text(alphabet="了是我你xz\U00020000", max_size=12),
+        )
+    )
+    d = data.draw(st.integers(0, len(query) + 1))
+    assert FilteredIndex(tree).search(query, d) == tree.search(query, d)
+
+
+def _edit(word: str, edits) -> str:
+    chars = list(word)
+    for pos, repl in edits:
+        pos = min(pos, len(chars))
+        chars[pos : pos + 1] = list(repl)
+    return "".join(chars)
 
 
 @given(st.lists(st.floats(0, 1, allow_nan=False), max_size=20), st.floats(0.1, 1.0))
