@@ -16,8 +16,9 @@ trafilatura heuristics:
   highest-text-mass block is returned (never lose the document).
 
 Non-HTML rows pass through untouched, so the operator is safe to run over
-mixed transcript tables.  Runs as an Arrow-batched pandas UDF ahead of the
-correction stage; stateless and embarrassingly parallel (no shuffle).
+mixed transcript tables.  It runs inside the correction plans' single
+Arrow crossing (through operators/extract.extract_any); stateless and
+embarrassingly parallel (no shuffle).
 """
 
 from __future__ import annotations

@@ -29,7 +29,9 @@ tasks:
 * the char similarity with a bounded memo on ``shape_similarity``
   (``_char_sim``, shared by every config);
 * the candidate scorer;
-* a row-result memo.
+* a row-result memo;
+* an extraction memo on the raw text of document rows (``extract_batch``,
+  shared by every config; plain rows bypass it).
 The correction itself is embarrassingly parallel — no shuffle.
 """
 
@@ -53,6 +55,7 @@ from ..functions.correct_kernels import (
     bert_correct_one_framed,
     keyword_correct_one,
 )
+from ..functions.layout_extract import LAYOUT_MAGIC, PDF_MAGIC
 from ..functions.rules import do_correct_filter_bert, do_correct_filter_keyword
 from .detect import err_prob_key
 from .extract import extract_any
@@ -60,6 +63,7 @@ from .extract import extract_any
 SCORER_BACKENDS = ("table", "framed", "lm")
 _ROW_CACHE_MAX = 200_000
 _SIM_CACHE_MAX = 65_536
+_EXTRACT_CACHE_MAX = 16_384
 # per-worker state, keyed by config — module-global so it survives across
 # Arrow batches AND tasks in the same Python worker process (a closure
 # dict would be re-deserialized fresh with every task's UDF command)
@@ -159,6 +163,28 @@ def _char_sim():
         char_sim.shape_similarity
     )
     return char_sim
+
+
+@functools.cache
+def _extract_memo():
+    # bounded in documents: full, it holds ~14 MB of ~280-character HTML
+    # documents and their extractions, a small share of a worker's RSS.
+    # About 68% of the document rows in a gen_transcripts table repeat.
+    return functools.lru_cache(maxsize=_EXTRACT_CACHE_MAX)(extract_any)
+
+
+def extract_batch(texts: list) -> list:
+    """``extract_any`` per row, through this worker's extraction memo for
+    the rows ``extract_any`` hands to an extractor (``%LAYOUT`` / ``%PDF-``
+    documents and text containing ``<``).  Plain rows and nulls pass
+    through without entering the memo."""
+    memo = _extract_memo()
+    return [
+        memo(t)
+        if t is not None and (t.startswith((LAYOUT_MAGIC, PDF_MAGIC)) or "<" in t)
+        else t
+        for t in texts
+    ]
 
 
 def framed_score_rows(need: dict, fs, topn, char_sim, scorer) -> dict:
@@ -328,7 +354,7 @@ def single_pass_udf(
     def correct_rows(text: pa.Array, err_key: pa.Array, biz: pa.Array) -> pa.Array:
         if row_counter is not None:
             row_counter.add(len(text))
-        texts = [extract_any(t) for t in text.to_pylist()]
+        texts = extract_batch(text.to_pylist())
         modes, errs = route_rows(texts, err_key.to_pylist(), biz.to_pylist())
         corrected = correct_batch(bc_cfg.value, texts, errs, modes)
         return pa.StructArray.from_arrays(

@@ -13,8 +13,11 @@ DataFrame-facing operator with per-row format dispatch:
 * HTML → DOM text/link-density boilerplate strip;
 * anything else → unchanged.
 
-One Arrow-batched pandas UDF for all formats: a single Python transfer
-per batch, embarrassingly parallel, no shuffle.
+``extract_any`` is the pure kernel.  The correction plans call it inside
+their single Arrow crossing (operators/correct.extract_batch, which
+memoizes document rows per worker); ``with_extraction`` is the standalone
+pandas UDF for callers that extract on their own.  Embarrassingly
+parallel, no shuffle.
 """
 
 from __future__ import annotations

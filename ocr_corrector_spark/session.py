@@ -6,6 +6,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from . import pyworker
+
 
 def _java_opts(cpus: int) -> str:
     """Driver-JVM GC options, width-aware.
@@ -60,11 +62,19 @@ def get_spark(
 
     ``shuffle_partitions`` defaults to one partition per core: the
     ordering shuffle sets the task count of the Python UDF stage, and
-    every Python task pays a fixed worker cost independent of its rows
-    (PySpark's per-task ``importlib.invalidate_caches()`` makes each
-    zipimporter re-read ``pyspark.zip``'s directory, ~135 ms of CPU).
-    Range partitioning already balances the rows, so tasks beyond the
-    task slots add that cost and no parallelism.
+    range partitioning already balances the rows, so tasks beyond the
+    task slots add no parallelism.  What they do add is per-task cost
+    that no row pays for: scheduling, shipping the UDF and its broadcast
+    config, and one Arrow stream each way.
+
+    Python workers start from ``pyworker`` (``spark.python.daemon.module``),
+    which takes Spark's jar and, when it is the installed PySpark's
+    release, the bundled ``pyspark.zip`` off the workers' path.  Stock
+    workers re-read both archives at every task start, because PySpark
+    calls ``importlib.invalidate_caches()`` there (0.14–0.32 s per task on
+    a 4-core host).  The workers import ``pyworker`` from the package, as
+    they already must for its UDFs, so the package has to be importable
+    from the driver's working directory or ``PYTHONPATH``.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cpus())
@@ -93,6 +103,7 @@ def get_spark(
         )
         .config("spark.driver.extraJavaOptions", _java_opts(cpus))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", pyworker.__name__)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

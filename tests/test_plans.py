@@ -204,12 +204,16 @@ def test_corrupt_watermarks_raise(spark, tmp_path):
         run.run(spark, gen_transcripts(spark, n_convs=4), lambda d: d)
 
 
-def test_audit_wave_replay_idempotent(spark, tmp_path):
-    """Crash between the audit write and the watermark commit (ADVICE r02):
-    the resumed wave re-runs write_audit for the SAME wave — the wave-keyed
-    dynamic partition overwrite must replace, not append, so the invariant
-    out_rows == audit sum(n_rows) survives crash/replay, and the resumed
-    output equals a clean single run row for row."""
+@pytest.mark.parametrize("resume_wave_size", [2, 4, 1], ids=["same", "larger", "one"])
+@pytest.mark.parametrize("crash_wave", [0, 1], ids=["first", "later"])
+def test_audit_wave_replay_idempotent(spark, tmp_path, crash_wave, resume_wave_size):
+    """Crash between the audit write and the watermark commit (ADVICE r02)
+    of the first wave, or of a later one after earlier waves committed;
+    resume with the same, a larger or a one-bucket wave size.  The resumed
+    waves re-run write_audit over the crashed wave's buckets — the
+    wave-keyed dynamic partition overwrite must replace, not append, so the
+    invariant out_rows == audit sum(n_rows) survives crash/replay, and the
+    resumed output equals a clean single run row for row."""
     df = gen_transcripts(spark, n_convs=20)
     n_rows = df.count()
 
@@ -221,40 +225,36 @@ def test_audit_wave_replay_idempotent(spark, tmp_path):
     )
     audit_path = str(tmp_path / "audit_w")
 
-    crashed = {}
+    def audit(out, wave):
+        write_audit(out, "replay", audit_path, wave=wave)
+
+    waves_seen = []
 
     def crashy_hook(out, wave):
-        write_audit(out, "replay", audit_path, wave=wave)
-        # simulate a crash AFTER the audit write but BEFORE _commit of the
-        # first wave: raise once so the watermark is never written
-        if not crashed:
-            crashed["wave"] = list(wave)
+        audit(out, wave)
+        # simulate a crash AFTER the audit write but BEFORE _commit of wave
+        # number crash_wave: the watermark of that wave is never written
+        waves_seen.append(list(wave))
+        if len(waves_seen) > crash_wave:
             raise RuntimeError("simulated crash between audit and commit")
 
     with pytest.raises(RuntimeError, match="simulated crash"):
         run.run(spark, df, transform, wave_size=2, post_write=crashy_hook)
-    # first wave's audit rows exist but its buckets are NOT committed
-    assert len(run.pending_buckets(spark)) == 4
+    # the crashed wave's audit rows exist but its buckets are NOT committed
+    assert len(run.pending_buckets(spark)) == 4 - 2 * crash_wave
 
-    # resume: the crashed wave re-runs, re-writing the SAME audit partition
-    done = run.run(
-        spark,
-        df,
-        transform,
-        wave_size=2,
-        post_write=lambda out, wave: write_audit(
-            out, "replay", audit_path, wave=wave
-        ),
-    )
-    assert done == 4
-    audit = spark.read.parquet(audit_path)
+    # resume: the crashed wave's buckets re-run, re-writing its audit rows
+    done = run.run(spark, df, transform, wave_size=resume_wave_size, post_write=audit)
+    assert done == 4 - 2 * crash_wave
+    assert run.pending_buckets(spark) == []
+    audit_df = spark.read.parquet(audit_path)
     out_rows = spark.read.parquet(run.output_path).count()
     assert out_rows == n_rows
     key = ["conv_id", "turn_idx", "text", "text_corrected"]
     resumed = sorted(spark.read.parquet(run.output_path).select(*key).collect())
     assert resumed == sorted(transform(df).select(*key).collect())
     # no double-counted wave: the replayed wave overwrote its partition
-    assert audit.agg(F.sum("n_rows")).collect()[0][0] == n_rows
+    assert audit_df.agg(F.sum("n_rows")).collect()[0][0] == n_rows
     biz = spark.read.parquet(audit_path + "_biz")
     assert biz.agg(F.sum("n_rows")).collect()[0][0] == n_rows
 

@@ -4,6 +4,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from ocr_corrector_spark import pyworker
 from ocr_corrector_spark.plans.pipeline import correct_pipeline
 from ocr_corrector_spark.session import host_cpus, host_driver_heap
 from ocr_corrector_spark.sources.transcripts import gen_transcripts
@@ -35,3 +36,35 @@ def test_python_stage_runs_one_task_per_slot(spark):
         .collect()
     )
     assert len(parts) == slots
+
+
+def test_workers_skip_the_spark_jar_and_the_bundled_pyspark_zip(spark):
+    # every task's importlib.invalidate_caches() re-reads each zipimporter's
+    # archive, so neither archive may keep one in the workers
+    assert spark.conf.get("spark.python.daemon.module") == pyworker.__name__
+
+    def worker_imports(_):  # nested: pickled by value, not by test module
+        import sys
+        import zipimport
+
+        import pyspark
+
+        cache = sys.path_importer_cache.items()
+        zips = [k for k, v in cache if isinstance(v, zipimport.zipimporter)]
+        yield os.environ.get("SPARK_HOME"), pyspark.__file__, zips
+
+    [(home, pyspark_file, zips)] = (
+        spark.sparkContext.parallelize([0], 1).mapPartitions(worker_imports).collect()
+    )
+    lib = os.path.realpath(os.path.join(home, "python", "lib"))
+    bundled = os.path.join(lib, "pyspark.zip")
+    same_release = (
+        pyworker.bundled_pyspark_version(bundled) == pyworker.installed_pyspark_version()
+    )
+    assert same_release  # else the zip rightly stays and this host tests nothing
+    assert not os.path.realpath(pyspark_file).startswith(lib + os.sep)
+    assert zips  # the py4j zip keeps its importer
+    for key in zips:
+        assert ".jar" not in key
+        real = os.path.realpath(key)
+        assert real != bundled and not real.startswith(bundled + os.sep)
