@@ -6,22 +6,14 @@ its equal-char cell ``min(del+1, diag, ins+1)`` always resolves to ``diag``
 because neighbouring cells differ by at most 1 — so we are free to use the
 fastest available implementation.  Inside Spark SQL plans the native
 ``F.levenshtein`` is the same function (used by the SQL analogs); inside the
-Arrow UDF kernels we prefer the C-accelerated ``Levenshtein``/``rapidfuzz``
-package and fall back to a banded pure-Python DP.
+Arrow UDF kernels strings of up to 64 characters go through Myers'
+bit-parallel algorithm and everything else through one two-row DP.
 
 The 'Canonical' variant (substitution cost 2; same reference lines 91-96)
 is kept for completeness — nothing in the reference's main path calls it.
 """
 
 from __future__ import annotations
-
-try:  # C implementation used by the reference's BK-tree (BKtree.py:15)
-    from Levenshtein import distance as _c_distance  # type: ignore
-except ImportError:  # pragma: no cover
-    try:
-        from rapidfuzz.distance.Levenshtein import distance as _c_distance  # type: ignore
-    except ImportError:
-        _c_distance = None
 
 
 def _myers_levenshtein(a: str, b: str) -> int:
@@ -56,19 +48,14 @@ def _myers_levenshtein(a: str, b: str) -> int:
     return dist
 
 
-def _py_levenshtein(a: str, b: str) -> int:
-    """Two-row DP; O(len(a)*len(b)) time, O(len(b)) space."""
-    if a == b:
-        return 0
-    if not a:
-        return len(b)
-    if not b:
-        return len(a)
+def _dp_distance(a, b, sub_cost: int = 1) -> int:
+    """Two-row DP over any two sequences; O(len(a)*len(b)) time,
+    O(len(b)) space.  ``sub_cost`` 1 is Levenshtein, 2 is Canonical."""
     prev = list(range(len(b) + 1))
     for i, ca in enumerate(a, start=1):
         cur = [i] + [0] * len(b)
         for j, cb in enumerate(b, start=1):
-            cost = 0 if ca == cb else 1
+            cost = 0 if ca == cb else sub_cost
             cur[j] = min(prev[j] + 1, prev[j - 1] + cost, cur[j - 1] + 1)
         prev = cur
     return prev[-1]
@@ -80,39 +67,17 @@ def edit_distance(a, b, name: str = "Levenshtein") -> int:
     Parity: ``char_sim.py:57-98`` doctests —
     edit_distance('abcde','avbcude') == 2; edit_distance('fang','qwe') == 4.
     """
-    if name == "Levenshtein":
-        if isinstance(a, str) and isinstance(b, str):
-            if _c_distance is not None:
-                return _c_distance(a, b)
-            if a == b:
-                return 0
-            if len(a) > len(b):
-                a, b = b, a
-            if not a:
-                return len(b)
-            if len(a) <= 64:
-                return _myers_levenshtein(a, b)
-            return _py_levenshtein(a, b)
-        # list-of-tokens form (char_sim.py:61-62 doctest)
-        return _py_levenshtein_seq(list(a), list(b))
-    # Canonical: substitution costs 2 (effectively LCS distance)
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, start=1):
-        cur = [i] + [0] * len(b)
-        for j, cb in enumerate(b, start=1):
-            cost = 0 if ca == cb else 2
-            cur[j] = min(prev[j] + 1, prev[j - 1] + cost, cur[j - 1] + 1)
-        prev = cur
-    return prev[-1]
-
-
-def _py_levenshtein_seq(a: list, b: list) -> int:
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, start=1):
-        cur = [i] + [0] * len(b)
-        for j, cb in enumerate(b, start=1):
-            cost = 0 if ca == cb else 1
-            cur[j] = min(prev[j] + 1, prev[j - 1] + cost, cur[j - 1] + 1)
-        prev = cur
-    return prev[-1]
-
+    if name != "Levenshtein":
+        # Canonical: substitution costs 2 (effectively LCS distance)
+        return _dp_distance(a, b, 2)
+    if isinstance(a, str) and isinstance(b, str):
+        if a == b:
+            return 0
+        if len(a) > len(b):
+            a, b = b, a
+        if not a:
+            return len(b)
+        if len(a) <= 64:
+            return _myers_levenshtein(a, b)
+    # longer strings, and the list-of-tokens form (char_sim.py:61-62 doctest)
+    return _dp_distance(a, b)

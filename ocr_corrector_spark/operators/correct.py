@@ -13,7 +13,9 @@ Two operators call the same ``correct_batch`` loop:
   extracts, tests eligibility and corrects, returning
   ``struct<text, corr_mode, text_corrected>``.  The probs-threshold half
   of detection (operators/detect.err_prob_key) stays native, so the wide
-  ``probs`` arrays and every other column stay in the JVM.
+  ``probs`` arrays and every other column stay in the JVM.  Its body is
+  ``_Corrector.correct_rows``, which runs the distinct rows it has not
+  seen through ``extract_any`` → ``route_rows`` → ``correct_batch``.
 * ``with_dispatched_correction`` — a pandas UDF over a natively computed
   ``(text, err_pos, corr_mode)``, for callers that build their own
   detection columns (perfbench's layer ladder).
@@ -21,17 +23,17 @@ Two operators call the same ``correct_batch`` loop:
 Everything the output depends on besides the row is one hashable
 ``CorrectionConfig`` (``correction_config``), broadcast to the workers;
 every entry point takes it as one ``cfg`` argument.  Each Python worker keeps
-one ``_Corrector`` per config and state that survives across batches and
-tasks:
+one ``_Corrector`` per config (``_corrector``) and state that survives
+across batches and tasks:
 
 * the keyword search index (functions/bktree.FilteredIndex — the
   BK-tree's search as a filtered scan with exact bounds);
 * the char similarity with a bounded memo on ``shape_similarity``
   (``_char_sim``, shared by every config);
 * the candidate scorer;
-* a row-result memo;
-* an extraction memo on the raw text of document rows (``extract_batch``,
-  shared by every config; plain rows bypass it).
+* a bounded FIFO memo from the single crossing's input triple
+  ``(text, err_prob_key, biz)`` to its output row — the identity the dedup
+  plan (plans/pipeline.py) already relies on.
 The correction itself is embarrassingly parallel — no shuffle.
 """
 
@@ -55,7 +57,6 @@ from ..functions.correct_kernels import (
     bert_correct_one_framed,
     keyword_correct_one,
 )
-from ..functions.layout_extract import LAYOUT_MAGIC, PDF_MAGIC
 from ..functions.rules import do_correct_filter_bert, do_correct_filter_keyword
 from .detect import err_prob_key
 from .extract import extract_any
@@ -63,11 +64,6 @@ from .extract import extract_any
 SCORER_BACKENDS = ("table", "framed", "lm")
 _ROW_CACHE_MAX = 200_000
 _SIM_CACHE_MAX = 65_536
-_EXTRACT_CACHE_MAX = 16_384
-# per-worker state, keyed by config — module-global so it survives across
-# Arrow batches AND tasks in the same Python worker process (a closure
-# dict would be re-deserialized fresh with every task's UDF command)
-_CORRECTORS: dict = {}
 
 RESULT_TYPE = StructType(
     [
@@ -75,6 +71,9 @@ RESULT_TYPE = StructType(
         StructField("corr_mode", IntegerType()),
         StructField("text_corrected", StringType()),
     ]
+)
+_RESULT_ARROW = pa.struct(
+    [("text", pa.string()), ("corr_mode", pa.int32()), ("text_corrected", pa.string())]
 )
 
 
@@ -165,28 +164,6 @@ def _char_sim():
     return char_sim
 
 
-@functools.cache
-def _extract_memo():
-    # bounded in documents: full, it holds ~14 MB of ~280-character HTML
-    # documents and their extractions, a small share of a worker's RSS.
-    # About 68% of the document rows in a gen_transcripts table repeat.
-    return functools.lru_cache(maxsize=_EXTRACT_CACHE_MAX)(extract_any)
-
-
-def extract_batch(texts: list) -> list:
-    """``extract_any`` per row, through this worker's extraction memo for
-    the rows ``extract_any`` hands to an extractor (``%LAYOUT`` / ``%PDF-``
-    documents and text containing ``<``).  Plain rows and nulls pass
-    through without entering the memo."""
-    memo = _extract_memo()
-    return [
-        memo(t)
-        if t is not None and (t.startswith((LAYOUT_MAGIC, PDF_MAGIC)) or "<" in t)
-        else t
-        for t in texts
-    ]
-
-
 def framed_score_rows(need: dict, fs, topn, char_sim, scorer) -> dict:
     """Score ``{row_key: (text, errs)}`` through a batch scorer ``fs``
     (a functions/framed_scorer.FramedBatchScorer — the tokenize → frame →
@@ -249,68 +226,82 @@ class _Corrector:
             table=dict(cfg.table), context_bigrams=dict(cfg.bigrams), topn=cfg.topn
         )
 
-    def _remember(self, key, hit) -> None:
-        # FIFO in O(1); on a plain dict next(iter(d)) walks past every hole
-        # that earlier pops left at the front of its entry table
-        if len(self.memo) >= _ROW_CACHE_MAX:
-            self.memo.popitem(last=False)
-        self.memo[key] = hit
-
     def correct_batch(self, texts: list, errs: list, modes: list) -> list:
         """Corrected text per row; ``modes`` 0 = pass-through, 1 = keyword
         path, 2 = bert path."""
-        cfg, memo = self.cfg, self.memo
-        # this batch's framed results, consulted BEFORE the memo: FIFO
-        # eviction under _ROW_CACHE_MAX pressure can drop keys scored
-        # earlier in the same batch, and falling through to the char-keyed
-        # kernel would silently switch which backend scored the row — the
-        # local dict makes eviction affect only reuse, never which backend
-        # answers
-        local: dict = {}
+        cfg = self.cfg
+        scored: dict = {}
         if cfg.scorer_backend in ("framed", "lm"):
-            # batch-score the uncached bert rows through the framing path
-            # (A1 batching inside the batch scorer), deduped
-            # by row key — repetitive boilerplate rows score once
-            need = {}
-            for t, e, m in zip(texts, errs, modes):
-                if m == 2 and t is not None:
-                    key = (2, t, tuple(e))
-                    if key not in memo and key not in need:
-                        need[key] = (t, list(e))
+            # the bert rows go through the framing path as one batch
+            # (A1 batching inside the batch scorer)
+            need = {
+                i: (t, list(e))
+                for i, (t, e, m) in enumerate(zip(texts, errs, modes))
+                if m == 2 and t is not None
+            }
             if need:
-                local = framed_score_rows(
+                scored = framed_score_rows(
                     need, self.batch_scorer, cfg.topn, self.char_sim, self.scorer
                 )
-                for key, hit in local.items():
-                    self._remember(key, hit)
         out = []
-        for t, e, m in zip(texts, errs, modes):
-            if m not in (1, 2) or t is None:
+        for i, (t, e, m) in enumerate(zip(texts, errs, modes)):
+            if t is None or m not in (1, 2):
                 out.append(t)
-                continue
-            key = (m, t, tuple(e))
-            hit = local.get(key)
-            if hit is None:
-                hit = memo.get(key)
-            if hit is None:
-                if m == 1:
-                    hit = keyword_correct_one(
+            elif m == 1:
+                out.append(
+                    keyword_correct_one(
                         t, e, self.tree, self.kwset, self.char_sim,
                         cfg.similarity_threshold,
                     )
-                else:
-                    hit = bert_correct_one(t, e, self.char_sim, self.scorer, cfg.topn)
-                self._remember(key, hit)
-            out.append(hit)
+                )
+            elif i in scored:
+                out.append(scored[i])
+            else:
+                out.append(bert_correct_one(t, e, self.char_sim, self.scorer, cfg.topn))
         return out
 
+    def correct_rows(self, texts: list, err_keys: list, bizes: list) -> list:
+        """The single crossing's body: ``(text, corr_mode, text_corrected)``
+        per input row ``(text, err_prob_key, biz)``, through this worker's
+        memo on that triple.  Every hit is read before anything is
+        inserted, so this batch's own misses cannot evict a row it still
+        needs; the distinct misses then run through ``extract_any`` →
+        ``route_rows`` → ``correct_batch`` once."""
+        memo = self.memo
+        keys = [
+            (t, None if k is None else tuple(k), b)
+            for t, k, b in zip(texts, err_keys, bizes)
+        ]
+        rows = [memo.get(key) for key in keys]
+        first: dict = {}  # each distinct missed key -> its first row index
+        for i, (key, row) in enumerate(zip(keys, rows)):
+            if row is None:
+                first.setdefault(key, i)
+        if not first:
+            return rows
+        idx = list(first.values())
+        extracted = [extract_any(texts[i]) for i in idx]
+        modes, errs = route_rows(
+            extracted, [err_keys[i] for i in idx], [bizes[i] for i in idx]
+        )
+        corrected = self.correct_batch(extracted, errs, modes)
+        fresh = dict(zip(first, zip(extracted, modes, corrected)))
+        for key, row in fresh.items():
+            # FIFO in O(1); on a plain dict next(iter(d)) walks past every
+            # hole that earlier pops left at the front of its entry table
+            if len(memo) >= _ROW_CACHE_MAX:
+                memo.popitem(last=False)
+            memo[key] = row
+        return [fresh[key] if row is None else row for key, row in zip(keys, rows)]
 
-def correct_batch(cfg: CorrectionConfig, texts: list, errs: list, modes: list) -> list:
-    """THE correction batch loop, through this worker's memo for ``cfg``."""
-    corrector = _CORRECTORS.get(cfg)
-    if corrector is None:
-        corrector = _CORRECTORS[cfg] = _Corrector(cfg)
-    return corrector.correct_batch(texts, errs, modes)
+
+@functools.cache
+def _corrector(cfg: CorrectionConfig) -> _Corrector:
+    """This worker's ``_Corrector`` for ``cfg``.  The cache is module-global,
+    so it survives across Arrow batches AND tasks in the same Python worker
+    process (a closure dict would be re-deserialized fresh with every
+    task's UDF command)."""
+    return _Corrector(cfg)
 
 
 def route_rows(texts: list, err_keys: list, bizes: list) -> tuple[list, list]:
@@ -354,17 +345,10 @@ def single_pass_udf(
     def correct_rows(text: pa.Array, err_key: pa.Array, biz: pa.Array) -> pa.Array:
         if row_counter is not None:
             row_counter.add(len(text))
-        texts = extract_batch(text.to_pylist())
-        modes, errs = route_rows(texts, err_key.to_pylist(), biz.to_pylist())
-        corrected = correct_batch(bc_cfg.value, texts, errs, modes)
-        return pa.StructArray.from_arrays(
-            [
-                pa.array(texts, pa.string()),
-                pa.array(modes, pa.int32()),
-                pa.array(corrected, pa.string()),
-            ],
-            names=RESULT_TYPE.fieldNames(),
+        rows = _corrector(bc_cfg.value).correct_rows(
+            text.to_pylist(), err_key.to_pylist(), biz.to_pylist()
         )
+        return pa.array(rows, _RESULT_ARROW)
 
     return correct_rows
 
@@ -431,7 +415,9 @@ def with_dispatched_correction(
             row_counter.add(len(text))
         # list iteration beats Series iteration (no per-element numpy boxing)
         return pd.Series(
-            correct_batch(bc_cfg.value, text.tolist(), err_pos.tolist(), mode.tolist())
+            _corrector(bc_cfg.value).correct_batch(
+                text.tolist(), err_pos.tolist(), mode.tolist()
+            )
         )
 
     return df.withColumn(

@@ -14,9 +14,9 @@ DataFrame-facing operator with per-row format dispatch:
 * anything else → unchanged.
 
 ``extract_any`` is the pure kernel.  The correction plans call it inside
-their single Arrow crossing (operators/correct.extract_batch, which
-memoizes document rows per worker); ``with_extraction`` is the standalone
-pandas UDF for callers that extract on their own.  Embarrassingly
+their single Arrow crossing (operators/correct._Corrector.correct_rows,
+once per distinct input row per worker); ``with_extraction`` is the
+standalone pandas UDF for callers that extract on their own.  Embarrassingly
 parallel, no shuffle.
 """
 

@@ -11,7 +11,6 @@ catalog is configured — this sandbox has no Iceberg runtime jar).
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import DataFrame
@@ -33,12 +32,9 @@ AUDIT_SCHEMA_COLS = (
 
 def _eligible_expr(df: DataFrame):
     # pipeline exports eligibility as corr_mode (0 pass / 1 keyword /
-    # 2 bert) when called with keep_mode_col=True; a boolean `eligible`
-    # column is accepted for hand-built frames
+    # 2 bert) when called with keep_mode_col=True
     if "corr_mode" in df.columns:
         return F.sum((F.col("corr_mode") != 0).cast("long")).alias("n_eligible")
-    if "eligible" in df.columns:
-        return F.sum(F.col("eligible").cast("long")).alias("n_eligible")
     return F.lit(None).cast("long").alias("n_eligible")
 
 
@@ -138,7 +134,3 @@ def write_audit(
 
 def read_audit(spark, audit_path: str) -> DataFrame:
     return spark.read.parquet(audit_path)
-
-
-def audit_exists(audit_path: str) -> bool:
-    return os.path.isdir(audit_path)

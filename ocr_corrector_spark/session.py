@@ -20,11 +20,10 @@ def _java_opts(cpus: int) -> str:
     of the TASK width (not the machine width) keeps collection cost
     proportional to the work.  On a real cluster each executor JVM is
     narrow and per-node G1 defaults are fine; this knob matters only for
-    a single wide local[] JVM.  Override with SPARK_GRAFT_JAVA_OPTS.
+    a single wide local[] JVM.  A caller that wants other options passes
+    ``spark.driver.extraJavaOptions`` in ``get_spark``'s ``extra_conf``,
+    which is applied last.
     """
-    override = os.environ.get("SPARK_GRAFT_JAVA_OPTS")
-    if override is not None:
-        return override
     gc_threads = max(2, min(8, cpus // 2))
     return (
         f"-XX:ParallelGCThreads={gc_threads} "

@@ -6,7 +6,7 @@ turn of a crafted frame: null and empty text, null probs, probs shorter
 and longer than the text, astral-plane and combining characters, digits
 at error positions, malformed ``%LAYOUT`` and HTML, and texts at and past
 the 62-character masked-LM limit.  Every row recurs in each conversation,
-so the workers' extraction and row memos answer the repeats."""
+so the workers' memo answers the repeats."""
 
 from __future__ import annotations
 

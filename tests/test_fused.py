@@ -72,11 +72,11 @@ def test_fused_corrects_and_extracts(spark):
 
 
 def test_fused_framed_equals_staged_framed(spark):
-    """fused_correct with the framed backend (VERDICT r02 #3) scores
-    through the same correct_batch loop as the pipeline, so per-turn
-    output must be identical — including rows
-    where the context bigram re-ranks candidates away from the char-keyed
-    table result (大阳 → 太阳 via the (太, 阳) bigram)."""
+    """fused_correct with the framed backend (VERDICT r02 #3) runs the
+    same single-crossing UDF as the pipeline, so per-turn output must be
+    identical — including rows where the context bigram re-ranks
+    candidates away from the char-keyed table result (大阳 → 太阳 via the
+    (太, 阳) bigram)."""
     import datetime as dt
 
     schema = (

@@ -37,6 +37,9 @@ def test_edit_distance(a, b, d):
 def test_edit_distance_canonical():
     # char_sim.py:91-96 — substitution cost 2
     assert edit_distance("abc", "axc", name="Canonical") == 2
+    assert edit_distance("fang", "qwe", name="Canonical") == 7
+    assert edit_distance("abcde", "avbcude", name="Canonical") == 2
+    assert edit_distance("", "abc", name="Canonical") == 3
 
 
 # --- char similarity: char_sim.py:238-247,313-324 doctests -----------------

@@ -120,9 +120,9 @@ def test_sentence_cut_lossless(line):
 @given(st.text(max_size=80), st.text(max_size=80))
 @settings(max_examples=500, deadline=None)
 def test_myers_equals_dp(a, b):
-    from ocr_corrector_spark.functions.editdist import _py_levenshtein
+    from ocr_corrector_spark.functions.editdist import _dp_distance
 
-    assert edit_distance(a, b) == _py_levenshtein(a, b)
+    assert edit_distance(a, b) == _dp_distance(a, b)
 
 
 # --- layout-extraction invariants (functions/layout_extract.py) -------------------
