@@ -17,7 +17,7 @@ Reference contract replicated per batch, once, in ``FramedBatchScorer``
 * per sentence: tokenize the digit-translated text (T1 happens before the
   model in bert_corrector.py:37-42), frame as ``[CLS] 。 text 。 [SEP]``
   with error offsets shifted +2 and ``[MASK]`` substitution iff the
-  sentence has <= ``max_mask_per_sentence`` errors (masked_lm.py:251-302);
+  sentence has <= ``MAX_MASK_PER_SENTENCE`` errors (masked_lm.py:251-302);
 * per error position: top-n ``(candidate, confidence)`` in confidence
   order — the shape find_topn_candidates returns (masked_lm.py:400-447).
 
@@ -36,7 +36,8 @@ table).
 
 from __future__ import annotations
 
-from .rules import translate_digits
+from ..assets.scorer_table import DEFAULT_TOPN, SCORER_TABLE, default_candidates
+from .rules import MAX_SEQ_LENGTH, translate_digits
 from .tokenizer import frame_sentence, tokenize
 
 # Demo context bigrams (deterministic stand-in for contextual LM evidence):
@@ -47,6 +48,8 @@ DEFAULT_CONTEXT_BIGRAMS: dict[tuple[str, str], float] = {
 }
 
 _CONF_CAP = 0.999999
+# masked_lm.py:251-302 — more errors than this leave the sentence unmasked
+MAX_MASK_PER_SENTENCE = 3
 
 
 class FramedBatchScorer:
@@ -64,20 +67,15 @@ class FramedBatchScorer:
     ``(numfree_text, err_pos, framed_tokens, at)``, where ``at`` is the
     error's index in ``framed_tokens``, or ``None`` when truncation put it
     outside the model window (score it context-free: the production F2
-    filter rejects texts longer than max_seq_length-2, so this is a
-    kernel-level parity path, not a hot path)."""
+    filter rejects texts longer than MAX_SEQ_LENGTH-2, so this is a
+    kernel-level parity path, not a hot path).
 
-    def __init__(
-        self,
-        topn: int = 3,
-        max_seq_length: int = 64,
-        batch_size: int = 16,
-        max_mask_per_sentence: int = 3,
-    ):
-        self.topn = topn
-        self.max_seq_length = max_seq_length
+    The reference configuration's framing is fixed: ``DEFAULT_TOPN``
+    candidates per error, a ``MAX_SEQ_LENGTH`` model window and
+    ``MAX_MASK_PER_SENTENCE`` masks; only ``batch_size`` varies."""
+
+    def __init__(self, batch_size: int = 16):
         self.batch_size = batch_size
-        self.max_mask = max_mask_per_sentence
         # introspection for tests: framed token sequences of the last call
         self.last_frames: list[list[str]] = []
 
@@ -96,9 +94,9 @@ class FramedBatchScorer:
             return [], None
         errs = list(errs)
         framed, _mask, shifted = frame_sentence(
-            tokens, errs, self.max_seq_length, self.max_mask
+            tokens, errs, MAX_SEQ_LENGTH, MAX_MASK_PER_SENTENCE
         )
-        window = min(len(framed), self.max_seq_length)
+        window = min(len(framed), MAX_SEQ_LENGTH)
         return framed, [
             (numfree, e, framed, p if 0 <= p < window else None)
             for e, p in zip(errs, shifted)
@@ -142,10 +140,8 @@ class FramedTableScorer(FramedBatchScorer):
     ``load_vocab``-style mapping or set to use a real vocab.
     """
 
-    def __init__(self, vocab=None, table=None, context_bigrams=None, **framing):
-        from ..assets.scorer_table import SCORER_TABLE
-
-        super().__init__(**framing)
+    def __init__(self, vocab=None, table=None, context_bigrams=None, batch_size: int = 16):
+        super().__init__(batch_size)
         self.vocab = set(vocab) if vocab is not None else None
         self.table = dict(SCORER_TABLE) if table is None else dict(table)
         self.context_bigrams = (
@@ -162,8 +158,6 @@ class FramedTableScorer(FramedBatchScorer):
         return build_vocab(numfree_texts)
 
     def _score(self, slots):
-        from ..assets.scorer_table import default_candidates
-
         out = []
         for numfree, e, framed, p in slots:
             left = right = None
@@ -190,5 +184,5 @@ class FramedTableScorer(FramedBatchScorer):
             # stable sort: equal confidences keep table order, so an empty
             # bigram table reproduces the char-keyed scorer exactly
             scored.sort(key=lambda cp: -cp[1])
-            out.append(scored[: self.topn])
+            out.append(scored[:DEFAULT_TOPN])
         return out

@@ -37,6 +37,7 @@ import os
 
 import numpy as np
 
+from ..assets.scorer_table import DEFAULT_TOPN
 from .framed_scorer import FramedBatchScorer
 
 DEFAULT_CHECKPOINT = os.path.join(
@@ -120,16 +121,14 @@ class NumpyLMScorer(FramedBatchScorer):
     as FramedTableScorer (functions/framed_scorer.FramedBatchScorer:
     masked_lm.py:251-302 framing, :309-356 batching, :400-447 per-error
     top-n), with ONE dense forward pass per batch over every masked
-    position's context window (the reference's dense-tensor batching)."""
+    position's context window (the reference's dense-tensor batching).
 
-    def __init__(
-        self,
-        checkpoint_path: str = DEFAULT_CHECKPOINT,
-        model: NumpyMaskedLM | None = None,
-        **framing,
-    ):
-        super().__init__(**framing)
-        self.model = model if model is not None else NumpyMaskedLM.load(checkpoint_path)
+    ``model``: a loaded NumpyMaskedLM (default: the committed checkpoint
+    at ``DEFAULT_CHECKPOINT``, loaded here)."""
+
+    def __init__(self, model: NumpyMaskedLM | None = None, batch_size: int = 16):
+        super().__init__(batch_size)
+        self.model = model if model is not None else NumpyMaskedLM.load()
         self.vocab_set = set(self.model.tokens)
 
     def _vocab(self, numfree_texts):
@@ -144,4 +143,4 @@ class NumpyLMScorer(FramedBatchScorer):
             for _nf, _e, framed, p in slots
         ]
         ids = np.asarray([self.model.ids(w) for w in windows], dtype=np.int64)
-        return self.model.topn(ids, self.topn)
+        return self.model.topn(ids, DEFAULT_TOPN)

@@ -11,6 +11,10 @@ import re
 ALPHABET_RE = re.compile(r"[a-zA-ZＡ-Ｚａ-ｚ]")
 CJK_RE = re.compile(r"[一-龥]")
 DIGIT_RE = re.compile(r"[0-9]")
+# base_corrector.py:109-119 — a position is suspect below this prob
+PROB_THRESHOLD = 0.9
+# bert_corrector.py:81-93 — the masked LM's sequence limit
+MAX_SEQ_LENGTH = 64
 
 # base_corrector.py:126-242 — the reference rejects BERT candidates that are
 # traditional-Chinese chars via a ~8k-char regex class.  A frozenset member
@@ -25,7 +29,7 @@ def is_traditional(s: str) -> bool:
     return bool(s) and s[0] in TRADITIONAL_CHARS
 
 
-def find_err_pos_by_prob(prob, threshold: float = 0.9) -> list[int]:
+def find_err_pos_by_prob(prob, threshold: float = PROB_THRESHOLD) -> list[int]:
     """Positions whose per-char confidence is below threshold.
 
     Parity: base_corrector.py:109-119 —
@@ -41,7 +45,7 @@ def do_correct_filter_keyword(text: str) -> bool:
     return len(CJK_RE.findall(text)) >= 2
 
 
-def do_correct_filter_bert(text: str, max_seq_length: int = 64) -> bool:
+def do_correct_filter_bert(text: str, max_seq_length: int = MAX_SEQ_LENGTH) -> bool:
     """BERT-path correctability (bert_corrector.py:81-93): no alphabet
     chars, >= 3 CJK chars, length <= max_seq_length - 2."""
     if ALPHABET_RE.search(text):

@@ -6,34 +6,38 @@ reference partitions rows into correct/pass lists and re-inserts by index
 replaced by the ``(conv_id, turn_idx)`` key and a single-pass
 ``CASE WHEN needs_correction THEN kernel(text) ELSE text END``.
 
-Two operators call the same ``correct_batch`` loop:
+Two UDFs call the same ``correct_batch`` loop:
 
-* ``with_single_pass_correction`` — the default plan's ONE Python
-  crossing: a scalar Arrow UDF over ``(text, err_prob_key, biz)`` that
-  extracts, tests eligibility and corrects, returning
-  ``struct<text, corr_mode, text_corrected>``.  The probs-threshold half
-  of detection (operators/detect.err_prob_key) stays native, so the wide
-  ``probs`` arrays and every other column stay in the JVM.  Its body is
-  ``_Corrector.correct_rows``, which runs the distinct rows it has not
-  seen through ``extract_any`` → ``route_rows`` → ``correct_batch``.
+* ``single_pass_udf`` — the default plan's ONE Python crossing
+  (plans/pipeline.correct_pipeline): a scalar Arrow UDF over
+  ``(text, err_prob_key, biz)`` that extracts, tests eligibility and
+  corrects, returning ``struct<text, corr_mode, text_corrected>``.  The
+  probs-threshold half of detection (operators/detect.err_prob_key) stays
+  native, so the wide ``probs`` arrays and every other column stay in the
+  JVM.  Its body is ``_Corrector.correct_rows``, which runs the distinct
+  rows it has not seen through ``extract_any`` → ``route_rows`` →
+  ``correct_batch``.
 * ``with_dispatched_correction`` — a pandas UDF over a natively computed
   ``(text, err_pos, corr_mode)``, for callers that build their own
   detection columns (perfbench's layer ladder).
 
-Everything the output depends on besides the row is one hashable
-``CorrectionConfig`` (``correction_config``), broadcast to the workers;
-every entry point takes it as one ``cfg`` argument.  Each Python worker keeps
-one ``_Corrector`` per config (``_corrector``) and state that survives
-across batches and tasks:
+The engine reproduces one reference configuration: a keyword similarity
+cut-off of ``KEYWORD_SIMILARITY`` over ``KEYWORDS``, top-``DEFAULT_TOPN``
+candidates, and the committed LM checkpoint.  What the output depends on
+besides the row and those constants is one hashable ``CorrectionConfig``
+(``correction_config``: the scorer backend, its table and its bigrams),
+broadcast to the workers; every entry point takes it as one ``cfg``
+argument.  Each Python worker keeps state that survives across batches
+and tasks:
 
 * the keyword search index (functions/bktree.FilteredIndex — the
-  BK-tree's search as a filtered scan with exact bounds);
-* the char similarity with a bounded memo on ``shape_similarity``
-  (``_char_sim``, shared by every config);
-* the candidate scorer;
-* a bounded FIFO memo from the single crossing's input triple
-  ``(text, err_prob_key, biz)`` to its output row — the identity the dedup
-  plan (plans/pipeline.py) already relies on.
+  BK-tree's search as a filtered scan with exact bounds) and the char
+  similarity with a bounded memo on ``shape_similarity``
+  (``_keyword_index`` and ``_char_sim``, shared by every config);
+* one ``_Corrector`` per config (``_corrector``): the candidate scorer,
+  the batch scorer, and a bounded FIFO memo from the single crossing's
+  input triple ``(text, err_prob_key, biz)`` to its output row — the
+  identity the dedup plan (plans/pipeline.py) already relies on.
 The correction itself is embarrassingly parallel — no shuffle.
 """
 
@@ -49,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
-from ..assets import KEYWORDS
+from ..assets import DEFAULT_TOPN, KEYWORDS
 from ..assets.scorer_table import SCORER_TABLE, default_candidates
 from ..functions.bktree import BKTree, FilteredIndex
 from ..functions.correct_kernels import (
@@ -58,10 +62,11 @@ from ..functions.correct_kernels import (
     keyword_correct_one,
 )
 from ..functions.rules import do_correct_filter_bert, do_correct_filter_keyword
-from .detect import err_prob_key
 from .extract import extract_any
 
 SCORER_BACKENDS = ("table", "framed", "lm")
+# the keyword path's shape-similarity cut-off (config/config.json:8)
+KEYWORD_SIMILARITY = 0.55
 _ROW_CACHE_MAX = 200_000
 _SIM_CACHE_MAX = 65_536
 
@@ -81,38 +86,28 @@ _RESULT_ARROW = pa.struct(
 class CorrectionConfig:
     """Correction is a pure function of ``(mode, text, err_pos)`` given
     this config, so the config (held by value — collision-proof, no
-    stale entries) keys the per-worker kernels and memo."""
+    stale entries) keys the per-worker scorers and memo."""
 
-    similarity_threshold: float
-    topn: int
-    keywords: tuple
     scorer_backend: str
     table: tuple  # sorted (char, candidates) items
     bigrams: tuple  # sorted ((left, right), boost) items
-    lm_checkpoint: str | None
 
 
 def correction_config(
-    similarity_threshold: float = 0.55,
-    topn: int = 3,
-    keywords=KEYWORDS,
     scorer_backend: str = "table",
     scorer_table: dict | None = None,
     context_bigrams: dict | None = None,
-    lm_checkpoint: str | None = None,
 ) -> CorrectionConfig:
     """The correction config every entry point takes as ``cfg``.
-
-    ``similarity_threshold``: the keyword path's shape-similarity cut-off.
 
     ``scorer_backend`` (one of ``SCORER_BACKENDS``; anything else raises
     ``ValueError``): ``"table"`` (char-keyed confusion table, default),
     ``"framed"`` (functions/framed_scorer.py — tokenize → frame → score
     through the reference's batch contract, context-bigram aware), or
-    ``"lm"`` (functions/numpy_lm.py — the committed pure-numpy masked LM:
-    real checkpoint load + forward pass + top-k at the masked positions).
-    All are deterministic; framed with an empty bigram table equals table
-    by construction (tests/test_framed_scorer.py).
+    ``"lm"`` (functions/numpy_lm.py — the committed pure-numpy masked LM
+    at DEFAULT_CHECKPOINT: real checkpoint load + forward pass + top-k at
+    the masked positions).  All are deterministic; framed with an empty
+    bigram table equals table by construction (tests/test_framed_scorer.py).
 
     ``scorer_table``: override the built-in SCORER_TABLE with a plain dict
     ``char -> [(candidate, confidence), ...]`` — e.g. the output of the
@@ -120,8 +115,11 @@ def correction_config(
     assets/scorer_table.scorer_table_from_df).
 
     ``context_bigrams``: the framed backend's bigram boosts (default: the
-    demo DEFAULT_CONTEXT_BIGRAMS).  ``lm_checkpoint``: ``.npz`` path for
-    the lm backend (default: the committed assets/numpy_lm.npz)."""
+    demo DEFAULT_CONTEXT_BIGRAMS).
+
+    The keyword path's similarity cut-off (``KEYWORD_SIMILARITY``), its
+    dictionary (``KEYWORDS``) and the candidate count (``DEFAULT_TOPN``)
+    are the reference configuration's constants, not settings."""
     if scorer_backend not in SCORER_BACKENDS:
         raise ValueError(
             f"scorer_backend must be one of {SCORER_BACKENDS}, got {scorer_backend!r}"
@@ -132,18 +130,10 @@ def correction_config(
         from ..functions.framed_scorer import DEFAULT_CONTEXT_BIGRAMS
 
         bigrams = DEFAULT_CONTEXT_BIGRAMS if context_bigrams is None else context_bigrams
-    if scorer_backend == "lm" and lm_checkpoint is None:
-        from ..functions.numpy_lm import DEFAULT_CHECKPOINT
-
-        lm_checkpoint = DEFAULT_CHECKPOINT
     return CorrectionConfig(
-        similarity_threshold=similarity_threshold,
-        topn=topn,
-        keywords=tuple(keywords),
         scorer_backend=scorer_backend,
         table=tuple(sorted((k, tuple(v)) for k, v in table.items())),
         bigrams=tuple(sorted(bigrams.items())),
-        lm_checkpoint=lm_checkpoint,
     )
 
 
@@ -189,14 +179,18 @@ def framed_score_rows(need: dict, fs, topn, char_sim, scorer) -> dict:
     return out
 
 
+@functools.cache
+def _keyword_index():
+    """This worker's keyword search index and its word set."""
+    tree = FilteredIndex(BKTree(KEYWORDS))
+    return tree, frozenset(tree.words)
+
+
 class _Corrector:
-    """One worker's kernels and row memo for one config."""
+    """One worker's scorers and row memo for one config."""
 
     def __init__(self, cfg: CorrectionConfig):
         self.cfg = cfg
-        self.char_sim = _char_sim()
-        self.tree = FilteredIndex(BKTree(cfg.keywords))
-        self.kwset = frozenset(self.tree.words)
         self.memo: OrderedDict = OrderedDict()
         table = dict(cfg.table)
 
@@ -205,7 +199,7 @@ class _Corrector:
             if cands is None:
                 # identity-dominant default; NOT topn_candidates, which
                 # would leak the built-in table under a custom scorer_table
-                return default_candidates(ch, cfg.topn)
+                return default_candidates(ch)
             return cands
 
         self.scorer = scorer
@@ -219,19 +213,17 @@ class _Corrector:
         if cfg.scorer_backend == "lm":
             from ..functions.numpy_lm import NumpyLMScorer
 
-            return NumpyLMScorer(checkpoint_path=cfg.lm_checkpoint, topn=cfg.topn)
+            return NumpyLMScorer()
         from ..functions.framed_scorer import FramedTableScorer
 
-        return FramedTableScorer(
-            table=dict(cfg.table), context_bigrams=dict(cfg.bigrams), topn=cfg.topn
-        )
+        return FramedTableScorer(table=dict(cfg.table), context_bigrams=dict(cfg.bigrams))
 
     def correct_batch(self, texts: list, errs: list, modes: list) -> list:
         """Corrected text per row; ``modes`` 0 = pass-through, 1 = keyword
         path, 2 = bert path."""
-        cfg = self.cfg
+        char_sim = _char_sim()
         scored: dict = {}
-        if cfg.scorer_backend in ("framed", "lm"):
+        if self.cfg.scorer_backend in ("framed", "lm"):
             # the bert rows go through the framing path as one batch
             # (A1 batching inside the batch scorer)
             need = {
@@ -241,23 +233,21 @@ class _Corrector:
             }
             if need:
                 scored = framed_score_rows(
-                    need, self.batch_scorer, cfg.topn, self.char_sim, self.scorer
+                    need, self.batch_scorer, DEFAULT_TOPN, char_sim, self.scorer
                 )
+        tree, kwset = _keyword_index()
         out = []
         for i, (t, e, m) in enumerate(zip(texts, errs, modes)):
             if t is None or m not in (1, 2):
                 out.append(t)
             elif m == 1:
                 out.append(
-                    keyword_correct_one(
-                        t, e, self.tree, self.kwset, self.char_sim,
-                        cfg.similarity_threshold,
-                    )
+                    keyword_correct_one(t, e, tree, kwset, char_sim, KEYWORD_SIMILARITY)
                 )
             elif i in scored:
                 out.append(scored[i])
             else:
-                out.append(bert_correct_one(t, e, self.char_sim, self.scorer, cfg.topn))
+                out.append(bert_correct_one(t, e, char_sim, self.scorer, DEFAULT_TOPN))
         return out
 
     def correct_rows(self, texts: list, err_keys: list, bizes: list) -> list:
@@ -370,33 +360,10 @@ def unpack_result(df: DataFrame, res_col: str) -> DataFrame:
     )
 
 
-def with_single_pass_correction(
-    df: DataFrame,
-    cfg: CorrectionConfig | None = None,
-    spark: SparkSession | None = None,
-    row_counter=None,
-) -> DataFrame:
-    """Extraction, detection and correction with ONE Python crossing.
-
-    The probs-threshold half of detection runs natively
-    (operators/detect.err_prob_key); only ``(text, err_prob_key, tool)``
-    cross into the Arrow UDF — ``probs`` and every other column stay in
-    the JVM.  Returns ``df`` with ``text`` rewritten by extraction and
-    ``corr_mode`` (0 pass / 1 keyword / 2 bert) and ``text_corrected``
-    appended.  ``cfg=None`` is ``correction_config()``."""
-    correct_rows = single_pass_udf(cfg or correction_config(), spark, row_counter)
-    out = df.withColumn(
-        "_corr",
-        correct_rows(F.col("text"), err_prob_key(F.col("probs")), F.col("tool")),
-    )
-    return unpack_result(out, "_corr")
-
-
 def with_dispatched_correction(
     df: DataFrame,
     cfg: CorrectionConfig | None = None,
     spark: SparkSession | None = None,
-    row_counter=None,
 ) -> DataFrame:
     """Correction with per-row corrector dispatch over native detection
     columns, as a Series→Series pandas UDF: adds ``text_corrected`` from
@@ -411,8 +378,6 @@ def with_dispatched_correction(
 
     @F.pandas_udf(StringType())
     def correct_udf(text: pd.Series, err_pos: pd.Series, mode: pd.Series) -> pd.Series:
-        if row_counter is not None:
-            row_counter.add(len(text))
         # list iteration beats Series iteration (no per-element numpy boxing)
         return pd.Series(
             _corrector(bc_cfg.value).correct_batch(

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..functions.rules import MAX_SEQ_LENGTH, PROB_THRESHOLD
+
 # base_corrector.py:125 — CJK block used by the correctability filters
 _CJK_CLASS = "[一-龥]"
 _NON_CJK_CLASS = "[^一-龥]"
@@ -34,22 +36,23 @@ def eligible_keyword(text: Column) -> Column:
     return cjk_count(text) >= 2
 
 
-def eligible_bert(text: Column, max_seq_length: int = 64) -> Column:
+def eligible_bert(text: Column) -> Column:
     """F2 (bert_corrector.py:81-93)."""
     return (
         (~text.rlike(_ALPHABET_CLASS))
         & (cjk_count(text) >= 3)
-        & (F.length(text) <= max_seq_length - 2)
+        & (F.length(text) <= MAX_SEQ_LENGTH - 2)
     )
 
 
-def err_positions(text: Column, probs: Column, prob_threshold: float = 0.9) -> Column:
+def err_positions(text: Column, probs: Column) -> Column:
     """F3 (base_corrector.py:75-86,109-119): indices with prob below
-    threshold; NULL probs → the non-prob path marks every position."""
-    return err_from_key(text, err_prob_key(probs, prob_threshold))
+    ``PROB_THRESHOLD``; NULL probs → the non-prob path marks every
+    position."""
+    return err_from_key(text, err_prob_key(probs))
 
 
-def err_prob_key(probs: Column, prob_threshold: float = 0.9) -> Column:
+def err_prob_key(probs: Column) -> Column:
     """The probs-only factor of ``err_positions``: the sub-threshold index
     set for non-null probs (empty for empty probs), and NULL for null
     probs.  The key is text-extraction-independent, so the pipeline
@@ -62,7 +65,7 @@ def err_prob_key(probs: Column, prob_threshold: float = 0.9) -> Column:
     # guard size==0: sequence(0,-1) would produce a DESCENDING range
     by_prob = F.when(
         F.size(probs) > 0,
-        F.filter(idx, lambda i: F.element_at(probs, i + 1) < F.lit(prob_threshold)),
+        F.filter(idx, lambda i: F.element_at(probs, i + 1) < F.lit(PROB_THRESHOLD)),
     ).otherwise(empty)
     return F.when(probs.isNull(), F.lit(None).cast("array<int>")).otherwise(by_prob)
 

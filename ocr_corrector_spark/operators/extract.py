@@ -56,9 +56,11 @@ def extract_any(text: str) -> str:
     return extract_main_content(text)
 
 
-def with_extraction(df: DataFrame, text_col: str = "text", out_col: str = "text") -> DataFrame:
+def with_extraction(df: DataFrame, out_col: str = "text") -> DataFrame:
+    """``extract_any`` of the ``text`` column, written to ``out_col``."""
+
     @F.pandas_udf(StringType())
     def extract_udf(text: pd.Series) -> pd.Series:
         return text.map(extract_any)
 
-    return df.withColumn(out_col, extract_udf(F.col(text_col)))
+    return df.withColumn(out_col, extract_udf(F.col("text")))

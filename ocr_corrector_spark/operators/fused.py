@@ -1,12 +1,13 @@
 """``fused_correct``: extraction → detection → correction on an unordered
-frame, in the default plan's single Arrow crossing
-(operators/correct.with_single_pass_correction)."""
+frame — ``correct_pipeline(order_output=False)``, the default plan's
+single Arrow crossing (operators/correct.single_pass_udf)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .correct import CorrectionConfig, with_single_pass_correction
+from ..plans.pipeline import correct_pipeline
+from .correct import CorrectionConfig
 
 
 def fused_correct(
@@ -14,6 +15,5 @@ def fused_correct(
     spark: SparkSession | None = None,
     cfg: CorrectionConfig | None = None,
 ) -> DataFrame:
-    """Adds ``text_corrected`` and rewrites ``text`` with extracted text;
-    equal per turn to ``correct_pipeline(order_output=False)``."""
-    return with_single_pass_correction(df, cfg, spark).drop("corr_mode")
+    """Adds ``text_corrected`` and rewrites ``text`` with extracted text."""
+    return correct_pipeline(df, spark, cfg, order_output=False)

@@ -1995,8 +1995,8 @@ def links_from_pages(
 ) -> DataFrame:
     """(id, link_pos, href, anchor) from a DataFrame of page strings —
     one regexp pass per capture group, row-local, so it applies to a
-    STREAMING DataFrame unchanged (streaming/stream.py wraps it as
-    streaming_link_extract)."""
+    STREAMING DataFrame unchanged (tests/test_streaming.py pins the
+    parity)."""
     ex = pages.select(
         id_col,
         F.regexp_extract_all(html_col, F.lit(_A_TAG_RE), 1).alias("hrefs"),
@@ -2011,12 +2011,16 @@ def links_from_pages(
     )
 
 
+def _pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, html) of every synthetic page."""
+    docs = load_table(spark, sf_dir, "documents")
+    return docs.select("doc_id", _page_html(F.col("doc_id"), F.col("text")).alias("html"))
+
+
 def _links_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Links of every synthetic page (template nav/footer links + the
     generated absolute ones)."""
-    docs = load_table(spark, sf_dir, "documents")
-    pages = docs.select("doc_id", _page_html(F.col("doc_id"), F.col("text")).alias("html"))
-    return links_from_pages(pages)
+    return links_from_pages(_pages_df(spark, sf_dir))
 
 
 def q_link_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2170,9 +2174,9 @@ def canonical_url_col(url) -> "F.Column":
 
 
 def canonicalize_urls(noisy: DataFrame) -> DataFrame:
-    """Row-local canonical mapping (doc_id, url, canonical_url) — shared by
-    the batch rollup and streaming_url_canonicalize (where it is the
-    stateless in-stream stage)."""
+    """Row-local canonical mapping (doc_id, url, canonical_url) — the
+    batch rollup's input, and on a stream of links the stateless
+    in-stream stage."""
     return noisy.select(
         "doc_id", "url", canonical_url_col(F.col("url")).alias("canonical_url")
     )
@@ -2198,16 +2202,23 @@ def q_anchor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     lexicographically).  Shuffle keys are target URLs with
     map-side-combinable counts; the mode window's frame is the per-target
     anchor vocabulary — tiny per key at any corpus size."""
-    links = _links_df(spark, sf_dir).filter(F.col("href").startswith("https://"))
-    return anchor_stats_rollup(links)
+    return anchor_stats_rollup(anchor_rows(_pages_df(spark, sf_dir)))
+
+
+def anchor_rows(pages: DataFrame) -> DataFrame:
+    """(doc_id, href, anchor) of the absolute links on (doc_id, html)
+    pages — row-local, so on a stream of pages it is the stateless
+    in-stream stage of the anchor-stats table."""
+    return links_from_pages(pages).filter(
+        F.col("href").startswith("https://")
+    ).select("doc_id", "href", "anchor")
 
 
 def anchor_stats_rollup(links: DataFrame) -> DataFrame:
     """Per-target anchor aggregation over (doc_id, href, anchor) rows —
     shared by the batch query and foreachBatch streaming consumers (the
     chained agg + mode window is not a supported streaming state shape;
-    the in-stream stage is the stateless anchor extraction,
-    streaming_anchor_rows)."""
+    the in-stream stage is the stateless ``anchor_rows``)."""
     counts = links.groupBy("href", "anchor").agg(
         F.count(F.lit(1)).alias("n")
     )

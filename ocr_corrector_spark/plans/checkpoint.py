@@ -23,6 +23,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.bucketing import conv_bucket
+
 
 @dataclass
 class CheckpointedRun:
@@ -32,9 +34,7 @@ class CheckpointedRun:
     n_buckets: int = 16
 
     def with_bucket(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "bucket", F.pmod(F.xxhash64(F.col("conv_id")), F.lit(self.n_buckets))
-        )
+        return df.withColumn("bucket", conv_bucket(self.n_buckets))
 
     def committed_buckets(self, spark: SparkSession) -> set[int]:
         """Buckets watermarked for this run.  A watermark table with no

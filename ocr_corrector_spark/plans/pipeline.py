@@ -34,7 +34,6 @@ from ..operators.correct import (
     correction_config,
     single_pass_udf,
     unpack_result,
-    with_single_pass_correction,
 )
 from ..operators.detect import err_prob_key
 from ..operators.reassemble import order_turns
@@ -77,15 +76,17 @@ def correct_pipeline(
     the JVM join merge, never the Python stage, which lives on the build
     side behind the shuffle).  Rows and values are bit-identical to the
     default path (tests/test_dedup_correction.py)."""
-    cfg = cfg or correction_config()
+    udf = single_pass_udf(cfg or correction_config(), spark, row_counter)
     if dedup_correction:
-        out = _dedup_join(df, single_pass_udf(cfg, spark, row_counter))
-        if order_output:
-            out = order_turns(out)
+        out = _dedup_join(df, udf)
     else:
-        if order_output:
-            df = order_turns(df)
-        out = with_single_pass_correction(df, cfg, spark, row_counter)
+        df = order_turns(df) if order_output else df
+        out = df.withColumn(
+            "_corr", udf(F.col("text"), err_prob_key(F.col("probs")), F.col("tool"))
+        )
+    out = unpack_result(out, "_corr")
+    if dedup_correction and order_output:
+        out = order_turns(out)
     return out if keep_mode_col else out.drop("corr_mode")
 
 
@@ -98,24 +99,23 @@ def _dedup_join(df: DataFrame, udf) -> DataFrame:
     operators/detect.err_prob_key), so the key is exact while staying a
     few ints wide instead of one double per character — the probs arrays
     never enter the distinct, the shuffle, or the join hash tables.  The
-    UDF's struct result rides the join as one column and is unpacked
-    after it."""
+    UDF's struct result rides the join as one column, ``_corr``, which
+    correct_pipeline unpacks after it."""
     df = df.withColumn("_errk", err_prob_key(F.col("probs")))
     uniq = df.select(
         F.col("text").alias("_u_text"),
         F.col("_errk").alias("_u_errk"),
         F.col("tool").alias("_u_biz"),
     ).distinct()
-    uniq = uniq.withColumn("_u", udf("_u_text", "_u_errk", "_u_biz"))
+    uniq = uniq.withColumn("_corr", udf("_u_text", "_u_errk", "_u_biz"))
     cond = (
         F.col("text").eqNullSafe(F.col("_u_text"))
         & F.col("_errk").eqNullSafe(F.col("_u_errk"))
         & F.col("tool").eqNullSafe(F.col("_u_biz"))
     )
-    out = df.join(uniq.hint("SHUFFLE_HASH"), cond, "left").drop(
+    return df.join(uniq.hint("SHUFFLE_HASH"), cond, "left").drop(
         "_errk", "_u_text", "_u_errk", "_u_biz"
     )
-    return unpack_result(out, "_u")
 
 
 def changed_rows(df: DataFrame) -> DataFrame:

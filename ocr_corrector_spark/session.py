@@ -47,7 +47,6 @@ def host_driver_heap() -> str:
 def get_spark(
     app_name: str = "ocr_corrector_spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """local[cpus] session with AQE + Arrow enabled.
@@ -59,12 +58,13 @@ def get_spark(
     handles runtime skew-join splitting and partition coalescing, Arrow
     batches bound Python-worker memory for the UDF stage.
 
-    ``shuffle_partitions`` defaults to one partition per core: the
+    ``spark.sql.shuffle.partitions`` is one partition per core: the
     ordering shuffle sets the task count of the Python UDF stage, and
     range partitioning already balances the rows, so tasks beyond the
     task slots add no parallelism.  What they do add is per-task cost
     that no row pays for: scheduling, shipping the UDF and its broadcast
-    config, and one Arrow stream each way.
+    config, and one Arrow stream each way.  ``extra_conf`` is applied
+    last, so it overrides this or any other conf set here.
 
     Python workers start from ``pyworker`` (``spark.python.daemon.module``),
     which takes Spark's jar and, when it is the installed PySpark's
@@ -77,12 +77,10 @@ def get_spark(
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cpus())
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -90,12 +88,6 @@ def get_spark(
         # regardless of input partition size
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # stragglers: occasional tasks blocked on environment flakiness get
-        # speculatively re-launched — the standard cluster answer, effective
-        # in local mode too
-        .config("spark.speculation", "true")
-        .config("spark.speculation.multiplier", "2")
-        .config("spark.speculation.quantile", "0.75")
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or host_driver_heap(),

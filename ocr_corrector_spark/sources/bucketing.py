@@ -17,7 +17,15 @@ at 10^12 rows and ~2GB tasks that is O(10^4-10^5) buckets.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+
+def conv_bucket(n_buckets: int) -> Column:
+    """``pmod(xxhash64(conv_id), n_buckets)`` — the bucket column the
+    checkpointed run (plans/checkpoint.py) and the parquet fallback of
+    sources/iceberg.py both write."""
+    return F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets))
 
 
 def write_bucketed(

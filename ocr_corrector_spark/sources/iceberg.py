@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .bucketing import conv_bucket
+
 ICEBERG_CATALOG_IMPL = "org.apache.iceberg.spark.SparkCatalog"
 ICEBERG_EXTENSIONS = (
     "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions"
@@ -100,11 +102,7 @@ def write_transcripts(
             writer.append()
         return
     # parquet fallback: materialize the bucket Iceberg would hide
-    from pyspark.sql import functions as F
-
-    bucketed = df.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets))
-    )
+    bucketed = df.withColumn("bucket", conv_bucket(n_buckets))
     if mode == "overwrite_partitions":
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         bucketed.write.mode("overwrite").partitionBy("bucket").parquet(target)

@@ -1,22 +1,10 @@
 from .stateful import assemble_conversations, streaming_neardup
-from .stream import (
-    streaming_anchor_rows,
-    streaming_correct,
-    streaming_dedup,
-    streaming_interval_join,
-    streaming_link_extract,
-    streaming_metrics,
-    streaming_url_canonicalize,
-)
+from .stream import streaming_dedup, streaming_interval_join, streaming_metrics
 
 __all__ = [
-    "streaming_anchor_rows",
-    "streaming_correct",
     "streaming_dedup",
     "streaming_interval_join",
-    "streaming_link_extract",
     "streaming_metrics",
-    "streaming_url_canonicalize",
     "assemble_conversations",
     "streaming_neardup",
 ]

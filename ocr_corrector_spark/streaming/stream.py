@@ -1,38 +1,32 @@
 """Structured Streaming variant of the correction pipeline.
 
 The reference is batch-only (SURVEY.md §2g), but a transcripts table at
-10^12-turn scale is fed continuously; this module runs the SAME operator
-graph (native err_prob_key → the single extraction + correction Arrow
-UDF) over a ``readStream`` source.  Every stage is stateless/narrow, so
-the stream needs no state store; the optional windowed metrics stream
-uses a watermark for late turns.
+10^12-turn scale is fed continuously; the batch plan runs unchanged over
+a ``readStream`` source (native err_prob_key → the single extraction +
+correction Arrow UDF).  Every stage is stateless/narrow, so the stream
+needs no state store; ``order_output`` stays off, because a global sort
+is undefined on an unbounded stream (sinks cluster by (conv_id,
+turn_idx) per micro-batch instead).  The optional windowed metrics
+stream uses a watermark for late turns.
 
 Typical wiring::
 
     src = spark.readStream.schema(schema).parquet(in_dir)
-    q = streaming_correct(src, spark).writeStream \
+    q = correct_pipeline(src, spark, order_output=False).writeStream \
         .format("parquet").option("path", out_dir) \
         .option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+
+The page-side transforms are the batch functions too: operators/sqlops'
+``links_from_pages``, ``canonicalize_urls`` and ``anchor_rows`` are
+row-local, so they apply to a stream as they stand; their rollups
+(``url_canonicalize_rollup``, ``anchor_stats_rollup``) run inside
+foreachBatch.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..plans.pipeline import correct_pipeline
-
-
-def streaming_correct(stream_df: DataFrame, spark: SparkSession, **pipeline_kwargs) -> DataFrame:
-    """The batch plan applied to a streaming DataFrame.  ``order_output``
-    is off (global sort is undefined on an unbounded stream — downstream
-    sinks cluster by (conv_id, turn_idx) per micro-batch instead).
-    ``pipeline_kwargs`` pass through to correct_pipeline — a
-    ``cfg=correction_config(scorer_backend=...)`` works on streams exactly
-    as in batch (the correction stage is stateless)."""
-    return correct_pipeline(
-        stream_df, spark, order_output=False, **pipeline_kwargs
-    )
 
 
 def streaming_dedup(
@@ -127,43 +121,3 @@ def streaming_interval_join(
         F.col("r.r_ts").alias("view_ts"),
         F.col("r.r_value").alias("view_value"),
     )
-
-
-def streaming_link_extract(stream_df: DataFrame) -> DataFrame:
-    """Link inventory over a STREAM of pages — the crawler-feed shape:
-    each micro-batch of (doc_id, html) rows yields its (doc_id, link_pos,
-    href, anchor) anchors via the same row-local regexp pass as the batch
-    q_link_extract, so the transform is stateless (no watermark, no state
-    store) and parity with batch is exact per page."""
-    from ..operators.sqlops import links_from_pages
-
-    return links_from_pages(stream_df)
-
-
-def streaming_url_canonicalize(noisy_links: DataFrame) -> DataFrame:
-    """Canonical URL mapping over a STREAM of extracted (doc_id, url)
-    links: the same fixed regexp_replace chain as the batch
-    q_url_canonicalize's mapping stage — row-local, stateless, exact
-    per-link parity.  The frontier-dedup rollup (count + two
-    countDistincts) is not a supported streaming state shape; run
-    operators.sqlops.url_canonicalize_rollup inside foreachBatch (with an
-    availableNow trigger the single batch equals the batch query
-    bit-for-bit)."""
-    from ..operators.sqlops import canonicalize_urls
-
-    return canonicalize_urls(noisy_links)
-
-
-def streaming_anchor_rows(stream_df: DataFrame) -> DataFrame:
-    """Anchor-text rows (doc_id, href, anchor) over a STREAM of pages —
-    the stateless in-stream stage of the anchor-stats table: the same
-    row-local extraction as batch, filtered to absolute targets.  The
-    per-target rollup with the modal anchor (chained aggs + rank window)
-    belongs in foreachBatch via operators.sqlops.anchor_stats_rollup."""
-    from pyspark.sql import functions as F
-
-    from ..operators.sqlops import links_from_pages
-
-    return links_from_pages(stream_df).filter(
-        F.col("href").startswith("https://")
-    ).select("doc_id", "href", "anchor")

@@ -54,7 +54,7 @@ def main() -> None:
     from ocr_corrector_spark.session import get_spark
     from ocr_corrector_spark.sources.transcripts import gen_transcripts
 
-    spark = get_spark(app_name="explain", cpus=8)
+    spark = get_spark(app_name="explain")
     spark.sparkContext.setLogLevel("ERROR")
 
     only = set(sys.argv[1:])

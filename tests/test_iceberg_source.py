@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+from ocr_corrector_spark.plans.checkpoint import CheckpointedRun
 from ocr_corrector_spark.sources.iceberg import (
     ICEBERG_CATALOG_IMPL,
     iceberg_available,
@@ -40,6 +41,11 @@ def test_parquet_fallback_roundtrip(spark, tmp_path):
     assert back.count() == df.count()
     # bucket-partitioned layout on disk
     assert any(d.startswith("bucket=") for d in os.listdir(path))
+    # each row sits in the bucket a checkpointed run gives its conversation
+    on_disk = spark.read.parquet(path).select("conv_id", "turn_idx", "bucket")
+    run = CheckpointedRun(run_id="r", output_path="", watermark_path="", n_buckets=8)
+    want = run.with_bucket(df).select("conv_id", "turn_idx", "bucket")
+    assert sorted(on_disk.collect()) == sorted(want.collect())
 
 
 def test_overwrite_partitions_idempotent(spark, tmp_path):

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 from ocr_corrector_spark.operators.correct import correction_config
 from ocr_corrector_spark.plans.pipeline import correct_pipeline
 from ocr_corrector_spark.sources.transcripts import gen_transcripts
-from ocr_corrector_spark.streaming import streaming_correct, streaming_metrics
+from ocr_corrector_spark.streaming import streaming_metrics
 
 
 @pytest.fixture(scope="module")
@@ -24,7 +24,7 @@ def test_streaming_matches_batch(spark, stream_input, tmp_path):
     out_dir = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     q = (
-        streaming_correct(src, spark)
+        correct_pipeline(src, spark, order_output=False)
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", ckpt)
@@ -50,7 +50,7 @@ def test_streaming_matches_batch(spark, stream_input, tmp_path):
 def test_streaming_windowed_metrics(spark, stream_input, tmp_path):
     in_dir, schema = stream_input
     src = spark.readStream.schema(schema).parquet(in_dir)
-    corrected = streaming_correct(src, spark)
+    corrected = correct_pipeline(src, spark, order_output=False)
     metrics = streaming_metrics(corrected, window="10 minutes", watermark="5 minutes")
     q = (
         metrics.writeStream.format("memory")
@@ -70,14 +70,16 @@ def test_streaming_windowed_metrics(spark, stream_input, tmp_path):
 
 
 def test_streaming_lm_backend_matches_batch_lm(spark, stream_input, tmp_path):
-    """The numpy masked-LM backend on a stream: scorer options pass through
-    streaming_correct, the per-worker checkpoint singleton loads inside
+    """The numpy masked-LM backend on a stream: the config works on a
+    stream as in batch, the per-worker checkpoint singleton loads inside
     streaming tasks, and output equals the batch lm run row-for-row."""
     in_dir, schema = stream_input
     src = spark.readStream.schema(schema).parquet(in_dir)
     out_dir = str(tmp_path / "out_lm")
     q = (
-        streaming_correct(src, spark, cfg=correction_config(scorer_backend="lm"))
+        correct_pipeline(
+            src, spark, correction_config(scorer_backend="lm"), order_output=False
+        )
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", str(tmp_path / "ckpt_lm"))
@@ -183,24 +185,17 @@ def test_streaming_interval_join_matches_batch(spark, tmp_path):
     assert len(streamed) == n_batch
 
 
-def test_streaming_link_extract_matches_batch(spark, tmp_path):
-    from ocr_corrector_spark.operators.sqlops import (
-        _page_html,
-        links_from_pages,
-    )
-    from ocr_corrector_spark.sources.tables import load_table
-    from ocr_corrector_spark.streaming import streaming_link_extract
+def test_stream_links_match_batch(spark, tmp_path):
+    from ocr_corrector_spark.operators.sqlops import _pages_df, links_from_pages
 
     sf_dir = "/root/testdata/sf0.001"
-    pages = load_table(spark, sf_dir, "documents").select(
-        "doc_id", _page_html(F.col("doc_id"), F.col("text")).alias("html")
-    )
+    pages = _pages_df(spark, sf_dir)
     in_dir = str(tmp_path / "pages")
     pages.write.mode("overwrite").parquet(in_dir)
 
     src = spark.readStream.schema(pages.schema).parquet(in_dir)
     q = (
-        streaming_link_extract(src)
+        links_from_pages(src)
         .writeStream.format("memory")
         .queryName("links_stream")
         .outputMode("append")
@@ -216,7 +211,7 @@ def test_streaming_link_extract_matches_batch(spark, tmp_path):
     assert len(streamed) > 0
 
 
-def test_streaming_link_extract_replayed_late_feed_matches_batch(spark, tmp_path):
+def test_stream_links_replayed_late_feed_match_batch(spark, tmp_path):
     """Exact link-layer parity under at-least-once delivery: a feed where
     pages are REPLAYED (duplicate doc_id) and arrive LATE (event time
     behind rows already seen) still yields exactly the batch link
@@ -229,10 +224,7 @@ def test_streaming_link_extract_replayed_late_feed_matches_batch(spark, tmp_path
         links_from_pages,
     )
     from ocr_corrector_spark.sources.tables import load_table
-    from ocr_corrector_spark.streaming import (
-        streaming_dedup,
-        streaming_link_extract,
-    )
+    from ocr_corrector_spark.streaming import streaming_dedup
 
     sf_dir = "/root/testdata/sf0.001"
     docs = load_table(spark, sf_dir, "documents")
@@ -254,7 +246,7 @@ def test_streaming_link_extract_replayed_late_feed_matches_batch(spark, tmp_path
     src = spark.readStream.schema(pages.schema).parquet(in_dir)
     deduped = streaming_dedup(src, keys=("doc_id",), watermark="10 minutes")
     q = (
-        streaming_link_extract(deduped.select("doc_id", "html"))
+        links_from_pages(deduped.select("doc_id", "html"))
         .writeStream.format("memory")
         .queryName("links_replayed")
         .outputMode("append")
@@ -274,7 +266,7 @@ def test_streaming_link_extract_replayed_late_feed_matches_batch(spark, tmp_path
     assert len(streamed) > 0
 
 
-def test_streaming_url_canonicalize_matches_batch(spark, tmp_path):
+def test_stream_url_canonicalize_matches_batch(spark, tmp_path):
     """Streaming canonical mapping is stateless and exactly the batch
     mapping per link; the foreachBatch-style rollup over the streamed rows
     reproduces q_url_canonicalize bit-for-bit."""
@@ -285,7 +277,6 @@ def test_streaming_url_canonicalize_matches_batch(spark, tmp_path):
         q_url_canonicalize,
         url_canonicalize_rollup,
     )
-    from ocr_corrector_spark.streaming import streaming_url_canonicalize
 
     sf_dir = "/root/testdata/sf0.001"
     noisy = _noisy_url(
@@ -296,7 +287,7 @@ def test_streaming_url_canonicalize_matches_batch(spark, tmp_path):
 
     src = spark.readStream.schema(noisy.schema).parquet(in_dir)
     q = (
-        streaming_url_canonicalize(src)
+        canonicalize_urls(src)
         .writeStream.format("memory")
         .queryName("canon_stream")
         .outputMode("append")
@@ -319,27 +310,24 @@ def test_streaming_url_canonicalize_matches_batch(spark, tmp_path):
     )
 
 
-def test_streaming_anchor_rows_matches_batch(spark, tmp_path):
+def test_stream_anchor_rows_match_batch(spark, tmp_path):
     """Streaming anchor extraction is stateless; the foreachBatch-style
     rollup over the streamed rows reproduces q_anchor_stats exactly."""
     from ocr_corrector_spark.operators.sqlops import (
-        _page_html,
+        _pages_df,
+        anchor_rows,
         anchor_stats_rollup,
         q_anchor_stats,
     )
-    from ocr_corrector_spark.sources.tables import load_table
-    from ocr_corrector_spark.streaming import streaming_anchor_rows
 
     sf_dir = "/root/testdata/sf0.001"
-    pages = load_table(spark, sf_dir, "documents").select(
-        "doc_id", _page_html(F.col("doc_id"), F.col("text")).alias("html")
-    )
+    pages = _pages_df(spark, sf_dir)
     in_dir = str(tmp_path / "pages_anchor")
     pages.write.mode("overwrite").parquet(in_dir)
 
     src = spark.readStream.schema(pages.schema).parquet(in_dir)
     q = (
-        streaming_anchor_rows(src)
+        anchor_rows(src)
         .writeStream.format("memory")
         .queryName("anchor_stream")
         .outputMode("append")

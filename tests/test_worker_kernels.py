@@ -71,7 +71,7 @@ def test_worker_equals_reference_kernels(rows):
     texts, errs, modes = (list(c) for c in zip(*rows))
     out = _WORKER.correct_batch(texts, errs, modes)
     assert out == [_reference(*r) for r in rows]
-    info = _WORKER.char_sim.shape_similarity.cache_info()
+    info = _char_sim().shape_similarity.cache_info()
     assert info.currsize <= info.maxsize
 
 
