@@ -19,8 +19,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rules import MAX_SEQ_LENGTH, PROB_THRESHOLD
 
-# base_corrector.py:125 — CJK block used by the correctability filters
-_CJK_CLASS = "[一-龥]"
+# base_corrector.py:125 — the CJK block's complement, for counting CJK chars
 _NON_CJK_CLASS = "[^一-龥]"
 # base_corrector.py:124 — ASCII + fullwidth alphabet
 _ALPHABET_CLASS = "[a-zA-ZＡ-Ｚａ-ｚ]"

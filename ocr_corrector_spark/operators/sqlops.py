@@ -428,8 +428,6 @@ def q_simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- dedup: 64-bit SimHash (scale-hardened band width) --------------------------------------
-SIMHASH64_BAND_BITS = 16
-SIMHASH64_BANDS = 4  # 4 bands x 16 bits over the 64-bit signature
 SIMHASH64_HAMMING_MAX = 3  # pigeonhole: <=3 differing bits ⇒ some band agrees
 
 

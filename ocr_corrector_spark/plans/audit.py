@@ -2,11 +2,14 @@
 (BASELINE.json north_rule requirement; reference analog: the log-only
 counters at base_corrector.py:58,71 promoted to real aggregates).
 
-Audit rows are written per run: one row per physical input partition
-(``spark_partition_id``) with row/correction counts and key ranges, plus
-a per-biz rollup.  The write is an append to a run-id-partitioned parquet
-table (Iceberg-ready: swap ``.write`` for ``.writeTo`` when an Iceberg
-catalog is configured — this sandbox has no Iceberg runtime jar).
+Audit rows are written per run: one row per physical partition
+(``spark_partition_id``) of the audited frame with row/correction counts
+and key ranges, plus a per-biz rollup.  In a checkpointed run that frame
+is the wave's buckets read back from the output files, so a row covers
+one partition of that scan.  The write is an append to a
+run-id-partitioned parquet table (Iceberg-ready: swap ``.write`` for
+``.writeTo`` when an Iceberg catalog is configured — this sandbox has no
+Iceberg runtime jar).
 """
 
 from __future__ import annotations
@@ -15,19 +18,6 @@ import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-AUDIT_SCHEMA_COLS = (
-    "run_id",
-    "partition_id",
-    "n_rows",
-    "n_corrected",
-    "n_eligible",
-    "min_conv_id",
-    "max_conv_id",
-    "min_ts",
-    "max_ts",
-    "created_at",
-)
 
 
 def _eligible_expr(df: DataFrame):

@@ -76,12 +76,13 @@ class CheckpointedRun:
 
         ``post_write(out_df, wave)`` — optional per-wave hook (audit
         writes); ``wave`` is the bucket list, so the hook can key its own
-        writes idempotently per wave (plans/audit.write_audit does).  The
-        wave's corrected frame is persisted across the output write and the
-        hook, so the expensive correction UDF executes ONCE per wave: the
-        write materializes the cache, the hook's actions read it.  (Calling
-        audit writes inside ``transform`` instead would re-execute the full
-        pipeline once per extra action — a 3x compute bill at scale.)"""
+        writes idempotently per wave (plans/audit.write_audit does).
+        ``out_df`` is the wave's buckets read back from ``output_path``,
+        a partition-pruned parquet scan of the files the write just made,
+        so the expensive correction UDF executes ONCE per wave: in the
+        write.  (Handing the hook the transformed frame itself would
+        re-execute the full pipeline once per hook action — a 3x compute
+        bill at scale.)"""
         # Idempotence depends on DYNAMIC partition overwrite: with the
         # default static mode every wave's write would wipe the buckets
         # committed by earlier waves.  The session a cluster submit hands
@@ -99,21 +100,14 @@ class CheckpointedRun:
             waves = waves[:max_waves]
         completed = 0
         for wave in waves:
-            subset = bucketed.filter(F.col("bucket").isin([int(b) for b in wave]))
-            out = transform(subset)
+            in_wave = F.col("bucket").isin([int(b) for b in wave])
+            out = transform(bucketed.filter(in_wave))
+            out.write.mode("overwrite").partitionBy("bucket").parquet(self.output_path)
             if post_write is not None:
-                out = out.persist()
-            try:
-                (
-                    out.write.mode("overwrite")
-                    .partitionBy("bucket")
-                    .parquet(self.output_path)
-                )
-                if post_write is not None:
-                    post_write(out, wave)
-            finally:
-                if post_write is not None:
-                    out.unpersist()
+                # out's schema: no footer inference, and a wave whose
+                # buckets wrote no rows reads back empty
+                written = spark.read.schema(out.schema).parquet(self.output_path)
+                post_write(written.filter(in_wave), wave)
             self._commit(spark, wave)
             completed += len(wave)
         return completed

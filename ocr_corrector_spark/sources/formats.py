@@ -1,4 +1,4 @@
-"""Multi-format transcript sources: parquet / JSON-lines / CSV.
+"""Multi-format transcript sources: parquet / JSON-lines / CSV / Iceberg.
 
 The engine's table of record is Iceberg/parquet (sources/iceberg.py), but
 real ingestion feeds arrive as JSON-lines dumps or CSV exports; this
@@ -15,7 +15,11 @@ Format quirks handled here, once:
 * CSV: no nested types — probs arrive as a JSON-encoded string column
   (``from_json`` back to array<double>); ts as ISO-8601.  Text fields are
   quoted/escaped by the writer (``spark.write.csv`` defaults round-trip).
-* parquet: native types end-to-end.
+* parquet: native types end-to-end; a bucket-partitioned layout
+  (sources/iceberg.write_transcripts' fallback) reads with its ``bucket``
+  column projected away.
+* iceberg: ``path`` is a catalog table name (``lake.db.transcripts``),
+  read through the session's Iceberg catalog.
 
 ``write_transcripts`` is the matching writer (tests round-trip through
 it), mirroring how an upstream dump job would lay the feed out.
@@ -34,6 +38,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampNTZType,
 )
+
+from .iceberg import require_iceberg
 
 TRANSCRIPT_FIELDS = [
     StructField("conv_id", StringType()),
@@ -64,7 +70,7 @@ _CSV_WIRE = StructType(
     ]
 )
 
-FORMATS = ("parquet", "json", "csv")
+FORMATS = ("parquet", "json", "csv", "iceberg")
 
 
 def read_transcripts(
@@ -110,13 +116,18 @@ def read_transcripts(
             F.to_timestamp("ts").cast("timestamp_ntz").alias("ts"),
             F.from_json("probs", ArrayType(DoubleType())).alias("probs"),
         )
+    if format == "iceberg":
+        require_iceberg(spark, path)
+        return spark.read.table(path).select([f.name for f in TRANSCRIPT_FIELDS])
     raise ValueError(f"unsupported transcripts format: {format!r} (use {FORMATS})")
 
 
 def write_transcripts(
     df: DataFrame, path: str, format: str = "parquet", mode: str = "overwrite"
 ) -> None:
-    """The matching feed writer (upstream-dump shape; tests round-trip)."""
+    """The matching feed writer for the file formats (upstream-dump
+    shape; tests round-trip); sources/iceberg.write_transcripts writes a
+    catalog table."""
     if format == "parquet":
         df.select([f.name for f in TRANSCRIPT_FIELDS]).write.mode(mode).parquet(path)
         return
@@ -136,4 +147,4 @@ def write_transcripts(
         )
         out.write.mode(mode).option("header", "true").option("escape", '"').csv(path)
         return
-    raise ValueError(f"unsupported transcripts format: {format!r} (use {FORMATS})")
+    raise ValueError(f"unsupported transcripts format: {format!r} (use parquet, json or csv)")

@@ -2,18 +2,18 @@
 
 BASELINE.json north_rule frames the input as an **Iceberg table** of
 multi-turn transcripts.  This sandbox ships no Iceberg runtime jar, so
-every entry point here degrades to a parquet path with the same
-semantics (bucket-partitioned layout, dynamic partition overwrite for
-idempotent rewrites); on a cluster with the jar, the identical calls go
-through the Iceberg catalog: hidden-partitioned ``bucket(N, conv_id)``
-DDL, ``writeTo(...).append() / overwritePartitions()``, snapshot reads.
+the writer here degrades to a parquet path with the same semantics
+(bucket-partitioned layout, dynamic partition overwrite for idempotent
+rewrites); on a cluster with the jar, the identical calls go through the
+Iceberg catalog: ``writeTo(...).append() / overwritePartitions()``.  A
+catalog table is read by ``sources/formats.read_transcripts`` with
+``format="iceberg"``.
 
 Wiring on a real cluster::
 
+    from ocr_corrector_spark.session import get_spark
     from ocr_corrector_spark.sources.iceberg import iceberg_confs
-    builder = SparkSession.builder.appName(...)
-    for k, v in iceberg_confs("lake", "s3://bucket/warehouse").items():
-        builder = builder.config(k, v)
+    spark = get_spark(extra_conf=iceberg_confs("lake", "s3://bucket/warehouse"))
     # spark-submit --packages org.apache.iceberg:iceberg-spark-runtime-...
 """
 
@@ -27,22 +27,6 @@ ICEBERG_CATALOG_IMPL = "org.apache.iceberg.spark.SparkCatalog"
 ICEBERG_EXTENSIONS = (
     "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions"
 )
-
-# schema of record (SURVEY.md §1; input_hint) — the transcripts DDL,
-# hidden-partitioned so writers/readers never manage partition columns
-TRANSCRIPTS_DDL = """
-CREATE TABLE IF NOT EXISTS {table} (
-    conv_id  string,
-    turn_idx int,
-    role     string,
-    text     string,
-    tool     string,
-    ts       timestamp,
-    probs    array<double>
-)
-USING iceberg
-PARTITIONED BY (bucket({n_buckets}, conv_id), days(ts))
-"""
 
 
 def iceberg_confs(catalog: str, warehouse: str, impl: str = "hadoop") -> dict:
@@ -65,11 +49,14 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-def create_transcripts_table(
-    spark: SparkSession, table: str, n_buckets: int = 256
-) -> None:
-    """Issue the transcripts DDL (requires an Iceberg catalog)."""
-    spark.sql(TRANSCRIPTS_DDL.format(table=table, n_buckets=n_buckets))
+def require_iceberg(spark: SparkSession, table: str) -> None:
+    """Raise unless the Iceberg runtime can serve catalog table ``table``."""
+    if not iceberg_available(spark):
+        raise RuntimeError(
+            f"'{table}' looks like an Iceberg table name but no Iceberg "
+            "runtime is on the classpath; pass a filesystem path for the "
+            "parquet fallback or add iceberg-spark-runtime to the session"
+        )
 
 
 def write_transcripts(
@@ -89,12 +76,7 @@ def write_transcripts(
         # catalog table name — valid only with the Iceberg runtime; a
         # silent parquet fallback here would scatter directories named
         # 'cat.db.table' into the cwd
-        if not iceberg_available(spark):
-            raise RuntimeError(
-                f"'{target}' looks like an Iceberg table name but no Iceberg "
-                "runtime is on the classpath; pass a filesystem path for the "
-                "parquet fallback or add iceberg-spark-runtime to the session"
-            )
+        require_iceberg(spark, target)
         writer = df.writeTo(target)
         if mode == "overwrite_partitions":
             writer.overwritePartitions()
@@ -108,20 +90,3 @@ def write_transcripts(
         bucketed.write.mode("overwrite").partitionBy("bucket").parquet(target)
     else:
         bucketed.write.mode("append").partitionBy("bucket").parquet(target)
-
-
-def read_transcripts(spark: SparkSession, source: str) -> DataFrame:
-    """Read an Iceberg table name or a parquet path fallback; drops the
-    fallback's materialized bucket column so both paths yield the
-    input_hint schema."""
-    if "/" not in source:
-        if not iceberg_available(spark):
-            raise RuntimeError(
-                f"'{source}' looks like an Iceberg table name but no Iceberg "
-                "runtime is on the classpath; pass a filesystem path for the "
-                "parquet fallback or add iceberg-spark-runtime to the session"
-            )
-        df = spark.read.table(source)
-    else:
-        df = spark.read.parquet(source)
-    return df.drop("bucket") if "bucket" in df.columns else df

@@ -16,8 +16,11 @@ On a real cluster::
 
 Resumable: re-submitting with the same --run-id skips committed buckets
 (plans/checkpoint.py); output converges to the clean-run result via
-dynamic partition overwrite.  In this sandbox it runs on local[N] against
-the synthetic generator when --input is omitted.
+dynamic partition overwrite.  Under spark-submit the job runs in the
+submitted session, master and confs as given; started as
+``python scripts/run_job.py`` (no master) it runs in ``get_spark``'s
+local session.  Without --input it corrects the synthetic generator's
+table (--n-convs conversations).
 """
 
 from __future__ import annotations
@@ -28,18 +31,35 @@ import os
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import SparkSession  # noqa: E402
+
 from ocr_corrector_spark.operators.correct import SCORER_BACKENDS  # noqa: E402
+from ocr_corrector_spark.session import get_spark  # noqa: E402
+from ocr_corrector_spark.sources.formats import FORMATS, read_transcripts  # noqa: E402
+
+APP_NAME = "ocr-correct-job"
 
 
-def main() -> None:
+def job_session() -> SparkSession:
+    """The submitted session under spark-submit, master and confs as
+    given; ``get_spark``'s when started without a master (plain
+    ``python``).  spark-submit starts this script with a gateway to its
+    JVM already up (``PYSPARK_GATEWAY_PORT``, as PySpark itself checks)."""
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        return SparkSession.builder.appName(APP_NAME).getOrCreate()
+    return get_spark(app_name=APP_NAME)
+
+
+def build_parser() -> argparse.ArgumentParser:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", default=None, help="transcripts feed path (default: synthetic)")
     ap.add_argument(
         "--input-format",
-        choices=("parquet", "json", "csv"),
+        choices=FORMATS,
         default="parquet",
         help="feed format; JSON/CSV read through explicit wire schemas "
-        "into the canonical transcripts schema (sources/formats.py)",
+        "into the canonical transcripts schema, iceberg reads --input as a "
+        "catalog table name (sources/formats.py)",
     )
     ap.add_argument("--output", required=True)
     ap.add_argument("--audit", required=True)
@@ -63,23 +83,23 @@ def main() -> None:
         "committed pure-numpy masked LM (functions/numpy_lm.py — real "
         "checkpoint load + forward pass + top-k)",
     )
-    args = ap.parse_args()
+    return ap
 
-    from pyspark.sql import SparkSession
+
+def main() -> None:
+    args = build_parser().parse_args()
 
     from ocr_corrector_spark.operators.correct import correction_config
     from ocr_corrector_spark.plans.audit import write_audit
     from ocr_corrector_spark.plans.checkpoint import CheckpointedRun
     from ocr_corrector_spark.plans.pipeline import correct_pipeline
 
-    spark = SparkSession.builder.appName("ocr-correct-job").getOrCreate()
-    if spark.sparkContext.master.startswith("local") and args.input is None:
+    spark = job_session()
+    if args.input is None:
         from ocr_corrector_spark.sources.transcripts import gen_transcripts
 
         df = gen_transcripts(spark, n_convs=args.n_convs)
     else:
-        from ocr_corrector_spark.sources.formats import read_transcripts
-
         df = read_transcripts(spark, args.input, format=args.input_format)
 
     run = CheckpointedRun(
@@ -100,9 +120,9 @@ def main() -> None:
     def transform(d):
         return correct_pipeline(d, spark, cfg, keep_mode_col=True)
 
-    # Audit as a post-write hook: the wave's frame is persisted across the
-    # output write and both audit actions, so the correction UDF runs once
-    # per wave (not 3x).
+    # Audit as a post-write hook over the wave's files read back from the
+    # output, so the correction UDF runs once per wave (in the write), not
+    # once more per audit action.
     done = run.run(
         spark,
         df,

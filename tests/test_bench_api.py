@@ -5,6 +5,8 @@ signatures — so a signature change breaks here, not only in a run."""
 
 import dataclasses
 import inspect
+import os
+import runpy
 
 from ocr_corrector_spark.operators.correct import (
     CorrectionConfig,
@@ -15,6 +17,7 @@ from ocr_corrector_spark.operators.fused import fused_correct
 from ocr_corrector_spark.plans.audit import write_audit
 from ocr_corrector_spark.plans.checkpoint import CheckpointedRun
 from ocr_corrector_spark.plans.pipeline import correct_pipeline
+from ocr_corrector_spark.sources.formats import FORMATS
 
 DF, SPARK, CFG = object(), object(), object()
 
@@ -44,6 +47,13 @@ def test_run_job_call_forms_bind():
     run = CheckpointedRun(run_id="r", output_path="o", watermark_path="w", n_buckets=8)
     inspect.signature(run.run).bind(SPARK, DF, lambda d: d, post_write=lambda out, wave: None)
     inspect.signature(write_audit).bind(DF, "r", "a", wave=[0])
+
+
+def test_run_job_reads_every_format():
+    run_job = os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts", "run_job.py")
+    parser = runpy.run_path(run_job)["build_parser"]()
+    [input_format] = [a for a in parser._actions if a.dest == "input_format"]
+    assert tuple(input_format.choices) == FORMATS
 
 
 def test_streaming_call_form_binds():

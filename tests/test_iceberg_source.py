@@ -1,21 +1,25 @@
-"""Iceberg source/sink integration (sources/iceberg.py).
+"""Iceberg source/sink integration (sources/iceberg.py, and the
+"iceberg" format of sources/formats.read_transcripts).
 
 No Iceberg runtime jar ships in this sandbox, so these tests pin the
 fallback semantics (bucket-partitioned parquet, dynamic-overwrite
-idempotence, schema round-trip) and the catalog-conf wiring that a real
-cluster submit would use.
+idempotence, schema round-trip through the one transcripts reader), the
+error a catalog table name raises without the runtime, and the
+catalog-conf wiring that a real cluster submit would use.
 """
 
 from __future__ import annotations
 
 import os
 
+import pytest
+
 from ocr_corrector_spark.plans.checkpoint import CheckpointedRun
+from ocr_corrector_spark.sources.formats import read_transcripts
 from ocr_corrector_spark.sources.iceberg import (
     ICEBERG_CATALOG_IMPL,
     iceberg_available,
     iceberg_confs,
-    read_transcripts,
     write_transcripts,
 )
 from ocr_corrector_spark.sources.transcripts import gen_transcripts
@@ -30,6 +34,11 @@ def test_iceberg_confs_shape():
 
 def test_not_available_in_sandbox(spark):
     assert iceberg_available(spark) is False
+
+
+def test_catalog_table_needs_the_iceberg_runtime(spark):
+    with pytest.raises(RuntimeError, match="no Iceberg runtime"):
+        read_transcripts(spark, "lake.db.t", format="iceberg")
 
 
 def test_parquet_fallback_roundtrip(spark, tmp_path):

@@ -130,9 +130,9 @@ def _run_counted(spark, tmp_path, df, run_id, **kw):
 
 
 def test_correction_executes_once_per_row_with_audit(spark, tmp_path):
-    """The audit hook must not re-execute the correction UDF: the wave's
-    frame is persisted across the output write and both audit actions
-    (VERDICT r01 'What's wrong' #1 — the 3x recompute bill).  The UDF's
+    """The audit hook must not re-execute the correction UDF: both audit
+    actions read the wave's buckets back from the files the output write
+    made (VERDICT r01 'What's wrong' #1 — the 3x recompute bill).  The UDF's
     struct result is unpacked into three columns without Catalyst copying
     the UDF into each field reference."""
     df = gen_transcripts(spark, n_convs=20)
@@ -202,6 +202,24 @@ def test_corrupt_watermarks_raise(spark, tmp_path):
         run.committed_buckets(spark)
     with pytest.raises(Exception):
         run.run(spark, gen_transcripts(spark, n_convs=4), lambda d: d)
+
+
+def test_waves_without_rows_read_back_empty(spark, tmp_path):
+    """A wave whose buckets hold no rows writes no files; its hook still
+    gets the wave read back from the output, empty, even when no earlier
+    wave has written a file to read a schema from."""
+    run = CheckpointedRun("empty", str(tmp_path / "out"), str(tmp_path / "wm"), n_buckets=4)
+    # only the last bucket's conversations: the first three waves are empty
+    last = run.with_bucket(gen_transcripts(spark, n_convs=20)).filter(F.col("bucket") == 3)
+    df = last.drop("bucket")
+    n_rows = df.count()
+    assert n_rows > 0
+    seen = {}
+    run.run(
+        spark, df, lambda d: d, wave_size=1,
+        post_write=lambda out, wave: seen.update({wave[0]: out.count()}),
+    )
+    assert seen == {0: 0, 1: 0, 2: 0, 3: n_rows}
 
 
 @pytest.mark.parametrize("resume_wave_size", [2, 4, 1], ids=["same", "larger", "one"])

@@ -1,6 +1,9 @@
 """Session defaults are sized from the host the job starts on."""
 
+import json
 import os
+import subprocess
+import sys
 
 from pyspark.sql import functions as F
 
@@ -68,3 +71,47 @@ def test_workers_skip_the_spark_jar_and_the_bundled_pyspark_zip(spark):
         assert ".jar" not in key
         real = os.path.realpath(key)
         assert real != bundled and not real.startswith(bundled + os.sep)
+
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# prints the session scripts/run_job.py runs in, as one JSON line
+_JOB_SESSION = f"""
+import json, runpy
+s = runpy.run_path({os.path.join(REPO, "scripts", "run_job.py")!r})["job_session"]()
+print(json.dumps([s.sparkContext.master,
+                  s.conf.get("spark.python.daemon.module", None),
+                  s.conf.get("spark.sql.shuffle.partitions")]))
+s.stop()
+"""
+
+
+def _job_session(tmp_path, *launcher):
+    script = tmp_path / "job_session.py"
+    script.write_text(_JOB_SESSION)
+    env = {
+        k: v
+        for k, v in os.environ.items()
+        if k not in ("PYSPARK_GATEWAY_PORT", "PYSPARK_GATEWAY_SECRET", "SPARK_GRAFT_CPUS")
+    }
+    out = subprocess.run(
+        [*launcher, str(script)], env=env, cwd=REPO, capture_output=True, text=True,
+        timeout=300, check=True,
+    ).stdout
+    return json.loads(out.strip().splitlines()[-1])
+
+
+def test_job_started_without_a_master_runs_in_get_sparks_session(tmp_path):
+    cpus = host_cpus()
+    assert _job_session(tmp_path, sys.executable) == [
+        f"local[{cpus}]",
+        pyworker.__name__,
+        str(cpus),
+    ]
+
+
+def test_job_under_spark_submit_keeps_the_submitted_session(tmp_path):
+    submit = os.path.join(os.environ["SPARK_HOME"], "bin", "spark-submit")
+    master, daemon, _ = _job_session(tmp_path, submit, "--master", "local[2]")
+    assert master == "local[2]"
+    assert daemon is None  # get_spark's confs were not laid over the submit
