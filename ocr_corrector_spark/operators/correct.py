@@ -10,13 +10,15 @@ Two UDFs call the same ``correct_batch`` loop:
 
 * ``single_pass_udf`` — the default plan's ONE Python crossing
   (plans/pipeline.correct_pipeline): a scalar Arrow UDF over
-  ``(text, err_prob_key, biz)`` that extracts, tests eligibility and
-  corrects, returning ``struct<text, corr_mode, text_corrected>``.  The
-  probs-threshold half of detection (operators/detect.err_prob_key) stays
-  native, so the wide ``probs`` arrays and every other column stay in the
-  JVM.  Its body is ``_Corrector.correct_rows``, which runs the distinct
-  rows it has not seen through ``extract_any`` → ``route_rows`` →
-  ``correct_batch``.
+  ``(text, probs, biz)`` that extracts, detects, tests eligibility and
+  corrects, returning ``struct<text, corr_mode, text_corrected>``.  It
+  works on whole batches: ``_err_keys`` thresholds ``probs`` with numpy
+  over the list array's offsets and values (the dedup plan passes its
+  native ``err_prob_key`` column instead, which is taken as the key), the
+  strings come through ``to_numpy``, and ``route_rows`` tests the
+  eligibility filters over the batch's code points at once.  Its body is
+  ``_Corrector.correct_rows``, which runs the distinct rows it has not
+  seen through ``extract_any`` → ``route_rows`` → ``correct_batch``.
 * ``with_dispatched_correction`` — a pandas UDF over a natively computed
   ``(text, err_pos, corr_mode)``, for callers that build their own
   detection columns (perfbench's layer ladder).
@@ -35,10 +37,18 @@ and tasks:
   similarity with a bounded memo on ``shape_similarity``
   (``_keyword_index`` and ``_char_sim``, shared by every config);
 * one ``_Corrector`` per config (``_corrector``): the candidate scorer,
-  the batch scorer, and a bounded FIFO memo from the single crossing's
-  input triple ``(text, err_prob_key, biz)`` to its output row — the
-  identity the dedup plan (plans/pipeline.py) already relies on.
-The correction itself is embarrassingly parallel — no shuffle.
+  the batch scorer, a bounded memo of the BERT route's decision per
+  ``(original, observed)`` character pair, and a bounded FIFO memo from
+  the single crossing's input triple ``(text, err_prob_key, biz)`` to its
+  output row — the identity the dedup plan (plans/pipeline.py) already
+  relies on.
+
+The keyword route matches its structural template by position
+(functions/correct_kernels.positional_candidates) rather than compiling a
+regex per row.  The oracle (oracle/reference_oracle.py) keeps the regex
+and the uncached candidate scan, so the tests compare two
+implementations.  The correction itself is embarrassingly parallel — no
+shuffle.
 """
 
 from __future__ import annotations
@@ -47,6 +57,7 @@ import functools
 from collections import OrderedDict
 from dataclasses import dataclass
 
+import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -57,11 +68,13 @@ from ..assets import DEFAULT_TOPN, KEYWORDS
 from ..assets.scorer_table import SCORER_TABLE, default_candidates
 from ..functions.bktree import BKTree, FilteredIndex
 from ..functions.correct_kernels import (
+    accepted_candidate,
     bert_correct_one,
     bert_correct_one_framed,
     keyword_correct_one,
+    positional_candidates,
 )
-from ..functions.rules import do_correct_filter_bert, do_correct_filter_keyword
+from ..functions.rules import MAX_SEQ_LENGTH, PROB_THRESHOLD
 from .extract import extract_any
 
 SCORER_BACKENDS = ("table", "framed", "lm")
@@ -69,6 +82,7 @@ SCORER_BACKENDS = ("table", "framed", "lm")
 KEYWORD_SIMILARITY = 0.55
 _ROW_CACHE_MAX = 200_000
 _SIM_CACHE_MAX = 65_536
+_DECISION_CACHE_MAX = 65_536
 
 RESULT_TYPE = StructType(
     [
@@ -203,6 +217,12 @@ class _Corrector:
             return cands
 
         self.scorer = scorer
+        # the BERT route's decision per (original, observed) character
+        # pair; like _char_sim's memo, lru_cache stores no call that raises
+        self.decide = functools.lru_cache(maxsize=_DECISION_CACHE_MAX)(self._decide)
+
+    def _decide(self, original: str, observed: str) -> str | None:
+        return accepted_candidate(original, self.scorer(observed), _char_sim(), DEFAULT_TOPN)
 
     @functools.cached_property
     def batch_scorer(self):
@@ -242,12 +262,16 @@ class _Corrector:
                 out.append(t)
             elif m == 1:
                 out.append(
-                    keyword_correct_one(t, e, tree, kwset, char_sim, KEYWORD_SIMILARITY)
+                    keyword_correct_one(
+                        t, e, tree, kwset, char_sim, KEYWORD_SIMILARITY, positional_candidates
+                    )
                 )
             elif i in scored:
                 out.append(scored[i])
             else:
-                out.append(bert_correct_one(t, e, char_sim, self.scorer, DEFAULT_TOPN))
+                out.append(
+                    bert_correct_one(t, e, char_sim, self.scorer, DEFAULT_TOPN, self.decide)
+                )
         return out
 
     def correct_rows(self, texts: list, err_keys: list, bizes: list) -> list:
@@ -301,28 +325,78 @@ def route_rows(texts: list, err_keys: list, bizes: list) -> tuple[list, list]:
     sub-threshold positions, or None for null probs (every position is
     suspect — the reference's non-prob path).  Biz ``report`` routes to
     the keyword corrector, anything else to bert (corrector/__init__.py:
-    20-38).  A null text is never eligible."""
+    20-38).  A null text is never eligible.
+
+    The filters (functions/rules.do_correct_filter_keyword / _bert) run
+    over the batch at once: one UTF-32 encoding of the joined texts, and
+    per-row counts from cumulative sums at the row boundaries."""
+    present = [t for t in texts if t is not None]
+    lens = np.fromiter(map(len, present), np.int64, len(present))
+    cps = np.frombuffer("".join(present).encode("utf-32-le", "surrogatepass"), np.uint32)
+    ends = np.cumsum(lens)
+
+    def per_row(hit):
+        total = np.concatenate(([0], np.cumsum(hit)))
+        return total[ends] - total[ends - lens]
+
+    cjk = per_row((cps >= 0x4E00) & (cps <= 0x9FA5))  # [一-龥]
+    alpha = per_row(  # [a-zA-ZＡ-Ｚａ-ｚ]
+        ((cps >= 0x61) & (cps <= 0x7A))
+        | ((cps >= 0x41) & (cps <= 0x5A))
+        | ((cps >= 0xFF21) & (cps <= 0xFF3A))
+        | ((cps >= 0xFF41) & (cps <= 0xFF5A))
+    )
+    report = np.array([b == "report" for t, b in zip(texts, bizes) if t is not None], bool)
+    eligible = np.where(
+        report, cjk >= 2, (alpha == 0) & (cjk >= 3) & (lens <= MAX_SEQ_LENGTH - 2)
+    ).tolist()
     modes, errs = [], []
+    it = iter(eligible)
     for t, k, b in zip(texts, err_keys, bizes):
         mode, err = 0, None
-        if t is not None:
-            report = b == "report"
-            if do_correct_filter_keyword(t) if report else do_correct_filter_bert(t):
-                err = list(range(len(t))) if k is None else k
-                if err:
-                    mode = 1 if report else 2
+        if t is not None and next(it):
+            err = list(range(len(t))) if k is None else k
+            if err:
+                mode = 1 if b == "report" else 2
         modes.append(mode)
         errs.append(err)
     return modes, errs
+
+
+def _err_keys(col: pa.Array) -> list:
+    """Memo keys from the correction UDF's second column, one per row: a
+    tuple of positions, or None for a null array.  A ``probs`` column
+    (list of float or double) gives operators/detect.err_prob_key's value:
+    the positions whose value is below ``PROB_THRESHOLD``, compared in
+    float64 as Spark compares ``element_at(probs, i + 1) < 0.9``.  A list
+    of ints is taken as the key itself (the dedup plan's ``_errk``)."""
+    offsets = col.offsets.to_numpy()
+    lo, hi = int(offsets[0]), int(offsets[-1])
+    starts = offsets - lo
+    values = col.values.slice(lo, hi - lo).to_numpy(zero_copy_only=False)
+    if pa.types.is_floating(col.type.value_type):
+        # a null element reads as NaN, which compares False, as the null
+        # comparison does in Spark's filter
+        below = values.astype(np.float64) < PROB_THRESHOLD
+        pos = (np.arange(hi - lo) - np.repeat(starts[:-1], np.diff(starts)))[below]
+        starts = np.concatenate(([0], np.cumsum(below)))[starts]
+    else:
+        pos = values
+    flat, bounds = pos.tolist(), starts.tolist()
+    keys = [tuple(flat[a:b]) for a, b in zip(bounds, bounds[1:])]
+    if col.null_count:
+        valid = col.is_valid().to_numpy(zero_copy_only=False).tolist()
+        keys = [k if v else None for k, v in zip(keys, valid)]
+    return keys
 
 
 def single_pass_udf(
     cfg: CorrectionConfig, spark: SparkSession | None = None, row_counter=None
 ):
     """The single-crossing scalar Arrow UDF
-    ``(text, err_prob_key, biz) → RESULT_TYPE``: extraction, eligibility
-    and correction per batch, as ``pa.Array`` in and out with no pandas
-    conversion.
+    ``(text, probs or err_prob_key, biz) → RESULT_TYPE``: extraction,
+    eligibility and correction per batch, as ``pa.Array`` in and out with
+    no pandas conversion; ``_err_keys`` reads its second column.
 
     ``row_counter``: optional Spark accumulator; the UDF adds the batch
     size per invocation — tests use it to assert the expensive stage
@@ -332,11 +406,13 @@ def single_pass_udf(
     bc_cfg = spark.sparkContext.broadcast(cfg)
 
     @F.arrow_udf(RESULT_TYPE)
-    def correct_rows(text: pa.Array, err_key: pa.Array, biz: pa.Array) -> pa.Array:
+    def correct_rows(text: pa.Array, errs: pa.Array, biz: pa.Array) -> pa.Array:
         if row_counter is not None:
             row_counter.add(len(text))
         rows = _corrector(bc_cfg.value).correct_rows(
-            text.to_pylist(), err_key.to_pylist(), biz.to_pylist()
+            text.to_numpy(zero_copy_only=False).tolist(),
+            _err_keys(errs),
+            biz.to_numpy(zero_copy_only=False).tolist(),
         )
         return pa.array(rows, _RESULT_ARROW)
 

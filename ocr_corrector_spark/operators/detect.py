@@ -1,15 +1,21 @@
 """Error detection as native Catalyst expressions (operators F1-F3).
 
 The reference runs these per row in Python (base_corrector.py:54-119);
-here they are declarative column expressions that Catalyst keeps inside
-whole-stage codegen.  The default pipeline computes only the
-probs-threshold half natively (``err_prob_key``), so the wide ``probs``
-array never crosses into Python; the eligibility filters F1/F2 run inside
-its single correction UDF (functions/rules.do_correct_filter_*, the
-Python twins of ``eligible_keyword`` / ``eligible_bert``), because they
-apply to the EXTRACTED text, which only exists on the Python side.
+here they are declarative column expressions.  The default pipeline uses
+none of them: its single correction UDF reads ``probs`` itself and
+derives ``err_prob_key``'s value with numpy (operators/correct._err_keys),
+because ``err_prob_key`` is a higher-order ``filter``, which Spark runs
+element by element in its interpreter rather than in generated code.
+The eligibility filters F1/F2 run inside that UDF too
+(operators/correct.route_rows, the batch form of
+functions/rules.do_correct_filter_*), because they apply to the
+EXTRACTED text, which only exists on the Python side.
+
+``err_prob_key`` is the dedup plan's distinct and join key
+(plans/pipeline.py), where a few ints stand in for the probs array.
 ``eligible_keyword`` / ``eligible_bert`` / ``err_positions`` stay as the
-all-native form for callers that build their own detection columns.
+all-native form for callers that build their own detection columns, and
+as the SQL analogs of the reference's filters.
 """
 
 from __future__ import annotations
@@ -54,11 +60,12 @@ def err_positions(text: Column, probs: Column) -> Column:
 def err_prob_key(probs: Column) -> Column:
     """The probs-only factor of ``err_positions``: the sub-threshold index
     set for non-null probs (empty for empty probs), and NULL for null
-    probs.  The key is text-extraction-independent, so the pipeline
-    computes it natively on raw rows: it is the only detection input
-    that crosses into the correction UDF, and the dedup plan's join key
-    — orders of magnitude smaller than the probs array itself
-    (plans/pipeline.py)."""
+    probs.  The key is text-extraction-independent, so the dedup plan
+    computes it natively on raw rows as its distinct and join key — orders
+    of magnitude smaller than the probs array itself (plans/pipeline.py).
+    The default plan's correction UDF computes the same key from
+    ``probs`` in the worker (operators/correct._err_keys);
+    tests/test_err_key_parity.py pins the two equal."""
     empty = F.array().cast("array<int>")
     idx = F.sequence(F.lit(0), F.size(probs) - 1)
     # guard size==0: sequence(0,-1) would produce a DESCENDING range

@@ -3,10 +3,10 @@
 Physical stage order (chosen from .explain — see BENCH/PLANS.md):
 
   scan → repartitionByRange(conv_id, turn_idx) + sortWithinPartitions
-       → native err_prob_key(probs) (the probs-threshold half of detection)
-       → ONE scalar Arrow UDF (text, err_prob_key, biz)
+       → ONE scalar Arrow UDF (text, probs, biz)
          → struct<text, corr_mode, text_corrected>
-         (extraction → eligibility → dispatched correction)
+         (the probs-threshold key → extraction → eligibility →
+         dispatched correction)
        → native unpack of the struct
 
 Ordering runs FIRST, on the cheap scan: a range shuffle placed after the
@@ -15,8 +15,12 @@ UDF stage is narrow (row-order preserving), so sorting the input yields
 sorted output for free.  Range partitioning (vs hash) splits skewed
 conv_ids across contiguous partitions — no hot executor.
 
-One crossing per turn: only the three narrow UDF inputs travel to Python;
-``probs``, ``ts`` and every other column stay in the JVM.  The per-biz
+One crossing per turn: only the three UDF inputs travel to Python; ``ts``
+and every other column stay in the JVM.  ``probs`` crosses whole, and the
+worker thresholds it with numpy over the batch's Arrow buffers
+(operators/correct._err_keys): the native twin, detect.err_prob_key, is a
+higher-order ``filter`` that Spark does not compile, so it ran element by
+element in the JVM's interpreter.  The per-biz
 dispatch mirrors the reference's corrector registry
 (corrector/__init__.py:20-38: biz 'report' → keyword corrector, 'doc' →
 BERT corrector) inside that one UDF — no DataFrame split/merge (the
@@ -81,9 +85,7 @@ def correct_pipeline(
         out = _dedup_join(df, udf)
     else:
         df = order_turns(df) if order_output else df
-        out = df.withColumn(
-            "_corr", udf(F.col("text"), err_prob_key(F.col("probs")), F.col("tool"))
-        )
+        out = df.withColumn("_corr", udf(F.col("text"), F.col("probs"), F.col("tool")))
     out = unpack_result(out, "_corr")
     if dedup_correction and order_output:
         out = order_turns(out)

@@ -2,8 +2,8 @@
 
 The reference is batch-only (SURVEY.md §2g), but a transcripts table at
 10^12-turn scale is fed continuously; the batch plan runs unchanged over
-a ``readStream`` source (native err_prob_key → the single extraction +
-correction Arrow UDF).  Every stage is stateless/narrow, so the stream
+a ``readStream`` source (the single Arrow UDF over ``(text, probs,
+tool)``: detection, extraction and correction).  Every stage is stateless/narrow, so the stream
 needs no state store; ``order_output`` stays off, because a global sort
 is undefined on an unbounded stream (sinks cluster by (conv_id,
 turn_idx) per micro-batch instead).  The optional windowed metrics

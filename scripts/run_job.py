@@ -1,10 +1,13 @@
 #!/usr/bin/env python3
 """Cluster job entrypoint — the spark-submit form of the flagship pipeline.
 
-On a real cluster::
+On a real cluster, with the package on the executors' PYTHONPATH (or
+installed there) so that the worker daemon can import it::
 
-    zip -r engine.zip ocr_corrector_spark
-    spark-submit --py-files engine.zip \
+    spark-submit \
+        --conf spark.sql.shuffle.partitions=<total cores> \
+        --conf spark.python.daemon.module=ocr_corrector_spark.pyworker \
+        --conf spark.executorEnv.PYTHONPATH=<dir holding ocr_corrector_spark> \
         --conf spark.sql.adaptive.enabled=true \
         --conf spark.sql.adaptive.skewJoin.enabled=true \
         scripts/run_job.py \

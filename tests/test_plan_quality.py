@@ -67,25 +67,26 @@ def _udf_args(plan: str) -> list[str]:
     return args + [cur.strip()]
 
 
-def test_default_plan_crosses_into_python_once(spark):
+def test_default_plan_crosses_into_python_once(spark, tmp_path):
     # the default pipeline crosses the JVM<->Python boundary ONCE per row:
-    # extraction, eligibility and correction share one scalar Arrow UDF,
-    # while the probs-threshold half of detection stays native
+    # extraction, detection, eligibility and correction share one scalar
+    # Arrow UDF, which reads its error key from the probs array itself
     from ocr_corrector_spark.plans.pipeline import correct_pipeline
     from ocr_corrector_spark.sources.transcripts import gen_transcripts
 
-    df = correct_pipeline(gen_transcripts(spark, n_convs=20), spark)
-    plan = _plan(df)
+    # a stored table, so the plan holds no generator expressions
+    path = str(tmp_path / "transcripts")
+    gen_transcripts(spark, n_convs=20).write.parquet(path)
+    plan = _plan(correct_pipeline(spark.read.parquet(path), spark))
     assert plan.count("ArrowEvalPython") == 1, plan
     assert "MapInArrow" not in plan and "MapInPandas" not in plan, plan
-    # the prob-threshold array filter is a visible JVM expression
-    assert "filter(sequence(" in plan, plan
-    # the UDF's inputs are text, the native err_prob_key and the biz
-    # column; the probs array itself is not one of them
-    text, err_key, biz = _udf_args(plan)
-    assert text.startswith("text#") and biz.startswith("tool#"), plan
-    assert "filter(sequence(" in err_key, err_key
-    assert not any(a.startswith("probs#") for a in (text, err_key, biz))
+    # no higher-order array filter runs in the JVM: Spark generates no
+    # code for it, so it would run element by element in the interpreter
+    assert "filter(" not in plan and "sequence(" not in plan, plan
+    text, probs, biz = _udf_args(plan)
+    assert text.startswith("text#"), plan
+    assert probs.startswith("probs#"), plan
+    assert biz.startswith("tool#"), plan
 
 
 def test_image_stats_scan_reads_only_doc_id(spark):

@@ -19,9 +19,17 @@ from ocr_corrector_spark.functions import BKTree, CharSim
 from ocr_corrector_spark.functions.correct_kernels import (
     bert_correct_one,
     keyword_correct_one,
+    positional_candidates,
+    regex_candidates,
 )
+from ocr_corrector_spark.functions.rules import do_correct_filter_bert, do_correct_filter_keyword
 from ocr_corrector_spark.operators import correct
-from ocr_corrector_spark.operators.correct import _char_sim, _Corrector, correction_config
+from ocr_corrector_spark.operators.correct import (
+    _char_sim,
+    _Corrector,
+    correction_config,
+    route_rows,
+)
 
 _REF_TREE = BKTree(KEYWORDS)
 _REF_KWSET = frozenset(_REF_TREE.words)
@@ -33,8 +41,15 @@ CJK = "".join(
     sorted(c for c in set("".join(KEYWORDS)) | set(SCORER_TABLE) if "一" <= c <= "龥")
 ) + "宋全数大龘"
 # punctuation and Latin (unknown to char_meta: their pairs raise
-# ZeroDivisionError), digits, and astral-plane characters
-ODD = "，。()/%" + string.ascii_letters[:6] + "0123456789" + "\U00020000\U0002a6d6"
+# ZeroDivisionError), digits, astral-plane characters, and the regex
+# metacharacters and newline that send the keyword route to its regex
+ODD = (
+    "，。()/%"
+    + string.ascii_letters[:6]
+    + "0123456789"
+    + "\U00020000\U0002a6d6"
+    + ".^$*+?{}[]\\|\n"
+)
 
 
 @st.composite
@@ -87,6 +102,103 @@ def test_worker_equals_reference_kernels(rows):
 def test_unknown_pair_passes_the_row_through(text, errs, mode):
     assert _WORKER.correct_batch([text], [errs], [mode]) == [text]
     assert _reference(text, errs, mode) == text
+
+
+@pytest.mark.parametrize(
+    "text, errs, mode",
+    [
+        ("宋还.全", [0, 1, 3], 1),  # '.' matches 本 as the reference regex does
+        ("宋还本.", [0, 3], 1),  # a metacharacter at an error position
+        ("宋还本全\n", [0, 3], 1),  # '$' also matches before a final newline
+        ("宋还本全", [0, 3, 5], 1),  # positions past the end of the text
+        ("宋还本全", [1, 2, 3, 7], 1),
+        ("宋还本全", [3, 0], 1),  # unsorted
+        ("宋还本全", [0, 0, 3], 1),  # repeated
+        ("我爱北京大安门", [4, 9], 2),
+        ("我爱北京大安门", [4, 4], 2),
+    ],
+)
+def test_template_edge_cases_equal_the_reference(text, errs, mode):
+    assert _WORKER.correct_batch([text], [errs], [mode]) == [_reference(text, errs, mode)]
+
+
+def test_dot_in_the_text_matches_a_keyword_character():
+    assert _reference("宋还.全", [0, 1, 3], 1) == "未还.金"
+
+
+_TEMPLATE_CHARS = "未还本金宋全.$()\\\n"
+
+
+@given(
+    st.text(st.sampled_from(_TEMPLATE_CHARS), min_size=1, max_size=5),
+    st.lists(st.integers(-1, 6), max_size=3),
+    st.lists(st.text(st.sampled_from(_TEMPLATE_CHARS), max_size=6), max_size=6),
+)
+@settings(max_examples=500, deadline=None)
+def test_positional_filter_equals_the_regex(text, errs, found):
+    try:
+        expected = regex_candidates(text, errs, found)
+    except Exception as exc:  # an invalid template or position
+        with pytest.raises(type(exc)):
+            positional_candidates(text, errs, found)
+    else:
+        assert positional_candidates(text, errs, found) == expected
+
+
+# the filters' class boundaries: around [一-龥], [a-zA-Z] and [Ａ-Ｚａ-ｚ]
+_ROUTE_CHARS = (
+    "\u4dff一中龥\u9fa6@AZ[`az{\uff20ＡＺ\uff3b\uff40ａｚ\uff5b 1\U00020000\ud800"
+)
+
+
+@given(
+    st.lists(
+        st.tuples(
+            st.none() | st.text(st.sampled_from(_ROUTE_CHARS), max_size=64),
+            st.none() | st.lists(st.integers(0, 3), max_size=2),
+            st.sampled_from(["report", "doc", None]),
+        ),
+        max_size=8,
+    )
+)
+@settings(max_examples=300, deadline=None)
+def test_route_rows_equals_the_rule_filters(rows):
+    texts, keys, bizes = (list(c) for c in zip(*rows)) if rows else ([], [], [])
+    expected_modes, expected_errs = [], []
+    for t, k, b in rows:
+        mode, err = 0, None
+        if t is not None and (
+            do_correct_filter_keyword(t) if b == "report" else do_correct_filter_bert(t)
+        ):
+            err = list(range(len(t))) if k is None else k
+            mode = (1 if b == "report" else 2) if err else 0
+        expected_modes.append(mode)
+        expected_errs.append(err)
+    assert route_rows(texts, keys, bizes) == (expected_modes, expected_errs)
+
+
+def test_decision_memo_is_bounded_and_never_stores_a_raising_pair(monkeypatch):
+    monkeypatch.setattr(correct, "_DECISION_CACHE_MAX", 8)
+    worker = _Corrector(correction_config())
+    decide = worker.decide
+    for _ in range(3):
+        with pytest.raises(ZeroDivisionError):
+            decide("a", "a")  # Latin has no char_meta
+    assert decide.cache_info().currsize == 0
+    texts = ["未还本金大安门广场"] * len(CJK)
+    errs = [[i % 9] for i in range(len(CJK))]
+    for _ in range(2):
+        out = worker.correct_batch(
+            [t[: e[0]] + c + t[e[0] + 1 :] for t, e, c in zip(texts, errs, CJK)],
+            errs,
+            [2] * len(CJK),
+        )
+        info = decide.cache_info()
+        assert info.currsize <= info.maxsize == 8
+    assert info.currsize == 8
+    assert out == [
+        _reference(t[: e[0]] + c + t[e[0] + 1 :], e, 2) for t, e, c in zip(texts, errs, CJK)
+    ]
 
 
 def test_memo_never_stores_a_raising_pair():
