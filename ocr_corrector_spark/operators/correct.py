@@ -58,7 +58,6 @@ from collections import OrderedDict
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -449,6 +448,11 @@ def with_dispatched_correction(
     Spark analog of the reference's biz_type registry
     (corrector/__init__.py:20-38) without per-row Python objects.
     ``cfg=None`` is ``correction_config()``."""
+    # imported here, not at module level, so that the single crossing's
+    # workers never load pandas; bound as a module global because
+    # pandas_udf resolves the hints below against the module's globals
+    global pd
+    import pandas as pd
     spark = spark or SparkSession.getActiveSession()
     bc_cfg = spark.sparkContext.broadcast(cfg or correction_config())
 

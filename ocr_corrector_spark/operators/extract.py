@@ -22,7 +22,6 @@ parallel, no shuffle.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
@@ -58,6 +57,11 @@ def extract_any(text: str) -> str:
 
 def with_extraction(df: DataFrame, out_col: str = "text") -> DataFrame:
     """``extract_any`` of the ``text`` column, written to ``out_col``."""
+    # imported here, not at module level, so that the single crossing's
+    # workers never load pandas; bound as a module global because
+    # pandas_udf resolves the hints below against the module's globals
+    global pd
+    import pandas as pd
 
     @F.pandas_udf(StringType())
     def extract_udf(text: pd.Series) -> pd.Series:

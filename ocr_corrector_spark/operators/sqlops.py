@@ -908,11 +908,10 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("dropped", F.lit(1))
     )
-    # dropped is output-bounded (near-dup count, a small fraction of the
-    # corpus) — broadcast it against the full table, the same shape as
-    # q_group_representative's drop-list join
+    # no broadcast hint: the drop list grows with the near-dup mass, so
+    # the join strategy is left to its size (AQE broadcasts it when small)
     return (
-        m.join(F.broadcast(dropped), "vec_id", "left")
+        m.join(dropped, "vec_id", "left")
         .select(
             "vec_id",
             "centroid_id",

@@ -288,13 +288,11 @@ def test_bruteforce_eval_guard_passes_bounded_input(spark):
     assert sqlops.q_embedding_neardup(spark, SF_DIR).count() >= 0
 
 
-def test_semantic_dedup_keep_rule_brute_force(spark):
-    """Every dropped vector has a smaller-id same-cluster neighbor within
-    SEMDEDUP_COS_MIN; every kept vector has none — recomputed brute-force
-    in numpy on the driver."""
+def _semdedup_run(spark, sf):
+    """``q_semantic_dedup``'s ``{vec_id: (centroid_id, keep)}`` on ``sf``
+    and the embeddings it read, as numpy vectors."""
     import numpy as np
 
-    sf = "/root/testdata/sf0.001"
     out = {r.vec_id: (r.centroid_id, r.keep)
            for r in sqlops.q_semantic_dedup(spark, sf).collect()}
     emb = {
@@ -302,31 +300,78 @@ def test_semantic_dedup_keep_rule_brute_force(spark):
         for r in sqlops.load_table(spark, sf, "embeddings").collect()
     }
     assert set(out) == set(emb)
+    return out, emb
+
+
+def _semdedup_brute_force_keep(out, emb):
+    """The keep rule recomputed in numpy on the driver: a vector is dropped
+    when a smaller-id vector of its cell — its cluster, sub-split by
+    ``vec_id mod ceil(n_cluster / SEMDEDUP_MAX_CLUSTER)`` — is within
+    SEMDEDUP_COS_MIN cosine."""
+    import math
+
+    import numpy as np
+
     by_cluster = {}
     for vid, (cid, _) in out.items():
         by_cluster.setdefault(cid, []).append(vid)
-    n_dropped = 0
-    for cid, vids in by_cluster.items():
-        vids.sort()
-        for i, v in enumerate(vids):
-            has_neighbor = False
-            for u in vids[:i]:
-                a, b = emb[u], emb[v]
-                cos = round(
-                    float(a @ b / (np.sqrt(a @ a) * np.sqrt(b @ b))), 6
+    keep = {}
+    for vids in by_cluster.values():
+        n_subs = math.ceil(len(vids) / sqlops.SEMDEDUP_MAX_CLUSTER)
+        cells = {}
+        for v in sorted(vids):
+            cells.setdefault(v % n_subs, []).append(v)
+        for cell in cells.values():
+            for i, v in enumerate(cell):
+                has_neighbor = any(
+                    round(float(emb[u] @ emb[v]
+                          / (np.sqrt(emb[u] @ emb[u]) * np.sqrt(emb[v] @ emb[v]))), 6)
+                    >= sqlops.SEMDEDUP_COS_MIN
+                    for u in cell[:i]
                 )
-                if cos >= sqlops.SEMDEDUP_COS_MIN:
-                    has_neighbor = True
-                    break
-            assert out[v][1] == (0 if has_neighbor else 1), (v, cid)
-            n_dropped += has_neighbor
-    assert n_dropped > 0, "fixture should contain semantic near-dups"
+                keep[v] = 0 if has_neighbor else 1
+    return keep
+
+
+def test_semantic_dedup_keep_rule_brute_force(spark):
+    """Every dropped vector has a smaller-id same-cluster neighbor within
+    SEMDEDUP_COS_MIN; every kept vector has none — recomputed brute-force
+    in numpy on the driver."""
+    out, emb = _semdedup_run(spark, "/root/testdata/sf0.001")
+    keep = _semdedup_brute_force_keep(out, emb)
+    assert {v: k for v, (_, k) in out.items()} == keep
+    assert 0 in keep.values(), "fixture should contain semantic near-dups"
+
+
+def test_semantic_dedup_keep_rule_on_heavy_duplicate_mass(spark, tmp_path):
+    """The drop list grows with the near-dup mass: with most vectors near
+    copies of a few bases, the keep flags still equal the brute-force rule."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(7)
+    bases = rng.normal(size=(24, 16))
+    copies = np.repeat(bases, 5, axis=0) + rng.normal(scale=0.05, size=(120, 16))
+    vecs = rng.permutation(np.vstack([bases, copies])).astype(np.float32)
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array(range(len(vecs)), pa.int64()),
+            "embedding": pa.array(list(vecs), pa.list_(pa.float32())),
+        }),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    out, emb = _semdedup_run(spark, str(tmp_path))
+    keep = _semdedup_brute_force_keep(out, emb)
+    assert {v: k for v, (_, k) in out.items()} == keep
+    assert list(keep.values()).count(0) >= 0.3 * len(keep)
 
 
 def test_semantic_dedup_plan_cluster_bounded(spark):
     """The pairwise stage is an equi-join on centroid_id (cluster-bounded);
-    the only nested loops are against the broadcast IVF_K-row codebook and
-    the drop-list joins back as a broadcast."""
+    the only nested loops are against the broadcast IVF_K-row codebook, and
+    the drop list, which grows with the near-dup mass, joins back with no
+    broadcast hint (AQE may still broadcast it when it is small)."""
     df = sqlops.q_semantic_dedup(spark, "/root/testdata/sf0.01")
     plan = df._jdf.queryExecution().executedPlan().toString()
     # corpus-vs-corpus pair generation must be a hash/merge equi-join
@@ -336,7 +381,9 @@ def test_semantic_dedup_plan_cluster_bounded(spark):
     import re
 
     assert plan.count("BroadcastNestedLoopJoin") <= 3, plan
-    assert "BroadcastHashJoin" in plan, plan  # drop-list joins broadcast
+    assert "BroadcastHashJoin" in plan, plan  # vectors join their assignment
+    # the drop list is not forced to broadcast
+    assert not re.search(r"BroadcastHashJoin \[[^\]]*\], \[[^\]]*\], LeftOuter", plan), plan
 
 
 def test_semantic_dedup_cluster_size_guard(spark, monkeypatch):
@@ -346,42 +393,18 @@ def test_semantic_dedup_cluster_size_guard(spark, monkeypatch):
     within a (centroid_id, sub_id) cell — recomputed brute-force with the
     same formula.  Also pins that the DuckDB oracle mirrors the split, so
     the correctness gate holds in the guarded regime too."""
-    import math as _math
-
     import duckdb
-    import numpy as np
 
     import __spark_entry__ as entry_mod
 
     sf = "/root/testdata/sf0.001"
     monkeypatch.setattr(sqlops, "SEMDEDUP_MAX_CLUSTER", 4)
-    out = {r.vec_id: (r.centroid_id, r.keep)
-           for r in sqlops.q_semantic_dedup(spark, sf).collect()}
-    emb = {
-        r.vec_id: np.array(r.embedding, dtype=np.float64)
-        for r in sqlops.load_table(spark, sf, "embeddings").collect()
-    }
-    by_cluster = {}
-    for vid, (cid, _) in out.items():
-        by_cluster.setdefault(cid, []).append(vid)
-    assert max(len(v) for v in by_cluster.values()) > 4, (
-        "fixture must exercise the split path"
-    )
-    for cid, vids in by_cluster.items():
-        n_subs = _math.ceil(len(vids) / 4)
-        cells = {}
-        for v in vids:
-            cells.setdefault(v % n_subs, []).append(v)
-        for cell in cells.values():
-            cell.sort()
-            for i, v in enumerate(cell):
-                has_neighbor = any(
-                    round(float(emb[u] @ emb[v]
-                          / (np.sqrt(emb[u] @ emb[u]) * np.sqrt(emb[v] @ emb[v]))), 6)
-                    >= sqlops.SEMDEDUP_COS_MIN
-                    for u in cell[:i]
-                )
-                assert out[v][1] == (0 if has_neighbor else 1), (v, cid)
+    out, emb = _semdedup_run(spark, sf)
+    sizes = {}
+    for cid, _ in out.values():
+        sizes[cid] = sizes.get(cid, 0) + 1
+    assert max(sizes.values()) > 4, "fixture must exercise the split path"
+    assert {v: k for v, (_, k) in out.items()} == _semdedup_brute_force_keep(out, emb)
 
     # oracle mirrors the same split: hash-equal under the patched cap
     con = duckdb.connect()

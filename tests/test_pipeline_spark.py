@@ -118,3 +118,32 @@ def test_no_rows_lost(spark):
     out = correct_pipeline(df, spark, order_output=False)
     assert out.count() == n_in
     assert out.filter(F.col("text_corrected").isNull()).count() == 0
+
+
+def test_staged_pandas_udfs_equal_the_single_crossing(spark):
+    """Extraction and correction as separate pandas UDFs over native
+    detection columns agree per turn with the default plan's one crossing
+    (their modules import pandas only where these UDFs are built)."""
+    from ocr_corrector_spark.operators.correct import with_dispatched_correction
+    from ocr_corrector_spark.operators.detect import (
+        eligible_bert,
+        eligible_keyword,
+        err_positions,
+    )
+    from ocr_corrector_spark.operators.extract import with_extraction
+
+    df = gen_transcripts(spark, n_convs=30)
+    text, is_report = F.col("text"), F.col("tool") == F.lit("report")
+    eligible = F.when(is_report, eligible_keyword(text)).otherwise(eligible_bert(text))
+    detected = with_extraction(df).withColumn("err_pos", err_positions(text, F.col("probs")))
+    detected = detected.withColumn(
+        "corr_mode",
+        F.when(~eligible | (F.size("err_pos") == 0), F.lit(0))
+        .when(is_report, F.lit(1))
+        .otherwise(F.lit(2)),
+    )
+    cols = ("conv_id", "turn_idx", "text_corrected")
+    staged = with_dispatched_correction(detected, spark=spark).select(*cols).collect()
+    single = correct_pipeline(df, spark, order_output=False).select(*cols).collect()
+    assert len(staged) > 100
+    assert sorted(staged) == sorted(single)
