@@ -38,6 +38,26 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # row.  Every query also stays covered by the committed self-run gate
     # (BENCH/CORRECTNESS_SELF.json, scripts/self_correctness.py).
     return {
+        "ngram_jaccard": q.q_ngram_jaccard,
+        "minhash_buckets": q.q_minhash_buckets,
+        "cosine_topk": q.q_cosine_topk,
+        "text_quality": q.q_text_quality,
+        "pricing_summary": q.q_pricing_summary,
+        "simhash": q.q_simhash,
+        "embedding_neardup": q.q_embedding_neardup,
+        "ann_lsh_buckets": q.q_ann_lsh_buckets,
+        "lang_id": q.q_lang_id,
+        "token_count": q.q_token_count,
+        "fingerprint": q.q_fingerprint,
+        "ivf_assign": q.q_ivf_assign,
+        "ivf_list_sizes": q.q_ivf_list_sizes,
+        "html_strip": q.q_html_strip,
+        "layout_strip": q.q_layout_strip,
+        "minhash_neardup_pairs": q.q_minhash_neardup_pairs,
+        "simhash_neardup_pairs": q.q_simhash_neardup_pairs,
+        "ann_probe_topk": q.q_ann_probe_topk,
+        "ivf_probe_topk": q.q_ivf_probe_topk,
+        "ivf_probe_recall": q.q_ivf_probe_recall,
         "conversation_dedup": q.q_conversation_dedup,
         "simhash64_neardup_pairs": q.q_simhash64_neardup_pairs,
         "image_stats": _image_stats,
@@ -88,26 +108,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "turn_reassembly": q.q_turn_reassembly,
         "exact_dedup": q.q_exact_dedup,
         "dedup_stats": q.q_dedup_stats,
-        "ngram_jaccard": q.q_ngram_jaccard,
-        "minhash_buckets": q.q_minhash_buckets,
-        "cosine_topk": q.q_cosine_topk,
-        "text_quality": q.q_text_quality,
-        "pricing_summary": q.q_pricing_summary,
-        "simhash": q.q_simhash,
-        "embedding_neardup": q.q_embedding_neardup,
-        "ann_lsh_buckets": q.q_ann_lsh_buckets,
-        "lang_id": q.q_lang_id,
-        "token_count": q.q_token_count,
-        "fingerprint": q.q_fingerprint,
-        "ivf_assign": q.q_ivf_assign,
-        "ivf_list_sizes": q.q_ivf_list_sizes,
-        "html_strip": q.q_html_strip,
-        "layout_strip": q.q_layout_strip,
-        "minhash_neardup_pairs": q.q_minhash_neardup_pairs,
-        "simhash_neardup_pairs": q.q_simhash_neardup_pairs,
-        "ann_probe_topk": q.q_ann_probe_topk,
-        "ivf_probe_topk": q.q_ivf_probe_topk,
-        "ivf_probe_recall": q.q_ivf_probe_recall,
     }
 
 

@@ -1,15 +1,14 @@
-"""Per-partition lineage + correction metrics audit table
+"""The checkpointed run's ledger: per-bucket lineage + correction metrics
 (BASELINE.json north_rule requirement; reference analog: the log-only
 counters at base_corrector.py:58,71 promoted to real aggregates).
 
-Audit rows are written per run: one row per physical partition
-(``spark_partition_id``) of the audited frame with row/correction counts
-and key ranges, plus a per-biz rollup.  In a checkpointed run that frame
-is the wave's buckets read back from the output files, so a row covers
-one partition of that scan.  The write is an append to a
-run-id-partitioned parquet table (Iceberg-ready: swap ``.write`` for
-``.writeTo`` when an Iceberg catalog is configured — this sandbox has no
-Iceberg runtime jar).
+One row per bucket of a wave: row/correction counts and key ranges, from
+one aggregation over the wave's buckets read back from the output files.
+The ledger is also the run's commit record (plans/checkpoint.py): a
+bucket is committed if and only if its row exists.  The write is a
+dynamic partition overwrite of a ``(run_id, wave)``-partitioned parquet
+table (Iceberg-ready: swap ``.write`` for ``.writeTo`` when an Iceberg
+catalog is configured; ``get_spark`` loads no Iceberg runtime jar).
 """
 
 from __future__ import annotations
@@ -20,106 +19,49 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _eligible_expr(df: DataFrame):
-    # pipeline exports eligibility as corr_mode (0 pass / 1 keyword /
-    # 2 bert) when called with keep_mode_col=True
-    if "corr_mode" in df.columns:
-        return F.sum((F.col("corr_mode") != 0).cast("long")).alias("n_eligible")
-    return F.lit(None).cast("long").alias("n_eligible")
+# columns a transform may drop; a counter over a missing one is null
+_OPTIONAL = (("text_corrected", "string"), ("corr_mode", "int"), ("ts", "timestamp"))
 
 
-def partition_lineage(df: DataFrame, run_id: str) -> DataFrame:
-    """One audit row per physical partition of the corrected DataFrame."""
-    return (
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(
-                (F.col("text") != F.col("text_corrected")).cast("long")
-            ).alias("n_corrected"),
-            _eligible_expr(df),
-            F.min("conv_id").alias("min_conv_id"),
-            F.max("conv_id").alias("max_conv_id"),
-            F.min("ts").alias("min_ts"),
-            F.max("ts").alias("max_ts"),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.col("_pid").alias("partition_id"),
-            "n_rows",
-            "n_corrected",
-            "n_eligible",
-            "min_conv_id",
-            "max_conv_id",
-            "min_ts",
-            "max_ts",
-            F.lit(int(time.time())).alias("created_at"),
-        )
+def write_audit(df: DataFrame, run_id: str, audit_path: str, wave) -> None:
+    """Write the ledger rows of ``wave`` (a list of buckets): one row per
+    bucket, ``n_rows = 0`` for a bucket ``df`` holds no rows of, so that
+    an empty bucket is committed too.
+
+    ``df`` is the wave's output read back; it has ``bucket``.  The rows
+    land in a ``(run_id, wave)`` partition via DYNAMIC partition
+    overwrite, so a replayed wave replaces its rows rather than adding to
+    them, and ``out_rows == ledger sum(n_rows)`` holds across
+    crash/replay, not just crash-free."""
+    spark = df.sparkSession
+    for name, dtype in _OPTIONAL:
+        if name not in df.columns:
+            df = df.withColumn(name, F.lit(None).cast(dtype))
+    counts = df.groupBy("bucket").agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum((F.col("text") != F.col("text_corrected")).cast("long")).alias("n_corrected"),
+        F.sum((F.col("corr_mode") != 0).cast("long")).alias("n_eligible"),
+        F.min("conv_id").alias("min_conv_id"),
+        F.max("conv_id").alias("max_conv_id"),
+        F.min("ts").alias("min_ts"),
+        F.max("ts").alias("max_ts"),
     )
-
-
-def biz_rollup(df: DataFrame, run_id: str) -> DataFrame:
-    """Correction metrics per biz/corrector route (`tool` column) — the
-    reference's log-only counters (base_corrector.py:58,71) per registry
-    entry."""
-    return (
-        df.groupBy("tool")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(
-                (F.col("text") != F.col("text_corrected")).cast("long")
-            ).alias("n_corrected"),
-            _eligible_expr(df),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            "tool",
-            "n_rows",
-            "n_corrected",
-            "n_eligible",
-            F.lit(int(time.time())).alias("created_at"),
-        )
+    buckets = spark.createDataFrame([(int(b),) for b in wave], "bucket long")
+    ledger = buckets.join(counts, "bucket", "left").select(
+        F.lit(run_id).alias("run_id"),
+        "bucket",
+        F.lit(int(min(wave))).alias("wave"),
+        F.coalesce("n_rows", F.lit(0)).alias("n_rows"),
+        "n_corrected",
+        "n_eligible",
+        "min_conv_id",
+        "max_conv_id",
+        "min_ts",
+        "max_ts",
+        F.lit(int(time.time())).alias("created_at"),
     )
-
-
-def write_audit(
-    df: DataFrame, run_id: str, audit_path: str, wave=None
-) -> None:
-    """Write lineage + per-biz rollup audit rows.
-
-    ``wave`` (the checkpoint wave's bucket list, plans/checkpoint.py) makes
-    the write idempotent per (run_id, wave): rows land in a wave-keyed
-    partition via DYNAMIC partition overwrite, so a crash between the audit
-    write and the watermark commit cannot double-count — the resumed wave
-    overwrites its own audit partition and the invariant
-    ``out_rows == audit sum(n_rows)`` holds across crash/replay, not just
-    crash-free.  Without ``wave`` (standalone one-shot audits) the write is
-    a plain append."""
-    lineage = partition_lineage(df, run_id)
-    rollup = biz_rollup(df, run_id)
-    if wave is None:
-        parts, mode = ["run_id"], "append"
-    else:
-        wave_id = int(min(wave))
-        lineage = lineage.withColumn("wave", F.lit(wave_id))
-        rollup = rollup.withColumn("wave", F.lit(wave_id))
-        parts, mode = ["run_id", "wave"], "overwrite"
-        df.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-    (
-        lineage.repartition(1)
-        .write.mode(mode)
-        .partitionBy(*parts)
-        .parquet(audit_path)
-    )
-    (
-        rollup.repartition(1)
-        .write.mode(mode)
-        .partitionBy(*parts)
-        .parquet(audit_path.rstrip("/") + "_biz")
-    )
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    ledger.coalesce(1).write.mode("overwrite").partitionBy("run_id", "wave").parquet(audit_path)
 
 
 def read_audit(spark, audit_path: str) -> DataFrame:

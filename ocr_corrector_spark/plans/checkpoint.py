@@ -1,14 +1,17 @@
 """Checkpointed, idempotently-resumable batch runs (BASELINE.json
 north_rule: 'resumable from checkpoint with per-partition lineage').
 
-Model: the input is bucketed by ``pmod(xxhash64(conv_id), n_buckets)``.
-A watermark table (parquet, Iceberg-ready) records ``(run_id, bucket)``
-rows once a bucket's output has been durably written.  On (re)start the
-planner diff's all-buckets minus committed-buckets and processes only the
-remainder; the output write uses dynamic partition overwrite
-(``partitionOverwriteMode=dynamic``) keyed by the bucket column, so
-re-processing a bucket that crashed mid-write simply overwrites its
-partition — end state is identical to a single clean run (idempotence).
+Model: the input is bucketed by ``pmod(xxhash64(conv_id), n_buckets)``
+and each bucket is one output partition.  Buckets run in waves; after a
+wave's output write, its ledger rows (plans/audit.write_audit: one row
+per bucket with its counts, read back from the files just written) are
+the commit: a bucket is committed if and only if its ledger row exists.
+On (re)start the planner diffs all buckets minus committed buckets and
+processes only the remainder; the output write uses dynamic partition
+overwrite (``partitionOverwriteMode=dynamic``) keyed by the bucket
+column, so re-processing a bucket that crashed before its ledger row
+landed simply overwrites its partition — end state is identical to a
+single clean run (idempotence).
 
 At cluster scale each wave is sized to executor memory; buckets give the
 resume granularity that Spark's own task retry does not (driver loss,
@@ -24,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.bucketing import conv_bucket
+from .audit import write_audit
 
 
 @dataclass
@@ -37,29 +41,24 @@ class CheckpointedRun:
         return df.withColumn("bucket", conv_bucket(self.n_buckets))
 
     def committed_buckets(self, spark: SparkSession) -> set[int]:
-        """Buckets watermarked for this run.  A watermark table with no
-        data files — missing, or left empty by a crash inside the first
+        """Buckets with a ledger row for this run.  A ledger with no data
+        files — missing, or left empty by a crash inside the first
         commit — means nothing is committed; any other read failure (a
-        corrupt or unreadable table) raises rather than silently
-        rerunning every bucket."""
+        corrupt or unreadable table, or one in another layout) raises
+        rather than silently rerunning every bucket."""
         try:
             wm = spark.read.parquet(self.watermark_path)
         except AnalysisException as exc:
             if exc.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
                 return set()
             raise
-        rows = wm.filter(F.col("run_id") == self.run_id).select("bucket").collect()
+        # partition discovery may type a run id such as "7" as a number
+        rows = wm.filter(F.col("run_id").cast("string") == self.run_id).select("bucket").collect()
         return {r.bucket for r in rows}
 
     def pending_buckets(self, spark: SparkSession) -> list[int]:
         done = self.committed_buckets(spark)
         return [b for b in range(self.n_buckets) if b not in done]
-
-    def _commit(self, spark: SparkSession, buckets: list[int]) -> None:
-        rows = [(self.run_id, int(b)) for b in buckets]
-        spark.createDataFrame(rows, "run_id string, bucket int").coalesce(1).write.mode(
-            "append"
-        ).parquet(self.watermark_path)
 
     def run(
         self,
@@ -74,15 +73,13 @@ class CheckpointedRun:
         call.  ``transform(df) -> df`` is the correction pipeline.
         ``max_waves`` lets tests simulate a mid-run crash.
 
-        ``post_write(out_df, wave)`` — optional per-wave hook (audit
-        writes); ``wave`` is the bucket list, so the hook can key its own
-        writes idempotently per wave (plans/audit.write_audit does).
-        ``out_df`` is the wave's buckets read back from ``output_path``,
-        a partition-pruned parquet scan of the files the write just made,
-        so the expensive correction UDF executes ONCE per wave: in the
-        write.  (Handing the hook the transformed frame itself would
-        re-execute the full pipeline once per hook action — a 3x compute
-        bill at scale.)"""
+        Each wave writes its buckets to ``output_path``, reads them back
+        (a partition-pruned parquet scan of the files the write just
+        made, so the expensive correction UDF executes ONCE per wave: in
+        the write), and commits them by writing their ledger rows to
+        ``watermark_path`` from that read-back.  ``post_write(out_df,
+        wave)`` — an optional hook over the same read-back — runs before
+        the commit, so a hook that raises leaves its wave pending."""
         # Idempotence depends on DYNAMIC partition overwrite: with the
         # default static mode every wave's write would wipe the buckets
         # committed by earlier waves.  The session a cluster submit hands
@@ -103,11 +100,11 @@ class CheckpointedRun:
             in_wave = F.col("bucket").isin([int(b) for b in wave])
             out = transform(bucketed.filter(in_wave))
             out.write.mode("overwrite").partitionBy("bucket").parquet(self.output_path)
+            # out's schema: no footer inference, and a wave whose buckets
+            # wrote no rows reads back empty
+            written = spark.read.schema(out.schema).parquet(self.output_path).filter(in_wave)
             if post_write is not None:
-                # out's schema: no footer inference, and a wave whose
-                # buckets wrote no rows reads back empty
-                written = spark.read.schema(out.schema).parquet(self.output_path)
-                post_write(written.filter(in_wave), wave)
-            self._commit(spark, wave)
+                post_write(written, wave)
+            write_audit(written, self.run_id, self.watermark_path, wave)
             completed += len(wave)
         return completed

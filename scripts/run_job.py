@@ -13,17 +13,16 @@ installed there) so that the worker daemon can import it::
         scripts/run_job.py \
         --input  <iceberg-or-parquet transcripts table/path> \
         --output <output path> \
-        --audit  <audit table path> \
-        --watermarks <checkpoint path> \
+        --audit  <ledger table path> \
         --run-id r1 --buckets 256
 
-Resumable: re-submitting with the same --run-id skips committed buckets
-(plans/checkpoint.py); output converges to the clean-run result via
-dynamic partition overwrite.  Under spark-submit the job runs in the
-submitted session, master and confs as given; started as
-``python scripts/run_job.py`` (no master) it runs in ``get_spark``'s
-local session.  Without --input it corrects the synthetic generator's
-table (--n-convs conversations).
+Resumable: re-submitting with the same --run-id skips the buckets that
+have a row in the --audit ledger (plans/checkpoint.py); output converges
+to the clean-run result via dynamic partition overwrite.  Under
+spark-submit the job runs in the submitted session, master and confs as
+given; started as ``python scripts/run_job.py`` (no master) it runs in
+``get_spark``'s local session.  Without --input it corrects the
+synthetic generator's table (--n-convs conversations).
 """
 
 from __future__ import annotations
@@ -65,8 +64,7 @@ def build_parser() -> argparse.ArgumentParser:
         "catalog table name (sources/formats.py)",
     )
     ap.add_argument("--output", required=True)
-    ap.add_argument("--audit", required=True)
-    ap.add_argument("--watermarks", required=True)
+    ap.add_argument("--audit", required=True, help="ledger path: the run's per-bucket commit record")
     ap.add_argument("--run-id", default="run-1")
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--n-convs", type=int, default=10000, help="synthetic scale if no --input")
@@ -93,7 +91,6 @@ def main() -> None:
     args = build_parser().parse_args()
 
     from ocr_corrector_spark.operators.correct import correction_config
-    from ocr_corrector_spark.plans.audit import write_audit
     from ocr_corrector_spark.plans.checkpoint import CheckpointedRun
     from ocr_corrector_spark.plans.pipeline import correct_pipeline
 
@@ -108,7 +105,7 @@ def main() -> None:
     run = CheckpointedRun(
         run_id=args.run_id,
         output_path=args.output,
-        watermark_path=args.watermarks,
+        watermark_path=args.audit,
         n_buckets=args.buckets,
     )
 
@@ -123,17 +120,7 @@ def main() -> None:
     def transform(d):
         return correct_pipeline(d, spark, cfg, keep_mode_col=True)
 
-    # Audit as a post-write hook over the wave's files read back from the
-    # output, so the correction UDF runs once per wave (in the write), not
-    # once more per audit action.
-    done = run.run(
-        spark,
-        df,
-        transform,
-        post_write=lambda out, wave: write_audit(
-            out, args.run_id, args.audit, wave=wave
-        ),
-    )
+    done = run.run(spark, df, transform)
     print(f"completed {done} buckets (run_id={args.run_id})")
     spark.stop()
 

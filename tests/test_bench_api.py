@@ -31,6 +31,11 @@ def test_perfbench_call_forms_bind():
     inspect.signature(correct_pipeline).bind(DF, SPARK, keep_mode_col=True)
     inspect.signature(with_dispatched_correction).bind(DF, spark=SPARK)
     inspect.signature(fused_correct).bind(DF, SPARK)
+    run = CheckpointedRun(run_id="r", output_path="o", watermark_path="w", n_buckets=16)
+    inspect.signature(run.run).bind(
+        SPARK, DF, lambda d: d, post_write=lambda out, wave: None, wave_size=16
+    )
+    inspect.signature(write_audit).bind(DF, "r", "a", wave=[0])
 
 
 def test_bench_call_forms_bind():
@@ -45,8 +50,7 @@ def test_run_job_call_forms_bind():
     inspect.signature(correction_config).bind(scorer_backend="table", scorer_table=None)
     inspect.signature(correct_pipeline).bind(DF, SPARK, CFG, keep_mode_col=True)
     run = CheckpointedRun(run_id="r", output_path="o", watermark_path="w", n_buckets=8)
-    inspect.signature(run.run).bind(SPARK, DF, lambda d: d, post_write=lambda out, wave: None)
-    inspect.signature(write_audit).bind(DF, "r", "a", wave=[0])
+    inspect.signature(run.run).bind(SPARK, DF, lambda d: d)
 
 
 def test_run_job_reads_every_format():

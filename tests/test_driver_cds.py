@@ -200,7 +200,7 @@ def _job(tmp, cache, name):
     subprocess.run(
         [sys.executable, os.path.join(REPO, "scripts", "run_job.py"),
          "--output", str(out / "out"), "--audit", str(out / "audit"),
-         "--watermarks", str(out / "wm"), "--run-id", "cds", "--n-convs", "20", "--buckets", "2"],
+         "--run-id", "cds", "--n-convs", "20", "--buckets", "2"],
         env=_env(cache, SPARK_GRAFT_CPUS="2"), cwd=REPO, check=True, timeout=600,
         stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
     )

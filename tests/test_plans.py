@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_corrector_spark.operators.reassemble import reassemble_conversations
-from ocr_corrector_spark.plans.audit import partition_lineage, write_audit
+from ocr_corrector_spark.plans.audit import write_audit
 from ocr_corrector_spark.plans.checkpoint import CheckpointedRun
 from ocr_corrector_spark.plans.pipeline import correct_pipeline
 from ocr_corrector_spark.sources.transcripts import gen_transcripts
@@ -47,16 +47,17 @@ def test_reassemble_heavy_conv_intact(spark):
 
 
 def test_audit_lineage(spark, small, tmp_path):
-    out = correct_pipeline(small, spark, order_output=False)
-    audit_path = str(tmp_path / "audit")
-    write_audit(out, "run-1", audit_path)
-    audit = spark.read.parquet(audit_path)
-    assert audit.agg(F.sum("n_rows")).collect()[0][0] == small.count()
-    assert audit.agg(F.sum("n_corrected")).collect()[0][0] > 0
-    assert audit.select("run_id").distinct().collect()[0][0] == "run-1"
+    run = CheckpointedRun("run-1", str(tmp_path / "out"), str(tmp_path / "ledger"), n_buckets=4)
+    assert run.run(spark, small, lambda d: correct_pipeline(d, spark, order_output=False)) == 4
+    rows = spark.read.parquet(run.watermark_path).collect()
+    # one ledger row per bucket, counting exactly the bucket's output rows
+    out_counts = spark.read.parquet(run.output_path).groupBy("bucket").count().collect()
+    assert {r.bucket: r.n_rows for r in rows} == {r.bucket: r["count"] for r in out_counts}
+    assert sum(r.n_rows for r in rows) == small.count()
+    assert sum(r.n_corrected for r in rows) > 0
+    assert {r.run_id for r in rows} == {"run-1"}
     # lineage rows carry key ranges
-    row = audit.collect()[0]
-    assert row.min_conv_id is not None and row.max_conv_id is not None
+    assert all(r.min_conv_id <= r.max_conv_id and r.min_ts <= r.max_ts for r in rows)
 
 
 def test_checkpoint_resume_idempotent(spark, tmp_path):
@@ -102,8 +103,8 @@ def test_checkpoint_resume_idempotent(spark, tmp_path):
 
 
 def _run_counted(spark, tmp_path, df, run_id, **kw):
-    """CheckpointedRun + write_audit over ``df`` (4 buckets, one per
-    wave), counting the rows the correction UDF sees."""
+    """CheckpointedRun over ``df`` (4 buckets, one per wave), counting
+    the rows the correction UDF sees; the ledger must count every row."""
     acc = spark.sparkContext.accumulator(0)
 
     def transform(d):
@@ -114,36 +115,29 @@ def _run_counted(spark, tmp_path, df, run_id, **kw):
     run = CheckpointedRun(
         run_id, str(tmp_path / "out"), str(tmp_path / "wm"), n_buckets=4
     )
-    audit_path = str(tmp_path / "audit")
-    done = run.run(
-        spark,
-        df,
-        transform,
-        post_write=lambda out, wave: write_audit(out, run_id, audit_path, wave=wave),
-    )
-    assert done == 4
+    assert run.run(spark, df, transform) == 4
     n_rows = df.count()
-    audit = spark.read.parquet(audit_path)
+    audit = spark.read.parquet(run.watermark_path)
     assert audit.agg(F.sum("n_rows")).collect()[0][0] == n_rows
     assert spark.read.parquet(run.output_path).count() == n_rows
     return run, acc.value
 
 
 def test_correction_executes_once_per_row_with_audit(spark, tmp_path):
-    """The audit hook must not re-execute the correction UDF: both audit
-    actions read the wave's buckets back from the files the output write
-    made (VERDICT r01 'What's wrong' #1 — the 3x recompute bill).  The UDF's
-    struct result is unpacked into three columns without Catalyst copying
-    the UDF into each field reference."""
+    """The ledger write must not re-execute the correction UDF: it reads
+    the wave's buckets back from the files the output write made (VERDICT
+    r01 'What's wrong' #1 — the recompute bill).  The UDF's struct result
+    is unpacked into three columns without Catalyst copying the UDF into
+    each field reference."""
     df = gen_transcripts(spark, n_convs=20)
     _, seen = _run_counted(spark, tmp_path, df, "acc1")
-    # output write + lineage action + biz-rollup action, but the UDF saw
-    # each row exactly once
+    # output write + ledger aggregation, but the UDF saw each row exactly
+    # once
     assert seen == df.count()
 
 
 def test_dedup_correction_executes_once_per_distinct_triple_with_audit(spark, tmp_path):
-    """The dedup plan through the same checkpoint + audit path: the UDF
+    """The dedup plan through the same checkpoint + ledger path: the UDF
     sees each distinct (text, err_prob_key, biz) triple of a wave once."""
     from ocr_corrector_spark.operators.detect import err_prob_key
 
@@ -163,7 +157,7 @@ def test_dedup_correction_executes_once_per_distinct_triple_with_audit(spark, tm
 @pytest.mark.parametrize("dedup", [False, True])
 def test_null_text_is_never_eligible(spark, tmp_path, dedup):
     """A NULL text with low-prob probs is not eligible: corr_mode 0, and
-    the audit does not count it in n_eligible."""
+    the ledger does not count it in n_eligible."""
     rows = [
         ("c1", 0, "user", "report", None, [0.5, 0.5]),
         ("c1", 1, "user", "doc", None, [0.5, 0.5, 0.5]),
@@ -180,9 +174,11 @@ def test_null_text_is_never_eligible(spark, tmp_path, dedup):
     )
     got = [(r.turn_idx, r.corr_mode, r.text_corrected) for r in out.collect()]
     assert got == [(0, 0, None), (1, 0, None), (2, 0, None), (3, 1, "未还本金")]
-    audit_path = str(tmp_path / "audit")
-    write_audit(out, "nulls", audit_path)
-    audit = spark.read.parquet(audit_path)
+    run = CheckpointedRun("nulls", str(tmp_path / "out"), str(tmp_path / "ledger"), n_buckets=2)
+    run.run(
+        spark, df, lambda d: correct_pipeline(d, spark, keep_mode_col=True, dedup_correction=dedup)
+    )
+    audit = spark.read.parquet(run.watermark_path)
     assert audit.agg(F.sum("n_eligible")).collect()[0][0] == 1
 
 
@@ -204,10 +200,25 @@ def test_corrupt_watermarks_raise(spark, tmp_path):
         run.run(spark, gen_transcripts(spark, n_convs=4), lambda d: d)
 
 
+def test_runs_share_a_ledger_whatever_their_ids(spark, tmp_path):
+    """Runs keep their ledger rows apart by ``run_id``, a partition column
+    whose type Spark infers from the directory names: a ledger holding
+    only run "7" reads it as a number, and must still answer for "v8"."""
+    df = gen_transcripts(spark, n_convs=4)
+    ledger = str(tmp_path / "ledger")
+    first = CheckpointedRun("7", str(tmp_path / "out7"), ledger, n_buckets=2)
+    assert first.run(spark, df, lambda d: d) == 2
+    second = CheckpointedRun("v8", str(tmp_path / "out8"), ledger, n_buckets=2)
+    assert second.pending_buckets(spark) == [0, 1]
+    assert second.run(spark, df, lambda d: d) == 2
+    assert first.pending_buckets(spark) == second.pending_buckets(spark) == []
+
+
 def test_waves_without_rows_read_back_empty(spark, tmp_path):
     """A wave whose buckets hold no rows writes no files; its hook still
     gets the wave read back from the output, empty, even when no earlier
-    wave has written a file to read a schema from."""
+    wave has written a file to read a schema from, and its buckets are
+    committed with ledger rows counting 0."""
     run = CheckpointedRun("empty", str(tmp_path / "out"), str(tmp_path / "wm"), n_buckets=4)
     # only the last bucket's conversations: the first three waves are empty
     last = run.with_bucket(gen_transcripts(spark, n_convs=20)).filter(F.col("bucket") == 3)
@@ -220,6 +231,9 @@ def test_waves_without_rows_read_back_empty(spark, tmp_path):
         post_write=lambda out, wave: seen.update({wave[0]: out.count()}),
     )
     assert seen == {0: 0, 1: 0, 2: 0, 3: n_rows}
+    assert run.pending_buckets(spark) == []
+    ledger = spark.read.parquet(run.watermark_path).collect()
+    assert {r.bucket: r.n_rows for r in ledger} == {0: 0, 1: 0, 2: 0, 3: n_rows}
 
 
 @pytest.mark.parametrize("resume_wave_size", [2, 4, 1], ids=["same", "larger", "one"])
@@ -250,8 +264,8 @@ def test_audit_wave_replay_idempotent(spark, tmp_path, crash_wave, resume_wave_s
 
     def crashy_hook(out, wave):
         audit(out, wave)
-        # simulate a crash AFTER the audit write but BEFORE _commit of wave
-        # number crash_wave: the watermark of that wave is never written
+        # simulate a crash AFTER the audit write but BEFORE the ledger
+        # commit of wave number crash_wave: its ledger rows are never written
         waves_seen.append(list(wave))
         if len(waves_seen) > crash_wave:
             raise RuntimeError("simulated crash between audit and commit")
@@ -273,8 +287,9 @@ def test_audit_wave_replay_idempotent(spark, tmp_path, crash_wave, resume_wave_s
     assert resumed == sorted(transform(df).select(*key).collect())
     # no double-counted wave: the replayed wave overwrote its partition
     assert audit_df.agg(F.sum("n_rows")).collect()[0][0] == n_rows
-    biz = spark.read.parquet(audit_path + "_biz")
-    assert biz.agg(F.sum("n_rows")).collect()[0][0] == n_rows
+    ledger = spark.read.parquet(run.watermark_path)
+    assert sorted(r.bucket for r in ledger.select("bucket").collect()) == [0, 1, 2, 3]
+    assert ledger.agg(F.sum("n_rows")).collect()[0][0] == n_rows
 
 
 @pytest.mark.parametrize("salt_buckets", [2, 8, 16])
