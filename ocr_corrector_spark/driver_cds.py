@@ -9,7 +9,8 @@ session start 7.9 → 4.0 s, first pipeline 8.5 → 6.0 s).
 The archive is a host cache, built on the host by the JVM itself:
 
 * it lives in ``${XDG_CACHE_HOME:-~/.cache}/ocr_corrector_spark/`` as
-  ``<key>.jsa``, where the key names the JDK and Spark's jar set;
+  ``<key>.jsa``, where the key names the JDK, Spark's jar set and the
+  cache's own path;
 * the first session launched without one dumps it
   (``-XX:ArchiveClassesAtExit``) to ``<key>.<pid>.tmp`` when its JVM exits
   (about 15 s more at exit, about 170 MB);
@@ -76,12 +77,15 @@ def java_binary() -> str | None:
     return os.path.join(home, "bin", "java") if home else shutil.which("java")
 
 
-def archive_key(java: str, spark_home: str) -> str:
+def archive_key(java: str, spark_home: str, conf_dir: str) -> str:
     """Names the JDK (its binary, VM library and release file) and the
-    jar set in ``$SPARK_HOME/jars``, each by path, size and mtime."""
+    jar set in ``$SPARK_HOME/jars``, each by path, size and mtime, and the
+    empty conf dir by path: the archive records the class path it was
+    dumped with, and a JVM silently declines it under another one (a
+    cache copied to, or reached under, another ``XDG_CACHE_HOME``)."""
     java = os.path.realpath(java)
     jdk = os.path.dirname(os.path.dirname(java))
-    parts = []
+    parts = [conf_dir]
     for path in (java, os.path.join(jdk, "lib", "server", "libjvm.so"), os.path.join(jdk, "release")):
         if os.path.exists(path):
             st = os.stat(path)
@@ -238,7 +242,7 @@ def plan(extra_conf: dict) -> Archive | None:
         os.makedirs(empty, exist_ok=True)
         if os.listdir(empty) or not os.access(directory, os.W_OK):
             return None
-        key = archive_key(java, spark_home)
+        key = archive_key(java, spark_home, empty)
         _sweep(directory)
         if os.path.isfile(os.path.join(directory, key + ".jsa")):
             return Archive(directory, key, dump=False)

@@ -29,7 +29,14 @@ from pyspark.sql import functions as F
 
 
 def order_turns(df: DataFrame) -> DataFrame:
+    """Stable (conv_id, turn_idx) order (module docstring).  A frame with
+    the checkpointed job's ``bucket`` is ordered by (bucket, conv_id,
+    turn_idx) instead, which also meets its bucket-partitioned write's
+    ordering: the write then plans no sort above the Python stage, which
+    would undo each file's turn order."""
     keys = [F.col("conv_id"), F.col("turn_idx")]
+    if "bucket" in df.columns:
+        keys.insert(0, F.col("bucket"))
     # One range partition per task slot (the session's shuffle width):
     # downstream runs the Arrow-UDF correction stage, and every Python task
     # pays a fixed worker cost whatever its row count, so more partitions

@@ -3,12 +3,14 @@
 counters at base_corrector.py:58,71 promoted to real aggregates).
 
 One row per bucket of a wave: row/correction counts and key ranges, from
-one aggregation over the wave's buckets read back from the output files.
+one aggregation over the wave's buckets read back from the output files,
+plus one pad row per bucket so that an empty bucket gets its row too.
 The ledger is also the run's commit record (plans/checkpoint.py): a
 bucket is committed if and only if its row exists.  The write is a
-dynamic partition overwrite of a ``(run_id, wave)``-partitioned parquet
-table (Iceberg-ready: swap ``.write`` for ``.writeTo`` when an Iceberg
-catalog is configured; ``get_spark`` loads no Iceberg runtime jar).
+dynamic partition overwrite (a writer option) of a
+``(run_id, wave)``-partitioned parquet table (Iceberg-ready: swap
+``.write`` for ``.writeTo`` when an Iceberg catalog is configured;
+``get_spark`` loads no Iceberg runtime jar).
 """
 
 from __future__ import annotations
@@ -37,31 +39,25 @@ def write_audit(df: DataFrame, run_id: str, audit_path: str, wave) -> None:
     for name, dtype in _OPTIONAL:
         if name not in df.columns:
             df = df.withColumn(name, F.lit(None).cast(dtype))
-    counts = df.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n_rows"),
+    # one pad row per bucket of the wave, every counted column null: an
+    # empty bucket still gets its group, and ``_row`` keeps pads out of
+    # n_rows (a null conv_id is a written row, so no count(column) will do)
+    pads = spark.createDataFrame([(int(b), 0) for b in wave], "bucket long, _row int")
+    rows = df.withColumn("_row", F.lit(1)).unionByName(pads, allowMissingColumns=True)
+    ledger = rows.groupBy("bucket").agg(
+        F.lit(run_id).alias("run_id"),
+        F.lit(int(min(wave))).alias("wave"),
+        F.sum("_row").alias("n_rows"),
         F.sum((F.col("text") != F.col("text_corrected")).cast("long")).alias("n_corrected"),
         F.sum((F.col("corr_mode") != 0).cast("long")).alias("n_eligible"),
         F.min("conv_id").alias("min_conv_id"),
         F.max("conv_id").alias("max_conv_id"),
         F.min("ts").alias("min_ts"),
         F.max("ts").alias("max_ts"),
-    )
-    buckets = spark.createDataFrame([(int(b),) for b in wave], "bucket long")
-    ledger = buckets.join(counts, "bucket", "left").select(
-        F.lit(run_id).alias("run_id"),
-        "bucket",
-        F.lit(int(min(wave))).alias("wave"),
-        F.coalesce("n_rows", F.lit(0)).alias("n_rows"),
-        "n_corrected",
-        "n_eligible",
-        "min_conv_id",
-        "max_conv_id",
-        "min_ts",
-        "max_ts",
         F.lit(int(time.time())).alias("created_at"),
     )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    ledger.coalesce(1).write.mode("overwrite").partitionBy("run_id", "wave").parquet(audit_path)
+    writer = ledger.coalesce(1).write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+    writer.partitionBy("run_id", "wave").parquet(audit_path)
 
 
 def read_audit(spark, audit_path: str) -> DataFrame:

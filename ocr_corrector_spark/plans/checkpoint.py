@@ -7,11 +7,13 @@ wave's output write, its ledger rows (plans/audit.write_audit: one row
 per bucket with its counts, read back from the files just written) are
 the commit: a bucket is committed if and only if its ledger row exists.
 On (re)start the planner diffs all buckets minus committed buckets and
-processes only the remainder; the output write uses dynamic partition
-overwrite (``partitionOverwriteMode=dynamic``) keyed by the bucket
-column, so re-processing a bucket that crashed before its ledger row
-landed simply overwrites its partition — end state is identical to a
-single clean run (idempotence).
+processes only the remainder; the output write is a dynamic partition
+overwrite (a writer option: the caller's session is left as it is) keyed
+by the bucket column, so re-processing a bucket that crashed before its
+ledger row landed simply overwrites its partition — end state is
+identical to a single clean run (idempotence).  A transform ordering with
+operators/reassemble.order_turns sorts by (bucket, conv_id, turn_idx):
+one sort for the Python stage and the write, files in turn order.
 
 At cluster scale each wave is sized to executor memory; buckets give the
 resume granularity that Spark's own task retry does not (driver loss,
@@ -80,31 +82,20 @@ class CheckpointedRun:
         ``watermark_path`` from that read-back.  ``post_write(out_df,
         wave)`` — an optional hook over the same read-back — runs before
         the commit, so a hook that raises leaves its wave pending."""
-        # Idempotence depends on DYNAMIC partition overwrite: with the
-        # default static mode every wave's write would wipe the buckets
-        # committed by earlier waves.  The session a cluster submit hands
-        # us need not have it set, so enforce it here.
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         bucketed = self.with_bucket(df)
         pending = self.pending_buckets(spark)
-        if not pending:
-            return 0
         wave_size = wave_size or max(1, len(pending) // 4)
-        waves = [
-            pending[i : i + wave_size] for i in range(0, len(pending), wave_size)
-        ]
-        if max_waves is not None:
-            waves = waves[:max_waves]
-        completed = 0
+        waves = [pending[i : i + wave_size] for i in range(0, len(pending), wave_size)][:max_waves]
         for wave in waves:
             in_wave = F.col("bucket").isin([int(b) for b in wave])
             out = transform(bucketed.filter(in_wave))
-            out.write.mode("overwrite").partitionBy("bucket").parquet(self.output_path)
+            # dynamic: a static overwrite wipes the buckets earlier waves wrote
+            writer = out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+            writer.partitionBy("bucket").parquet(self.output_path)
             # out's schema: no footer inference, and a wave whose buckets
             # wrote no rows reads back empty
             written = spark.read.schema(out.schema).parquet(self.output_path).filter(in_wave)
             if post_write is not None:
                 post_write(written, wave)
             write_audit(written, self.run_id, self.watermark_path, wave)
-            completed += len(wave)
-        return completed
+        return sum(map(len, waves))

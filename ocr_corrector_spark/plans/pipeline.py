@@ -2,7 +2,7 @@
 
 Physical stage order (chosen from .explain — see BENCH/PLANS.md):
 
-  scan → repartitionByRange(conv_id, turn_idx) + sortWithinPartitions
+  scan → repartitionByRange([bucket,] conv_id, turn_idx) + sortWithinPartitions
        → ONE scalar Arrow UDF (text, probs, biz)
          → struct<text, corr_mode, text_corrected>
          (the probs-threshold key → extraction → eligibility →

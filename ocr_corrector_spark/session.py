@@ -77,8 +77,8 @@ def get_spark(
 
     The driver JVM starts from a class-data-sharing archive of Spark's
     classes (``driver_cds``): a host cache in
-    ``${XDG_CACHE_HOME:-~/.cache}/ocr_corrector_spark/``, keyed by the JDK
-    and Spark's jar set.  The first session on a host writes it, once,
+    ``${XDG_CACHE_HOME:-~/.cache}/ocr_corrector_spark/``, keyed by the JDK,
+    Spark's jar set and the cache's path.  The first session writes it, once,
     when its JVM exits (about 15 s more at exit, about 170 MB); the
     process waits for that at interpreter exit and keeps the archive only
     if a JVM maps it.  Every later session maps it: in perfbench's cold
@@ -104,7 +104,6 @@ def get_spark(
         # cap Arrow batch size so Python-worker memory stays bounded
         # regardless of input partition size
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or host_driver_heap(),

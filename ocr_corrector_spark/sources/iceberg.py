@@ -85,8 +85,9 @@ def write_transcripts(
         return
     # parquet fallback: materialize the bucket Iceberg would hide
     bucketed = df.withColumn("bucket", conv_bucket(n_buckets))
+    writer = bucketed.write.partitionBy("bucket")
     if mode == "overwrite_partitions":
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        bucketed.write.mode("overwrite").partitionBy("bucket").parquet(target)
+        writer = writer.mode("overwrite").option("partitionOverwriteMode", "dynamic")
     else:
-        bucketed.write.mode("append").partitionBy("bucket").parquet(target)
+        writer = writer.mode("append")
+    writer.parquet(target)

@@ -6,6 +6,7 @@ to a temporary directory, so no test touches the host's archive."""
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 
@@ -83,8 +84,9 @@ def _archive_dir(cache):
     return os.path.join(cache, "ocr_corrector_spark")
 
 
-def _key():
-    return driver_cds.archive_key(driver_cds.java_binary(), driver_cds._find_spark_home())
+def _key(cache):
+    conf_dir = os.path.join(_archive_dir(cache), "empty-conf")
+    return driver_cds.archive_key(driver_cds.java_binary(), driver_cds._find_spark_home(), conf_dir)
 
 
 def _dead_pid():
@@ -101,7 +103,7 @@ def dumped(tmp_path_factory):
     cache = tmp / "cache"
     directory = _archive_dir(cache)
     os.makedirs(directory)
-    key, pid = _key(), _dead_pid()
+    key, pid = _key(cache), _dead_pid()
     stale = os.path.join(directory, f"{key}.{pid}.tmp")
     with open(stale, "wb") as f:
         f.write(b"\x00garbage" * 4096)
@@ -179,7 +181,26 @@ def test_two_first_sessions_dump_once(tmp_path):
     dumps = [bool(_flags(r, "-XX:ArchiveClassesAtExit=")) for r in results]
     assert sorted(dumps) == [False, True]
     assert not any(_flags(r, "-XX:SharedArchiveFile") for r in results)
-    assert sorted(os.listdir(_archive_dir(cache))) == ["empty-conf", f"{_key()}.jsa"]
+    assert sorted(os.listdir(_archive_dir(cache))) == ["empty-conf", f"{_key(cache)}.jsa"]
+
+
+def test_a_cache_under_another_path_dumps_its_own_archive(tmp_path, monkeypatch):
+    """The archive records the cache's empty conf dir on its class path,
+    and a JVM silently declines it under another path: a cache copied to
+    another ``XDG_CACHE_HOME`` keys, and dumps, an archive of its own."""
+    first, second = tmp_path / "first", tmp_path / "second"
+    assert _key(first) != _key(second)
+    monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    monkeypatch.setenv("XDG_CACHE_HOME", str(first))
+    os.makedirs(os.path.join(_archive_dir(first), "empty-conf"))
+    open(os.path.join(_archive_dir(first), f"{_key(first)}.jsa"), "wb").close()
+    mapped = driver_cds.plan({})
+    assert (mapped.key, mapped.dump) == (_key(first), False)
+    shutil.copytree(first, second)
+    monkeypatch.setenv("XDG_CACHE_HOME", str(second))
+    copied = driver_cds.plan({})
+    copied.release()
+    assert (copied.key, copied.dump) == (_key(second), True)
 
 
 def _java_processes_under(path):
@@ -213,7 +234,7 @@ def _job(tmp, cache, name):
 def test_the_first_job_waits_for_its_dump_and_the_second_maps_it(tmp_path):
     cache = tmp_path / "cache"
     first = _job(tmp_path, cache, "first")
-    jsa = os.path.join(_archive_dir(cache), f"{_key()}.jsa")
+    jsa = os.path.join(_archive_dir(cache), f"{_key(cache)}.jsa")
     assert sorted(os.listdir(_archive_dir(cache))) == ["empty-conf", os.path.basename(jsa)]
     mtime = os.stat(jsa).st_mtime_ns
     second = _job(tmp_path, cache, "second")

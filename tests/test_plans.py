@@ -1,7 +1,10 @@
 """Audit lineage, checkpoint/resume idempotence, and salted reassembly."""
 
+import glob
 import os
+import re
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -290,6 +293,101 @@ def test_audit_wave_replay_idempotent(spark, tmp_path, crash_wave, resume_wave_s
     ledger = spark.read.parquet(run.watermark_path)
     assert sorted(r.bucket for r in ledger.select("bucket").collect()) == [0, 1, 2, 3]
     assert ledger.agg(F.sum("n_rows")).collect()[0][0] == n_rows
+
+
+def _udf_write_nodes(spark, path):
+    """Node names of the final executed plan of the last SQL execution
+    that ran the Python UDF and wrote ``path``, top (the write) to bottom
+    (the scan)."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(30000)
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [executions.apply(i).physicalPlanDescription() for i in range(executions.size())]
+    plan = [p for p in plans if "ArrowEvalPython" in p and f"Arguments: file:{path}," in p][-1]
+    tree = plan.split("== Initial Plan ==")[0]  # AQE's final plan, when AQE is on
+    return [
+        re.sub(r"^[\s+\-:*]*", "", line).split(" (")[0]
+        for line in tree.splitlines()
+        if re.search(r" \(\d+\)", line)
+    ]
+
+
+@pytest.fixture(scope="module")
+def shuffled_run(spark, tmp_path_factory):
+    """``run_job.py``'s transform over a parquet input written in shuffled
+    turn order, 8 buckets in 4 waves, each wave's Spark jobs in a job
+    group of its own; returns the run and its jobs per wave."""
+    tmp = tmp_path_factory.mktemp("shuffled")
+    gen_transcripts(spark, n_convs=300).orderBy(F.xxhash64("turn_idx", "text")).write.parquet(
+        str(tmp / "in")
+    )
+    df = spark.read.parquet(str(tmp / "in"))
+    sc = spark.sparkContext
+    groups = []
+
+    def transform(d):
+        groups.append(f"shuffled-wave-{len(groups)}")
+        sc.setJobGroup(groups[-1], groups[-1])
+        return correct_pipeline(d, spark, keep_mode_col=True)
+
+    run = CheckpointedRun("shuffled", str(tmp / "out"), str(tmp / "ledger"), n_buckets=8)
+    try:
+        assert run.run(spark, df, transform) == 8
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return run, [len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups]
+
+
+def test_output_files_keep_turn_order_with_one_sort(spark, shuffled_run):
+    """The range shuffle leads with the bucket, so one sort serves both the
+    Python stage and the partitioned write: every file keeps
+    (conv_id, turn_idx) order whatever order the input arrived in, and the
+    write plans no ``Sort [bucket]`` of its own above the UDF."""
+    run, _ = shuffled_run
+    files = glob.glob(os.path.join(run.output_path, "bucket=*", "*.parquet"))
+    assert len(files) >= 8
+    for f in files:
+        keys = [(r["conv_id"], r["turn_idx"]) for r in pq.read_table(f).to_pylist()]
+        assert keys == sorted(keys), f
+    nodes = _udf_write_nodes(spark, run.output_path)
+    assert nodes.count("Sort") == 1, nodes
+    assert nodes.index("Sort") > nodes.index("ArrowEvalPython"), nodes
+
+
+def test_a_steady_wave_runs_at_most_five_spark_jobs(shuffled_run):
+    """Per wave after the first: the write (its range shuffle samples the
+    input twice under AQE) and one aggregation + write for the ledger."""
+    _, jobs = shuffled_run
+    assert len(jobs) == 4
+    assert all(n <= 5 for n in jobs[1:]), jobs
+
+
+def test_ledger_counts_every_row_and_keeps_its_layout(spark, tmp_path):
+    """A null conv_id is a written row and counts in n_rows; a bucket the
+    input holds no rows of gets n_rows 0; the ledger's columns and types
+    stay those that earlier runs wrote, so they can still be resumed.  The
+    dynamic overwrite is an option of the run's writes: a later wave keeps
+    the earlier waves' files, and the session's own mode is left as is."""
+    mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+    run = CheckpointedRun("layout", str(tmp_path / "out"), str(tmp_path / "ledger"), n_buckets=4)
+    df = gen_transcripts(spark, n_convs=30)
+    df = df.unionByName(df.limit(1).withColumn("conv_id", F.lit(None).cast("string")))
+    null_bucket = run.with_bucket(df).filter(F.col("conv_id").isNull()).first().bucket
+    empty = (null_bucket + 1) % 4
+    df = run.with_bucket(df).filter(F.col("bucket") != empty).drop("bucket")
+    assert run.run(spark, df, lambda d: correct_pipeline(d, spark, keep_mode_col=True)) == 4
+    ledger = spark.read.parquet(run.watermark_path)
+    n_out = spark.read.parquet(run.output_path).count()
+    assert n_out == df.count()
+    assert ledger.agg(F.sum("n_rows")).first()[0] == n_out
+    assert {r.bucket: r.n_rows for r in ledger.collect()}[empty] == 0
+    assert ledger.dtypes == [
+        ("bucket", "bigint"), ("n_rows", "bigint"), ("n_corrected", "bigint"),
+        ("n_eligible", "bigint"), ("min_conv_id", "string"), ("max_conv_id", "string"),
+        ("min_ts", "timestamp"), ("max_ts", "timestamp"), ("created_at", "int"),
+        ("run_id", "string"), ("wave", "int"),
+    ]
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == mode
 
 
 @pytest.mark.parametrize("salt_buckets", [2, 8, 16])
