@@ -21,10 +21,13 @@ The archive is a host cache, built on the host by the JVM itself:
   file is deleted;
 * every later session maps the promoted file (``-XX:SharedArchiveFile``).
 
-One process dumps per key at a time: it holds ``<key>.lock``, a file
-created with ``O_EXCL`` that holds its pid; a lock or ``.tmp`` file whose
-pid is dead is taken over or deleted.  Deleting the directory resets all
-of it.
+One process dumps per key at a time: it holds an exclusive ``flock`` on
+``<key>.lock`` until its dump is promoted or dropped, and a session that
+finds the lock held starts without the archive.  The kernel drops the
+lock when its holder exits, however it exits, so the process that takes
+it deletes the key's leftover ``.tmp`` files.  A promote deletes the other
+keys' archives: a cache holds one.  Deleting the directory resets all of
+it.
 
 CDS refuses a class path that holds a non-empty directory, and
 spark-submit puts the conf dir first on it.  So the archive is used only
@@ -45,6 +48,7 @@ from __future__ import annotations
 
 import atexit
 import contextlib
+import fcntl
 import hashlib
 import os
 import shutil
@@ -96,69 +100,42 @@ def archive_key(java: str, spark_home: str, conf_dir: str) -> str:
     return "spark-driver-" + hashlib.sha256("\n".join(parts).encode()).hexdigest()[:16]
 
 
-def _alive(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True
-    return True
-
-
 def _unlink(path: str) -> None:
     with contextlib.suppress(FileNotFoundError):
         os.unlink(path)
 
 
-def _stale(lock: str) -> bool:
-    """The lock's writer is gone, or its pid cannot be read."""
+def _take_lock(directory: str, key: str) -> int | None:
+    """A descriptor holding the exclusive ``flock`` on ``<key>.lock``, or
+    None when another process holds it.  Whoever held it before has exited
+    or given it up, so the key's ``.tmp`` files are leftovers: they are
+    deleted.  A holder unlinks the lock file before it closes it; a lock
+    taken on a file unlinked meanwhile is given back."""
+    path = os.path.join(directory, key + ".lock")
+    fd = os.open(path, os.O_CREAT | os.O_WRONLY, 0o644)
     try:
-        with open(lock) as f:
-            return not _alive(int(f.read()))
-    except (FileNotFoundError, ValueError):
-        return True
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        if os.path.samestat(os.fstat(fd), os.stat(path)):
+            for name in os.listdir(directory):
+                if name.startswith(key + ".") and name.endswith(".tmp"):
+                    _unlink(os.path.join(directory, name))
+            return fd
     except OSError:
-        return False
+        pass
+    os.close(fd)
+    return None
 
 
-def _take_lock(lock: str) -> bool:
-    """Create ``lock`` holding this pid, taking over a stale one.  Two
-    sessions that take over a lock at once (or read one before its writer
-    wrote its pid) may both dump; each writes its own ``.tmp`` and
-    promotes it atomically, so the cost is a second dump, never a bad
-    archive."""
-    for _ in range(2):
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
-        except FileExistsError:
-            if not _stale(lock):
-                return False
-            _unlink(lock)
-            continue
-        with os.fdopen(fd, "w") as f:
-            f.write(str(os.getpid()))
-        return True
-    return False
-
-
-def _sweep(directory: str) -> None:
-    """Delete the ``<key>.<pid>.tmp`` files of dead pids: dumps cut short
-    by a killed JVM or process."""
-    for name in os.listdir(directory):
-        parts = name.split(".")
-        if len(parts) == 3 and parts[2] == "tmp" and parts[1].isdigit() and not _alive(int(parts[1])):
-            _unlink(os.path.join(directory, name))
-
-
-@dataclass(frozen=True)
+@dataclass
 class Archive:
-    """The archive one launch uses: ``dump`` when this process holds the
-    lock and its JVM writes the archive at exit, else it maps ``jsa``."""
+    """The archive one launch uses: ``dump`` when its JVM writes the
+    archive at exit, else it maps ``jsa``.  ``lock`` is the descriptor
+    holding the key's lock while this process dumps."""
 
     directory: str
     key: str
     dump: bool
+    lock: int | None = None
 
     def _path(self, suffix: str) -> str:
         return os.path.join(self.directory, self.key + suffix)
@@ -181,23 +158,25 @@ class Archive:
         return f"{flag} {QUIET}"
 
     def release(self) -> None:
-        """Drop this process's ``.tmp`` and lock (when it dumps)."""
+        """Drop this process's ``.tmp`` and give up the lock (when it dumps)."""
         if self.dump:
             _unlink(self.tmp)
-            lock = self._path(".lock")
-            with contextlib.suppress(OSError):
-                with open(lock) as f:
-                    mine = f.read().strip() == str(os.getpid())
-                if mine:
-                    _unlink(lock)
+        if self.lock is not None:
+            _unlink(self._path(".lock"))
+            os.close(self.lock)
+            self.lock = None
 
     def promote(self, java: str | None, class_path: str | None) -> None:
         """After the dumping JVM has exited: ``.tmp`` → ``.jsa`` if a JVM
-        maps it under ``-Xshare:on`` with the dumping JVM's class path;
-        otherwise the ``.tmp`` is deleted."""
+        maps it under ``-Xshare:on`` with the dumping JVM's class path,
+        and the other keys' archives are deleted; otherwise the ``.tmp``
+        is deleted."""
         try:
             if java and os.path.exists(self.tmp) and _maps(java, self.tmp, class_path, self.directory):
                 os.replace(self.tmp, self.jsa)
+                for name in os.listdir(self.directory):
+                    if name.endswith(".jsa") and name != self.key + ".jsa":
+                        _unlink(os.path.join(self.directory, name))
         finally:
             self.release()
 
@@ -243,11 +222,11 @@ def plan(extra_conf: dict) -> Archive | None:
         if os.listdir(empty) or not os.access(directory, os.W_OK):
             return None
         key = archive_key(java, spark_home, empty)
-        _sweep(directory)
         if os.path.isfile(os.path.join(directory, key + ".jsa")):
             return Archive(directory, key, dump=False)
-        if _take_lock(os.path.join(directory, key + ".lock")):
-            return Archive(directory, key, dump=True)
+        lock = _take_lock(directory, key)
+        if lock is not None:
+            return Archive(directory, key, dump=True, lock=lock)
     except Exception:
         pass
     return None

@@ -47,11 +47,17 @@ class CheckpointedRun:
         files — missing, or left empty by a crash inside the first
         commit — means nothing is committed; any other read failure (a
         corrupt or unreadable table, or one in another layout) raises
-        rather than silently rerunning every bucket."""
+        rather than silently rerunning every bucket.  A missing ledger is
+        found through Hadoop's ``FileSystem``: reading it would log a
+        ``FileNotFoundException`` trace before raising."""
+        sc = spark.sparkContext
+        path = sc._jvm.org.apache.hadoop.fs.Path(self.watermark_path)
+        if not path.getFileSystem(sc._jsc.hadoopConfiguration()).exists(path):
+            return set()
         try:
             wm = spark.read.parquet(self.watermark_path)
         except AnalysisException as exc:
-            if exc.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            if exc.getCondition() == "UNABLE_TO_INFER_SCHEMA":
                 return set()
             raise
         # partition discovery may type a run id such as "7" as a number

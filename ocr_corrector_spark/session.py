@@ -78,12 +78,13 @@ def get_spark(
     The driver JVM starts from a class-data-sharing archive of Spark's
     classes (``driver_cds``): a host cache in
     ``${XDG_CACHE_HOME:-~/.cache}/ocr_corrector_spark/``, keyed by the JDK,
-    Spark's jar set and the cache's path.  The first session writes it, once,
-    when its JVM exits (about 15 s more at exit, about 170 MB); the
-    process waits for that at interpreter exit and keeps the archive only
-    if a JVM maps it.  Every later session maps it: in perfbench's cold
-    cycle on a 4-core host, session start 7.9 → 4.0 s and the first
-    pipeline 8.5 → 6.0 s.
+    Spark's jar set and the cache's path.  The first session writes it,
+    once, when its JVM exits (about 15 s more at exit, about 170 MB),
+    holding a kernel lock meanwhile: sessions that start then go without
+    it.  The process waits for the dump at interpreter exit and keeps the
+    archive only if a JVM maps it, replacing any archive of another key.
+    Every later session maps it: in perfbench's cold cycle on a 4-core
+    host, session start 7.9 → 4.0 s and the first pipeline 8.5 → 6.0 s.
     It is skipped when the Spark conf dir holds any file but
     ``*.template``, when ``extra_conf`` sets
     ``spark.driver.extraJavaOptions`` or ``spark.driver.extraClassPath``,

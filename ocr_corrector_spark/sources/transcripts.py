@@ -86,6 +86,12 @@ _LAYOUT_SUFFIX = (
 )
 
 
+# one turn in HTML_FRACTION_DENOM is wrapped in HTML; of the rest, one in
+# LAYOUT_FRACTION_DENOM is a %LAYOUT document
+HTML_FRACTION_DENOM = 5
+LAYOUT_FRACTION_DENOM = 7
+
+
 def corpus_df(spark: SparkSession) -> DataFrame:
     rows = [
         (i, clean, noisy, errs, biz)
@@ -102,8 +108,6 @@ def gen_transcripts(
     n_convs: int = 1000,
     heavy_every: int = 97,
     heavy_turns: int = 200,
-    html_fraction_denom: int = 5,
-    layout_fraction_denom: int = 7,
     keep_oracle_cols: bool = False,
     seed: int = 0,
 ) -> DataFrame:
@@ -184,21 +188,18 @@ def gen_transcripts(
     is_html = (
         F.pmod(
             F.xxhash64(F.col("conv_id"), F.col("turn_idx"), F.lit(7), F.lit(seed)),
-            F.lit(html_fraction_denom),
+            F.lit(HTML_FRACTION_DENOM),
         )
         == 0
     )
     df = df.withColumn("is_html", is_html)
-    if layout_fraction_denom:
-        is_layout = (
-            F.pmod(
-                F.xxhash64(F.col("conv_id"), F.col("turn_idx"), F.lit(11), F.lit(seed)),
-                F.lit(layout_fraction_denom),
-            )
-            == 0
-        ) & ~F.col("is_html")
-    else:
-        is_layout = F.lit(False)
+    is_layout = (
+        F.pmod(
+            F.xxhash64(F.col("conv_id"), F.col("turn_idx"), F.lit(11), F.lit(seed)),
+            F.lit(LAYOUT_FRACTION_DENOM),
+        )
+        == 0
+    ) & ~F.col("is_html")
     df = df.withColumn("is_layout", is_layout)
     df = df.withColumn(
         "text",

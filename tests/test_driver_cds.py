@@ -151,15 +151,17 @@ def test_a_truncated_dump_is_never_promoted(dumped, tmp_path):
     _, cache, key, _, result = dumped
     full = os.path.join(_archive_dir(cache), f"{key}.jsa")
     size = os.path.getsize(full)
+    other = "spark-driver-0000000000000000.jsa"  # an archive under a superseded key
     for length, promoted in ((size // 3, False), (size, True)):
         directory = tmp_path / str(length)
         directory.mkdir()
+        (directory / other).write_bytes(b"")
         archive = driver_cds.Archive(str(directory), key, dump=True)
         with open(full, "rb") as src, open(archive.tmp, "wb") as dst:
             dst.write(src.read(length))
         archive.promote(result["java"], result["class_path"])
         names = sorted(os.listdir(directory))
-        assert names == ([f"{key}.jsa"] if promoted else [])
+        assert names == ([f"{key}.jsa"] if promoted else [other])
 
 
 def test_a_real_conf_dir_turns_the_archive_off(tmp_path):
@@ -203,6 +205,26 @@ def test_a_cache_under_another_path_dumps_its_own_archive(tmp_path, monkeypatch)
     assert (copied.key, copied.dump) == (_key(second), True)
 
 
+def test_the_lock_is_the_kernels_not_a_pid(tmp_path, monkeypatch):
+    """A lock file naming a live pid holds no lock: the first session takes
+    it and deletes the key's leftover ``.tmp`` files, a second one finds
+    it held and starts without the archive, and release leaves nothing."""
+    monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
+    directory, key = _archive_dir(tmp_path), _key(tmp_path)
+    os.makedirs(directory)
+    with open(os.path.join(directory, f"{key}.lock"), "w") as f:
+        f.write(str(os.getpid()))
+    leftover = os.path.join(directory, f"{key}.1.tmp")
+    open(leftover, "wb").close()
+    archive = driver_cds.plan({})
+    assert (archive.key, archive.dump) == (key, True)
+    assert not os.path.exists(leftover)
+    assert driver_cds.plan({}) is None
+    archive.release()
+    assert os.listdir(directory) == ["empty-conf"]
+
+
 def _java_processes_under(path):
     found = []
     for pid in filter(str.isdigit, os.listdir("/proc")):
@@ -218,13 +240,15 @@ def _java_processes_under(path):
 
 def _job(tmp, cache, name):
     out = tmp / name
-    subprocess.run(
+    job = subprocess.run(
         [sys.executable, os.path.join(REPO, "scripts", "run_job.py"),
          "--output", str(out / "out"), "--audit", str(out / "audit"),
          "--run-id", "cds", "--n-convs", "20", "--buckets", "2"],
         env=_env(cache, SPARK_GRAFT_CPUS="2"), cwd=REPO, check=True, timeout=600,
-        stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
+        stdout=subprocess.DEVNULL, stderr=subprocess.PIPE, text=True,
     )
+    # a job's first run finds no ledger, and says nothing about it
+    assert "FileNotFoundException" not in job.stderr
     # the JVM writes its archive at exit: the job returns after it has ended
     assert _java_processes_under(cache) == []
     table = pq.read_table(str(out / "out"))
