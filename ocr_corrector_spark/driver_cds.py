@@ -25,9 +25,10 @@ One process dumps per key at a time: it holds an exclusive ``flock`` on
 ``<key>.lock`` until its dump is promoted or dropped, and a session that
 finds the lock held starts without the archive.  The kernel drops the
 lock when its holder exits, however it exits, so the process that takes
-it deletes the key's leftover ``.tmp`` files.  A promote deletes the other
-keys' archives: a cache holds one.  Deleting the directory resets all of
-it.
+it deletes the key's leftover ``.tmp`` files.  A promote, and a session
+that maps its key's archive, delete the other keys' archives (never their
+``.tmp`` or ``.lock`` files): a cache holds one.  Deleting the directory
+resets all of it.
 
 CDS refuses a class path that holds a non-empty directory, and
 spark-submit puts the conf dir first on it.  So the archive is used only
@@ -174,11 +175,17 @@ class Archive:
         try:
             if java and os.path.exists(self.tmp) and _maps(java, self.tmp, class_path, self.directory):
                 os.replace(self.tmp, self.jsa)
-                for name in os.listdir(self.directory):
-                    if name.endswith(".jsa") and name != self.key + ".jsa":
-                        _unlink(os.path.join(self.directory, name))
+                _drop_other_archives(self.directory, self.key)
         finally:
             self.release()
+
+
+def _drop_other_archives(directory: str, key: str) -> None:
+    """Delete every other key's ``.jsa``; another key's ``.tmp`` and
+    ``.lock`` belong to a process that may still be dumping it."""
+    for name in os.listdir(directory):
+        if name.startswith("spark-driver-") and name.endswith(".jsa") and name != key + ".jsa":
+            _unlink(os.path.join(directory, name))
 
 
 def _maps(java: str, archive: str, class_path: str, directory: str) -> bool:
@@ -223,6 +230,7 @@ def plan(extra_conf: dict) -> Archive | None:
             return None
         key = archive_key(java, spark_home, empty)
         if os.path.isfile(os.path.join(directory, key + ".jsa")):
+            _drop_other_archives(directory, key)
             return Archive(directory, key, dump=False)
         lock = _take_lock(directory, key)
         if lock is not None:

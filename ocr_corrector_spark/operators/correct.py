@@ -12,11 +12,17 @@ Two UDFs call the same ``correct_batch`` loop:
   (plans/pipeline.correct_pipeline): a scalar Arrow UDF over
   ``(text, probs, biz)`` that extracts, detects, tests eligibility and
   corrects, returning ``struct<text, corr_mode, text_corrected>``.  It
-  works on whole batches: ``_err_keys`` thresholds ``probs`` with numpy
-  over the list array's offsets and values (the dedup plan passes its
-  native ``err_prob_key`` column instead, which is taken as the key), the
-  strings come through ``to_numpy``, and ``route_rows`` tests the
-  eligibility filters over the batch's code points at once.  Its body is
+  works on whole batches, through Arrow buffers and numpy
+  (``correct_arrow``): ``_err_keys`` thresholds ``probs`` over the list
+  array's offsets, values and validity (the dedup plan passes its native
+  ``err_prob_key`` column instead, which is taken as the key), the
+  strings are decoded from their offsets and data buffers, and
+  ``route_rows`` tests the eligibility filters over the batch's code
+  points at once.  The result is assembled from buffers, with null for
+  each string that did not change (``unpack_result`` fills them back),
+  so that only changed strings get encoded.  The crossing never imports
+  pandas: pyarrow's ``to_numpy`` and ``pa.array`` over Python objects
+  would, at about 0.3 s and 38 MB per worker.  Its body is
   ``_Corrector.correct_rows``, which runs the distinct rows it has not
   seen through ``extract_any`` → ``route_rows`` → ``correct_batch``.
 * ``with_dispatched_correction`` — a pandas UDF over a natively computed
@@ -38,10 +44,11 @@ and tasks:
   (``_keyword_index`` and ``_char_sim``, shared by every config);
 * one ``_Corrector`` per config (``_corrector``): the candidate scorer,
   the batch scorer, a bounded memo of the BERT route's decision per
-  ``(original, observed)`` character pair, and a bounded FIFO memo from
-  the single crossing's input triple ``(text, err_prob_key, biz)`` to its
+  ``(original, observed)`` character pair, and a FIFO memo from the
+  single crossing's input triple ``(text, err_prob_key, biz)`` to its
   output row — the identity the dedup plan (plans/pipeline.py) already
-  relies on.
+  relies on.  The memo is bounded by rows and by characters, and admits
+  only a sample of fresh rows while nearly none repeat.
 
 The keyword route matches its structural template by position
 (functions/correct_kernels.positional_candidates) rather than compiling a
@@ -79,7 +86,17 @@ from .extract import extract_any
 SCORER_BACKENDS = ("table", "framed", "lm")
 # the keyword path's shape-similarity cut-off (config/config.json:8)
 KEYWORD_SIMILARITY = 0.55
+# the row memo's bounds: entries, and characters across each entry's
+# input, extracted and corrected text
 _ROW_CACHE_MAX = 200_000
+_ROW_CACHE_CHARS = 8_000_000
+# the row memo's admission: after every window of at least _MEMO_WINDOW
+# lookups, a window where fewer than one lookup in _MEMO_COLD found its
+# row computed already leaves the memo admitting only every _MEMO_SAMPLE-th
+# fresh row, until a window repeats again
+_MEMO_WINDOW = 8_192
+_MEMO_COLD = 64
+_MEMO_SAMPLE = 16
 _SIM_CACHE_MAX = 65_536
 _DECISION_CACHE_MAX = 65_536
 
@@ -205,6 +222,11 @@ class _Corrector:
     def __init__(self, cfg: CorrectionConfig):
         self.cfg = cfg
         self.memo: OrderedDict = OrderedDict()
+        self.memo_chars = 0  # _held_chars summed over the memo
+        # the admission window: rows looked up, rows not computed fresh
+        self.window_rows = self.window_repeats = 0
+        self.sampling = False  # admit only every _MEMO_SAMPLE-th fresh row
+        self.fresh_rows = 0  # fresh rows seen
         table = dict(cfg.table)
 
         def scorer(ch):
@@ -279,7 +301,13 @@ class _Corrector:
         memo on that triple.  Every hit is read before anything is
         inserted, so this batch's own misses cannot evict a row it still
         needs; the distinct misses then run through ``extract_any`` →
-        ``route_rows`` → ``correct_batch`` once."""
+        ``route_rows`` → ``correct_batch`` once.
+
+        The memo admits what repeats: while the last window's rows were
+        nearly all fresh (no memo hit, no repeat within their batch), it
+        admits only a sample of the fresh rows, so that a stream which
+        starts repeating is seen to.  It is FIFO, bounded by entries and
+        by characters; the answers never depend on what it holds."""
         memo = self.memo
         keys = [
             (t, None if k is None else tuple(k), b)
@@ -290,6 +318,11 @@ class _Corrector:
         for i, (key, row) in enumerate(zip(keys, rows)):
             if row is None:
                 first.setdefault(key, i)
+        self.window_rows += len(keys)
+        self.window_repeats += len(keys) - len(first)
+        if self.window_rows >= _MEMO_WINDOW:
+            self.sampling = self.window_repeats * _MEMO_COLD < self.window_rows
+            self.window_rows = self.window_repeats = 0
         if not first:
             return rows
         idx = list(first.values())
@@ -299,13 +332,35 @@ class _Corrector:
         )
         corrected = self.correct_batch(extracted, errs, modes)
         fresh = dict(zip(first, zip(extracted, modes, corrected)))
-        for key, row in fresh.items():
-            # FIFO in O(1); on a plain dict next(iter(d)) walks past every
-            # hole that earlier pops left at the front of its entry table
-            if len(memo) >= _ROW_CACHE_MAX:
-                memo.popitem(last=False)
-            memo[key] = row
+        admitted = list(fresh.items())
+        if self.sampling:  # the fresh rows numbered 0, S, 2S, ... in this worker
+            admitted = admitted[-self.fresh_rows % _MEMO_SAMPLE :: _MEMO_SAMPLE]
+        self.fresh_rows += len(fresh)
+        for key, row in admitted:
+            self._admit(key, row)
         return [fresh[key] if row is None else row for key, row in zip(keys, rows)]
+
+    def _admit(self, key, row) -> None:
+        """Insert one entry, first evicting the oldest ones past either
+        bound; an entry larger than the character bound is not kept.  FIFO
+        in O(1): on a plain dict next(iter(d)) walks past every hole that
+        earlier pops left at the front of its entry table."""
+        memo = self.memo
+        chars = _held_chars(key, row)
+        if chars > _ROW_CACHE_CHARS:
+            return
+        while memo and (
+            len(memo) >= _ROW_CACHE_MAX or self.memo_chars + chars > _ROW_CACHE_CHARS
+        ):
+            self.memo_chars -= _held_chars(*memo.popitem(last=False))
+        memo[key] = row
+        self.memo_chars += chars
+
+
+def _held_chars(key, row) -> int:
+    """The characters of a memo entry's input, extracted and corrected
+    text, each counted, also where two of them are one string."""
+    return sum(len(s) for s in (key[0], row[0], row[2]) if s)
 
 
 @functools.cache
@@ -362,31 +417,126 @@ def route_rows(texts: list, err_keys: list, bizes: list) -> tuple[list, list]:
     return modes, errs
 
 
+def _valid(arr: pa.Array) -> np.ndarray | None:
+    """Per-row validity of ``arr`` (honouring its offset) read from its
+    bitmap, or None when no row is null."""
+    if not arr.null_count:
+        return None
+    lo, n = arr.offset, len(arr)
+    bits = np.frombuffer(arr.buffers()[0], np.uint8, (lo + n + 7) // 8 - lo // 8, lo // 8)
+    return np.unpackbits(bits, bitorder="little")[lo % 8 : lo % 8 + n].view(bool)
+
+
+def _offsets(arr: pa.Array) -> np.ndarray:
+    """The ``len(arr) + 1`` offsets of a (large) string or list array into
+    its data buffer or child array, as stored."""
+    dtype = np.int64 if isinstance(arr, (pa.LargeStringArray, pa.LargeListArray)) else np.int32
+    return np.frombuffer(arr.buffers()[1], dtype, len(arr) + 1, arr.offset * dtype().itemsize)
+
+
+def _strings(arr: pa.Array) -> list:
+    """``arr.to_pylist()`` of a string or large_string array, decoded from
+    its buffers."""
+    if not len(arr):
+        return []
+    offsets = _offsets(arr)
+    lo = int(offsets[0])
+    data = arr.buffers()[2]
+    raw = b"" if data is None else bytes(memoryview(data)[lo : int(offsets[-1])])
+    bounds = (offsets - lo).tolist()
+    if raw.isascii():  # byte offsets are character offsets: one decode
+        whole = raw.decode("ascii")
+        out = [whole[a:b] for a, b in zip(bounds, bounds[1:])]
+    else:
+        out = [raw[a:b].decode() for a, b in zip(bounds, bounds[1:])]
+    valid = _valid(arr)
+    if valid is not None:
+        out = [s if v else None for s, v in zip(out, valid.tolist())]
+    return out
+
+
+def _string_array(values: list) -> pa.Array:
+    """``pa.array(values, pa.string())`` assembled from buffers: only the
+    strings that are not None get encoded."""
+    n = len(values)
+    keep = [i for i, v in enumerate(values) if v is not None]
+    data = [values[i].encode() for i in keep]
+    lens = np.zeros(n, np.int32)
+    lens[keep] = [len(d) for d in data]
+    offsets = np.zeros(n + 1, np.int32)
+    np.cumsum(lens, out=offsets[1:])
+    bitmap = None
+    if len(keep) < n:
+        valid = np.zeros(n, bool)
+        valid[keep] = True
+        bitmap = pa.py_buffer(np.packbits(valid, bitorder="little"))
+    buffers = [bitmap, pa.py_buffer(offsets), pa.py_buffer(b"".join(data))]
+    return pa.Array.from_buffers(pa.string(), n, buffers, null_count=n - len(keep))
+
+
+# numpy dtypes of Spark's Arrow floats by name; an integer's name is numpy's
+_FLOATS = {"float": np.float32, "double": np.float64}
+
+
 def _err_keys(col: pa.Array) -> list:
     """Memo keys from the correction UDF's second column, one per row: a
     tuple of positions, or None for a null array.  A ``probs`` column
     (list of float or double) gives operators/detect.err_prob_key's value:
     the positions whose value is below ``PROB_THRESHOLD``, compared in
     float64 as Spark compares ``element_at(probs, i + 1) < 0.9``.  A list
-    of ints is taken as the key itself (the dedup plan's ``_errk``)."""
-    offsets = col.offsets.to_numpy()
+    of ints is taken as the key itself (the dedup plan's ``_errk``).  The
+    values are read from the child array's buffers."""
+    if not len(col):
+        return []
+    offsets = _offsets(col)
     lo, hi = int(offsets[0]), int(offsets[-1])
     starts = offsets - lo
-    values = col.values.slice(lo, hi - lo).to_numpy(zero_copy_only=False)
-    if pa.types.is_floating(col.type.value_type):
-        # a null element reads as NaN, which compares False, as the null
+    child = col.values.slice(lo, hi - lo)
+    name = str(child.type)
+    dtype = np.dtype(_FLOATS.get(name, name))
+    values = np.frombuffer(child.buffers()[1], dtype, hi - lo, child.offset * dtype.itemsize)
+    if name in _FLOATS:
+        # NaN compares False, and so does a null element, as the null
         # comparison does in Spark's filter
         below = values.astype(np.float64) < PROB_THRESHOLD
+        valid = _valid(child)
+        if valid is not None:
+            below &= valid
         pos = (np.arange(hi - lo) - np.repeat(starts[:-1], np.diff(starts)))[below]
         starts = np.concatenate(([0], np.cumsum(below)))[starts]
     else:
         pos = values
     flat, bounds = pos.tolist(), starts.tolist()
     keys = [tuple(flat[a:b]) for a, b in zip(bounds, bounds[1:])]
-    if col.null_count:
-        valid = col.is_valid().to_numpy(zero_copy_only=False).tolist()
-        keys = [k if v else None for k, v in zip(keys, valid)]
+    valid = _valid(col)
+    if valid is not None:
+        keys = [k if v else None for k, v in zip(keys, valid.tolist())]
     return keys
+
+
+def correct_arrow(
+    cfg: CorrectionConfig, text: pa.Array, errs: pa.Array, biz: pa.Array
+) -> pa.StructArray:
+    """The single crossing's body on one Arrow batch: ``_err_keys`` and
+    ``_strings`` read the columns from their buffers, the worker's
+    ``_Corrector`` answers, and the result is assembled from buffers as
+    ``_RESULT_ARROW``, with null for a ``text`` that extraction left
+    unchanged and for a ``text_corrected`` equal to the extracted text
+    (``unpack_result`` fills both back in).  No pandas is loaded:
+    pyarrow's ``to_numpy`` and ``pa.array`` over Python objects import it."""
+    texts = _strings(text)
+    rows = _corrector(cfg).correct_rows(texts, _err_keys(errs), _strings(biz))
+    extracted = [None if e == t else e for t, (e, _, _) in zip(texts, rows)]
+    corrected = [None if c == e else c for e, _, c in rows]
+    modes = np.fromiter((m for _, m, _ in rows), np.int32, len(rows))
+    return pa.StructArray.from_arrays(
+        [
+            _string_array(extracted),
+            pa.Array.from_buffers(pa.int32(), len(rows), [None, pa.py_buffer(modes)]),
+            _string_array(corrected),
+        ],
+        fields=list(_RESULT_ARROW),
+    )
 
 
 def single_pass_udf(
@@ -394,8 +544,10 @@ def single_pass_udf(
 ):
     """The single-crossing scalar Arrow UDF
     ``(text, probs or err_prob_key, biz) → RESULT_TYPE``: extraction,
-    eligibility and correction per batch, as ``pa.Array`` in and out with
-    no pandas conversion; ``_err_keys`` reads its second column.
+    eligibility and correction per batch, as ``pa.Array`` in and out
+    through Arrow buffers and numpy (``correct_arrow``).  An unchanged
+    ``text`` or ``text_corrected`` comes back null, so that only changed
+    strings are encoded; read the result through ``unpack_result``.
 
     ``row_counter``: optional Spark accumulator; the UDF adds the batch
     size per invocation — tests use it to assert the expensive stage
@@ -408,12 +560,7 @@ def single_pass_udf(
     def correct_rows(text: pa.Array, errs: pa.Array, biz: pa.Array) -> pa.Array:
         if row_counter is not None:
             row_counter.add(len(text))
-        rows = _corrector(bc_cfg.value).correct_rows(
-            text.to_numpy(zero_copy_only=False).tolist(),
-            _err_keys(errs),
-            biz.to_numpy(zero_copy_only=False).tolist(),
-        )
-        return pa.array(rows, _RESULT_ARROW)
+        return correct_arrow(bc_cfg.value, text, errs, biz)
 
     return correct_rows
 
@@ -421,17 +568,20 @@ def single_pass_udf(
 def unpack_result(df: DataFrame, res_col: str) -> DataFrame:
     """Natively unpack the UDF's struct column: ``text`` is replaced in
     place by the extracted text, ``corr_mode`` and ``text_corrected`` are
-    appended, ``res_col`` is dropped."""
+    appended, ``res_col`` is dropped.  The struct holds null for a string
+    that did not change, which ``coalesce`` fills: the extracted text from
+    the input ``text``, ``text_corrected`` from the extracted text."""
     res = F.col(res_col)
+    text = F.coalesce(res["text"], F.col("text"))
     cols = [
-        res["text"].alias(c) if c == "text" else F.col(c)
+        text.alias(c) if c == "text" else F.col(c)
         for c in df.columns
         if c != res_col
     ]
     return df.select(
         *cols,
         res["corr_mode"].alias("corr_mode"),
-        res["text_corrected"].alias("text_corrected"),
+        F.coalesce(res["text_corrected"], text).alias("text_corrected"),
     )
 
 

@@ -63,7 +63,8 @@ def q_keyword_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     analog: levenshtein theta-join of each document's first token against a
     broadcast keyword dimension, counted per keyword."""
     docs = load_table(spark, sf_dir, "documents")
-    kws = spark.createDataFrame([(k,) for k in FUZZY_KEYWORDS], "kw string")
+    # a literal frame built in the JVM: one from a Python list runs a Python job
+    kws = spark.range(1).select(F.explode(F.array(*map(F.lit, FUZZY_KEYWORDS))).alias("kw"))
     first = F.element_at(F.split(F.col("text"), " "), 1)
     joined = docs.select(first.alias("tok")).join(
         F.broadcast(kws), F.levenshtein(F.col("tok"), F.col("kw")) <= 1

@@ -35,14 +35,17 @@ def write_audit(df: DataFrame, run_id: str, audit_path: str, wave) -> None:
     overwrite, so a replayed wave replaces its rows rather than adding to
     them, and ``out_rows == ledger sum(n_rows)`` holds across
     crash/replay, not just crash-free."""
-    spark = df.sparkSession
     for name, dtype in _OPTIONAL:
         if name not in df.columns:
             df = df.withColumn(name, F.lit(None).cast(dtype))
     # one pad row per bucket of the wave, every counted column null: an
     # empty bucket still gets its group, and ``_row`` keeps pads out of
-    # n_rows (a null conv_id is a written row, so no count(column) will do)
-    pads = spark.createDataFrame([(int(b), 0) for b in wave], "bucket long, _row int")
+    # n_rows (a null conv_id is a written row, so no count(column) will
+    # do); built in the JVM, as a Python list would start a Python job
+    pads = df.sparkSession.range(1).select(
+        F.explode(F.array(*(F.lit(int(b)) for b in wave)).cast("array<long>")).alias("bucket"),
+        F.lit(0).alias("_row"),
+    )
     rows = df.withColumn("_row", F.lit(1)).unionByName(pads, allowMissingColumns=True)
     ledger = rows.groupBy("bucket").agg(
         F.lit(run_id).alias("run_id"),

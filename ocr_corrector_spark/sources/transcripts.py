@@ -93,14 +93,20 @@ LAYOUT_FRACTION_DENOM = 7
 
 
 def corpus_df(spark: SparkSession) -> DataFrame:
+    """``CORPUS`` as a frame of literals built in the JVM: a frame from a
+    Python list would run a Python job, whose workers stay up in a pool of
+    their own beside the correction UDF's."""
     rows = [
-        (i, clean, noisy, errs, biz)
+        F.struct(
+            F.lit(i).cast("long").alias("corpus_idx"),
+            F.lit(clean).alias("text_clean"),
+            F.lit(noisy).alias("text_noisy"),
+            F.array(*map(F.lit, errs)).cast("array<int>").alias("err_expected"),
+            F.lit(biz).alias("biz"),
+        )
         for i, (clean, noisy, errs, biz) in enumerate(CORPUS)
     ]
-    return spark.createDataFrame(
-        rows, "corpus_idx long, text_clean string, text_noisy string, "
-        "err_expected array<int>, biz string"
-    )
+    return spark.range(1).select(F.inline(F.array(*rows)))
 
 
 def gen_transcripts(

@@ -189,15 +189,23 @@ def test_two_first_sessions_dump_once(tmp_path):
 def test_a_cache_under_another_path_dumps_its_own_archive(tmp_path, monkeypatch):
     """The archive records the cache's empty conf dir on its class path,
     and a JVM silently declines it under another path: a cache copied to
-    another ``XDG_CACHE_HOME`` keys, and dumps, an archive of its own."""
+    another ``XDG_CACHE_HOME`` keys, and dumps, an archive of its own.  A
+    session that maps its key's archive deletes the other keys' archives,
+    but not another key's ``.tmp`` or ``.lock``: that key may be dumping."""
     first, second = tmp_path / "first", tmp_path / "second"
     assert _key(first) != _key(second)
     monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
     monkeypatch.setenv("XDG_CACHE_HOME", str(first))
-    os.makedirs(os.path.join(_archive_dir(first), "empty-conf"))
-    open(os.path.join(_archive_dir(first), f"{_key(first)}.jsa"), "wb").close()
+    directory = _archive_dir(first)
+    os.makedirs(os.path.join(directory, "empty-conf"))
+    other = "spark-driver-0000000000000000"  # a superseded key
+    for name in (f"{_key(first)}.jsa", f"{other}.jsa", f"{other}.1.tmp", f"{other}.lock"):
+        open(os.path.join(directory, name), "wb").close()
     mapped = driver_cds.plan({})
     assert (mapped.key, mapped.dump) == (_key(first), False)
+    assert sorted(os.listdir(directory)) == sorted(
+        ["empty-conf", f"{_key(first)}.jsa", f"{other}.1.tmp", f"{other}.lock"]
+    )
     shutil.copytree(first, second)
     monkeypatch.setenv("XDG_CACHE_HOME", str(second))
     copied = driver_cds.plan({})

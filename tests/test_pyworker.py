@@ -93,12 +93,65 @@ def test_bundled_version_of_a_missing_or_foreign_archive_is_none(tmp_path):
     assert bundled_pyspark_version(str(tmp_path / "other.zip")) is None
 
 
+def _ipc_stream(batches) -> bytes:
+    import pyarrow as pa
+
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, batches[0].schema) as writer:
+        for batch in batches:
+            writer.write_batch(batch)
+    return sink.getvalue().to_pybytes()
+
+
+# runs the single crossing's body over the Arrow batches on stdin, as a
+# worker reads them from Spark, then prints whether pandas was imported
+_UDF_BODY = """
+import sys
+import pyarrow as pa
+from ocr_corrector_spark.operators.correct import correct_arrow, correction_config
+cfg = correction_config()
+rows = 0
+for batch in pa.ipc.open_stream(sys.stdin.buffer.read()):
+    for part in (batch, batch.slice(1)):
+        rows += len(correct_arrow(cfg, *part.columns))
+print(rows, 'pandas' in sys.modules)
+"""
+
+
 def test_the_correction_module_leaves_pandas_out():
-    # the single crossing's workers import this module; only the staged
-    # pandas UDFs need pandas (about 0.3 s and 40 MB per fresh worker)
-    code = "import sys, ocr_corrector_spark.operators.correct; print('pandas' in sys.modules)"
+    # the single crossing's workers import this module and run its body;
+    # only the staged pandas UDFs need pandas (about 0.3 s and 40 MB per
+    # fresh worker).  pyarrow's to_numpy and pa.array import it, so the
+    # body must use neither; the batches come in as a worker gets them
+    import pyarrow as pa
+
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = "import sys, ocr_corrector_spark.operators.correct; print('pandas' in sys.modules)"
     out = subprocess.run(
         [sys.executable, "-c", code], cwd=repo, capture_output=True, text=True, check=True
     ).stdout
     assert out.split()[-1] == "False"
+
+    batch = pa.RecordBatch.from_arrays(
+        [
+            pa.array(["<p>宋还本全</p>", None, "我爱北京大安门", "", "宋还本全"]),
+            pa.array(
+                [[0.5, None], None, [0.99] * 4 + [0.56] + [0.99] * 2, [], [0.5, 0.99, 0.99, 0.5]],
+                pa.list_(pa.float64()),
+            ),
+            pa.array(["report", "doc", "doc", None, "report"]),
+        ],
+        ["text", "probs", "biz"],
+    )
+    dedup = pa.RecordBatch.from_arrays(
+        [batch.column(0), pa.array([[0], None, [4], [], [0, 3]], pa.list_(pa.int32())),
+         batch.column(2)],
+        ["text", "errk", "biz"],
+    )
+    outputs = []
+    for batches in ([batch, batch], [dedup]):
+        outputs.append(subprocess.run(
+            [sys.executable, "-c", _UDF_BODY], cwd=repo, input=_ipc_stream(batches),
+            capture_output=True, check=True,
+        ).stdout.decode().split())
+    assert outputs == [["18", "False"], ["9", "False"]]

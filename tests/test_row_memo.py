@@ -124,3 +124,79 @@ def test_memo_is_bounded_fifo_and_answer_preserving(backend, cap, batches):
             fifo = (fifo + new)[-cap:]
             assert list(worker.memo) == fifo
             assert miss.call_count == misses
+
+
+def _unique(n, start=0):
+    """``n`` fresh bert-route rows."""
+    return [("大安门广场" + chr(0x4E00 + i), [0], "chat") for i in range(start, start + n)]
+
+
+def _admission(window=8, cold=4, sample=4):
+    return mock.patch.multiple(correct, _MEMO_WINDOW=window, _MEMO_COLD=cold, _MEMO_SAMPLE=sample)
+
+
+def test_a_stream_without_repeats_stops_filling_the_memo():
+    worker = _Corrector(CFGS["table"])
+    stream = _unique(40)
+    with _admission():
+        for i in range(0, 40, 4):
+            batch = stream[i : i + 4]
+            assert worker.correct_rows(*_columns(batch)) == _expected("table", batch)
+    # the first window (8 rows, none repeated) closes with the second
+    # batch: from that batch on, every 4th fresh row is admitted
+    assert list(worker.memo) == [_key(r) for r in stream[:4] + stream[4::4]]
+    assert worker.sampling
+
+
+def test_a_stream_that_starts_repeating_is_admitted_again():
+    worker = _Corrector(CFGS["table"])
+    with _admission():
+        for i in range(0, 16, 4):  # two windows without a repeat
+            worker.correct_rows(*_columns(_unique(4, i)))
+        assert worker.sampling
+        # one window in which half the rows repeat within their batch
+        for i in range(16, 24, 2):
+            batch = _unique(2, i) * 2
+            assert worker.correct_rows(*_columns(batch)) == _expected("table", batch)
+        assert not worker.sampling
+        size = len(worker.memo)
+        fresh = _unique(4, 100)
+        worker.correct_rows(*_columns(fresh))
+    assert list(worker.memo)[size:] == [_key(r) for r in fresh]
+
+
+@pytest.mark.parametrize("backend", BACKENDS)
+@given(cap=st.integers(1, 60), batches=_BATCHES)
+@settings(max_examples=100, deadline=None)
+def test_the_character_bound_evicts_the_oldest_first(backend, cap, batches):
+    worker = _Corrector(CFGS[backend])
+    fifo: dict = {}  # model: key -> its characters, oldest first
+    with mock.patch.object(correct, "_ROW_CACHE_CHARS", cap):
+        for batch in batches * 2:
+            expected = _expected(backend, batch)
+            assert worker.correct_rows(*_columns(batch)) == expected
+            # the batch's new keys, in order; one longer than cap is not kept
+            new = {k: r for k, r in zip(map(_key, batch), expected) if k not in fifo}
+            for key, row in new.items():
+                chars = sum(len(s) for s in (key[0], row[0], row[2]) if s)
+                if chars > cap:
+                    continue
+                while sum(fifo.values()) + chars > cap:
+                    del fifo[next(iter(fifo))]
+                fifo[key] = chars
+            assert list(worker.memo) == list(fifo)
+            assert worker.memo_chars == sum(fifo.values())
+
+
+def test_a_repetitive_stream_keeps_admitting_every_row():
+    """A dup_heavy-shaped stream (half the rows from a small pool, half
+    fresh) under the real constants: every distinct row is computed once,
+    as with a memo that admits all."""
+    pool = [A, B, C, D, ("我爱北京大安门", [4], "doc"), ("逾期3天要还", [2], "doc")]
+    rows = [pool[i % len(pool)] if i % 2 else _unique(1, i)[0] for i in range(3 * correct._MEMO_WINDOW)]
+    worker = _Corrector(CFGS["table"])
+    with mock.patch.object(correct, "extract_any", side_effect=extract_any) as miss:
+        for i in range(0, len(rows), 2000):
+            worker.correct_rows(*_columns(rows[i : i + 2000]))
+    assert miss.call_count == len(set(map(_key, rows)))
+    assert not worker.sampling
