@@ -38,6 +38,26 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # row.  Every query also stays covered by the committed self-run gate
     # (BENCH/CORRECTNESS_SELF.json, scripts/self_correctness.py).
     return {
+        "length_histogram": q.q_length_histogram,
+        "char_entropy": q.q_char_entropy,
+        "zipf_fit": q.q_zipf_fit,
+        "dup_ngram_coverage": q.q_dup_ngram_coverage,
+        "ivfpq_topk": q.q_ivfpq_topk,
+        "semantic_dedup": q.q_semantic_dedup,
+        "url_canonicalize": q.q_url_canonicalize,
+        "anchor_stats": q.q_anchor_stats,
+        "image_ahash": _image_ahash,
+        "quality_classifier": q.q_quality_classifier,
+        "err_positions": q.q_err_positions,
+        "digit_translate": q.q_digit_translate,
+        "keyword_fuzzy_join": q.q_keyword_fuzzy_join,
+        "argmax_rank": q.q_argmax_rank,
+        "confusion_topk": q.q_confusion_topk,
+        "changed_rows": q.q_changed_rows,
+        "group_metrics": q.q_group_metrics,
+        "turn_reassembly": q.q_turn_reassembly,
+        "exact_dedup": q.q_exact_dedup,
+        "dedup_stats": q.q_dedup_stats,
         "ngram_jaccard": q.q_ngram_jaccard,
         "minhash_buckets": q.q_minhash_buckets,
         "cosine_topk": q.q_cosine_topk,
@@ -88,26 +108,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "link_graph": q.q_link_graph,
         "markdownify": q.q_markdownify,
         "lm_perplexity": q.q_lm_perplexity,
-        "length_histogram": q.q_length_histogram,
-        "char_entropy": q.q_char_entropy,
-        "zipf_fit": q.q_zipf_fit,
-        "dup_ngram_coverage": q.q_dup_ngram_coverage,
-        "ivfpq_topk": q.q_ivfpq_topk,
-        "semantic_dedup": q.q_semantic_dedup,
-        "url_canonicalize": q.q_url_canonicalize,
-        "anchor_stats": q.q_anchor_stats,
-        "image_ahash": _image_ahash,
-        "quality_classifier": q.q_quality_classifier,
-        "err_positions": q.q_err_positions,
-        "digit_translate": q.q_digit_translate,
-        "keyword_fuzzy_join": q.q_keyword_fuzzy_join,
-        "argmax_rank": q.q_argmax_rank,
-        "confusion_topk": q.q_confusion_topk,
-        "changed_rows": q.q_changed_rows,
-        "group_metrics": q.q_group_metrics,
-        "turn_reassembly": q.q_turn_reassembly,
-        "exact_dedup": q.q_exact_dedup,
-        "dedup_stats": q.q_dedup_stats,
     }
 
 

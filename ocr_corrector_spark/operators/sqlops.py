@@ -127,23 +127,30 @@ def q_group_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- F4 analog: salted order-preserving reassembly ------------------------------
-def q_turn_reassembly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order-preserving turn reassembly (base_corrector.py:88-94 at scale):
-    per user, the (ts, event_id)-ordered event_type sequence, built with the
-    salted two-stage aggregation from operators/reassemble.py."""
-    ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 200)
+def _event_sequences(ev: DataFrame) -> DataFrame:
+    """(user_id, events): each user's event_type array in stable
+    (ts, event_id) order, built with the two-stage SALTED aggregation from
+    operators/reassemble.py (a hot user cannot pin one reducer)."""
     payload = F.struct("ts", "event_id", "event_type")
     stage1 = (
         ev.withColumn("_salt", F.pmod(F.xxhash64("event_id"), F.lit(8)))
         .groupBy("user_id", "_salt")
         .agg(F.collect_list(payload).alias("_chunk"))
     )
-    merged = stage1.groupBy("user_id").agg(
-        F.array_sort(F.flatten(F.collect_list("_chunk"))).alias("seq")
+    return stage1.groupBy("user_id").agg(
+        F.transform(
+            F.array_sort(F.flatten(F.collect_list("_chunk"))),
+            lambda s: s.event_type,
+        ).alias("events")
     )
-    return merged.select(
-        "user_id",
-        F.array_join(F.transform("seq", lambda s: s.event_type), ",").alias("event_seq"),
+
+
+def q_turn_reassembly(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Order-preserving turn reassembly (base_corrector.py:88-94 at scale):
+    per user, the (ts, event_id)-ordered event_type sequence."""
+    ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 200)
+    return _event_sequences(ev).select(
+        "user_id", F.array_join("events", ",").alias("event_seq")
     )
 
 
@@ -214,6 +221,14 @@ def _bruteforce_eval_guard(df: DataFrame, query: str, scalable_twin: str) -> Dat
     ).drop("_fence")
 
 
+def _jaccard(a, b):
+    """Jaccard similarity of two set columns, rounded to 4dp (0.0 when
+    both sets are empty)."""
+    inter = F.size(F.array_intersect(a, b))
+    union = F.size(a) + F.size(b) - inter
+    return F.round(F.when(union > 0, inter / union).otherwise(F.lit(0.0)), 4)
+
+
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EVAL-ONLY brute-force baseline: near-duplicate pairs by word-3-gram
     Jaccard >= 0.30 over a bounded id range.  O(n²) by design — it measures
@@ -230,13 +245,10 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = docs.alias("a")
     b = docs.alias("b")
     pairs = a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
-    inter = F.size(F.array_intersect(F.col("a.grams"), F.col("b.grams")))
-    union = F.size(F.col("a.grams")) + F.size(F.col("b.grams")) - inter
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
     return pairs.select(
         F.col("a.doc_id").alias("doc_a"),
         F.col("b.doc_id").alias("doc_b"),
-        F.round(jac, 4).alias("jaccard"),
+        _jaccard(F.col("a.grams"), F.col("b.grams")).alias("jaccard"),
     ).filter(F.col("jaccard") >= 0.30)
 
 
@@ -244,31 +256,54 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 MINHASH_SEEDS = ("s1", "s2", "s3", "s4")
 
 
-def q_minhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash banding: signature = per-seed min of md5(seed || word-3-gram);
-    band key = concat of the 4 minhashes.  Buckets with >1 doc are the LSH
-    candidate groups — the shuffle key that replaces the O(n²) cross join
-    at scale."""
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
+def _doc_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, g): one row per distinct word 3-gram of each document.
+
+    The gram expression is exploded INLINE: aliasing the array in one
+    projection and exploding the column in the next defeats projection
+    collapse and re-evaluates the whole n-gram transform per consumer
+    (measured 12x on the gram stage).  The repartition spreads the
+    gram/md5 work across the session's cores: the bench tables are single
+    parquet files (one input split), and without it the whole signature
+    computation runs on one task."""
+    return (
+        load_table(spark, sf_dir, "documents")
+        .repartition(spark.sparkContext.defaultParallelism)
+        .select("doc_id", F.explode(_word_ngrams(F.split("text", " "))).alias("g"))
     )
-    # Explode grams so each md5 runs once per (gram, seed): an
-    # array_min(transform(...)) per seed would re-evaluate the (large)
-    # gram-construction expression once per seed after Catalyst collapses
-    # the projections.  min() over exploded rows equals array_min, and
-    # duplicate grams cannot change a min, so no distinct is needed.
-    grams = docs.select(
-        "doc_id", F.explode(_word_ngrams(F.split("text", " "))).alias("g")
-    )
-    sigs = grams.groupBy("doc_id").agg(
+
+
+def _minhash_band(gram_rows: DataFrame, key: str) -> DataFrame:
+    """(key, band_key, grams) from (key, g) gram rows: ONE groupBy builds
+    the 4-seed MinHash signature (per-seed min of md5(seed || gram); the
+    band key is the concat of the 4 minhashes) and the distinct gram set,
+    so there is no join back to the input.
+
+    Each md5 runs once per exploded (gram, seed) row: an
+    array_min(transform(...)) per seed would re-evaluate the (large)
+    gram-construction expression once per seed after Catalyst collapses
+    the projections.  Keys with no gram rows (<3 words) drop out.  The
+    gram set holds 64-bit xxhash64 values, not the strings, so the band
+    join ships longs; Jaccard over the hashed sets equals Jaccard over the
+    grams unless two grams of a pair collide.  collect_set matches the
+    array_distinct in _word_ngrams (only set sizes feed the Jaccard)."""
+    keyed = gram_rows.groupBy(key).agg(
         *[
             F.min(F.md5(F.concat(F.lit(s), F.col("g")))).alias(f"mh_{s}")
             for s in MINHASH_SEEDS
-        ]
+        ],
+        F.collect_set(F.xxhash64("g")).alias("grams"),
     )
     band = F.concat_ws("|", *[F.col(f"mh_{s}") for s in MINHASH_SEEDS])
+    return keyed.select(key, band.alias("band_key"), "grams")
+
+
+def q_minhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash banding: buckets of the band key with >1 doc are the LSH
+    candidate groups — the shuffle key that replaces the O(n²) cross join
+    at scale.  (The unused gram set is pruned from the plan.)"""
     return (
-        sigs.select(band.alias("band_key"), "doc_id")
+        _minhash_band(_doc_grams(spark, sf_dir), "doc_id")
         .groupBy("band_key")
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .filter(F.col("n_docs") > 1)
@@ -276,27 +311,39 @@ def q_minhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- similarity search: brute-force cosine top-k -------------------------------------
-def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding ANN baseline: cosine similarity of every vector against the
-    vec_id=0 query, top 10 (deterministic tie-break on vec_id).  Native
-    zip_with/aggregate dot products — JVM-side, no UDF."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, v array<double>) of the embeddings table."""
+    return load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    qvec = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("q"))
-    joined = emb.filter(F.col("vec_id") != 0).crossJoin(F.broadcast(qvec))
 
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, z: acc + z,
-        )
 
-    norm = lambda x: F.sqrt(dot(x, x))  # noqa: E731
-    cos = dot(F.col("v"), F.col("q")) / (norm(F.col("v")) * norm(F.col("q")))
-    scored = joined.select("vec_id", F.round(cos, 6).alias("cos_sim"))
+def _dot(x, y):
+    """Dot product of two array<double> columns: a native zip_with /
+    aggregate fold (JVM-side, no UDF)."""
+    return F.aggregate(
+        F.zip_with(x, y, lambda a, b: a * b), F.lit(0.0), lambda acc, z: acc + z
+    )
+
+
+def _cosine(x, y):
+    """Cosine similarity of two array<double> columns (unrounded)."""
+    return _dot(x, y) / (F.sqrt(_dot(x, x)) * F.sqrt(_dot(y, y)))
+
+
+def _cosine_topk(cand: DataFrame) -> DataFrame:
+    """Top 10 (vec_id, cos_sim) of candidate rows (vec_id, v, q): cosine
+    rounded to 6dp, ties broken on vec_id."""
+    scored = cand.select("vec_id", F.round(_cosine(F.col("v"), F.col("q")), 6).alias("cos_sim"))
     return scored.orderBy(F.desc("cos_sim"), F.asc("vec_id")).limit(10)
+
+
+def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding ANN baseline: cosine similarity of every vector against the
+    vec_id=0 query, top 10 (deterministic tie-break on vec_id)."""
+    emb = _embeddings(spark, sf_dir)
+    qvec = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("q"))
+    return _cosine_topk(emb.filter(F.col("vec_id") != 0).crossJoin(F.broadcast(qvec)))
 
 
 # --- text analysis: token stats / quality ---------------------------------------------
@@ -341,33 +388,51 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 SIMHASH_BITS = 32
 
 
+def _md5_u32(c):
+    """The first 32 bits of md5(c) as a non-negative long — the oracles'
+    ``('0x' || substring(md5(c), 1, 8))::BIGINT``."""
+    return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
+
+
+def _doc_words(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, w): one row per non-empty word, spread over the session's
+    cores (see _doc_grams)."""
+    docs = load_table(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism
+    )
+    return docs.select(
+        "doc_id", F.explode(F.split("text", " ")).alias("w")
+    ).filter(F.length("w") > 0)
+
+
+def _bit_votes(h, prefix: str) -> list:
+    """SimHash's per-bit aggregates over a 32-bit hash column: ``<prefix>i``
+    sums +1 for each row with bit i set and -1 for each without."""
+    return [
+        F.sum(F.when(h.bitwiseAND(F.lit(1 << i)) > 0, 1).otherwise(-1)).alias(f"{prefix}{i}")
+        for i in range(SIMHASH_BITS)
+    ]
+
+
+def _bit_pack(prefix: str):
+    """The 32-bit signature of _bit_votes' sums: bit i is 1 iff
+    ``<prefix>i`` is positive."""
+    sig = None
+    for i in range(SIMHASH_BITS):
+        term = F.when(F.col(f"{prefix}{i}") > 0, F.lit(1 << i)).otherwise(F.lit(0))
+        sig = term if sig is None else sig + term
+    return sig.cast("long")
+
+
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash per document: each word hashes to a 32-bit value
     (first 8 hex chars of md5); bit i of the signature is 1 iff the sum of
     ±1 contributions over all words is positive.  Pure Catalyst: explode +
     bitwise agg — the signature is the grouping key for near-dup candidate
     buckets at scale (Hamming-adjacent bands)."""
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    words = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
-    ).filter(F.length("w") > 0)
-    h = F.conv(F.substring(F.md5("w"), 1, 8), 16, 10).cast("long")
-    words = words.select("doc_id", h.alias("h"))
-    sums = words.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.col("h").bitwiseAND(F.lit(1 << i)) > 0, 1).otherwise(-1)
-            ).alias(f"b{i}")
-            for i in range(SIMHASH_BITS)
-        ]
-    )
-    sig = None
-    for i in range(SIMHASH_BITS):
-        term = F.when(F.col(f"b{i}") > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        sig = term if sig is None else sig + term
-    return sums.select("doc_id", sig.cast("long").alias("simhash"))
+    words = _doc_words(spark, sf_dir).select("doc_id", _md5_u32("w").alias("h"))
+    sums = words.groupBy("doc_id").agg(*_bit_votes(F.col("h"), "b"))
+    return sums.select("doc_id", _bit_pack("b").alias("simhash"))
 
 
 # --- dedup: SimHash Hamming-band near-dup pairs --------------------------------------------
@@ -378,9 +443,23 @@ SIMHASH_BANDS = 4  # 4 bands x 8 bits over the 32-bit signature
 SIMHASH_HAMMING_MAX = 2
 
 
-def _simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, simhash) — q_simhash's signature computation, shared."""
-    return q_simhash(spark, sf_dir)
+def _band_join(sigs: DataFrame, bands: list) -> DataFrame:
+    """Candidate pairs for Hamming verification: every (doc_id, signature
+    columns...) row of ``sigs`` posexplodes over the band values in
+    ``bands``, and docs agreeing on ANY band pair up through an equi-join
+    on (band_id, band_val) — a shuffle on a short key, never an O(n²)
+    cross join.  Sides are aliased ``a`` and ``b``, with a.doc_id <
+    b.doc_id; a pair agreeing on several bands appears once per band."""
+    banded = sigs.select(
+        *sigs.columns, F.posexplode(F.array(*bands)).alias("band_id", "band_val")
+    )
+    a, b = banded.alias("a"), banded.alias("b")
+    return a.join(
+        b,
+        (F.col("a.band_id") == F.col("b.band_id"))
+        & (F.col("a.band_val") == F.col("b.band_val"))
+        & (F.col("a.doc_id") < F.col("b.doc_id")),
+    )
 
 
 def q_simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -393,27 +472,10 @@ def q_simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     any pair with fewer than 4 differing bits agrees on at least one of the
     4 bands, so at the hamming <= 2 acceptance threshold the banding has NO
     recall loss."""
-    sigs = _simhash_signatures(spark, sf_dir)
-    bands = sigs.select(
-        "doc_id",
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("simhash"), 8 * k).bitwiseAND(F.lit(255))
-                    for k in range(SIMHASH_BANDS)
-                ]
-            )
-        ).alias("band_id", "band_val"),
-    )
-    a, b = bands.alias("a"), bands.alias("b")
+    sig = F.col("simhash")
+    bands = [F.shiftright(sig, 8 * k).bitwiseAND(F.lit(255)) for k in range(SIMHASH_BANDS)]
     cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        _band_join(q_simhash(spark, sf_dir), bands)
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -438,43 +500,16 @@ def _simhash64_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal in DuckDB (the oracle engine), and every bit test / band
     extraction / xor-popcount works identically on the halves, so the
     representation is sign-safe in both engines by construction."""
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    words = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
-    ).filter(F.length("w") > 0)
     # 64-bit word hash = first 16 hex chars of md5, split into two 32-bit
     # halves (hi = hex chars 1-8, lo = 9-16): both parse to positive longs
-    hi = F.conv(F.substring(F.md5("w"), 1, 8), 16, 10).cast("long")
+    hi = _md5_u32("w")
     lo = F.conv(F.substring(F.md5("w"), 9, 8), 16, 10).cast("long")
-    words = words.select("doc_id", hi.alias("hh"), lo.alias("hl"))
+    words = _doc_words(spark, sf_dir).select("doc_id", hi.alias("hh"), lo.alias("hl"))
     sums = words.groupBy("doc_id").agg(
-        *(
-            [
-                F.sum(
-                    F.when(F.col("hh").bitwiseAND(F.lit(1 << i)) > 0, 1).otherwise(-1)
-                ).alias(f"bh{i}")
-                for i in range(32)
-            ]
-            + [
-                F.sum(
-                    F.when(F.col("hl").bitwiseAND(F.lit(1 << i)) > 0, 1).otherwise(-1)
-                ).alias(f"bl{i}")
-                for i in range(32)
-            ]
-        )
+        *_bit_votes(F.col("hh"), "bh"), *_bit_votes(F.col("hl"), "bl")
     )
-
-    def pack(prefix: str):
-        sig = None
-        for i in range(32):
-            term = F.when(F.col(f"{prefix}{i}") > 0, F.lit(1 << i)).otherwise(F.lit(0))
-            sig = term if sig is None else sig + term
-        return sig.cast("long")
-
     return sums.select(
-        "doc_id", pack("bh").alias("sig_hi"), pack("bl").alias("sig_lo")
+        "doc_id", _bit_pack("bh").alias("sig_hi"), _bit_pack("bl").alias("sig_lo")
     )
 
 
@@ -495,28 +530,14 @@ def q_simhash64_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic-in-bucket).  Past ~10^9 docs, widen further: more/wider
     bands over a 128-bit signature, or Manku's sorted permuted-table
     prefix scan, which replaces the equi-join with a range scan."""
-    sigs = _simhash64_signatures(spark, sf_dir)
-    bands = sigs.select(
-        "doc_id",
-        "sig_hi",
-        "sig_lo",
-        F.posexplode(
-            F.array(
-                F.col("sig_lo").bitwiseAND(F.lit(65535)),
-                F.shiftright(F.col("sig_lo"), 16).bitwiseAND(F.lit(65535)),
-                F.col("sig_hi").bitwiseAND(F.lit(65535)),
-                F.shiftright(F.col("sig_hi"), 16).bitwiseAND(F.lit(65535)),
-            )
-        ).alias("band_id", "band_val"),
-    )
-    a, b = bands.alias("a"), bands.alias("b")
+    bands = [
+        F.col("sig_lo").bitwiseAND(F.lit(65535)),
+        F.shiftright(F.col("sig_lo"), 16).bitwiseAND(F.lit(65535)),
+        F.col("sig_hi").bitwiseAND(F.lit(65535)),
+        F.shiftright(F.col("sig_hi"), 16).bitwiseAND(F.lit(65535)),
+    ]
     cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        _band_join(_simhash64_signatures(spark, sf_dir), bands)
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -542,28 +563,16 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scalable ANN twins (`q_ann_probe_topk`, `q_ivfpq_topk`).  Fenced by
     _bruteforce_eval_guard: never run it unbounded."""
     emb = _bruteforce_eval_guard(
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < 150)
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v")),
+        _embeddings(spark, sf_dir).filter(F.col("vec_id") < 150),
         "q_embedding_neardup",
         "q_ann_probe_topk / q_ivfpq_topk",
     )
-
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda a, b: a * b), F.lit(0.0), lambda acc, z: acc + z
-        )
-
     a, b = emb.alias("a"), emb.alias("b")
     pairs = a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
-    cos = dot(F.col("a.v"), F.col("b.v")) / (
-        F.sqrt(dot(F.col("a.v"), F.col("a.v")))
-        * F.sqrt(dot(F.col("b.v"), F.col("b.v")))
-    )
     return pairs.select(
         F.col("a.vec_id").alias("vec_a"),
         F.col("b.vec_id").alias("vec_b"),
-        F.round(cos, 6).alias("cos_sim"),
+        F.round(_cosine(F.col("a.v"), F.col("b.v")), 6).alias("cos_sim"),
     ).filter(F.col("cos_sim") >= 0.35)
 
 
@@ -586,18 +595,10 @@ def _hyperplane(k: int) -> list[float]:
 
 def _lsh_bucket_expr(v):
     """8-bit sign-random-projection bucket of an embedding column."""
-
-    def dot_lit(vec, plane):
-        arr = F.array(*[F.lit(c) for c in plane])
-        return F.aggregate(
-            F.zip_with(vec, arr, lambda a, b: a * b), F.lit(0.0), lambda acc, z: acc + z
-        )
-
     bucket = None
     for k in range(LSH_PLANES):
-        bit = F.when(
-            F.round(dot_lit(v, _hyperplane(k)), 6) > 0, F.lit(1 << k)
-        ).otherwise(F.lit(0))
+        plane = F.array(*[F.lit(c) for c in _hyperplane(k)])
+        bit = F.when(F.round(_dot(v, plane), 6) > 0, F.lit(1 << k)).otherwise(F.lit(0))
         bucket = bit if bucket is None else bucket + bit
     return bucket
 
@@ -607,9 +608,7 @@ def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding to an 8-bit bucket; the bucket histogram is the candidate
     structure that replaces the O(n²) cosine cross join at scale (probe the
     query's bucket ± Hamming-1 neighbours — q_ann_probe_topk)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     return (
         emb.select(_lsh_bucket_expr(F.col("v")).alias("bucket"))
         .groupBy("bucket")
@@ -626,9 +625,7 @@ def q_ann_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket key.  Tie-break on vec_id; the brute-force q_cosine_topk is the
     paired correctness baseline (its top-k restricted to the probed set
     must equal this — the DuckDB oracle states exactly that)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     bucketed = emb.select("vec_id", "v", _lsh_bucket_expr(F.col("v")).alias("bucket"))
     qrow = bucketed.filter(F.col("vec_id") == 0).select(
         F.col("v").alias("q"), F.col("bucket").alias("qbucket")
@@ -636,17 +633,7 @@ def q_ann_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = bucketed.filter(F.col("vec_id") != 0).crossJoin(F.broadcast(qrow)).filter(
         F.bit_count(F.col("bucket").bitwiseXOR(F.col("qbucket"))) <= 1
     )
-
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda a, b: a * b), F.lit(0.0), lambda acc, z: acc + z
-        )
-
-    cos = dot(F.col("v"), F.col("q")) / (
-        F.sqrt(dot(F.col("v"), F.col("v"))) * F.sqrt(dot(F.col("q"), F.col("q")))
-    )
-    scored = cand.select("vec_id", F.round(cos, 6).alias("cos_sim"))
-    return scored.orderBy(F.desc("cos_sim"), F.asc("vec_id")).limit(10)
+    return _cosine_topk(cand)
 
 
 # --- text analysis: language-ID heuristic ----------------------------------------------------
@@ -687,11 +674,10 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint, computed with a native F.aggregate fold (no UDF)."""
     docs = load_table(spark, sf_dir, "documents")
     words = F.split("text", " ")
-    word_hash = lambda w: F.conv(F.substring(F.md5(w), 1, 8), 16, 10).cast("long")  # noqa: E731
     fp = F.aggregate(
         words,
         F.lit(0).cast("long"),
-        lambda acc, w: (acc * 31 + word_hash(w)) % F.lit(FP_MOD),
+        lambda acc, w: (acc * 31 + _md5_u32(w)) % F.lit(FP_MOD),
     )
     return docs.select("doc_id", fp.alias("fingerprint"))
 
@@ -700,29 +686,35 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVF_K = 8
 
 
+def _l2sq(x, y):
+    """Squared L2 distance of two array<double> columns, rounded to 6dp
+    so rankings by it reproduce in ANSI SQL."""
+    return F.round(
+        F.aggregate(
+            F.zip_with(x, y, lambda a, b: (a - b) * (a - b)),
+            F.lit(0.0),
+            lambda acc, z: acc + z,
+        ),
+        6,
+    )
+
+
+def _ivf_centroids(emb: DataFrame) -> DataFrame:
+    """(centroid_id, c): the IVF codebook, the first IVF_K vectors."""
+    return emb.filter(F.col("vec_id") < IVF_K).select(
+        F.col("vec_id").alias("centroid_id"), F.col("v").alias("c")
+    )
+
+
 def q_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF coarse quantization: centroids = the first IVF_K vectors
     (deterministic stand-in for a k-means codebook); every vector is
     assigned to its nearest centroid by L2 (tie-break on centroid id).
     The (centroid_id → vectors) inverted lists are the probe structure that
     bounds ANN search to one list instead of the full table at scale."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    cents = emb.filter(F.col("vec_id") < IVF_K).select(
-        F.col("vec_id").alias("centroid_id"), F.col("v").alias("c")
-    )
-
-    l2 = F.round(
-        F.aggregate(
-            F.zip_with(F.col("v"), F.col("c"), lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, z: acc + z,
-        ),
-        6,
-    )
-    scored = emb.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "centroid_id", l2.alias("l2")
+    emb = _embeddings(spark, sf_dir)
+    scored = emb.crossJoin(F.broadcast(_ivf_centroids(emb))).select(
+        "vec_id", "centroid_id", _l2sq(F.col("v"), F.col("c")).alias("l2")
     )
     w = Window.partitionBy("vec_id").orderBy(F.asc("l2"), F.asc("centroid_id"))
     return (
@@ -748,9 +740,7 @@ def q_ivf_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     reached through a broadcast of the (tiny) centroid assignment of the
     query; exact cosine runs on the single list."""
     assign = q_ivf_assign(spark, sf_dir).select("vec_id", "centroid_id")
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     keyed = emb.join(assign, "vec_id")
     q_list = keyed.filter(F.col("vec_id") == 0).select(
         F.col("centroid_id").alias("q_centroid"), F.col("v").alias("q")
@@ -758,17 +748,7 @@ def q_ivf_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = keyed.filter(F.col("vec_id") != 0).join(
         F.broadcast(q_list), F.col("centroid_id") == F.col("q_centroid")
     )
-
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda a, b: a * b), F.lit(0.0), lambda acc, z: acc + z
-        )
-
-    cos = dot(F.col("v"), F.col("q")) / (
-        F.sqrt(dot(F.col("v"), F.col("v"))) * F.sqrt(dot(F.col("q"), F.col("q")))
-    )
-    scored = cand.select("vec_id", F.round(cos, 6).alias("cos_sim"))
-    return scored.orderBy(F.desc("cos_sim"), F.asc("vec_id")).limit(10)
+    return _cosine_topk(cand)
 
 
 def q_ivf_recenter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -781,9 +761,7 @@ def q_ivf_recenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Iterating = re-running assign with the new codebook (the driver-loop
     pattern q_dedup_groups documents)."""
     assign = q_ivf_assign(spark, sf_dir).select("vec_id", "centroid_id")
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     dims = emb.join(assign, "vec_id").select(
         "centroid_id", F.posexplode("v").alias("dim", "val")
     )
@@ -871,9 +849,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dups inside an oversized cluster — the documented trade the
     guard makes explicit (the DuckDB oracle mirrors the same formula, so
     correctness checks hold in both regimes)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     assign = q_ivf_assign(spark, sf_dir).select("vec_id", "centroid_id")
     n_cluster = F.count(F.lit(1)).over(Window.partitionBy("centroid_id"))
     n_subs = F.ceil(n_cluster / F.lit(float(SEMDEDUP_MAX_CLUSTER))).cast("long")
@@ -881,21 +857,8 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.join(assign, "vec_id")
         .withColumn("sub_id", F.pmod(F.col("vec_id"), n_subs))
     )
-
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda a, b: a * b), F.lit(0.0), lambda acc, z: acc + z
-        )
-
     a, b = m.alias("a"), m.alias("b")
-    cos = F.round(
-        dot(F.col("a.v"), F.col("b.v"))
-        / (
-            F.sqrt(dot(F.col("a.v"), F.col("a.v")))
-            * F.sqrt(dot(F.col("b.v"), F.col("b.v")))
-        ),
-        6,
-    )
+    cos = F.round(_cosine(F.col("a.v"), F.col("b.v")), 6)
     dropped = (
         a.join(
             b,
@@ -949,10 +912,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     no UDF."""
     docs = load_table(spark, sf_dir, "documents")
     words = F.filter(F.split("text", " "), lambda w: w != F.lit(""))
-    bucket = lambda w: F.pmod(  # noqa: E731 — small expression builders
-        F.conv(F.substring(F.md5(w), 1, 8), 16, 10).cast("long"),
-        F.lit(CLS_BUCKETS),
-    )
+    bucket = lambda w: F.pmod(_md5_u32(w), F.lit(CLS_BUCKETS))  # noqa: E731
     weight = lambda w: F.pmod(  # noqa: E731
         bucket(w) * F.lit(CLS_HASH_MULT), F.lit(1000)
     ) - F.lit(500)
@@ -1008,6 +968,19 @@ def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVF_NPROBE = 3
 
 
+def _ivf_probe(emb: DataFrame, qvec: DataFrame) -> DataFrame:
+    """(centroid_id) of the IVF_NPROBE centroids nearest the one-row query
+    frame (q) by rounded L2, ties to the lower id (tiny: K rows)."""
+    return (
+        _ivf_centroids(emb)
+        .crossJoin(F.broadcast(qvec))
+        .select("centroid_id", _l2sq(F.col("q"), F.col("c")).alias("l2"))
+        .orderBy(F.asc("l2"), F.asc("centroid_id"))
+        .limit(IVF_NPROBE)
+        .select("centroid_id")
+    )
+
+
 def q_ivf_probe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF multi-probe (nprobe=3) + measured recall@10: probe the query's
     3 nearest centroids' inverted lists, take the exact-cosine top-10 of
@@ -1018,51 +991,16 @@ def q_ivf_probe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall@10 is the dial — nprobe=K degenerates to exact brute force at
     recall 1.0.  Both top-10s use the same (cos desc, vec_id) tie-break,
     so the recall number is deterministic."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     assign = q_ivf_assign(spark, sf_dir).select("vec_id", "centroid_id")
-    cents = emb.filter(F.col("vec_id") < IVF_K).select(
-        F.col("vec_id").alias("centroid_id"), F.col("v").alias("c")
-    )
     qvec = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("q"))
-
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda a, b: a * b), F.lit(0.0), lambda acc, z: acc + z
-        )
-
-    # the query's NPROBE nearest centroids (tiny: K rows, broadcast)
-    l2q = F.round(
-        F.aggregate(
-            F.zip_with(F.col("q"), F.col("c"), lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, z: acc + z,
-        ),
-        6,
-    )
-    probe_cents = (
-        cents.crossJoin(F.broadcast(qvec))
-        .select("centroid_id", l2q.alias("l2"))
-        .orderBy(F.asc("l2"), F.asc("centroid_id"))
-        .limit(IVF_NPROBE)
-        .select("centroid_id")
-    )
     cand = (
         emb.join(assign, "vec_id")
-        .join(F.broadcast(probe_cents), "centroid_id")
+        .join(F.broadcast(_ivf_probe(emb, qvec)), "centroid_id")
         .filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(qvec))
     )
-    cos = dot(F.col("v"), F.col("q")) / (
-        F.sqrt(dot(F.col("v"), F.col("v"))) * F.sqrt(dot(F.col("q"), F.col("q")))
-    )
-    probe_topk = (
-        cand.select("vec_id", F.round(cos, 6).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(10)
-        .select("vec_id")
-    )
+    probe_topk = _cosine_topk(cand).select("vec_id")
     brute_topk = q_cosine_topk(spark, sf_dir).select("vec_id")
     # recall as a declarative aggregate — no driver-side action
     return (
@@ -1124,47 +1062,22 @@ def q_conversation_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNBOUNDED input — the full events table: banding bounds the candidate
     work (full-signature band key ⇒ only near-identical sequences share a
     bucket), so no user_id cap is needed at any scale."""
-    ev = load_table(spark, sf_dir, "events")
-    payload = F.struct("ts", "event_id", "event_type")
-    stage1 = (
-        ev.withColumn("_salt", F.pmod(F.xxhash64("event_id"), F.lit(8)))
-        .groupBy("user_id", "_salt")
-        .agg(F.collect_list(payload).alias("_chunk"))
-    )
-    seqs = stage1.groupBy("user_id").agg(
-        F.transform(
-            F.array_sort(F.flatten(F.collect_list("_chunk"))),
-            lambda s: s.event_type,
-        ).alias("events")
-    )
-    # inline explode + one groupBy building signature and gram set together
-    # (see q_minhash_neardup_pairs: alias-then-explode defeats projection
-    # collapse and re-evaluates the gram transform per consumer)
+    seqs = _event_sequences(load_table(spark, sf_dir, "events"))
+    # inline explode, as in _doc_grams
     gram_rows = seqs.select(
         "user_id", F.explode(_word_ngrams(F.col("events"))).alias("g")
     )
-    keyed = gram_rows.groupBy("user_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(s), F.col("g")))).alias(f"mh_{s}")
-            for s in MINHASH_SEEDS
-        ],
-        F.collect_set("g").alias("grams"),
-    )
-    band = F.concat_ws("|", *[F.col(f"mh_{s}") for s in MINHASH_SEEDS])
-    keyed = keyed.select("user_id", band.alias("band_key"), "grams")
+    keyed = _minhash_band(gram_rows, "user_id")
     a, b = keyed.alias("a"), keyed.alias("b")
     pairs = a.join(
         b,
         (F.col("a.band_key") == F.col("b.band_key"))
         & (F.col("a.user_id") < F.col("b.user_id")),
     )
-    inter = F.size(F.array_intersect(F.col("a.grams"), F.col("b.grams")))
-    union = F.size(F.col("a.grams")) + F.size(F.col("b.grams")) - inter
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
     return pairs.select(
         F.col("a.user_id").alias("user_a"),
         F.col("b.user_id").alias("user_b"),
-        F.round(jac, 4).alias("jaccard"),
+        _jaccard(F.col("a.grams"), F.col("b.grams")).alias("jaccard"),
     ).filter(F.col("jaccard") >= 0.3)
 
 
@@ -1288,48 +1201,19 @@ def q_minhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the banding scheme (full 4-hash signature ⇒ only near-identical docs
     share a bucket).
 
-    Plan shape: the gram expression is exploded INLINE (aliasing the array
-    in one projection and exploding the column in the next defeats
-    projection collapse and re-evaluates the whole n-gram transform per
-    consumer — measured 12x on the gram stage), and ONE groupBy builds
-    both the 4-seed signature and the distinct gram set (collect_set), so
-    there is no join back to the documents scan."""
-    gram_rows = (
-        load_table(spark, sf_dir, "documents")
-        # spread the gram/md5 work across the session's cores: the bench
-        # tables are single parquet files (one input split), and without
-        # this the whole signature computation runs on one task
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select(
-            "doc_id",
-            F.explode(_word_ngrams(F.split("text", " "))).alias("g"),
-        )
-    )
-    # docs with <n words produce no gram rows and drop out here, matching
-    # the previous filter(size(grams) > 0); collect_set matches the
-    # array_distinct in _word_ngrams (only set sizes feed the Jaccard)
-    keyed = gram_rows.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(s), F.col("g")))).alias(f"mh_{s}")
-            for s in MINHASH_SEEDS
-        ],
-        F.collect_set("g").alias("grams"),
-    )
-    band = F.concat_ws("|", *[F.col(f"mh_{s}") for s in MINHASH_SEEDS])
-    keyed = keyed.select("doc_id", band.alias("band_key"), "grams")
+    Plan shape: grams explode inline and one groupBy builds signature and
+    gram set (_doc_grams, _minhash_band)."""
+    keyed = _minhash_band(_doc_grams(spark, sf_dir), "doc_id")
     a, b = keyed.alias("a"), keyed.alias("b")
     pairs = a.join(
         b,
         (F.col("a.band_key") == F.col("b.band_key"))
         & (F.col("a.doc_id") < F.col("b.doc_id")),
     )
-    inter = F.size(F.array_intersect(F.col("a.grams"), F.col("b.grams")))
-    union = F.size(F.col("a.grams")) + F.size(F.col("b.grams")) - inter
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
     return pairs.select(
         F.col("a.doc_id").alias("doc_a"),
         F.col("b.doc_id").alias("doc_b"),
-        F.round(jac, 4).alias("jaccard"),
+        _jaccard(F.col("a.grams"), F.col("b.grams")).alias("jaccard"),
     ).filter(F.col("jaccard") >= 0.30)
 
 
@@ -1351,12 +1235,7 @@ def _pack_layout(d: DataFrame) -> DataFrame:
     training streams regardless of cluster layout, and pack membership is
     a pure function of the data.  Input: (doc_id, source, n_tokens).
     """
-    subshard = F.pmod(
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-        ).cast("long"),
-        F.lit(PACK_SUBSHARDS),
-    )
+    subshard = F.pmod(_md5_u32(F.col("doc_id").cast("string")), F.lit(PACK_SUBSHARDS))
     d = d.withColumn("subshard", subshard)
     w = Window.partitionBy("source", "subshard").orderBy("doc_id")
     cum = F.sum("n_tokens").over(w)
@@ -1401,12 +1280,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan stage), and changing a stratum's rate only moves the threshold,
     keeping the retained set nested (rate 20 ⊂ rate 50)."""
     docs = load_table(spark, sf_dir, "documents")
-    bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
-            "long"
-        ),
-        F.lit(100),
-    )
+    bucket = F.pmod(_md5_u32(F.col("doc_id").cast("string")), F.lit(100))
     rate = F.when(F.col("lang") == "en", F.lit(SAMPLE_RATE_EN)).otherwise(
         F.lit(SAMPLE_RATE_OTHER)
     )
@@ -1465,8 +1339,8 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval gram set is distinct'd and BROADCAST — eval suites are tiny
     relative to a 100TB corpus — so the membership test is a map-side
     hash probe on the training gram stream; no corpus-vs-corpus shuffle
-    exists in the plan.  Grams are exploded inline (see
-    q_minhash_neardup_pairs on alias-then-explode)."""
+    exists in the plan.  Grams are exploded inline (see _doc_grams on
+    alias-then-explode)."""
     docs = load_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
@@ -1671,12 +1545,7 @@ def q_domain_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("keep_rate"),
         )
     )
-    bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast(
-            "long"
-        ),
-        F.lit(1000000),
-    )
+    bucket = F.pmod(_md5_u32(F.col("doc_id").cast("string")), F.lit(1000000))
     return (
         docs.join(F.broadcast(rates), "source")
         .select(
@@ -1799,34 +1668,15 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is never shuffled, only scanned (and in production the index
     side is a pre-computed table, not recomputed — recomputed here so
     the query is self-contained)."""
-    gram_rows = (
-        load_table(spark, sf_dir, "documents")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select(
-            "doc_id",
-            F.explode(_word_ngrams(F.split("text", " "))).alias("g"),
-        )
-    )
-    keyed = gram_rows.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(s), F.col("g")))).alias(f"mh_{s}")
-            for s in MINHASH_SEEDS
-        ],
-        F.collect_set("g").alias("grams"),
-    )
-    band = F.concat_ws("|", *[F.col(f"mh_{s}") for s in MINHASH_SEEDS])
-    keyed = keyed.select("doc_id", band.alias("band_key"), "grams")
+    keyed = _minhash_band(_doc_grams(spark, sf_dir), "doc_id")
     is_new = F.col("doc_id") % 10 == 0
     index = keyed.filter(~is_new).alias("ix")
     batch = F.broadcast(keyed.filter(is_new)).alias("nb")
     cand = batch.join(index, F.col("nb.band_key") == F.col("ix.band_key"))
-    inter = F.size(F.array_intersect(F.col("nb.grams"), F.col("ix.grams")))
-    union = F.size(F.col("nb.grams")) + F.size(F.col("ix.grams")) - inter
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
     return cand.select(
         F.col("nb.doc_id").alias("new_doc"),
         F.col("ix.doc_id").alias("index_doc"),
-        F.round(jac, 4).alias("jaccard"),
+        _jaccard(F.col("nb.grams"), F.col("ix.grams")).alias("jaccard"),
     ).filter(F.col("jaccard") >= 0.30)
 
 
@@ -1878,6 +1728,12 @@ PQ_M = 4  # subspaces (EMB_DIM/PQ_M dims each)
 PQ_K = 8  # sub-centroids per subspace
 
 
+def _pq_slices(v):
+    """The PQ_M contiguous subvectors of an embedding column, as an array."""
+    dim_per = EMB_DIM // PQ_M
+    return F.array(*[F.slice(v, m * dim_per + 1, dim_per) for m in range(PQ_M)])
+
+
 def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product quantization: each embedding splits into PQ_M contiguous
     subvectors and each subvector is assigned to its nearest sub-centroid
@@ -1889,13 +1745,8 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vec_id, subspace)), so the table scans once and nothing wide ever
     carries full vectors.  Emits the per-subspace quantization error so
     codebook quality is auditable."""
-    dim_per = EMB_DIM // PQ_M
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    slices = F.array(
-        *[F.slice("v", m * dim_per + 1, dim_per) for m in range(PQ_M)]
-    )
+    emb = _embeddings(spark, sf_dir)
+    slices = _pq_slices("v")
     sub = emb.select(
         "vec_id", F.posexplode(slices).alias("subspace", "sv")
     )
@@ -1903,19 +1754,11 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") < PQ_K)
         .select(F.col("vec_id").alias("code"), F.posexplode(slices).alias("subspace", "cv"))
     )
-    l2 = F.round(
-        F.aggregate(
-            F.zip_with(F.col("sv"), F.col("cv"), lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, z: acc + z,
-        ),
-        6,
-    )
     scored = sub.join(F.broadcast(cent_sub), "subspace").select(
         "vec_id",
         F.col("subspace").cast("long").alias("subspace"),
         F.col("code").cast("long").alias("code"),
-        l2.alias("l2"),
+        _l2sq(F.col("sv"), F.col("cv")).alias("l2"),
     )
     w = Window.partitionBy("vec_id", "subspace").orderBy(
         F.asc("l2"), F.asc("code")
@@ -2063,21 +1906,11 @@ def q_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "src",
             F.pmod(
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.col("src").cast("string"),
-                                F.lit(">"),
-                                F.col("k").cast("string"),
-                            )
-                        ),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("long"),
+                _md5_u32(
+                    F.concat(
+                        F.col("src").cast("string"), F.lit(">"), F.col("k").cast("string")
+                    )
+                ),
                 F.lit(LINK_GRAPH_MOD),
             ).alias("dst"),
         )
@@ -2445,59 +2278,21 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     every query-side frame (probe set, ADC) is broadcast.  Per-subspace
     distances round to 6dp before the sum (the q_pq_codes convention) so
     the ranking is reproducible in ANSI SQL."""
-    dim_per = EMB_DIM // PQ_M
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = _embeddings(spark, sf_dir)
     assign = q_ivf_assign(spark, sf_dir).select("vec_id", "centroid_id")
-    cents = emb.filter(F.col("vec_id") < IVF_K).select(
-        F.col("vec_id").alias("centroid_id"), F.col("v").alias("c")
-    )
     qvec = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("q"))
-    l2q = F.round(
-        F.aggregate(
-            F.zip_with(F.col("q"), F.col("c"), lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, z: acc + z,
-        ),
-        6,
-    )
-    probe_cents = (
-        cents.crossJoin(F.broadcast(qvec))
-        .select("centroid_id", l2q.alias("l2"))
-        .orderBy(F.asc("l2"), F.asc("centroid_id"))
-        .limit(IVF_NPROBE)
-        .select("centroid_id")
-    )
-    slices = F.array(
-        *[F.slice("v", m * dim_per + 1, dim_per) for m in range(PQ_M)]
-    )
     cb = emb.filter(F.col("vec_id") < PQ_K).select(
         F.col("vec_id").cast("long").alias("code"),
-        F.posexplode(slices).alias("subspace", "cv"),
+        F.posexplode(_pq_slices("v")).alias("subspace", "cv"),
     )
-    qsub = qvec.select(
-        F.posexplode(
-            F.array(
-                *[F.slice("q", m * dim_per + 1, dim_per) for m in range(PQ_M)]
-            )
-        ).alias("subspace", "qv")
-    )
-    sub_l2 = F.round(
-        F.aggregate(
-            F.zip_with(F.col("qv"), F.col("cv"), lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, z: acc + z,
-        ),
-        6,
-    )
+    qsub = qvec.select(F.posexplode(_pq_slices("q")).alias("subspace", "qv"))
     adc = cb.join(qsub, "subspace").select(
         F.col("subspace").cast("long").alias("subspace"),
         "code",
-        sub_l2.alias("sub_l2"),
+        _l2sq(F.col("qv"), F.col("cv")).alias("sub_l2"),
     )
     cand = (
-        assign.join(F.broadcast(probe_cents), "centroid_id")
+        assign.join(F.broadcast(_ivf_probe(emb, qvec)), "centroid_id")
         .filter(F.col("vec_id") != 0)
         .select("vec_id")
     )

@@ -124,22 +124,20 @@ def gen_transcripts(
     distinct tables — the bench protocol times each rep on a fresh seed so
     worker-side memoization cannot ride across reps.
     """
-    convs = spark.range(n_convs).withColumn(
-        "n_turns",
-        F.when(F.pmod(F.col("id"), F.lit(heavy_every)) == 0, F.lit(heavy_turns))
-        .otherwise((F.pmod(F.col("id") * 2654435761, 1000) % 8 + 1).cast("int")),
-    )
-    turns = convs.select(
+    # one select before the join and one after: each withColumn would
+    # analyse the whole plan again as the frame is built
+    n_turns = F.when(
+        F.pmod(F.col("id"), F.lit(heavy_every)) == 0, F.lit(heavy_turns)
+    ).otherwise((F.pmod(F.col("id") * 2654435761, 1000) % 8 + 1).cast("int"))
+    turns = spark.range(n_convs).select(
+        "id",
         F.format_string("conv-%06d", F.col("id")).alias("conv_id"),
-        F.col("id").alias("_cid"),
-        F.explode(F.sequence(F.lit(0), F.col("n_turns") - 1)).alias("turn_idx"),
-    ).withColumn("turn_idx", F.col("turn_idx").cast("int"))
-
+        F.explode(F.sequence(F.lit(0), n_turns - 1)).alias("turn_idx"),
+    )
     pick = F.pmod(
         F.xxhash64(F.col("conv_id"), F.col("turn_idx"), F.lit(seed)), F.lit(len(CORPUS))
     )
-    turns = turns.withColumn("corpus_idx", pick)
-    df = turns.join(F.broadcast(corpus_df(spark)), "corpus_idx")
+    df = turns.join(F.broadcast(corpus_df(spark)), pick == F.col("corpus_idx"))
 
     # High-cardinality variant rows (~half): append a unique CJK suffix so
     # the corpus is not a handful of distinct strings — the correction
@@ -166,30 +164,24 @@ def gen_transcripts(
     is_variant = (
         F.pmod(F.xxhash64("conv_id", "turn_idx", F.lit(29), F.lit(seed)), F.lit(2)) == 0
     ) & (F.length("text_noisy") > 4)
-    df = df.withColumn(
-        "text_noisy",
-        F.when(is_variant, F.concat(F.col("text_noisy"), suffix)).otherwise(
-            F.col("text_noisy")
-        ),
-    ).withColumn(
-        "text_clean",
-        F.when(is_variant, F.concat(F.col("text_clean"), suffix)).otherwise(
-            F.col("text_clean")
-        ),
+    noisy = F.when(is_variant, F.concat(F.col("text_noisy"), suffix)).otherwise(
+        F.col("text_noisy")
+    )
+    clean = F.when(is_variant, F.concat(F.col("text_clean"), suffix)).otherwise(
+        F.col("text_clean")
     )
 
     # per-char probs over the INNER (pre-HTML-wrap) noisy text: 0.99
     # everywhere, dipping to the README's published 0.56 at injected errors
     probs = F.when(
-        F.length("text_noisy") > 0,
+        F.length(noisy) > 0,
         F.transform(
-            F.sequence(F.lit(0), F.length("text_noisy") - 1),
+            F.sequence(F.lit(0), F.length(noisy) - 1),
             lambda i: F.when(
                 F.array_contains("err_expected", i.cast("int")), F.lit(0.56)
             ).otherwise(F.lit(0.99)),
         ),
     ).otherwise(F.array().cast("array<double>"))
-    df = df.withColumn("probs", probs)
 
     is_html = (
         F.pmod(
@@ -198,51 +190,44 @@ def gen_transcripts(
         )
         == 0
     )
-    df = df.withColumn("is_html", is_html)
     is_layout = (
         F.pmod(
             F.xxhash64(F.col("conv_id"), F.col("turn_idx"), F.lit(11), F.lit(seed)),
             F.lit(LAYOUT_FRACTION_DENOM),
         )
         == 0
-    ) & ~F.col("is_html")
-    df = df.withColumn("is_layout", is_layout)
-    df = df.withColumn(
-        "text",
-        F.when(
-            F.col("is_html"),
-            F.concat(F.lit(_HTML_PREFIX), F.col("text_noisy"), F.lit(_HTML_SUFFIX)),
-        )
-        .when(
-            F.col("is_layout"),
-            F.concat(F.lit(_LAYOUT_PREFIX), F.col("text_noisy"), F.lit(_LAYOUT_SUFFIX)),
-        )
-        .otherwise(F.col("text_noisy")),
+    ) & ~is_html
+    text = (
+        F.when(is_html, F.concat(F.lit(_HTML_PREFIX), noisy, F.lit(_HTML_SUFFIX)))
+        .when(is_layout, F.concat(F.lit(_LAYOUT_PREFIX), noisy, F.lit(_LAYOUT_SUFFIX)))
+        .otherwise(noisy)
+    )
+    role = F.element_at(
+        F.array(F.lit("user"), F.lit("assistant"), F.lit("tool")),
+        (F.pmod(F.col("turn_idx"), F.lit(3)) + 1).cast("int"),
+    )
+    # one conv per day, wrapping within a year: unbounded id*86400 at bench
+    # scale (millions of convs) would run past pandas' ns-timestamp ceiling
+    # (year 2262)
+    ts = F.timestamp_seconds(
+        F.lit(1767225600) + F.pmod(F.col("id"), F.lit(365)) * 86400 + F.col("turn_idx")
     )
 
-    df = (
-        df.withColumn(
-            "role",
-            F.element_at(
-                F.array(F.lit("user"), F.lit("assistant"), F.lit("tool")),
-                (F.pmod(F.col("turn_idx"), F.lit(3)) + 1).cast("int"),
-            ),
-        )
-        .withColumn("tool", F.col("biz"))
-        .withColumn(
-            # one conv per day, wrapping within a year: unbounded _cid*86400
-            # at bench scale (millions of convs) would run past pandas'
-            # ns-timestamp ceiling (year 2262)
-            "ts",
-            F.timestamp_seconds(
-                F.lit(1767225600)
-                + F.pmod(F.col("_cid"), F.lit(365)) * 86400
-                + F.col("turn_idx")
-            ),
-        )
-    )
-
-    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts", "probs"]
+    cols = [
+        "conv_id",
+        "turn_idx",
+        role.alias("role"),
+        text.alias("text"),
+        F.col("biz").alias("tool"),
+        ts.alias("ts"),
+        probs.alias("probs"),
+    ]
     if keep_oracle_cols:
-        cols += ["text_clean", "text_noisy", "err_expected", "is_html", "is_layout"]
+        cols += [
+            clean.alias("text_clean"),
+            noisy.alias("text_noisy"),
+            "err_expected",
+            is_html.alias("is_html"),
+            is_layout.alias("is_layout"),
+        ]
     return df.select(*cols)
