@@ -9,26 +9,18 @@ from pyspark.sql import SparkSession
 from . import driver_cds, pyworker
 
 
-def _java_opts(cpus: int) -> str:
-    """Driver-JVM GC options, width-aware.
+def _java_opts() -> str:
+    """Driver-JVM options: the serial collector.
 
-    On a wide local[] JVM the Java 17 G1 defaults size the GC worker pool
-    from the MACHINE's core count (~5/8 · cores), so every young-gen pause
-    spins ~20 GC threads against 32 already-busy task threads —
-    measured 0.51 s GC at local[8] vs 5.92 s at local[32] on the identical
-    job (BENCH/SCALING_DIAGNOSIS.md).  Capping the GC pool to a fraction
-    of the TASK width (not the machine width) keeps collection cost
-    proportional to the work.  On a real cluster each executor JVM is
-    narrow and per-node G1 defaults are fine; this knob matters only for
-    a single wide local[] JVM.  A caller that wants other options passes
-    ``spark.driver.extraJavaOptions`` in ``get_spark``'s ``extra_conf``,
-    which is applied last.
+    A ``local[]`` session is one JVM, whose committed G1 heap grew by
+    different amounts from run to run (the A/B: ``get_spark``).  The serial
+    collector starts no GC threads, so it needs no cap against the task
+    width (G1 spun about 20 at local[32], BENCH/SCALING_DIAGNOSIS.md).  A
+    caller that wants another collector passes its own
+    ``spark.driver.extraJavaOptions`` in ``extra_conf``; that also skips
+    the archive.
     """
-    gc_threads = max(2, min(8, cpus // 2))
-    return (
-        f"-XX:ParallelGCThreads={gc_threads} "
-        f"-XX:ConcGCThreads={max(1, gc_threads // 4)}"
-    )
+    return "-XX:+UseSerialGC"
 
 
 def host_cpus() -> int:
@@ -66,6 +58,13 @@ def get_spark(
     config, and one Arrow stream each way.  ``extra_conf`` is applied
     last, so it overrides this or any other conf set here.
 
+    The driver JVM runs the serial collector (``_java_opts``).  In an
+    alternating perfbench A/B on a 4-core host (10 seeds per workload) it
+    read a median peak RSS of 1,597 MB against G1's 2,265 on
+    ``unique_text`` and 1,676 against 2,006 on ``dup_heavy``, turns/s
+    within 2%, and maps the archive below.  A caller that wants a parallel
+    collector on a wide host passes ``spark.driver.extraJavaOptions``.
+
     Python workers start from ``pyworker`` (``spark.python.daemon.module``),
     which takes Spark's jar and, when it is the installed PySpark's
     release, the bundled ``pyspark.zip`` off the workers' path.  Stock
@@ -94,7 +93,7 @@ def get_spark(
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cpus())
-    java_opts = _java_opts(cpus)
+    java_opts = _java_opts()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")

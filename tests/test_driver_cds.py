@@ -31,6 +31,7 @@ print(json.dumps({{
     "conf_dir": [before, os.environ.get("SPARK_CONF_DIR")],
     "java": os.path.join(jvm.System.getProperty("java.home"), "bin", "java"),
     "class_path": jvm.System.getProperty("java.class.path"),
+    "vm_info": jvm.System.getProperty("java.vm.info"),
 }}))
 """
 # confs that differ between any two sessions (the warehouse lies in the
@@ -128,6 +129,8 @@ def test_a_promoted_archive_is_mapped_and_the_conf_is_otherwise_unchanged(dumped
     mapped = _session(tmp, cache)
     jsa = os.path.join(_archive_dir(cache), f"{key}.jsa")
     assert _flags(mapped, "-XX:SharedArchiveFile=") == [f"-XX:SharedArchiveFile={jsa}"]
+    assert "-XX:+UseSerialGC" in mapped["args"]
+    assert "sharing" in mapped["vm_info"]  # the JVM mapped it, not only was told to
     assert mapped["conf_dir"] == [None, None]
     assert mapped["class_path"].split(":")[0].rstrip("/") == os.path.join(
         _archive_dir(cache), "empty-conf"

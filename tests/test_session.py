@@ -41,6 +41,12 @@ def test_python_stage_runs_one_task_per_slot(spark):
     assert len(parts) == slots
 
 
+def test_driver_jvm_runs_the_serial_collector(spark):
+    # G1's committed heap grew by different amounts from run to run
+    beans = spark._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
+    assert [b.getName() for b in beans] == ["Copy", "MarkSweepCompact"]
+
+
 def test_workers_skip_the_spark_jar_and_the_bundled_pyspark_zip(spark):
     # every task's importlib.invalidate_caches() re-reads each zipimporter's
     # archive, so neither archive may keep one in the workers
