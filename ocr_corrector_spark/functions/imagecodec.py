@@ -1,43 +1,19 @@
-"""Pure-numpy image codecs for library-free formats (pyspark-free kernels).
+"""Pure-numpy P6 PPM codec (a pyspark-free kernel).
 
-A 100TB multimodal pipeline cannot assume codec libraries exist on every
-executor image; two classic formats are decodable with nothing but numpy:
-
-* **PPM (P6)** — ``P6\\n<w> <h>\\n<maxval>\\n`` + raw RGB triplets
-  (comments with ``#`` allowed in the header per the netpbm spec);
-* **BMP** — BITMAPFILEHEADER + BITMAPINFOHEADER, uncompressed 24-bit,
-  bottom-up rows padded to 4-byte multiples (the overwhelmingly common
-  on-disk layout).
-
-Compressed formats (JPEG/PNG/...) still require an external library and
-stay env-gated in operators/multimodal.py.  Everything here is
-deterministic and safe to run inside Arrow-batched UDFs (no global state,
-no I/O).
+The image operator analogs (operators/multimodal.py) store their images
+as PPM — ``P6\\n<w> <h>\\n<maxval>\\n`` + raw RGB triplets, ``#``
+comments allowed in the header per the netpbm spec — because the format
+decodes with nothing but numpy.  Deterministic and safe inside
+Arrow-batched UDFs (no global state, no I/O).
 """
 
 from __future__ import annotations
-
-import struct
 
 import numpy as np
 
 
 class ImageDecodeError(ValueError):
     pass
-
-
-def sniff_format(b: bytes) -> str | None:
-    if b is None:
-        return None
-    if b[:2] == b"P6":
-        return "ppm"
-    if b[:2] == b"BM":
-        return "bmp"
-    if b[:3] == b"\xff\xd8\xff":
-        return "jpeg"
-    if b[:8] == b"\x89PNG\r\n\x1a\n":
-        return "png"
-    return None
 
 
 def decode_ppm(b: bytes) -> np.ndarray:
@@ -73,53 +49,8 @@ def decode_ppm(b: bytes) -> np.ndarray:
     return data[:need].reshape(h, w, 3).copy()
 
 
-def decode_bmp(b: bytes) -> np.ndarray:
-    """Uncompressed 24-bit bottom-up BMP → uint8 array (h, w, 3) in RGB."""
-    if b[:2] != b"BM":
-        raise ImageDecodeError("not a bmp")
-    if len(b) < 54:
-        raise ImageDecodeError("truncated bmp header")
-    data_offset = struct.unpack_from("<I", b, 10)[0]
-    w, h = struct.unpack_from("<ii", b, 18)
-    bpp = struct.unpack_from("<H", b, 28)[0]
-    compression = struct.unpack_from("<I", b, 30)[0]
-    if bpp != 24 or compression != 0:
-        raise ImageDecodeError(f"unsupported bmp (bpp={bpp}, compression={compression})")
-    bottom_up = h > 0
-    h = abs(h)
-    row_stride = (w * 3 + 3) & ~3  # rows pad to 4-byte multiples
-    need = row_stride * h
-    raw = np.frombuffer(b, dtype=np.uint8, offset=data_offset)
-    if raw.size < need:
-        raise ImageDecodeError("truncated bmp payload")
-    rows = raw[:need].reshape(h, row_stride)[:, : w * 3].reshape(h, w, 3)
-    if bottom_up:
-        rows = rows[::-1]
-    return rows[..., ::-1].copy()  # BGR → RGB
-
-
 def encode_ppm(img: np.ndarray) -> bytes:
     """Inverse of decode_ppm (datagen/test helper)."""
     h, w, _ = img.shape
     return b"P6\n%d %d\n255\n" % (w, h) + img.astype(np.uint8).tobytes()
 
-
-def decode_any(b: bytes) -> np.ndarray:
-    fmt = sniff_format(b)
-    if fmt == "ppm":
-        return decode_ppm(b)
-    if fmt == "bmp":
-        return decode_bmp(b)
-    if fmt in ("jpeg", "png"):
-        raise NotImplementedError(
-            f"{fmt} requires an external codec library (not in this container)"
-        )
-    raise ImageDecodeError("unrecognized image format")
-
-
-def resize_nearest(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Nearest-neighbour resize (pure numpy index gather)."""
-    h, w = img.shape[:2]
-    ys = (np.arange(out_h) * (h / out_h)).astype(np.int64).clip(0, h - 1)
-    xs = (np.arange(out_w) * (w / out_w)).astype(np.int64).clip(0, w - 1)
-    return img[ys][:, xs]

@@ -1,182 +1,27 @@
-"""Multimodal columns: image/audio/video as opaque binary + typed metadata.
+"""The image operator analogs: ``q_image_stats`` and ``q_image_ahash``.
 
-A 100TB training-data pipeline carries media alongside text; this module
-provides the Spark-side plumbing — schema, Arrow batch shape, partition
--friendly UDF signatures:
-
-* ``media_schema()``: binary payload + typed metadata struct;
-* ``with_media_metadata``: real, tested: parses a compact deterministic
-  header from the binary payload (magic, width, height, n_frames) with a
-  vectorized ``mapInPandas`` — the exact batch shape a real decoder UDF
-  has;
-* ``decode_images``: the real image decode path, for the library-free
-  PPM/BMP formats (functions/imagecodec.py, pure numpy);
-* ``sample_video_frames``: which frame indices a decoder would extract.
-
-Compressed image codecs (JPEG/PNG) and audio decoding are excluded: no
-codec library is installed, so the module offers no entry points for
-them.
-
-The synthetic header format (tests/test_multimodal.py): 16 bytes =
-4s magic ('IMG0'/'AUD0'/'VID0') + uint32 width + uint32 height +
-uint32 n_frames (little-endian), followed by payload bytes.
+Both read the stored binary column of ``images_table`` (one P6 PPM
+payload per ``documents`` row, pixels from ``_gen_image``), decode it
+with functions/imagecodec.decode_ppm inside ``mapInPandas`` and reduce
+per image.  Their DuckDB oracles re-derive the pixels from the generator
+formula, so a decode bug breaks the hash.  Compressed codecs (JPEG/PNG)
+need a codec library the project does not depend on, so no operator
+decodes them.
 """
 
 from __future__ import annotations
 
-import struct
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
-
-_HEADER = struct.Struct("<4sIII")
-
-MEDIA_META_SCHEMA = StructType(
-    [
-        StructField("media_type", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("n_frames", IntegerType()),
-        StructField("payload_bytes", LongType()),
-    ]
-)
-
-
-def media_schema() -> StructType:
-    return StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("conv_id", StringType()),
-            StructField("turn_idx", IntegerType()),
-            StructField("content", BinaryType()),
-        ]
-    )
-
-
-def pack_header(media_type: str, width: int, height: int, n_frames: int, payload: bytes = b"") -> bytes:
-    """Test/datagen helper: serialize the synthetic header."""
-    magic = {"image": b"IMG0", "audio": b"AUD0", "video": b"VID0"}[media_type]
-    return _HEADER.pack(magic, width, height, n_frames) + payload
-
-
-def _parse_header(b) -> tuple:
-    if b is None or len(b) < _HEADER.size:
-        return (None, None, None, None, len(b) if b is not None else None)
-    magic, w, h, nf = _HEADER.unpack_from(bytes(b[: _HEADER.size]))
-    kind = {b"IMG0": "image", b"AUD0": "audio", b"VID0": "video"}.get(magic)
-    return (kind, w, h, nf, len(b) - _HEADER.size)
-
-
-def with_media_metadata(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """Vectorized header parse → typed metadata struct.  mapInPandas keeps
-    the binary column zero-copy in Arrow and lets a real decoder slot in
-    without plan changes."""
-    out_schema = StructType(
-        df.schema.fields + [StructField("media_meta", MEDIA_META_SCHEMA)]
-    )
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = pdf[content_col].map(_parse_header)
-            pdf = pdf.copy()
-            pdf["media_meta"] = [
-                {
-                    "media_type": p[0],
-                    "width": p[1],
-                    "height": p[2],
-                    "n_frames": p[3],
-                    "payload_bytes": p[4],
-                }
-                for p in parsed
-            ]
-            yield pdf
-
-    return df.mapInPandas(parse, out_schema)
-
-
-IMAGE_DECODE_SCHEMA = StructType(
-    [
-        StructField("format", StringType()),
-        StructField("height", IntegerType()),
-        StructField("width", IntegerType()),
-        StructField("channels", IntegerType()),
-        StructField("mean_rgb", StringType()),  # "r,g,b" rounded to 2dp
-        StructField("thumbnail", BinaryType()),  # 8x8 PPM (P6)
-        StructField("error", StringType()),
-    ]
-)
-
-
-def decode_images(
-    df: DataFrame, content_col: str = "content", thumb: int = 8
-) -> DataFrame:
-    """REAL image decode + feature-extract + resize for library-free
-    formats (PPM P6, uncompressed 24-bit BMP — functions/imagecodec.py,
-    pure numpy), inside the same Arrow-batched ``mapInPandas`` shape a
-    codec-library decoder slots into.  Per-row isolation: undecodable or
-    compressed-format rows (JPEG/PNG need an external lib) carry the
-    failure in ``image.error`` and never fail the task."""
-    import numpy as np
-
-    from ..functions.imagecodec import (
-        ImageDecodeError,
-        decode_any,
-        encode_ppm,
-        resize_nearest,
-    )
-
-    out_schema = StructType(
-        df.schema.fields + [StructField("image", IMAGE_DECODE_SCHEMA)]
-    )
-
-    def one(b):
-        from ..functions.imagecodec import sniff_format
-
-        fmt = sniff_format(bytes(b)) if b is not None else None
-        # the WHOLE row — decode AND feature extraction — sits inside the
-        # per-row guard: a zero-dimension image (valid header, h or w = 0)
-        # would crash mean/resize, and one corrupt row must never fail the
-        # task (the extraction-stage isolation contract)
-        try:
-            img = decode_any(bytes(b))
-            if img.size == 0:
-                raise ImageDecodeError("zero-dimension image")
-            mean = img.reshape(-1, img.shape[2]).mean(axis=0)
-            return {
-                "format": fmt,
-                "height": int(img.shape[0]),
-                "width": int(img.shape[1]),
-                "channels": int(img.shape[2]),
-                "mean_rgb": ",".join(f"{v:.2f}" for v in mean),
-                "thumbnail": encode_ppm(
-                    resize_nearest(img, thumb, thumb).astype(np.uint8)
-                ),
-                "error": None,
-            }
-        except Exception as exc:
-            return {
-                "format": fmt, "height": None, "width": None,
-                "channels": None, "mean_rgb": None, "thumbnail": None,
-                "error": f"{type(exc).__name__}: {exc}",
-            }
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["image"] = pdf[content_col].map(one)
-            yield pdf
-
-    return df.mapInPandas(decode, out_schema)
 
 
 def _gen_image(doc_id: int):
@@ -317,7 +162,6 @@ def q_image_ahash(spark, sf_dir: str) -> DataFrame:
     q_exact_dedup."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
-
     from ..functions.imagecodec import decode_ppm
 
     import numpy as np
@@ -354,22 +198,3 @@ def q_image_ahash(spark, sf_dir: str) -> DataFrame:
         n_same.cast("long").alias("n_same_hash"),
     )
 
-
-def sample_video_frames(
-    df: DataFrame, every_n: int = 10, content_col: str = "content"
-) -> DataFrame:
-    """Deterministic frame sampling over the synthetic header metadata —
-    REAL plumbing (which frame indices a decoder would extract); video
-    decoding itself is excluded with the other compressed codecs."""
-    with_meta = with_media_metadata(df, content_col)
-    return with_meta.withColumn(
-        "sampled_frames",
-        F.when(
-            F.col("media_meta.media_type") == "video",
-            F.sequence(
-                F.lit(0),
-                F.greatest(F.col("media_meta.n_frames") - 1, F.lit(0)),
-                F.lit(every_n),
-            ),
-        ).otherwise(F.array().cast("array<int>")),
-    )

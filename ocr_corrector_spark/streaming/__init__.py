@@ -1,10 +1,11 @@
-from .stateful import assemble_conversations, streaming_neardup
-from .stream import streaming_dedup, streaming_interval_join, streaming_metrics
+"""Streaming operators: replay dedup, windowed correction metrics and
+session-gap conversation assembly."""
+
+from .stateful import assemble_conversations
+from .stream import streaming_dedup, streaming_metrics
 
 __all__ = [
     "streaming_dedup",
-    "streaming_interval_join",
     "streaming_metrics",
     "assemble_conversations",
-    "streaming_neardup",
 ]

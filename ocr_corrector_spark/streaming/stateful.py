@@ -1,4 +1,4 @@
-"""Custom stateful streaming operator: conversation assembly.
+"""The one custom stateful streaming operator: conversation assembly.
 
 The batch engine reassembles turns with a salted shuffle + sort
 (operators/reassemble.py); on an unbounded stream "the conversation is
@@ -30,7 +30,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
-    DoubleType,
     IntegerType,
     LongType,
     StringType,
@@ -139,43 +138,6 @@ def assemble_conversations(
     )
 
 
-# --- streaming LSH near-dup detection --------------------------------------
-NEARDUP_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("doc_a", LongType()),
-        StructField("doc_b", LongType()),
-        StructField("jaccard", DoubleType()),
-    ]
-)
-
-# per band bucket: docs seen within the TTL horizon; grams flattened to one
-# '\x1f'-joined blob per doc (flat array<string> state keeps the state
-# schema simple and Catalyst-friendly); doc_ts_ms carries each doc's event
-# time so individual docs age out of a continuously-active bucket too
-NEARDUP_STATE_SCHEMA = StructType(
-    [
-        StructField("doc_ids", ArrayType(LongType())),
-        StructField("gram_blobs", ArrayType(StringType())),
-        StructField("doc_ts_ms", ArrayType(LongType())),
-        StructField("max_ts_ms", LongType()),
-    ]
-)
-
-JACCARD_MIN = 0.30
-
-
-def _round_half_up(x: float, digits: int = 4) -> float:
-    """Spark's round() is HALF_UP on the value's shortest decimal
-    representation (BigDecimal.valueOf(double) == Decimal(repr(x)) in
-    Python) — replicate that exact path so streamed jaccards equal the
-    batch query's bit-for-bit, including boundary values whose float
-    product would round differently under naive floor(x*1e4+0.5)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    q = Decimal(1).scaleb(-digits)
-    return float(Decimal(repr(x)).quantize(q, rounding=ROUND_HALF_UP))
-
-
 _TTL_UNIT_MS = {
     "millisecond": 1, "milliseconds": 1, "ms": 1,
     "second": 1000, "seconds": 1000, "sec": 1000, "secs": 1000, "s": 1000,
@@ -199,150 +161,3 @@ def _parse_ttl_ms(ttl: str) -> int:
         f"unit one of {sorted(set(_TTL_UNIT_MS))}"
     )
 
-
-def _neardup_fn(ttl_ms: int, session_tz: str = "UTC"):
-    def detect(
-        key: Tuple[str],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-            yield  # pragma: no cover
-
-        if state.exists:
-            doc_ids, blobs, doc_ts, max_ts_ms = state.get
-            doc_ids, blobs, doc_ts = list(doc_ids), list(blobs), list(doc_ts)
-        else:
-            doc_ids, blobs, doc_ts, max_ts_ms = [], [], [], 0
-        gram_sets = [set(b.split("\x1f")) for b in blobs]
-
-        def prune(horizon_ms: int) -> None:
-            # per-doc eviction: a continuously-active bucket must not
-            # retain (and O(n²)-compare) docs older than the TTL horizon
-            keep = [i for i, t in enumerate(doc_ts) if t >= horizon_ms]
-            if len(keep) < len(doc_ids):
-                doc_ids[:] = [doc_ids[i] for i in keep]
-                gram_sets[:] = [gram_sets[i] for i in keep]
-                doc_ts[:] = [doc_ts[i] for i in keep]
-
-        prune(max_ts_ms - ttl_ms)
-        seen = set(doc_ids)
-        out_a: list[int] = []
-        out_b: list[int] = []
-        out_j: list[float] = []
-        for pdf in pdfs:
-            ts = pdf["ts"]
-            if ts.dt.tz is None:
-                ts = ts.dt.tz_localize(
-                    session_tz, ambiguous="NaT", nonexistent="shift_forward"
-                )
-            ts_ms = (ts.dt.tz_convert("UTC").astype("int64") // 1_000_000).tolist()
-            for doc_id, grams, t in zip(pdf["doc_id"], pdf["grams"], ts_ms):
-                doc_id = int(doc_id)
-                if t > max_ts_ms:
-                    max_ts_ms = t
-                    # the horizon advanced: evict aged docs BEFORE pairing
-                    if doc_ts and min(doc_ts) < max_ts_ms - ttl_ms:
-                        prune(max_ts_ms - ttl_ms)
-                        seen = set(doc_ids)
-                if doc_id in seen:  # replayed delivery — index unchanged
-                    continue
-                gs = set(grams)
-                for prev_id, prev_gs in zip(doc_ids, gram_sets):
-                    inter = len(gs & prev_gs)
-                    union = len(gs) + len(prev_gs) - inter
-                    jac = _round_half_up(inter / union) if union else 0.0
-                    if jac >= JACCARD_MIN:
-                        out_a.append(min(doc_id, prev_id))
-                        out_b.append(max(doc_id, prev_id))
-                        out_j.append(jac)
-                doc_ids.append(doc_id)
-                gram_sets.append(gs)
-                doc_ts.append(t)
-                seen.add(doc_id)
-        prune(max_ts_ms - ttl_ms)
-        state.update(
-            (
-                doc_ids,
-                ["\x1f".join(sorted(g)) for g in gram_sets],
-                doc_ts,
-                max_ts_ms,
-            )
-        )
-        state.setTimeoutTimestamp(max_ts_ms + ttl_ms)
-        if out_a:
-            yield pd.DataFrame({"doc_a": out_a, "doc_b": out_b, "jaccard": out_j})
-
-    return detect
-
-
-def streaming_neardup(
-    df: DataFrame,
-    ttl: str = "1 hour",
-    watermark_delay: str = "1 minute",
-    text_col: str = "text",
-) -> DataFrame:
-    """Streaming MinHash-LSH near-duplicate detection — the incremental
-    form of operators/sqlops.q_minhash_neardup_pairs: each arriving doc
-    probes ONLY its band bucket (the stream state) and emits exact-Jaccard
-    verified pairs against the docs already indexed there.
-
-    Scale shape: the signature is computed ROW-LOCALLY (array_min over
-    md5-transformed grams — no explode/groupBy, so it runs in the scan
-    stage of every micro-batch); the only wide op is the groupBy on
-    band_key, a short hash key.  State per band is the docs seen within
-    the event-time TTL (ids + gram sets + per-doc event times): each
-    invocation first evicts individual docs older than the bucket's newest
-    event minus TTL — so a continuously-active bucket stays bounded — and
-    the whole bucket times out when the watermark passes last activity +
-    TTL.  State is bounded by rate x horizon, never stream history, and
-    the full-signature banding means a bucket only holds near-identical
-    docs.  Replayed doc_ids are absorbed (index unchanged) within the TTL
-    horizon, so an at-least-once feed never duplicates pairs.
-
-    Jaccard semantics are bit-identical to the batch query: distinct
-    3-gram sets, HALF_UP rounding to 4 digits, threshold 0.30."""
-    from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
-
-    from ..operators.sqlops import MINHASH_SEEDS, _word_ngrams
-
-    ttl_ms = _parse_ttl_ms(ttl)
-
-    active = SparkSession.getActiveSession()
-    session_tz = (
-        active.conf.get("spark.sql.session.timeZone", "UTC") if active else "UTC"
-    )
-    def _minhash(seed: str):
-        # NB: a one-arg lambda is required — F.transform dispatches on the
-        # lambda's arity, and a bound default (lambda g, s=seed: ...) is
-        # parsed as the two-arg (element, index) form, silently replacing
-        # the seed with the array index
-        return F.array_min(
-            F.transform(
-                F.col("grams"), lambda g: F.md5(F.concat(F.lit(seed), g))
-            )
-        )
-
-    prepped = (
-        df.withColumn("grams", _word_ngrams(F.split(text_col, " ")))
-        .filter(F.size("grams") > 0)  # <n-word docs drop, as in batch
-        .withColumn(
-            "band_key",
-            F.concat_ws("|", *[_minhash(s) for s in MINHASH_SEEDS]),
-        )
-        .select("doc_id", "ts", "band_key", "grams")
-    )
-    return (
-        prepped.withWatermark("ts", watermark_delay)
-        .groupBy("band_key")
-        .applyInPandasWithState(
-            _neardup_fn(ttl_ms, session_tz),
-            outputStructType=NEARDUP_OUTPUT_SCHEMA,
-            stateStructType=NEARDUP_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )

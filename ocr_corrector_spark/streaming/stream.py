@@ -6,8 +6,10 @@ a ``readStream`` source (the single Arrow UDF over ``(text, probs,
 tool)``: detection, extraction and correction).  Every stage is stateless/narrow, so the stream
 needs no state store; ``order_output`` stays off, because a global sort
 is undefined on an unbounded stream (sinks cluster by (conv_id,
-turn_idx) per micro-batch instead).  The optional windowed metrics
-stream uses a watermark for late turns.
+turn_idx) per micro-batch instead).  Two stream operators sit beside
+it: replay dedup (``streaming_dedup``) in front and windowed metrics
+(``streaming_metrics``) behind, both watermarked for late turns.
+Near-dup detection and interval joins are batch queries only.
 
 Typical wiring::
 
@@ -70,54 +72,3 @@ def streaming_metrics(
         )
     )
 
-
-def streaming_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    window_hours: int = 24,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Stream-stream interval join — the streaming analog of
-    operators/sqlops.q_range_join: every left event (e.g. a purchase)
-    paired with the same user's right events (e.g. views) from the
-    preceding ``window_hours``.  Both sides carry event-time watermarks
-    and the join condition bounds right's event time to a window BEHIND
-    left's, which is exactly what Spark needs to expire join state: a
-    right row is held only until the watermark passes ``ts +
-    window_hours``, so state is bounded by rate x window, never by
-    stream history.  Emits the matched pairs in append mode (counting
-    per left event is a downstream aggregation; with watermarks Spark
-    chains the two stateful operators)."""
-    # watermarks require TIMESTAMP (tz-aware) event time; parquet feeds
-    # carry TIMESTAMP_NTZ — cast both sides identically, so the interval
-    # comparison below stays internally consistent
-    l = (
-        left.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
-        .alias("l")
-    )
-    r = (
-        right.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
-        .select(
-            F.col("user_id").alias("r_user"),
-            F.col("ts").alias("r_ts"),
-            F.col("value").alias("r_value"),
-        )
-        .alias("r")
-    )
-    cond = (
-        (F.col("l.user_id") == F.col("r.r_user"))
-        & (F.col("r.r_ts") < F.col("l.ts"))
-        & (
-            F.col("r.r_ts")
-            >= F.col("l.ts") - F.expr(f"INTERVAL {window_hours} HOURS")
-        )
-    )
-    return l.join(r, cond, "inner").select(
-        F.col("l.event_id").alias("event_id"),
-        F.col("l.user_id").alias("user_id"),
-        F.col("l.ts").alias("ts"),
-        F.col("r.r_ts").alias("view_ts"),
-        F.col("r.r_value").alias("view_value"),
-    )

@@ -12,14 +12,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from ocr_corrector_spark.session import get_spark
 
-    # session-unique warehouse: the in-memory catalog is fresh per session
-    # but a fixed warehouse DIRECTORY persists across runs, and managed
-    # tables refuse locations that already exist (LOCATION_ALREADY_EXISTS)
+    # a session-unique warehouse outside the repo: the catalog's default
+    # database directory must not land in the cwd (a static conf, so it is
+    # set at session creation)
     wh = tempfile.mkdtemp(prefix="spark_graft_test_wh_")
     s = get_spark(
         app_name="tests",
-        # static conf — must be set at session creation; managed tables
-        # (bucketing tests) must never land inside the repo's cwd
         extra_conf={"spark.sql.warehouse.dir": wh},
     )
     yield s

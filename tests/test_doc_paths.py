@@ -1,5 +1,6 @@
 """Every repo path the docs name in code spans or code blocks must exist,
-so a deleted script or artifact cannot leave a dangling command behind."""
+so a deleted script, module or artifact cannot leave a dangling command
+or reference behind."""
 
 import glob
 import os
@@ -8,13 +9,18 @@ import re
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DOCS = [
     "README.md",
+    "SURVEY.md",
+    "FIXTURES.md",
     *sorted(glob.glob("docs/*.md", root_dir=REPO)),
     os.path.join(".claude", "skills", "verify", "SKILL.md"),
 ]
 CODE = re.compile(r"```.*?```|`[^`\n]+`", re.S)
+# a package module may be named with or without its package directory
 PATH = re.compile(
     r"(?<![\w/.$])(?:scripts/[\w-]+\.py|bench\.py|perfbench/[\w./-]*"
-    r"|BENCH/[\w.-]+|tests/[\w-]+\.py)"
+    r"|BENCH/[\w.-]+|tests/[\w-]+\.py"
+    r"|(?:ocr_corrector_spark/)?(?P<module>(?:(?:sources|operators|functions"
+    r"|plans|streaming|oracle|assets)/\w+|session|driver_cds|pyworker)\.py))"
 )
 
 
@@ -23,7 +29,9 @@ def _named_paths():
         with open(os.path.join(REPO, doc), encoding="utf-8") as f:
             text = f.read()
         for span in CODE.findall(text):
-            for path in PATH.findall(span):
+            for m in PATH.finditer(span):
+                module = m.group("module")
+                path = f"ocr_corrector_spark/{module}" if module else m.group()
                 yield doc, path.rstrip(".")
 
 

@@ -4,6 +4,7 @@ calls for, checked over generated inputs rather than fixtures only."""
 import functools
 import string
 
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -16,6 +17,10 @@ from ocr_corrector_spark.functions.correct_kernels import (
 from ocr_corrector_spark.functions.rules import find_err_pos_by_prob
 from ocr_corrector_spark.functions.sentence_cut import cut_sentences
 from ocr_corrector_spark.assets.scorer_table import topn_candidates
+from ocr_corrector_spark.operators.correct import correct_arrow, correction_config
+from ocr_corrector_spark.operators.extract import extract_any
+from ocr_corrector_spark.oracle import BertOracle, KeywordOracle
+from ocr_corrector_spark.sources.transcripts import CORPUS
 
 CJK = "未还本金逾期天账户状态大安门白愿自数术个处业宋全已"
 _char_sim = CharSim(build_char_meta())
@@ -234,3 +239,75 @@ def test_framed_batch_loop_is_row_independent(rows, batch_size):
             assert per_err is None or len(per_err) == len(e)
         alone = [scorer.score_sentences([t], [e])[0] for t, e in rows]
         assert scored == alone
+
+
+_CORPUS_CHARS = "".join(sorted({ch for row in CORPUS for ch in row[0] + row[1]}))
+_ROW_CHARS = _CORPUS_CHARS + "0123456789\U00020000\u0301abc XYZ"
+_MARKUP = ["{}", "<p>{}</p>", "%LAYOUT v1\nP0 40 40 560 80 {}"]
+
+
+@st.composite
+def _crossing_rows(draw):
+    """One Arrow batch of ``(text, probs, biz)``: null text, probs and biz;
+    plain, HTML and %LAYOUT texts, at and past the masked-LM's 62
+    characters; probs shorter and longer than the text, confident but at
+    the error positions or drawn at random; rows repeated so that the
+    worker's memo answers some."""
+    base = []
+    for _ in range(draw(st.integers(1, 6))):
+        if draw(st.booleans()):  # noisy corpus texts, low at their errors
+            parts = draw(st.lists(st.sampled_from(CORPUS), min_size=1, max_size=2))
+            size = draw(st.none() | st.integers(60, 64))  # repeated to this size
+            text, errs = "", set()
+            while not text or size is not None and len(text) < size:
+                for _, noisy, pos, _ in parts:
+                    errs |= {len(text) + p for p in pos}
+                    text += noisy
+            text = text[:size]
+        else:
+            text = draw(
+                st.none()
+                | st.text(_ROW_CHARS, max_size=70)
+                | st.text(_ROW_CHARS, min_size=60, max_size=70)
+            )
+            errs = draw(st.sets(st.integers(0, 70), max_size=3))
+        n = max(len(text or "") + draw(st.integers(-3, 3)), 0)
+        probs = draw(
+            st.none()
+            | st.just([0.56 if i in errs else 0.99 for i in range(n)])
+            | st.lists(st.floats(0, 1), min_size=n, max_size=n)
+        )
+        if text is not None:
+            text = draw(st.sampled_from(_MARKUP)).format(text)
+        base.append((text, probs, draw(st.sampled_from(["report", "doc", None]))))
+    picks = draw(st.lists(st.integers(0, len(base) - 1), max_size=2 * len(base)))
+    return base + [base[i] for i in picks]
+
+
+@functools.cache
+def _oracles():
+    return KeywordOracle(0.55), BertOracle()
+
+
+@given(_crossing_rows())
+@settings(max_examples=300, deadline=None)
+def test_single_crossing_equals_the_oracle(rows):
+    """``correct_arrow`` — the default plan's body, without Spark — gives
+    each row, its nulls filled as ``unpack_result`` fills them,
+    ``extract_any`` followed by the keyword oracle for ``report`` and the
+    masked-LM oracle otherwise."""
+    result = correct_arrow(
+        correction_config(),
+        pa.array([r[0] for r in rows], pa.string()),
+        pa.array([r[1] for r in rows], pa.list_(pa.float64())),
+        pa.array([r[2] for r in rows], pa.string()),
+    )
+    keyword, bert = _oracles()
+    for (raw, probs, biz), got in zip(rows, result.to_pylist()):
+        text = raw if got["text"] is None else got["text"]
+        corrected = text if got["text_corrected"] is None else got["text_corrected"]
+        want = extract_any(raw)
+        oracle = keyword if biz == "report" else bert
+        assert (text, corrected) == (
+            want, None if want is None else oracle.correct_row(want, probs)
+        ), (raw, probs, biz)

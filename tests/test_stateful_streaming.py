@@ -63,123 +63,6 @@ def test_conversation_assembled_after_session_gap(spark, tmp_path):
     assert "C" not in rows
 
 
-def test_streaming_neardup_matches_batch_lsh(spark, tmp_path):
-    """Streaming LSH near-dup (band-bucket state, exact-Jaccard verify)
-    emits, over an at-least-once replayed feed, exactly the pairs the
-    batch q_minhash_neardup_pairs finds — same band keys, same distinct
-    3-gram Jaccard, same HALF_UP rounding."""
-    from pyspark.sql import functions as F
-
-    from ocr_corrector_spark.operators import sqlops
-    from ocr_corrector_spark.sources.tables import load_table
-    from ocr_corrector_spark.streaming import streaming_neardup
-
-    sf_dir = "/root/testdata/sf0.01"
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "text",
-        F.expr(
-            "timestamp '2026-01-01 00:00:00'"
-            " + make_interval(0,0,0,0,0,0, doc_id)"
-        ).alias("ts"),
-    )
-    # replay every fifth doc (late, within the watermark): the band index
-    # must absorb the redelivery without emitting duplicate pairs
-    replays = docs.filter(F.col("doc_id") % 5 == 0).withColumn(
-        "ts", F.col("ts") - F.expr("INTERVAL 10 SECONDS")
-    )
-    in_dir = str(tmp_path / "docs_stream")
-    docs.unionByName(replays).write.mode("overwrite").parquet(in_dir)
-
-    q = (
-        streaming_neardup(spark.readStream.schema(docs.schema).parquet(in_dir))
-        .writeStream.format("memory")
-        .queryName("neardup_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_nd"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    streamed = sorted(
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in spark.sql("SELECT * FROM neardup_stream").collect()
-    )
-    batch = sorted(
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in sqlops.q_minhash_neardup_pairs(spark, sf_dir).collect()
-    )
-    assert streamed == batch
-    assert len(streamed) > 0
-
-
-class _FakeGroupState:
-    """Minimal GroupState double for driving _neardup_fn directly."""
-
-    def __init__(self):
-        self._value = None
-        self.hasTimedOut = False
-        self.timeout_ts = None
-
-    @property
-    def exists(self):
-        return self._value is not None
-
-    @property
-    def get(self):
-        return self._value
-
-    def update(self, v):
-        self._value = v
-
-    def setTimeoutTimestamp(self, ts):
-        self.timeout_ts = ts
-
-    def remove(self):
-        self._value = None
-
-
-def _run_batch(fn, state, doc_ids, grams, ts_ms):
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        {
-            "doc_id": doc_ids,
-            "grams": grams,
-            "ts": pd.to_datetime(ts_ms, unit="ms", utc=True),
-        }
-    )
-    return list(fn(("band-0",), iter([pdf]), state))
-
-
-def test_streaming_neardup_evicts_per_doc_within_active_bucket():
-    """A continuously-active bucket must age out INDIVIDUAL docs past the
-    TTL horizon — not only time out wholesale on inactivity — so state
-    stays bounded by rate x horizon and expired docs never pair."""
-    from ocr_corrector_spark.streaming.stateful import _neardup_fn
-
-    fn = _neardup_fn(ttl_ms=1000)
-    st = _FakeGroupState()
-    g = ["a b c", "b c d", "c d e"]  # identical gram sets -> jaccard 1.0
-
-    assert _run_batch(fn, st, [1], [g], [0]) == []
-    # 5s later (> TTL): doc 1 must be evicted BEFORE indexing doc 2
-    assert _run_batch(fn, st, [2], [g], [5000]) == []
-    doc_ids, _, doc_ts, max_ts = st.get
-    assert list(doc_ids) == [2] and list(doc_ts) == [5000] and max_ts == 5000
-    # within TTL of doc 2: pair emitted
-    out = _run_batch(fn, st, [3], [g], [5100])
-    assert len(out) == 1
-    assert out[0][["doc_a", "doc_b"]].values.tolist() == [[2, 3]]
-    assert out[0]["jaccard"].tolist() == [1.0]
-    # intra-batch aging: one batch whose span exceeds the TTL also prunes
-    st2 = _FakeGroupState()
-    out2 = _run_batch(_neardup_fn(ttl_ms=1000), st2, [10, 11], [g, g], [0, 5000])
-    assert out2 == []
-    assert list(st2.get[0]) == [11]
-
-
 def test_neardup_ttl_parsing():
     import pytest
 
@@ -194,16 +77,3 @@ def test_neardup_ttl_parsing():
     with pytest.raises(ValueError, match="expected '<count> <unit>'"):
         _parse_ttl_ms("1.5 hours")
 
-
-def test_round_half_up_matches_spark_bigdecimal(spark):
-    """_round_half_up must replicate Spark round()'s BigDecimal HALF_UP on
-    the double's shortest decimal repr — including boundary values whose
-    float product ends just under .5 (e.g. 0.30515*1e4 = 3051.4999...)."""
-    from ocr_corrector_spark.streaming.stateful import _round_half_up
-
-    vals = [0.30515, 0.30525, 0.12345, 0.99995, 0.00005, 1 / 3, 29 / 97, 0.3]
-    rows = spark.createDataFrame(
-        [(v,) for v in vals], "x double"
-    ).selectExpr("round(x, 4) AS r").collect()
-    for v, r in zip(vals, rows):
-        assert _round_half_up(v) == r.r, v

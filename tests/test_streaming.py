@@ -130,61 +130,6 @@ def test_streaming_dedup_drops_replays(spark, stream_input, tmp_path):
     assert got.select("conv_id", "turn_idx").distinct().count() == base.count()
 
 
-def test_streaming_interval_join_matches_batch(spark, tmp_path):
-    """Stream-stream interval join (watermarked purchase<-view pairing)
-    emits exactly the pairs the batch q_range_join counts."""
-    import os
-
-    from ocr_corrector_spark.sources.tables import load_table
-    from ocr_corrector_spark.streaming import streaming_interval_join
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_DIR", "/root/testdata/sf0.01")
-    ev = load_table(spark, sf_dir, "events")
-    p_dir, v_dir = str(tmp_path / "p_in"), str(tmp_path / "v_in")
-    purchases = ev.filter(F.col("event_type") == "purchase")
-    views = ev.filter(F.col("event_type") == "view")
-    purchases.write.mode("overwrite").parquet(p_dir)
-    views.write.mode("overwrite").parquet(v_dir)
-
-    joined = streaming_interval_join(
-        spark.readStream.schema(ev.schema).parquet(p_dir),
-        spark.readStream.schema(ev.schema).parquet(v_dir),
-    )
-    out_dir = str(tmp_path / "out_ij")
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "ckpt_ij"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    streamed = sorted(
-        (r.event_id, r.view_ts)
-        for r in spark.read.parquet(out_dir).collect()
-    )
-    from datetime import timedelta
-
-    p_rows, v_rows = purchases.collect(), views.collect()
-    expected = sorted(
-        (l.event_id, r.ts)
-        for l in p_rows
-        for r in v_rows
-        if r.user_id == l.user_id
-        and l.ts - timedelta(hours=24) <= r.ts < l.ts
-    )
-    assert streamed == expected
-    assert len(streamed) > 0
-    # pair volume must agree with the batch range-join counts
-    from ocr_corrector_spark.operators import sqlops
-
-    n_batch = sum(
-        r.n_views_24h for r in sqlops.q_range_join(spark, sf_dir).collect()
-    )
-    assert len(streamed) == n_batch
-
-
 def test_stream_links_match_batch(spark, tmp_path):
     from ocr_corrector_spark.operators.sqlops import _pages_df, links_from_pages
 
